@@ -1,7 +1,9 @@
 """Vectorized (batch-at-a-time) transcript extraction.
 
-Replaces the per-row Python loop inside the extraction ``mapInPandas``
-(the flagship hot path) with batch-level work:
+:func:`extract_batch_arrow` is the body of the extraction ``mapInArrow``
+closure (plans/pipeline.make_extract_fn, shared by batch and streaming —
+the flagship hot path). It replaces a per-row Python loop with batch-level
+work:
 
 - ONE gazetteer regex scan per Arrow batch over a ``\\x00``-joined
   mega-string (the regex engine runs in C; row boundaries are ``\\x00``,
@@ -18,11 +20,12 @@ extract_triples_from_text + find_unknown_mentions per row, in the same
 per-row quad order (relations by adjacent pair, then per mention
 population/label, then unknown-mention placeholders, then the tool quad)
 — verified structurally by tests/test_extract_vec.py against the per-row
-oracle. Reference semantics: solr/SolrHandler.java:367-512 (tagger +
-policies); QuadMapper.scala:104-128 (sorted-group map).
+oracle :func:`_extract_batch_rows`. Reference semantics:
+solr/SolrHandler.java:367-512 (tagger + policies); QuadMapper.scala:104-128
+(sorted-group map).
 
-Pure pandas/numpy + oracle helpers — no Spark imports (runs inside
-executors' mapInPandas closures and inside pytest alike).
+Pure pyarrow/numpy/pandas + oracle helpers — no Spark imports (runs inside
+executors' mapInArrow closures and inside pytest alike).
 """
 
 from __future__ import annotations
@@ -116,45 +119,6 @@ def _find_mentions_mega(gaz: Gazetteer, mega: str):
     return [(s, -ne, g) for s, ne, g in sorted(set(out))]
 
 
-def extract_batch(
-    pdf: pd.DataFrame,
-    gaz: Gazetteer,
-    policy: str = "LONGEST_DOMINANT_RIGHT",
-    emit_unknown: bool = False,
-) -> pd.DataFrame:
-    """One Arrow batch of transcripts -> quad table (QUAD_FIELDS columns).
-
-    Round 6: every emitted quad except the tool quad is a pure function of
-    the row's TEXT (relations, population/label and unknown-mention
-    placeholders are all text-local; only graph and the turn IRI are
-    row-dependent, and they slot in afterwards). So extraction runs once
-    per DISTINCT text (_text_templates) and rows expand their template via
-    numpy gathers (_assemble_from_templates). On template-heavy corpora
-    (the flagship events-derived transcripts have 16 distinct texts) the
-    regex/policy work collapses by orders of magnitude; on all-unique
-    corpora the work is identical to the old inline path plus O(total
-    quads) vectorized assembly. Output order and values are bit-identical
-    (tests/test_extract_vec.py vs the per-row oracle)."""
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame({f: pd.Series(dtype=object) for f in QUAD_FIELDS},
-                            columns=QUAD_FIELDS)
-    texts = pdf["text"].fillna("").astype(str).tolist()
-    if any(_SEP in t for t in texts):  # cannot join safely — exact fallback
-        return _extract_batch_rows(pdf, gaz, policy, emit_unknown)
-
-    tid_of: dict[str, int] = {}
-    tids = np.empty(n, dtype=np.int64)
-    for i, t in enumerate(texts):
-        v = tid_of.get(t)
-        if v is None:
-            v = len(tid_of)
-            tid_of[t] = v
-        tids[i] = v
-    templates = _text_templates(gaz, list(tid_of), policy, emit_unknown)
-    return _assemble_from_templates(pdf, tids, templates)
-
-
 def _text_templates(
     gaz: Gazetteer,
     texts: list[str],
@@ -166,8 +130,8 @@ def _text_templates(
     Returns (t_tid, S, P, O, D, L, is_turn): parallel arrays of template
     quads sorted by (tid, stage, seq) — i.e. each text's quads in the exact
     per-row oracle emission order. `is_turn` marks unknown-mention
-    placeholder quads whose subject is the row's turn IRI (filled in by
-    the assembler); their S slot holds None."""
+    placeholder quads whose subject is the row's turn IRI (filled in per
+    row by extract_batch_arrow); their S slot holds None."""
     n = len(texts)
 
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n)
@@ -325,8 +289,8 @@ def _text_templates(
             if (r, surface) in seen:
                 continue
             seen.add((r, surface))
-            # subject = the row's turn IRI — row-dependent, filled by the
-            # assembler (is_turn marks the slot)
+            # subject = the row's turn IRI — row-dependent, filled per row
+            # by extract_batch_arrow (is_turn marks the slot)
             emit(r, 3, seq, None, _SURF_PRED, surface, XSD_STRING, None,
                  is_turn=True)
             seq += 1
@@ -349,111 +313,25 @@ def _text_templates(
             _gather(q_l), np.asarray(q_turn, dtype=bool)[order])
 
 
-def _assemble_from_templates(
-    pdf: pd.DataFrame,
-    tids: np.ndarray,
-    templates,
-) -> pd.DataFrame:
-    """Expand per-text templates to per-row quads (graph / turn-IRI fill,
-    plus the row-dependent tool quads), in the per-row oracle order."""
-    n = len(pdf)
-    t_tid, S, P, O, D, L, is_turn = templates
-    m = int(tids.max()) + 1 if n else 0
-
-    graphs = ("http://example.org/conv/" + pdf["conv_id"].astype(str))
-    graphs_np = graphs.to_numpy(dtype=object)
-
-    # tool quads (row-dependent; rare — role == 'tool' rows only)
-    roles = pdf["role"].to_numpy()
-    tools = pdf["tool"].to_numpy()
-    tool_rows = [r for r in np.nonzero(roles == "tool")[0]
-                 if isinstance(tools[r], str) and tools[r]]
-
-    need_turn = bool(is_turn.any()) or bool(tool_rows)
-    if need_turn:
-        # NULL turn_idx renders as 'None' (str(None) — the per-row oracle
-        # path's behavior), not pandas' dtype-dependent 'nan'/'<NA>'
-        t_idx = pdf["turn_idx"]
-        t_str = t_idx.astype(str).mask(t_idx.isna(), "None")
-        turn_iri_np = (graphs + "/turn/" + t_str).to_numpy(dtype=object)
-
-    # expand template slices row-major: row i contributes the contiguous
-    # template block of its tid (templates are sorted by tid)
-    tcounts = np.bincount(t_tid, minlength=m) if m else np.empty(0, np.int64)
-    toff = np.zeros(m, dtype=np.int64)
-    if m > 1:
-        np.cumsum(tcounts[:-1], out=toff[1:])
-    counts = tcounts[tids]
-    total = int(counts.sum())
-    if total:
-        row_of_quad = np.repeat(np.arange(n), counts)
-        csum = np.zeros(n, dtype=np.int64)
-        np.cumsum(counts[:-1], out=csum[1:])
-        idx = toff[tids].repeat(counts) + np.arange(total) - csum.repeat(counts)
-        subj = S[idx]
-        turn_mask = is_turn[idx]
-        if turn_mask.any():
-            subj[turn_mask] = turn_iri_np[row_of_quad[turn_mask]]
-        cols = {
-            "subject": subj,
-            "predicate": P[idx],
-            "obj": O[idx],
-            "datatype": D[idx],
-            "language": L[idx],
-            "graph": graphs_np[row_of_quad],
-        }
-    else:
-        row_of_quad = np.empty(0, dtype=np.int64)
-        e = np.empty(0, dtype=object)
-        cols = {"subject": e, "predicate": e, "obj": e, "datatype": e,
-                "language": e, "graph": e}
-
-    if tool_rows:
-        tr = np.asarray(tool_rows, dtype=np.int64)
-        t_cols = {
-            "subject": turn_iri_np[tr],
-            "predicate": np.full(len(tr), _TOOL_PRED, dtype=object),
-            "obj": np.array([tools[r] for r in tool_rows], dtype=object),
-            "datatype": np.full(len(tr), XSD_STRING, dtype=object),
-            "language": np.full(len(tr), None, dtype=object),
-            "graph": graphs_np[tr],
-        }
-        # merge: template quads (stages 1-3) precede the tool quad (stage 4)
-        # within a row; np.lexsort is stable, preserving template order
-        rows_all = np.concatenate([row_of_quad, tr])
-        flag = np.concatenate([
-            np.zeros(total, dtype=np.int8), np.ones(len(tr), dtype=np.int8)])
-        order = np.lexsort((flag, rows_all))
-        cols = {k: np.concatenate([cols[k], t_cols[k]])[order] for k in cols}
-        total += len(tr)
-
-    if not total:
-        return pd.DataFrame({f: pd.Series(dtype=object) for f in QUAD_FIELDS},
-                            columns=QUAD_FIELDS)
-    cols["dataset"] = np.full(total, None, dtype=object)
-    return pd.DataFrame(cols, columns=QUAD_FIELDS)
-
-
 def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGHT",
                         emit_unknown: bool = False):
     """One Arrow RecordBatch of transcripts -> Arrow RecordBatch of quads.
 
-    The mapInArrow face of :func:`extract_batch` (round 6): the pandas
-    route boxes every conv_id/role/text cell into a Python string just to
-    tear it apart again — at 10M flagship turns that boxing was most of
-    the extraction stage. Here only the DISTINCT texts
-    (``pc.dictionary_encode``, C-speed) ever become Python objects; the
-    per-row expansion is pa.Array.take gathers over small per-template
-    arrays, and the graph / turn-IRI columns are built with
-    ``pc.binary_join_element_wise`` — no per-row Python anywhere. Output
-    values and order are bit-identical to :func:`extract_batch`
-    (tests/test_extract_vec.py parity suite)."""
+    The one vectorized extraction path. Extraction runs once per DISTINCT
+    text (``pc.dictionary_encode``, C-speed — only distinct texts ever
+    become Python objects; see _text_templates); the per-row expansion is
+    pa.Array.take gathers over small per-template arrays, and the graph /
+    turn-IRI columns are built with ``pc.binary_join_element_wise`` — no
+    per-row Python anywhere. Output values and order are bit-identical to
+    the per-row oracle :func:`_extract_batch_rows`
+    (tests/test_extract_vec.py parity suite).
+
+    String contract: ``role``, ``text`` and ``tool`` arrive string-typed —
+    plans/pipeline.extract_quads casts them at the Spark boundary."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = rb.num_rows
-    fields = ["subject", "predicate", "obj", "datatype", "language",
-              "graph", "dataset"]
     if n == 0:
         return None
     enc = pc.dictionary_encode(rb.column("text"))
@@ -462,13 +340,16 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     utexts = enc.dictionary.to_pylist()
     if any(t is not None and _SEP in t for t in utexts):
         # exact fallback through the per-row oracle path
-        out = _extract_batch_rows(rb.to_pandas(), gaz, policy, emit_unknown)
+        # integer_object_nulls: a NULL turn_idx must not turn the column
+        # into floats ('3.0' instead of the vectorized path's '3')
+        out = _extract_batch_rows(rb.to_pandas(integer_object_nulls=True),
+                                  gaz, policy, emit_unknown)
         if not len(out):
             return None
         return pa.RecordBatch.from_pandas(
-            out, schema=pa.schema([(f, pa.string()) for f in fields]),
+            out, schema=pa.schema([(f, pa.string()) for f in QUAD_FIELDS]),
             preserve_index=False)
-    # NULL text rows -> the "" template (extract_batch's fillna(""))
+    # NULL text rows -> the "" template (the per-row oracle's `text or ""`)
     null_tid = None
     if enc.indices.null_count:
         try:
@@ -480,14 +361,12 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
             zero_copy_only=False).astype(np.int64)
     else:
         tids = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    # str() parity with extract_batch for a non-string text column is moot:
-    # Spark's schema types `text` as string; dictionary values are str/None
     t_tid, S, P, O, D, L, is_turn = _text_templates(
         gaz, [t if t is not None else "" for t in utexts], policy,
         emit_unknown)
     m = len(utexts)
 
-    # fill_null("None") = str() parity with the pandas path's astype(str)
+    # fill_null("None") = str() parity with the per-row oracle
     conv = pc.cast(rb.column("conv_id"), pa.string()).fill_null("None")
     graphs = pc.binary_join_element_wise(
         pa.scalar("http://example.org/conv/"), conv, pa.scalar(""))
@@ -496,8 +375,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     tool = rb.column("tool")
     tool_mask = pc.fill_null(
         pc.and_(pc.equal(role, pa.scalar("tool")),
-                pc.and_(tool.is_valid(), pc.not_equal(
-                    pc.cast(tool, pa.string()), pa.scalar("")))),
+                pc.not_equal(tool, pa.scalar(""))),
         False)
     tool_rows = np.nonzero(tool_mask.to_numpy(zero_copy_only=False))[0]
 
@@ -546,7 +424,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
         tr = pa.array(tool_rows)
         t_cols = [turn_iris.take(tr),
                   pa.array([_TOOL_PRED] * len(tool_rows), pa.string()),
-                  pc.cast(tool, pa.string()).take(tr),
+                  tool.take(tr),
                   pa.array([XSD_STRING] * len(tool_rows), pa.string()),
                   pa.nulls(len(tool_rows), pa.string()),
                   graphs.take(tr)]
@@ -564,7 +442,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     cols.append(pa.nulls(total, pa.string()))
     return pa.RecordBatch.from_arrays(
         [c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c
-         for c in cols], fields)
+         for c in cols], QUAD_FIELDS)
 
 
 def _extract_batch_rows(
@@ -573,18 +451,20 @@ def _extract_batch_rows(
     policy: str,
     emit_unknown: bool,
 ) -> pd.DataFrame:
-    """Exact per-row fallback (texts containing the \\x00 separator)."""
+    """The per-row oracle: exact reference semantics, one row at a time.
+    Also extract_batch_arrow's fallback for batches whose texts contain the
+    \\x00 separator."""
     cols: dict[str, list] = {f: [] for f in QUAD_FIELDS}
     app = [cols[f].append for f in QUAD_FIELDS]
     for conv_id, turn_idx, role, text, tool in zip(
         pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy(),
         pdf["role"].to_numpy(), pdf["text"].to_numpy(), pdf["tool"].to_numpy(),
     ):
-        # str() matches the vectorized path's astype(str): a non-string
+        # str() matches extract_batch_arrow's string cast: a non-string
         # conv_id (int64 convs) must not crash only on the \x00-fallback
         # route (round-4 review finding). NULL turn_idx renders 'None' on
         # every path (NaN floats would otherwise print 'nan' here but
-        # 'None' in the template/arrow paths — round-6 review finding)
+        # 'None' on the arrow path — round-6 review finding)
         graph = "http://example.org/conv/" + str(conv_id)
         if turn_idx is None or (isinstance(turn_idx, float)
                                 and turn_idx != turn_idx):

@@ -1,13 +1,11 @@
 """Observability — the LogRecorder analog (log/LogRecorder.scala:54-92,
-159-181,234-251): per-stage success/fail counters and rate metrics, done the
-Spark way: `df.observe(Observation, ...)` aggregates ride the job (no extra
-action), accumulators count inside pandas UDFs, and everything lands in the
+159-181): per-stage success/fail counters, done the Spark way:
+`df.observe(Observation, ...)` aggregates ride the job (no extra action),
+accumulators count inside pandas UDFs, and everything lands in the
 commit-metadata sidecar (sources/io.write_table meta=...).
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -25,25 +23,3 @@ def observed_counts(df: DataFrame, name: str = "obs") -> tuple[DataFrame, Observ
     )
     return out, obs
 
-
-class StageTimer:
-    """Wall-clock + throughput report per stage ({mspp} ms-per-record analog,
-    LogRecorder.scala:234-251)."""
-
-    def __init__(self):
-        self.stages: dict[str, dict] = {}
-
-    def time(self, name: str, action, n_records: int | None = None):
-        t0 = time.time()
-        result = action()
-        dt = time.time() - t0
-        rec = {"sec": round(dt, 3)}
-        if n_records:
-            rec["records"] = n_records
-            rec["records_per_sec"] = round(n_records / dt, 1)
-            rec["ms_per_1k"] = round(1000 * dt / max(n_records / 1000, 1e-9), 3)
-        self.stages[name] = rec
-        return result
-
-    def as_meta(self) -> dict:
-        return {"stages": self.stages}

@@ -7,7 +7,7 @@ the solr-loader's hash-map canonicalization (SolrLoader.scala:41-84) becomes
 connected components + broadcast joins; the predicate splitter
 (DumpSplitter.scala:46-60) becomes write.partitionBy.
 
-Hot-path rules: extraction is mapInPandas (Arrow batches, no per-row Python
+Hot-path rules: extraction is mapInArrow (Arrow batches, no per-row Python
 UDF calls, no extra shuffle beyond the one explicit conv_id repartition);
 canonicalization joins broadcast the mapping; dedup is one shuffle on the
 5-field identity.
@@ -127,7 +127,7 @@ def extract_quads(
     emit_unknown: bool = False,
     assume_bucketed: bool = False,
 ) -> DataFrame:
-    """Mention detection + relation extraction per turn, as mapInPandas over
+    """Mention detection + relation extraction per turn, as mapInArrow over
     conv-grouped, turn-ordered Arrow batches (extraction is per-turn, so
     batch boundaries cannot split semantics; ordering gives deterministic
     within-conversation quad order). Emits the 7-field quad table with
@@ -141,7 +141,17 @@ def extract_quads(
     directly on scan partitions, zero shuffles before the dedup. This is the
     100 TB fast path: never re-shuffle what the table layout already
     guarantees (SURVEY.md §4, explicit conv_id bucketing).
+
+    The input must have the columns conv_id, turn_idx, role, text and tool
+    (ValueError on the driver otherwise). role, text and tool are cast to
+    string here — the one place the extractor's string contract is set.
     """
+    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+    missing = [c for c in cols if c not in transcripts.columns]
+    if missing:
+        raise ValueError(
+            f"extract_quads: transcripts lack column(s) {missing}; "
+            f"need {cols}")
     spark = transcripts.sparkSession
     bc = broadcast_gazetteer(spark, surface_to_iri)
     src = transcripts if assume_bucketed else stable_order(transcripts)
@@ -150,10 +160,11 @@ def extract_quads(
     # touches and would otherwise ship (and Arrow-convert) everything —
     # notably `ts`, whose timestamp→pandas conversion is the costliest
     # per-column transfer and which extraction never reads (guide §4.1).
-    # A narrow projection preserves the stable_order partitioning.
-    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
-    if all(c in src.columns for c in cols):
-        src = src.select(*cols)
+    # A narrow projection preserves the stable_order partitioning. The
+    # string casts vanish from the plan for string columns (SimplifyCasts).
+    src = src.select("conv_id", "turn_idx",
+                     *(F.col(c).cast("string").alias(c)
+                       for c in ("role", "text", "tool")))
     return src.mapInArrow(
         make_extract_fn(bc, policy, emit_unknown), QUAD_SCHEMA
     )

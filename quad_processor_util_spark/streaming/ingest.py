@@ -3,7 +3,7 @@
 The reference is batch-only (SURVEY.md §2.11) — its closest notions are the
 resumable byte-limit scan and async sink pipelining. This module adds the
 genuinely streaming path a transcript firehose needs: readStream over the
-transcript directory → the same extraction mapInPandas as batch (code is
+transcript directory → the same extraction mapInArrow as batch (code is
 shared — DataFrame fns are execution-mode agnostic) → append sink, with
 event-time watermarking for the windowed turn-rate aggregation.
 

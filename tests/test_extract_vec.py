@@ -1,10 +1,12 @@
-"""Vectorized extraction (plans/extract_vec.extract_batch) must be
-byte-identical — rows, values, and per-row order — to the per-row oracle
-path (_extract_batch_rows), across policies, overlap shapes, and the
-fixture transcripts."""
+"""Vectorized extraction (plans/extract_vec.extract_batch_arrow, the body
+of the extraction mapInArrow closure) must be byte-identical — rows,
+values, and per-row order — to the per-row oracle path
+(_extract_batch_rows), across policies, overlap shapes, and the fixture
+transcripts."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from quad_processor_util_spark.datagen import (
@@ -12,11 +14,17 @@ from quad_processor_util_spark.datagen import (
     build_gazetteer,
     build_transcripts,
 )
-from quad_processor_util_spark.oracle import Gazetteer
+from quad_processor_util_spark.oracle import QUAD_FIELDS, Gazetteer
 from quad_processor_util_spark.plans.extract_vec import (
     _extract_batch_rows,
-    extract_batch,
+    extract_batch_arrow,
 )
+
+# The columns extract_quads hands the closure, typed as Spark sends them
+TRANSCRIPT_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+    ("role", pa.string()), ("text", pa.string()), ("tool", pa.string()),
+])
 
 
 def _frame(texts, roles=None, tools=None):
@@ -59,17 +67,35 @@ def gaz():
     return build_gazetteer(build_entity_catalog())
 
 
-def _check_parity(pdf, gaz, policy="LONGEST_DOMINANT_RIGHT", emit_unknown=False):
-    got = extract_batch(pdf, gaz, policy, emit_unknown)
+def _to_batch(pdf, schema=TRANSCRIPT_SCHEMA, offset=0):
+    """pandas frame -> Arrow RecordBatch with the Spark transcript schema.
+    offset > 0 builds the batch as a slice of a longer one, so every
+    column starts at a nonzero array offset."""
+    src = pd.concat([pdf.iloc[:offset], pdf]) if offset else pdf
+    rb = pa.RecordBatch.from_pandas(src[schema.names], schema=schema,
+                                    preserve_index=False)
+    return rb.slice(offset)
+
+
+def _check_parity(pdf, gaz, policy="LONGEST_DOMINANT_RIGHT", emit_unknown=False,
+                  schema=TRANSCRIPT_SCHEMA, offset=0):
+    """extract_batch_arrow vs the per-row oracle, column by column; returns
+    the oracle's frame."""
     exp = _extract_batch_rows(pdf, gaz, policy, emit_unknown)
-    assert got.columns.tolist() == exp.columns.tolist()
-    assert len(got) == len(exp), f"{len(got)} vs {len(exp)}"
-    for c in got.columns:
-        a = got[c].tolist()
+    got = extract_batch_arrow(_to_batch(pdf, schema, offset), gaz, policy,
+                              emit_unknown)
+    if got is None:
+        assert len(exp) == 0
+        return exp
+    assert got.schema.names == exp.columns.tolist()
+    assert got.num_rows == len(exp), f"{got.num_rows} vs {len(exp)}"
+    for c in exp.columns:
+        a = got.column(c).to_pylist()
         b = exp[c].tolist()
         assert a == b, f"column {c}: first diff at " + str(
             next(i for i, (x, y) in enumerate(zip(a, b)) if x != y)
         )
+    return exp
 
 
 @pytest.mark.parametrize("policy", ["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"])
@@ -88,10 +114,9 @@ def test_fixture_transcripts_parity(gaz, emit_unknown):
 
 
 def test_empty_batch(gaz):
-    pdf = _frame([])
-    out = extract_batch(pdf, gaz)
-    assert len(out) == 0
-    assert out.columns.tolist() == _extract_batch_rows(pdf, gaz, "ALL", False).columns.tolist()
+    exp = _check_parity(_frame([]), gaz)
+    assert len(exp) == 0
+    assert exp.columns.tolist() == list(QUAD_FIELDS)
 
 
 def test_nul_separator_fallback(gaz):
@@ -159,10 +184,7 @@ try:
     @settings(max_examples=150, deadline=None)
     def test_property_parity(forms, texts, policy, emit_unknown):
         g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})
-        pdf = _frame(texts)
-        got = extract_batch(pdf, g, policy, emit_unknown)
-        exp = _extract_batch_rows(pdf, g, policy, emit_unknown)
-        assert got.values.tolist() == exp.values.tolist()
+        _check_parity(_frame(texts), g, policy, emit_unknown)
 except ImportError:  # pragma: no cover
     pass
 
@@ -195,47 +217,19 @@ def test_template_memo_repeated_texts_parity(gaz, policy, emit_unknown):
     _check_parity(pdf, gaz, policy, emit_unknown)
 
 
-def _check_arrow_parity(pdf, gaz, policy="LONGEST_DOMINANT_RIGHT",
-                        emit_unknown=False):
-    import pyarrow as pa
-
-    from quad_processor_util_spark.plans.extract_vec import extract_batch_arrow
-
-    schema = pa.schema([
-        ("conv_id", pa.string()), ("turn_idx", pa.int32()),
-        ("role", pa.string()), ("text", pa.string()), ("tool", pa.string()),
-    ])
-    rb = pa.RecordBatch.from_pandas(
-        pdf[["conv_id", "turn_idx", "role", "text", "tool"]],
-        schema=schema, preserve_index=False)
-    got_rb = extract_batch_arrow(rb, gaz, policy, emit_unknown)
-    exp = extract_batch(pdf, gaz, policy, emit_unknown)
-    if got_rb is None:
-        assert len(exp) == 0
-        return
-    got = got_rb.to_pandas()
-    assert got.columns.tolist() == exp.columns.tolist()
-    assert len(got) == len(exp), f"{len(got)} vs {len(exp)}"
-    for c in got.columns:
-        a = [None if pd.isna(x) else x for x in got[c].tolist()]
-        b = exp[c].tolist()
-        assert a == b, f"column {c}: first diff at " + str(
-            next(i for i, (x, y) in enumerate(zip(a, b)) if x != y)
-        )
-
-
 @pytest.mark.parametrize("policy", ["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"])
 @pytest.mark.parametrize("emit_unknown", [False, True])
 def test_arrow_batch_parity(gaz, policy, emit_unknown):
-    """Round-6 mapInArrow face: extract_batch_arrow must be value- and
-    order-identical to extract_batch on adversarial texts with interleaved
-    tool rows and null texts."""
+    """Adversarial texts with interleaved tool rows and null texts, in a
+    batch sliced out of a longer one (nonzero array offsets, as Arrow
+    slicing produces) — the takes and dictionary encoding must honour the
+    offsets."""
     roles = ["tool" if i % 5 == 0 else "user"
              for i in range(len(ADVERSARIAL_TEXTS))]
     tools = ["search" if i % 5 == 0 else None
              for i in range(len(ADVERSARIAL_TEXTS))]
     pdf = _frame(ADVERSARIAL_TEXTS, roles, tools)
-    _check_arrow_parity(pdf, gaz, policy, emit_unknown)
+    _check_parity(pdf, gaz, policy, emit_unknown, offset=3)
 
 
 def test_arrow_batch_parity_repeated_and_nul(gaz):
@@ -243,53 +237,29 @@ def test_arrow_batch_parity_repeated_and_nul(gaz):
             "Unknown Capitalized Run here.", ""]
     texts = [base[i % len(base)] for i in range(97)]
     pdf = _frame(texts)
-    _check_arrow_parity(pdf, gaz, emit_unknown=True)
+    _check_parity(pdf, gaz, emit_unknown=True)
     # \x00 text takes the per-row fallback inside the arrow route too
     pdf2 = _frame(["weird\x00byte Ada Lovelace", "Ada Lovelace works at Hopper Labs."])
-    _check_arrow_parity(pdf2, gaz)
+    _check_parity(pdf2, gaz)
 
 
 def test_arrow_batch_empty(gaz):
-    import pyarrow as pa
-
-    from quad_processor_util_spark.plans.extract_vec import extract_batch_arrow
-
-    schema = pa.schema([
-        ("conv_id", pa.string()), ("turn_idx", pa.int32()),
-        ("role", pa.string()), ("text", pa.string()), ("tool", pa.string()),
-    ])
-    rb = pa.RecordBatch.from_pandas(
-        _frame([])[["conv_id", "turn_idx", "role", "text", "tool"]],
-        schema=schema, preserve_index=False)
-    assert extract_batch_arrow(rb, gaz) is None
+    assert extract_batch_arrow(_to_batch(_frame([])), gaz) is None
 
 
 def test_null_turn_idx_renders_none_on_all_paths(gaz):
     """Round-6 review finding: NULL turn_idx must render '.../turn/None'
-    identically on the per-row, pandas-template, and arrow paths (floats
-    NaN used to print 'nan' on some, NULL the subject on arrow)."""
-    import pyarrow as pa
-
-    from quad_processor_util_spark.plans.extract_vec import extract_batch_arrow
-
+    identically on the per-row and arrow paths (float NaN used to print
+    'nan', and arrow nulled the whole subject) — including the arrow
+    route's \\x00 per-row fallback, where a NULL must not turn the other
+    rows' indices into floats ('3.0')."""
+    schema = TRANSCRIPT_SCHEMA.set(1, pa.field("turn_idx", pa.int64()))
     pdf = _frame(["Unknown Capitalized Run here.", "Boston"],
                  roles=["tool", "user"], tools=["calc", None])
-    pdf["turn_idx"] = pd.array([None, 3], dtype="Int64")
-    exp = _extract_batch_rows(
-        pdf.assign(turn_idx=pdf["turn_idx"].astype(object)
-                   .where(pdf["turn_idx"].notna(), None)),
-        gaz, "LONGEST_DOMINANT_RIGHT", True)
+    pdf["turn_idx"] = pd.Series([None, 3], dtype=object)
+    exp = _check_parity(pdf, gaz, emit_unknown=True, schema=schema)
     assert any(s.endswith("/turn/None") for s in exp["subject"])
-    got_pd = extract_batch(
-        pdf.assign(turn_idx=pdf["turn_idx"].astype("float64")), gaz,
-        emit_unknown=True)
-    assert got_pd["subject"].tolist() == exp["subject"].tolist()
-    schema = pa.schema([
-        ("conv_id", pa.string()), ("turn_idx", pa.int64()),
-        ("role", pa.string()), ("text", pa.string()), ("tool", pa.string()),
-    ])
-    rb = pa.RecordBatch.from_pandas(
-        pdf[["conv_id", "turn_idx", "role", "text", "tool"]],
-        schema=schema, preserve_index=False)
-    got_ar = extract_batch_arrow(rb, gaz, "LONGEST_DOMINANT_RIGHT", True)
-    assert got_ar.to_pandas()["subject"].tolist() == exp["subject"].tolist()
+    nul = pdf.assign(text=["Unknown\x00Run here.", "Boston"],
+                     role="tool", tool="calc")
+    exp = _check_parity(nul, gaz, emit_unknown=True, schema=schema)
+    assert exp["subject"].str.endswith("/turn/3").any()

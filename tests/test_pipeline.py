@@ -14,6 +14,7 @@ from quad_processor_util_spark.datagen import (
     build_transcripts,
 )
 from quad_processor_util_spark.oracle import (
+    Gazetteer,
     canonicalize_quads,
     dedup_quads,
     extract_conversation,
@@ -120,3 +121,91 @@ def test_materialize_partitioned_by_predicate(spark, data, tmp_path):
     files = {r[0] for r in
              one.select(F.input_file_name()).distinct().collect()}
     assert files and all(f"/{parts[0]}/" in f for f in files)
+
+
+class TestExtractBoundary:
+    """The Spark side of extraction: what extract_quads hands the mapInArrow
+    closure, and the plan shape that the extraction cost claims rest on."""
+
+    COLS = ["conv_id", "turn_idx", "role", "text", "tool"]
+    GAZ = {"Ada Lovelace": "http://e/ada", "Turing Institute": "http://e/ti"}
+
+    @pytest.fixture(scope="class")
+    def tiny(self, spark):
+        import datetime
+
+        ts = datetime.datetime(2026, 1, 1)
+        return spark.createDataFrame(
+            [("c1", 0, "user", "Ada Lovelace works at Turing Institute.", None, ts),
+             ("c1", 1, "tool", "ran it", "calc", ts),
+             ("c2", 0, "user", "Unknown Capitalized Run", None, ts)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp")
+
+    @staticmethod
+    def _final_plan(df) -> str:
+        """Executed plan text after an action; under AQE only the final
+        plan (the initial one repeats every node)."""
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "== Final Plan ==" in plan:
+            plan = plan.split("== Final Plan ==", 1)[1]
+            plan = plan.split("== Initial Plan ==", 1)[0]
+        return plan
+
+    @pytest.mark.parametrize("bucketed", [False, True])
+    def test_plan_shape(self, tiny, bucketed):
+        import re
+
+        plan = self._final_plan(
+            extract_quads(tiny, self.GAZ, assume_bucketed=bucketed))
+        assert plan.count("MapInArrow") == 1, plan
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+        # the closure's input is exactly the five columns: no `ts`, and the
+        # boundary's string casts are simplified away for string columns
+        args = re.search(r"MapInArrow \w+\(([^)]*)\)", plan).group(1)
+        assert [re.sub(r"#\d+", "", a).strip()
+                for a in args.split(",")] == self.COLS, plan
+        assert "cast(" not in plan.lower(), plan
+        exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+        if bucketed:
+            assert exchanges == [], plan
+        else:
+            assert len(exchanges) == 1, plan
+            assert "hashpartitioning(conv_id" in exchanges[0], plan
+
+    def test_missing_column_fails_on_driver(self, spark, tiny):
+        jobs_before = spark.sparkContext.statusTracker().getJobIdsForGroup()
+        with pytest.raises(ValueError, match=r"\['tool'\]"):
+            extract_quads(tiny.drop("tool"), self.GAZ)
+        assert (spark.sparkContext.statusTracker().getJobIdsForGroup()
+                == jobs_before)
+
+    def test_integer_tool_matches_oracle(self, spark):
+        """A non-string `tool` column is cast to string at the boundary, so
+        the Arrow path and the per-row oracle see the same values."""
+        import pandas as pd
+
+        from quad_processor_util_spark.plans.extract_vec import (
+            _extract_batch_rows,
+        )
+
+        tools = [7, None, 0, 12]
+        pdf = pd.DataFrame({
+            "conv_id": ["c1", "c1", "c2", "c2"], "turn_idx": [0, 1, 0, 1],
+            "role": ["tool", "tool", "tool", "user"],
+            "text": ["Ada Lovelace works at Turing Institute.", "x", "y", "z"],
+            "tool": pd.array(tools, dtype="Int64"),
+        })
+        df = spark.createDataFrame(
+            pdf, "conv_id string, turn_idx int, role string, text string, "
+                 "tool bigint")
+        got = [tuple(r) for r in extract_quads(df, self.GAZ).collect()]
+        exp = _extract_batch_rows(
+            pdf.assign(tool=[None if t is None else str(t) for t in tools]),
+            Gazetteer(self.GAZ), "LONGEST_DOMINANT_RIGHT", False)
+        exp = [tuple(r) for r in exp.itertuples(index=False)]
+        key = lambda q: tuple(x or "" for x in q)  # noqa: E731
+        assert sorted(got, key=key) == sorted(exp, key=key)
+        assert sum(q[1].endswith("toolUsed") for q in got) == 2

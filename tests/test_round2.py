@@ -224,24 +224,14 @@ class TestReviewRegressions:
 
     def test_gazetteer_non_ascii_boundary_prefix(self, spark):
         from quad_processor_util_spark.oracle import Gazetteer
-        from quad_processor_util_spark.plans.extract_vec import (
-            _extract_batch_rows, extract_batch,
-        )
-        import numpy as np
-        import pandas as pd
+        from test_extract_vec import _check_parity, _frame
 
         g = Gazetteer({"New": "http://e/1", "Newé": "http://e/2"})
         found = {(m.start, m.end, m.surface) for m in g.find_all("Newé")}
         # 'é' is outside the regex boundary class, so 'New' matches at (0,3)
         assert (0, 3, "New") in found and (0, 4, "Newé") in found
-        pdf = pd.DataFrame({
-            "conv_id": ["c"], "turn_idx": np.array([0], dtype="int32"),
-            "role": ["user"], "text": ["Newé and New"], "tool": [None],
-        })
         for policy in ("ALL", "NO_SUB", "LONGEST_DOMINANT_RIGHT"):
-            a = extract_batch(pdf, g, policy, False).values.tolist()
-            b = _extract_batch_rows(pdf, g, policy, False).values.tolist()
-            assert a == b
+            _check_parity(_frame(["Newé and New"]), g, policy)
 
     def test_cosine_zero_vector_not_rank1(self, spark):
         from quad_processor_util_spark.operators.similarity import cosine_topk

@@ -24,7 +24,7 @@ from quad_processor_util_spark.operators.sort import (
     sort_quads,
 )
 from quad_processor_util_spark.oracle import PyQuad
-from quad_processor_util_spark.plans.metrics import StageTimer, observed_counts
+from quad_processor_util_spark.plans.metrics import observed_counts
 from quad_processor_util_spark.sources.io import read_snapshots_union, write_composite
 
 
@@ -197,11 +197,3 @@ class TestMetrics:
         out, obs = observed_counts(df)
         assert out.count() == 3
         assert obs.get["rows"] == 3
-
-    def test_stage_timer(self, spark):
-        t = StageTimer()
-        n = t.time("count", lambda: 42, n_records=1000)
-        assert n == 42
-        meta = t.as_meta()
-        assert "count" in meta["stages"]
-        assert meta["stages"]["count"]["records_per_sec"] > 0

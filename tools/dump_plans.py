@@ -20,10 +20,10 @@ CHECKS = {
     "anti_join": ["BroadcastHashJoin", "LeftSemi|LeftAnti"],
     "dedup_exact": ["HashAggregate", "LeftSemi"],
     "stable_turn_order": ["Window", "ReadSchema"],
-    "extract_kg": ["MapInPandas", "hashpartitioning"],
+    "extract_kg": ["MapInArrow", "hashpartitioning"],
     # the non-bucketed path must show the explicit conv_id exchange + the
     # in-partition (conv_id, turn_idx) secondary sort before extraction
-    "extract_kg_shuffled": ["MapInPandas", "hashpartitioning\\(conv_id", "Sort"],
+    "extract_kg_shuffled": ["MapInArrow", "hashpartitioning\\(conv_id", "Sort"],
     # explode of the template array (Generate) feeding Arrow-vectorized UDFs
     "mint_iri": ["Generate", "ArrowEvalPython", "ReadSchema"],
     "uri_to_iri": ["Generate", "ArrowEvalPython", "ReadSchema"],
@@ -34,7 +34,7 @@ CHECKS = {
     "cosine_topk": ["BroadcastNestedLoopJoin|BroadcastHashJoin", "Window"],
     "quad_parse": ["codegen id"],
     "predicate_split_counts": ["HashAggregate", "ReadSchema"],
-    "pipeline_e2e": ["MapInPandas", "BroadcastHashJoin"],
+    "pipeline_e2e": ["MapInArrow", "BroadcastHashJoin"],
     # pipeline_full's extraction materializes ONCE into the linking split's
     # persist() — the three branches read the columnar cache
     "pipeline_full": ["InMemoryTableScan", "BroadcastHashJoin", "HashAggregate"],

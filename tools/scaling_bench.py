@@ -91,7 +91,7 @@ spark.stop()
 # --------------------------------------------------------------------------
 # /proc occupancy sampler: how many cores (JVM vs Python workers) a level
 # actually keeps busy during the measured window. The thread-level scaling
-# substitute advertises local[N] as "N cores", but mapInPandas occupies a
+# substitute advertises local[N] as "N cores", but mapInArrow occupies a
 # JVM task thread AND a pyspark.daemon worker per task — measured occupancy
 # is the number the pair efficiencies must be read against.
 # --------------------------------------------------------------------------
@@ -184,19 +184,12 @@ def _pyfiles_zip() -> str:
     return build()
 
 
-def run_level(cpus: int, child_py: str, zip_path: str,
-              extra_conf: list[str] | None = None) -> dict:
-    """extra_conf: additional `k=v` Spark conf strings appended after the
-    protocol's fixed set (tools/arrow_probe.py varies Arrow/worker confs
-    per variant through this)."""
+def run_level(cpus: int, child_py: str, zip_path: str) -> dict:
     env = dict(os.environ)
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
     import tempfile
 
-    conf_args = []
-    for kv in (extra_conf or []):
-        conf_args += ["--conf", kv]
     # stderr goes to a FILE, not a pipe: local-mode Spark logs can exceed
     # the ~64 KB pipe buffer, and a parent looping on stdout while the child
     # blocks in a full stderr write(2) is a deadlock (review finding). A
@@ -211,7 +204,6 @@ def run_level(cpus: int, child_py: str, zip_path: str,
              "--conf", "spark.sql.files.maxPartitionBytes=1048576",
              "--conf", "spark.sql.files.openCostInBytes=131072",
              "--conf", "spark.driver.memory=8g",
-             *conf_args,
              "--py-files", zip_path,
              child_py, str(cpus), PREP_DIR],
             stdout=subprocess.PIPE, stderr=errf, text=True, env=env,
@@ -261,12 +253,6 @@ def run_level(cpus: int, child_py: str, zip_path: str,
     return result
 
 
-# --------------------------------------------------------------------------
-# shared probe plumbing (arrow_probe.py / retention_pair.py import these —
-# one copy of the prep/child/ceiling/aggregation protocol, round-5 review)
-# --------------------------------------------------------------------------
-
-
 def prep_input(sf_dir: str, repl: int) -> int:
     """Build the replicated transcript input (untimed, shared by all
     levels/variants) into PREP_DIR; returns the row count."""
@@ -289,31 +275,6 @@ def make_child() -> str:
     with open(child_py, "w") as f:
         f.write(_CHILD)
     return child_py
-
-
-def agg_runs(rs: list[dict]) -> dict:
-    """Median tps + busy-core occupancy over one (variant, level)'s trials."""
-    from statistics import median
-
-    tps = median(r["turns_per_sec"] for r in rs)
-    busies = [r["busy_cores"]["total"] for r in rs if r.get("busy_cores")]
-    busy = median(busies) if busies else None
-    return {"median_tps": round(tps), "busy_cores": busy,
-            "tps_per_busy_core": round(tps / busy) if busy else None,
-            "all_tps": [round(r["turns_per_sec"]) for r in rs]}
-
-
-def host_ceiling_at(levels: list[int]) -> dict:
-    """Same-day host calibration at the given proc counts; returns the
-    tool's parsed JSON ({'rows_per_sec': {level: rate}, ...})."""
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "host_ceiling.py"),
-         *map(str, levels)],
-        capture_output=True, text=True, timeout=3600, cwd=REPO)
-    if out.returncode != 0:
-        raise RuntimeError(out.stderr[-2000:])
-    return json.loads([ln for ln in out.stdout.splitlines()
-                       if ln.startswith("{")][-1])
 
 
 def main() -> None:
@@ -390,7 +351,7 @@ def main() -> None:
 Protocol (BASELINE.md): same flagship job — read transcripts parquet
 (clustered by conv_id, sorted by turn_idx at rest, as the engine's write
 path / an Iceberg bucket(conv_id) spec produces) → vectorized mention
-detection + triple extraction (mapInPandas, Arrow; the conv_id re-shuffle
+detection + triple extraction (mapInArrow; the conv_id re-shuffle
 is skipped because the table layout already guarantees it) →
 5-field-identity dedup → count — on the SAME input at two parallelism
 levels, each level launched through the real `spark-submit --py-files
@@ -404,8 +365,9 @@ trials per level, median reported (all trials listed).
 
 Machine: {multiprocessing.cpu_count()} logical cores visible, single node,
 shared/virtualized (minute-scale throughput variance observed; the
-host-ceiling calibration section below gives what this box can physically
-deliver per 4:1 pair for the same vectorized workload).
+host-ceiling calibration records appended below, from earlier runs, give
+what such a box could physically deliver per 4:1 pair for the same
+vectorized workload).
 Command: `python tools/scaling_bench.py {sf_dir} {ns_arg} {repl} {trials}`
 
 | level | median wall sec | turns | median turns/sec | busy cores (JVM+Py) | all trials (turns/sec) |
@@ -413,7 +375,7 @@ Command: `python tools/scaling_bench.py {sf_dir} {ns_arg} {repl} {trials}`
 {level_rows}
 
 "Busy cores" is /proc-sampled over the measured window (median trial):
-mapInPandas occupies a JVM task thread AND a Python worker per task, so
+mapInArrow occupies a JVM task thread AND a Python worker per task, so
 local[N] demands up to ~2N cores — read the upper pairs against measured
 occupancy, not the advertised thread count.
 
@@ -433,7 +395,7 @@ largest 4:1 pair the host can physically scale)
 Notes: single-machine thread-level substitute for the N→4N executor
 criterion per BASELINE.md. Above ~8 busy processes this box loses per-core
 clock (SMT/turbo/co-tenants): raw multiprocessing on the same extraction
-kernel caps at ~0.68-0.75 at 8→32 (measured per round; see calibration
+kernel capped at ~0.68-0.75 at 8→32 (recorded calibration runs, appended
 below), so the upper
 pairs measure the host, not the engine — they are published anyway.
 The workload is sized so per-row extraction dominates fixed job overhead —
