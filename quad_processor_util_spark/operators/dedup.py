@@ -15,7 +15,7 @@ Scale notes (100 TB stance):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import WS_RE, fingerprint
@@ -399,20 +399,20 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int = 1000,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold via shingle inverted index.
     Shingles appearing in > max_shingle_df docs are dropped (df-cap — the
     skew guard). -> (id_a, id_b, jaccard).
 
-    With prefix_filter (default, the 100 TB path): shingles are ranked per
-    doc in global rarest-first order and only each doc's PREFIX — its first
-    |A| - ceil(t·|A|) + 1 shingles — enters the inverted-index self-join
-    (PPJoin-style prefix filtering: two sets with Jaccard ≥ t must share at
-    least one prefix element under any common total order, since missing the
-    whole prefix bounds the overlap below t·max(|A|,|B|)). Survivor pairs
-    get an exact verify on the full (capped) shingle sets. Identical output
-    to the naive quadratic join — only the candidate space shrinks."""
+    Shingles are ranked per doc in global rarest-first order and only each
+    doc's PREFIX — its first |A| - ceil(t·|A|) + 1 shingles — enters the
+    inverted-index self-join (PPJoin-style prefix filtering: two sets with
+    Jaccard ≥ t must share at least one prefix element under any common
+    total order, since missing the whole prefix bounds the overlap below
+    t·max(|A|,|B|)). Survivor pairs get an exact verify on the full
+    (capped) shingle sets. Identical output to the naive quadratic join —
+    only the candidate space shrinks (tests/test_round2.py keeps the naive
+    join as the reference)."""
     # The shingle relation feeds several consumers (hot-cap, sizes,
     # frequency ranking, both prefix sides, the verify sets). Round 6: cut
     # the lineage with a LAZY localCheckpoint so the shingle subtree
@@ -442,181 +442,157 @@ def ngram_jaccard_pairs(
         sh = sh.join(F.broadcast(hot.select("__sh")), "__sh", "left_anti")
         sh = sh.localCheckpoint(eager=False)
 
-    if prefix_filter:
-        from pyspark.sql import Window
-
-        # Round-6 shape (guide §2.3 "shuffle keys, not payloads" + §8):
-        # the old verify joined ~KB string-shingle ARRAYS onto every
-        # candidate row and shuffled them twice — at sf1.0 (52M candidates
-        # from 50k template-heavy docs) that one stage was 95 of 111 s.
-        # Now: (1) shingles get dense INT codes in global rarest-first
-        # (__freq, __sh) order — the code order IS the old prefix ranking
-        # order, codes are injective so every downstream set size is
-        # identical; (2) candidates are pruned with the exact PPJoin
-        # size + positional bounds (provably no false negatives — see
-        # inline notes; verified output-identical by the oracle gate and
-        # tests); (3) jaccard = inter / (|A| + |B| - inter) with the
-        # intersection computed on int arrays, so no array_union and no
-        # string arrays anywhere. The vocab-wide rank window is a single
-        # sequential pass over the DISTINCT-shingle relation (Heaps-law
-        # sublinear; the production max_shingle_df cap bounds it further) —
-        # at a truly enormous vocab assign codes with a range-partitioned
-        # two-pass rank (operators/packing.py pattern) instead.
-        codes = (
-            sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__freq"))
-            .withColumn(
-                "__code",
-                F.row_number().over(Window.orderBy("__freq", "__sh")),
-            )
-            .select("__sh", "__code")
+    # Round-6 shape (guide §2.3 "shuffle keys, not payloads" + §8):
+    # the old verify joined ~KB string-shingle ARRAYS onto every
+    # candidate row and shuffled them twice — at sf1.0 (52M candidates
+    # from 50k template-heavy docs) that one stage was 95 of 111 s.
+    # Now: (1) shingles get dense INT codes in global rarest-first
+    # (__freq, __sh) order — the code order IS the old prefix ranking
+    # order, codes are injective so every downstream set size is
+    # identical; (2) candidates are pruned with the exact PPJoin
+    # size + positional bounds (provably no false negatives — see
+    # inline notes; verified output-identical by the oracle gate and
+    # tests); (3) jaccard = inter / (|A| + |B| - inter) with the
+    # intersection computed on int arrays, so no array_union and no
+    # string arrays anywhere. The vocab-wide rank window is a single
+    # sequential pass over the DISTINCT-shingle relation (Heaps-law
+    # sublinear; the production max_shingle_df cap bounds it further) —
+    # at a truly enormous vocab assign codes with a range-partitioned
+    # two-pass rank (operators/packing.py pattern) instead.
+    codes = (
+        sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__freq"))
+        .withColumn(
+            "__code",
+            F.row_number().over(Window.orderBy("__freq", "__sh")),
         )
-        shc = (
-            sh.join(codes, "__sh")
-            .select(id_col, "__code")
-            .localCheckpoint(eager=False)
-        )
-        # __pos and __sz from ONE window pass (count over the same
-        # id-partition rides the row_number exchange) — the separate
-        # sizes aggregate + join-back was a whole extra pass over the
-        # shingle relation (round 6)
-        wdoc = Window.partitionBy(id_col)
-        ranked = shc.select(
-            id_col, "__code",
-            F.row_number().over(wdoc.orderBy("__code")).alias("__pos"),
-            F.count(F.lit(1)).over(wdoc).alias("__sz"),
-        )
-        # epsilon guards the ceil against upward float error at integer
-        # boundaries (a too-short prefix loses pairs; too long only costs).
-        # Round 6: k=2 extended prefix (PPJoin k-prefix lemma) — one extra
-        # indexed position per doc (+~4% join rows) buys the right to
-        # demand TWO shared prefix codes downstream: for any pair with
-        # J >= t (so |A∩B| = α >= ceil(t·|A|) under the size-ratio
-        # filter), the two SMALLEST shared codes e1 < e2 each have >= α-j
-        # intersection elements after them, hence pos(e_j) <= |X| - α + j
-        # <= |X| - ceil(t·|X|) + 2 in both docs — both land in both
-        # extended prefixes. Requiring cnt >= 2 then kills the dominant
-        # junk class (pairs sharing exactly one rare code), which at
-        # sf1.0 was 16.3M of 16.3M candidates for 2.8k true pairs.
-        prefix = ranked.where(
-            F.col("__pos")
-            <= F.col("__sz")
-            - F.ceil(F.lit(threshold) * F.col("__sz") - F.lit(1e-9)) + 2
-        ).select(id_col, "__code", "__pos", "__sz").localCheckpoint(eager=False)
-        a, b = prefix.alias("a"), prefix.alias("b")
-        # exact candidate pruning, both bounds sound (no false negatives):
-        # - size bound: J(A,B) <= min/max, so J >= t forces
-        #   min(|A|,|B|) >= t*max(|A|,|B|);
-        # - positional bound: if |A∩B| >= minov, the FIRST shared element
-        #   (in code order) sits at pos_X <= |X| - |A∩B| + 1 in both docs,
-        #   and it IS a prefix element of both, so that occurrence passes
-        #   1 + min(|A|-posA, |B|-posB) >= |A∩B| >= minov.
-        # epsilons relax the float comparisons downward only (a relaxed
-        # bound admits extra candidates, never drops a true pair).
-        minov = (F.lit(threshold / (1.0 + threshold))
-                 * (F.col("a.__sz") + F.col("b.__sz")) - F.lit(1e-9))
-        # Round 6: the old `.distinct()` kept every pair sharing ONE
-        # surviving prefix code — at sf1.0 that was 16.3M candidates of
-        # which 2.8k verified, and the sets join + array_intersect over
-        # the junk was 12 of 27 s. The distinct becomes a groupBy (same
-        # exchange, map-side combined) accumulating the PPJoin LAST-match
-        # bound: cnt shared prefix codes + positions of the LAST shared
-        # one. Soundness (no false negatives): with per-doc positions
-        # monotone in the global code order, every intersection element
-        # <= the last shared prefix code l is itself in BOTH prefixes
-        # (pos <= pos(l) <= prefix length) and hence counted in cnt;
-        # elements > l occupy distinct positions after pos(l) in both
-        # docs, at most min(|A|-lpa, |B|-lpb) of them. So
-        # |A∩B| <= cnt + min(|A|-lpa, |B|-lpb); require >= minov.
-        # The per-row first-match filter stays (it prunes rows BEFORE the
-        # exchange) and cannot unsoundly shrink the aggregate: a dropped
-        # row's bound is monotone decreasing in position, so dropped
-        # codes all sit after the kept maximum in both docs and land in
-        # the suffix-capacity term. Verified output-identical by the
-        # oracle gate and tests.
-        minov_g = (F.lit(threshold / (1.0 + threshold))
-                   * (F.col("__sza") + F.col("__szb")) - F.lit(1e-9))
-        cands = (
-            a.join(b, "__code")
-            .where(
-                (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                & (F.least("a.__sz", "b.__sz")
-                   >= F.lit(threshold) * F.greatest("a.__sz", "b.__sz")
-                   - F.lit(1e-9))
-                # first-occurrence positional bound, RELAXED by k-1=1 so
-                # both k-prefix witness rows survive pre-aggregation: the
-                # j-th smallest shared code has >= α-j intersection
-                # elements after it, so its row bound is >= minov-1, not
-                # minov (j=2). Relaxing only admits extra rows — the
-                # aggregate filters below stay sound.
-                & (F.lit(2) + F.least(F.col("a.__sz") - F.col("a.__pos"),
-                                      F.col("b.__sz") - F.col("b.__pos"))
-                   >= minov)
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.col("a.__sz").alias("__sza"),
-                F.col("b.__sz").alias("__szb"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("__cnt"),
-                F.max("a.__pos").alias("__lpa"),
-                F.max("b.__pos").alias("__lpb"),
-            )
-            .where(
-                # (1) k-prefix count: >= 2 shared prefix codes (>= 1 when
-                #     the pair's minimum overlap itself is < 2 — tiny docs)
-                (F.col("__cnt")
-                 >= F.least(F.lit(2), F.ceil(minov_g)))
-                # (2) last-position bound: every shared code <= the last
-                #     counted one IS counted (positions are monotone in
-                #     code order, so it sits inside both prefixes and its
-                #     row passes the relaxed row filter); codes beyond it
-                #     fit in the shorter remaining suffix
-                & (F.col("__cnt")
-                   + F.least(F.col("__sza") - F.col("__lpa"),
-                             F.col("__szb") - F.col("__lpb"))
-                   >= minov_g)
-            )
-            .select("id_a", "id_b", "__sza", "__szb")
-        )
-        sets_df = shc.groupBy(id_col).agg(
-            F.collect_list("__code").alias("__set"))
-        out = (
-            cands.join(
-                sets_df.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")),
-                "id_a")
-            .join(
-                sets_df.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")),
-                "id_b")
-            .select(
-                "id_a", "id_b",
-                (
-                    F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                    / (F.col("__sza") + F.col("__szb")
-                       - F.size(F.array_intersect("__sa", "__sb")))
-                ).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
-        return out
-
-    # sizes AFTER the df-cap: numerator and denominator must share the same
-    # shingle universe, or capped corpora silently underestimate jaccard
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "__sh")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__inter"))
+        .select("__sh", "__code")
     )
+    shc = (
+        sh.join(codes, "__sh")
+        .select(id_col, "__code")
+        .localCheckpoint(eager=False)
+    )
+    # __pos and __sz from ONE window pass (count over the same
+    # id-partition rides the row_number exchange) — the separate
+    # sizes aggregate + join-back was a whole extra pass over the
+    # shingle relation (round 6)
+    wdoc = Window.partitionBy(id_col)
+    ranked = shc.select(
+        id_col, "__code",
+        F.row_number().over(wdoc.orderBy("__code")).alias("__pos"),
+        F.count(F.lit(1)).over(wdoc).alias("__sz"),
+    )
+    # epsilon guards the ceil against upward float error at integer
+    # boundaries (a too-short prefix loses pairs; too long only costs).
+    # Round 6: k=2 extended prefix (PPJoin k-prefix lemma) — one extra
+    # indexed position per doc (+~4% join rows) buys the right to
+    # demand TWO shared prefix codes downstream: for any pair with
+    # J >= t (so |A∩B| = α >= ceil(t·|A|) under the size-ratio
+    # filter), the two SMALLEST shared codes e1 < e2 each have >= α-j
+    # intersection elements after them, hence pos(e_j) <= |X| - α + j
+    # <= |X| - ceil(t·|X|) + 2 in both docs — both land in both
+    # extended prefixes. Requiring cnt >= 2 then kills the dominant
+    # junk class (pairs sharing exactly one rare code), which at
+    # sf1.0 was 16.3M of 16.3M candidates for 2.8k true pairs.
+    prefix = ranked.where(
+        F.col("__pos")
+        <= F.col("__sz")
+        - F.ceil(F.lit(threshold) * F.col("__sz") - F.lit(1e-9)) + 2
+    ).select(id_col, "__code", "__pos", "__sz").localCheckpoint(eager=False)
+    a, b = prefix.alias("a"), prefix.alias("b")
+    # exact candidate pruning, both bounds sound (no false negatives):
+    # - size bound: J(A,B) <= min/max, so J >= t forces
+    #   min(|A|,|B|) >= t*max(|A|,|B|);
+    # - positional bound: if |A∩B| >= minov, the FIRST shared element
+    #   (in code order) sits at pos_X <= |X| - |A∩B| + 1 in both docs,
+    #   and it IS a prefix element of both, so that occurrence passes
+    #   1 + min(|A|-posA, |B|-posB) >= |A∩B| >= minov.
+    # epsilons relax the float comparisons downward only (a relaxed
+    # bound admits extra candidates, never drops a true pair).
+    minov = (F.lit(threshold / (1.0 + threshold))
+             * (F.col("a.__sz") + F.col("b.__sz")) - F.lit(1e-9))
+    # Round 6: the old `.distinct()` kept every pair sharing ONE
+    # surviving prefix code — at sf1.0 that was 16.3M candidates of
+    # which 2.8k verified, and the sets join + array_intersect over
+    # the junk was 12 of 27 s. The distinct becomes a groupBy (same
+    # exchange, map-side combined) accumulating the PPJoin LAST-match
+    # bound: cnt shared prefix codes + positions of the LAST shared
+    # one. Soundness (no false negatives): with per-doc positions
+    # monotone in the global code order, every intersection element
+    # <= the last shared prefix code l is itself in BOTH prefixes
+    # (pos <= pos(l) <= prefix length) and hence counted in cnt;
+    # elements > l occupy distinct positions after pos(l) in both
+    # docs, at most min(|A|-lpa, |B|-lpb) of them. So
+    # |A∩B| <= cnt + min(|A|-lpa, |B|-lpb); require >= minov.
+    # The per-row first-match filter stays (it prunes rows BEFORE the
+    # exchange) and cannot unsoundly shrink the aggregate: a dropped
+    # row's bound is monotone decreasing in position, so dropped
+    # codes all sit after the kept maximum in both docs and land in
+    # the suffix-capacity term. Verified output-identical by the
+    # oracle gate and tests.
+    minov_g = (F.lit(threshold / (1.0 + threshold))
+               * (F.col("__sza") + F.col("__szb")) - F.lit(1e-9))
+    cands = (
+        a.join(b, "__code")
+        .where(
+            (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.least("a.__sz", "b.__sz")
+               >= F.lit(threshold) * F.greatest("a.__sz", "b.__sz")
+               - F.lit(1e-9))
+            # first-occurrence positional bound, RELAXED by k-1=1 so
+            # both k-prefix witness rows survive pre-aggregation: the
+            # j-th smallest shared code has >= α-j intersection
+            # elements after it, so its row bound is >= minov-1, not
+            # minov (j=2). Relaxing only admits extra rows — the
+            # aggregate filters below stay sound.
+            & (F.lit(2) + F.least(F.col("a.__sz") - F.col("a.__pos"),
+                                  F.col("b.__sz") - F.col("b.__pos"))
+               >= minov)
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.__sz").alias("__sza"),
+            F.col("b.__sz").alias("__szb"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("__cnt"),
+            F.max("a.__pos").alias("__lpa"),
+            F.max("b.__pos").alias("__lpb"),
+        )
+        .where(
+            # (1) k-prefix count: >= 2 shared prefix codes (>= 1 when
+            #     the pair's minimum overlap itself is < 2 — tiny docs)
+            (F.col("__cnt")
+             >= F.least(F.lit(2), F.ceil(minov_g)))
+            # (2) last-position bound: every shared code <= the last
+            #     counted one IS counted (positions are monotone in
+            #     code order, so it sits inside both prefixes and its
+            #     row passes the relaxed row filter); codes beyond it
+            #     fit in the shorter remaining suffix
+            & (F.col("__cnt")
+               + F.least(F.col("__sza") - F.col("__lpa"),
+                         F.col("__szb") - F.col("__lpb"))
+               >= minov_g)
+        )
+        .select("id_a", "id_b", "__sza", "__szb")
+    )
+    sets_df = shc.groupBy(id_col).agg(
+        F.collect_list("__code").alias("__set"))
     out = (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sza"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__szb"), "id_b")
+        cands.join(
+            sets_df.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")),
+            "id_a")
+        .join(
+            sets_df.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")),
+            "id_b")
         .select(
             "id_a", "id_b",
-            (F.col("__inter") / (F.col("__sza") + F.col("__szb") - F.col("__inter"))).alias("jaccard"),
+            (
+                F.size(F.array_intersect("__sa", "__sb")).cast("double")
+                / (F.col("__sza") + F.col("__szb")
+                   - F.size(F.array_intersect("__sa", "__sb")))
+            ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )

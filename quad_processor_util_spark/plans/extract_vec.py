@@ -334,6 +334,12 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     n = rb.num_rows
     if n == 0:
         return None
+    # spark.sql.execution.arrow.useLargeVarTypes ships large_string; every
+    # array built below is string, so normalize the input once here
+    if any(pa.types.is_large_string(f.type) for f in rb.schema):
+        rb = rb.cast(pa.schema([
+            f.with_type(pa.string()) if pa.types.is_large_string(f.type)
+            else f for f in rb.schema]))
     enc = pc.dictionary_encode(rb.column("text"))
     if isinstance(enc, pa.ChunkedArray):
         enc = enc.combine_chunks()

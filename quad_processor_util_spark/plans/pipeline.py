@@ -208,38 +208,35 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
 def canonicalize(
     quads: DataFrame, mapping: DataFrame, excluded: DataFrame
 ) -> DataFrame:
-    """Rewrite subject + URI objects to canonical IRIs (broadcast hash join —
-    the in-memory redirect map, SolrLoader.scala:58-84, distributed); drop
-    quads touching disambiguation sources (left_anti,
-    SolrLoader.scala:124-127). For head-entity-skewed mapping tables swap the
-    broadcast for operators.joins.salted_join."""
-    m = F.broadcast(mapping)
-    # Exclusion parity with oracle.canonicalize_quads: drop when the
-    # ORIGINAL or the canonical form is excluded; object exclusion applies
-    # only to URI objects (datatype IS NULL). Round 6: `orig ∈ EX ∨
-    # coalesce(m[orig], orig) ∈ EX` is a pure function of the ORIGINAL iri,
-    # so precompute bad = EX ∪ {node : m[node] ∈ EX} (a join of the two
-    # broadcast-sized dims, still broadcast-sized) and flag each column
-    # with ONE join instead of two — 6 broadcast joins over the corpus
-    # become 4 (guide §2.4); predicate equivalence: __xs0 ∨ __xs1 ⟺
-    # bad(subject), __xo0 ∨ __xo1 ⟺ bad(obj).
-    exd = excluded.select(F.col("iri")).distinct()
-    bad = F.broadcast(
-        exd.union(
-            mapping.join(exd, mapping["canonical"] == exd["iri"])
-            .select(mapping["node"].alias("iri"))
-        ).distinct().withColumn("__x", F.lit(True))
+    """Rewrite subject + URI objects to canonical IRIs and drop quads
+    touching disambiguation sources: the reference's in-memory redirect map
+    plus its exclusion check (SolrLoader.scala:58-84,124-127), distributed
+    as ONE broadcast dimension probed once per column.
+
+    Exclusion parity with oracle.canonicalize_quads: a quad is dropped when
+    the ORIGINAL or the canonical form is excluded, and object exclusion
+    applies only to URI objects (datatype IS NULL). Both are pure functions
+    of the original IRI, so the dimension dim(iri, canonical, __x) carries
+    the rewrite target and the flag `iri ∈ EX ∨ mapping[iri] ∈ EX` (TRUE,
+    else NULL) together.
+    It is built from the two small inputs (mapping ⋈ EX, ∪ EX) and grouped
+    to one row per IRI, so the left joins never duplicate a quad. For
+    head-entity-skewed mapping tables swap the broadcast for
+    operators.joins.salted_join."""
+    exd = excluded.select("iri", F.lit(True).alias("__x"))
+    dim = F.broadcast(
+        mapping.join(exd, mapping["canonical"] == exd["iri"], "left")
+        .select(mapping["node"].alias("iri"), "canonical", "__x")
+        .union(exd.select("iri", F.lit(None).cast("string"), "__x"))
+        .groupBy("iri")
+        .agg(F.max("canonical").alias("canonical"), F.max("__x").alias("__x"))
     )
     out = (
-        quads.join(
-            m.select(F.col("node").alias("subject"), F.col("canonical").alias("__cs")),
-            "subject", "left")
-        .join(
-            m.select(F.col("node").alias("obj"), F.col("canonical").alias("__co")),
-            "obj", "left")
-        .join(bad.select(F.col("iri").alias("subject"),
-                         F.col("__x").alias("__xs")), "subject", "left")
-        .join(bad.select(F.col("iri").alias("obj"),
+        quads.join(dim.select(F.col("iri").alias("subject"),
+                              F.col("canonical").alias("__cs"),
+                              F.col("__x").alias("__xs")), "subject", "left")
+        .join(dim.select(F.col("iri").alias("obj"),
+                         F.col("canonical").alias("__co"),
                          F.col("__x").alias("__xo")), "obj", "left")
         .where(
             F.col("__xs").isNull()
@@ -319,12 +316,6 @@ def link_unknown_mentions(
     return rest.unionByName(linked)
 
 
-def materialize(quads: DataFrame, out_path: str, meta: dict | None = None) -> None:
-    """Dedup on the 5-field identity then write partitioned by predicate
-    label (DumpSplitter semantics)."""
-    write_quads_partitioned_by_predicate(dedup_quads_df(quads), out_path, meta=meta)
-
-
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -357,7 +348,7 @@ def run_pipeline(
     canon = canonicalize(quads, mapping, excluded)
     final = dedup_quads_df(canon)
     if out_path:
-        # write the already-deduped frame — materialize(canon) would build
-        # the identity-dedup a second time inside the write plan
+        # write the already-deduped frame, so the write plan does not build
+        # the identity-dedup a second time
         write_quads_partitioned_by_predicate(final, out_path)
     return final

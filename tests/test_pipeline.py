@@ -209,3 +209,23 @@ class TestExtractBoundary:
         key = lambda q: tuple(x or "" for x in q)  # noqa: E731
         assert sorted(got, key=key) == sorted(exp, key=key)
         assert sum(q[1].endswith("toolUsed") for q in got) == 2
+
+    @pytest.mark.parametrize("emit_unknown", [False, True])
+    def test_large_var_types_match(self, spark, emit_unknown):
+        """With Arrow large_string input (useLargeVarTypes) extraction
+        returns the same rows as with the default string input."""
+        from collections import Counter
+
+        gaz = build_gazetteer(build_entity_catalog())
+        df = spark.createDataFrame(build_transcripts(20, 1))
+        conf = "spark.sql.execution.arrow.useLargeVarTypes"
+        rows = {}
+        try:
+            for large in ("false", "true"):
+                spark.conf.set(conf, large)
+                rows[large] = Counter(tuple(r) for r in extract_quads(
+                    df, gaz.surface_to_iri,
+                    emit_unknown=emit_unknown).collect())
+        finally:
+            spark.conf.unset(conf)
+        assert rows["false"] and rows["true"] == rows["false"]

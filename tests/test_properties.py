@@ -1,7 +1,8 @@
 """Property-based tests (hypothesis) for the pure string kernels the
-engine's parse/format/minting semantics ride on. No Spark session — these
-run the oracle functions that the Arrow paths wrap, so every property here
-transfers to the distributed operators by the shared-code construction.
+engine's parse/format/minting semantics ride on. These run the oracle
+functions that the Arrow paths wrap, so every property here transfers to
+the distributed operators by the shared-code construction. The one Spark
+property (last section) checks canonicalize against its oracle.
 
 Reference semantics: escape TurtleUtils.scala:51-140; parse
 Quad.scala:189-265; format TerseBuilder.scala:10-82; minting
@@ -176,3 +177,42 @@ def test_bpe_kernel_matches_oracle_replace_spec(w, merges):
     assert got == _spec_encode(w, merges)
     # token conservation: concatenating tokens restores the word
     assert "".join(got) == w
+
+
+# ---------------------------------------------------------------------------
+# canonicalize ≡ oracle.canonicalize_quads as MULTISETS: a random
+# functional mapping, excluded IRIs drawn from the same pool (so they hit
+# mapping nodes, canonicals and unmapped IRIs alike), URI and literal
+# objects, duplicate quads and duplicate excluded rows.
+# ---------------------------------------------------------------------------
+
+_iri = st.sampled_from([f"e:{i}" for i in range(8)])
+_canon_quad = st.tuples(_iri, _iri, st.sampled_from([None, XSD_STRING]))
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.dictionaries(_iri, _iri, max_size=6),
+    st.lists(_iri, max_size=5),
+    st.lists(_canon_quad, min_size=1, max_size=12),
+)
+def test_canonicalize_matches_oracle_multiset(spark, mapping, excluded,
+                                              quads):
+    from collections import Counter
+    from dataclasses import astuple
+
+    from quad_processor_util_spark.oracle import canonicalize_quads
+    from quad_processor_util_spark.plans.pipeline import canonicalize
+
+    pq = [PyQuad(s, "e:p", o, dt, None, "g") for s, o, dt in quads]
+    exp = Counter(astuple(q) for q in
+                  canonicalize_quads(pq, mapping, set(excluded)))
+    qdf = spark.createDataFrame(
+        [astuple(q) for q in pq],
+        "subject string, predicate string, obj string, datatype string, "
+        "language string, graph string, dataset string")
+    mdf = spark.createDataFrame(list(mapping.items()),
+                                "node string, canonical string")
+    xdf = spark.createDataFrame([(i,) for i in excluded], "iri string")
+    got = Counter(tuple(r) for r in canonicalize(qdf, mdf, xdf).collect())
+    assert got == exp

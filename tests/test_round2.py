@@ -3,6 +3,8 @@ non-convergence raising, salted_join join-type guard, canonicalize exclusion
 parity with the python oracle, camelCase minting, jaccard df-cap size
 universe, and the pipeline_e2e composition."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,17 +110,19 @@ class TestCanonicalizeParity:
                    "http://www.w3.org/2001/XMLSchema#string", None, "g"),
             # URI object whose CANONICAL is excluded -> dropped
             PyQuad("e:s3", "e:p", "e:alias3", None, None, "g"),
-            # plain survivor with object rewrite
+            # plain survivor with object rewrite, twice: duplicates survive
+            # canonicalize (dedup is a later stage)
+            PyQuad("e:s4", "e:p", "e:alias1", None, None, "g"),
             PyQuad("e:s4", "e:p", "e:alias1", None, None, "g"),
         ]
         mapping = {"e:alias1": "e:canon1", "e:alias2": "e:badcanon",
                    "e:alias3": "e:badobj", "e:badsrc": "e:okcanon"}
         excluded = {"e:badsrc", "e:badcanon", "e:badobj"}
 
-        exp = {
+        exp = Counter(
             (q.subject, q.predicate, q.obj, q.datatype, q.language)
             for q in canonicalize_quads(quads, mapping, excluded)
-        }
+        )
 
         qdf = spark.createDataFrame(
             [(q.subject, q.predicate, q.obj, q.datatype, q.language, q.graph,
@@ -129,14 +133,40 @@ class TestCanonicalizeParity:
         mdf = spark.createDataFrame(
             list(mapping.items()), "node string, canonical string"
         )
-        xdf = spark.createDataFrame([(i,) for i in excluded], "iri string")
-        got = {
+        # duplicated excluded rows must not duplicate quads either
+        xdf = spark.createDataFrame([(i,) for i in sorted(excluded)] * 2,
+                                    "iri string")
+        got = Counter(
             (r.subject, r.predicate, r.obj, r.datatype, r.language)
             for r in canonicalize(qdf, mdf, xdf).collect()
-        }
+        )
         assert got == exp
         assert ("e:s2", "e:p", "e:badobj",
                 "http://www.w3.org/2001/XMLSchema#string", None) in got
+
+    def test_plan_probes_one_dimension_per_column(self, spark):
+        """The corpus is probed by exactly two broadcast hash joins (subject,
+        obj) against ONE broadcast dimension: the obj probe reuses the
+        subject probe's broadcast exchange."""
+        import re
+
+        qdf = spark.createDataFrame(
+            [("e:a", "e:p", "e:b", None, None, "g", None),
+             ("e:s", "e:p", "lit", "xsd", None, "g", None)],
+            "subject string, predicate string, obj string, datatype string, "
+            "language string, graph string, dataset string")
+        mdf = spark.createDataFrame([("e:a", "e:c"), ("e:b", "e:x")],
+                                    "node string, canonical string")
+        xdf = spark.createDataFrame([("e:x",)], "iri string")
+        out = canonicalize(qdf, mdf, xdf)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==", 1)[0]
+        probes = re.findall(r"BroadcastHashJoin \[(subject|obj)#\d+\]", plan)
+        assert sorted(probes) == ["obj", "subject"], plan
+        reused = re.findall(r"ReusedExchange \[[^\]]*\], BroadcastExchange",
+                            plan)
+        assert len(reused) == 1, plan
 
 
 class TestCamelCase:
@@ -185,6 +215,39 @@ class TestJaccardCapUniverse:
         assert got == {(0, 1): 0.6, (2, 3): 0.6}
 
 
+def _naive_jaccard_pairs(df, threshold, shingle_n=3, max_shingle_df=1000,
+                         text_col="text", id_col="doc_id"):
+    """Reference for ngram_jaccard_pairs: the quadratic inverted-index
+    self-join over the same df-capped shingle rows, no prefix filter."""
+    from quad_processor_util_spark.operators.dedup import word_shingle_rows
+
+    sh = word_shingle_rows(df, text_col, id_col, shingle_n)
+    hot = (sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
+           .where(F.col("__df") > max_shingle_df))
+    sh = sh.join(hot.select("__sh"), "__sh", "left_anti")
+    # sizes AFTER the df-cap: numerator and denominator must share the same
+    # shingle universe
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, "__sh")
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"),
+                 F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("__inter"))
+    )
+    return (
+        inter.join(sizes.select(F.col(id_col).alias("id_a"),
+                                F.col("__sz").alias("__sza")), "id_a")
+        .join(sizes.select(F.col(id_col).alias("id_b"),
+                           F.col("__sz").alias("__szb")), "id_b")
+        .select("id_a", "id_b",
+                (F.col("__inter") / (F.col("__sza") + F.col("__szb")
+                                     - F.col("__inter"))).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 class TestJaccardPrefixFilter:
     @pytest.mark.parametrize("threshold", [0.3, 0.5, 0.7, 0.9])
     def test_prefix_filtered_equals_naive(self, spark, sf_dir, threshold):
@@ -195,14 +258,14 @@ class TestJaccardPrefixFilter:
         docs = spark.read.parquet(
             _os.path.join(sf_dir, "documents.parquet")
         ).limit(200)
-        kw = dict(shingle_n=3, threshold=threshold)
         fast = {
             (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(docs, prefix_filter=True, **kw).collect()
+            for r in ngram_jaccard_pairs(
+                docs, shingle_n=3, threshold=threshold).collect()
         }
         naive = {
             (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(docs, prefix_filter=False, **kw).collect()
+            for r in _naive_jaccard_pairs(docs, threshold).collect()
         }
         assert fast == naive
 

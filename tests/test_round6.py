@@ -33,12 +33,67 @@ _WINNOW_TEXTS = [
 ]
 
 
+def _winnow_selected_expr(df, text_col: str, id_col: str, k: int,
+                          window: int, with_pos: bool):
+    """The original pure-expression winnow core (explode + window MIN +
+    distinct): the equivalence reference for functions.text._winnow_selected,
+    whose mapInPandas form produces identical rows with zero shuffles."""
+    from pyspark.sql import Window as W
+
+    from quad_processor_util_spark.functions.text import (
+        _WINNOW_POS_SPAN,
+        WS_RE,
+    )
+
+    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), WS_RE, " ")
+    m = F.greatest(F.length(norm) - (k - 1), F.lit(1))
+    g = (
+        df.select(F.col(id_col), norm.alias("__t"), m.alias("__m"))
+        .select(id_col, "__t", "__m",
+                F.explode(F.sequence(F.lit(1), "__m")).alias("__pos"))
+        .select(
+            id_col, "__m", "__pos",
+            F.pmod(
+                F.conv(F.substring(F.md5(
+                    F.col("__t").substr(F.col("__pos"), F.lit(k))), 1, 15),
+                    16, 10).cast("long"),
+                F.lit((1 << 31) - 1),
+            ).alias("__h"),
+        )
+    )
+    # hard runtime guard: positions beyond the 20-bit packing span would
+    # silently corrupt both the min order and the recovered hash — fail
+    # loudly instead (chunk >1M-char documents upstream)
+    key = F.when(
+        F.col("__pos") < _WINNOW_POS_SPAN,
+        F.col("__h") * F.lit(_WINNOW_POS_SPAN)
+        + (F.lit(_WINNOW_POS_SPAN - 1) - F.col("__pos")),
+    ).otherwise(
+        F.raise_error(F.lit(
+            f"winnow_fingerprints: document exceeds {_WINNOW_POS_SPAN - 1} "
+            f"normalized chars — chunk it upstream"))
+        .cast("long")
+    )
+    w = W.partitionBy(id_col).orderBy("__pos").rowsBetween(0, window - 1)
+    sel = (
+        g.select(id_col, "__m", "__pos", F.min(key).over(w).alias("__sel"))
+        .where(F.col("__pos")
+               <= F.greatest(F.col("__m") - (window - 1), F.lit(1)))
+    )
+    fp = F.expr(f"__sel div {_WINNOW_POS_SPAN}").alias("fp")
+    if with_pos:
+        # recovered from the packed key, so pos can never disagree with fp
+        return sel.select(
+            id_col, fp,
+            (F.lit(_WINNOW_POS_SPAN - 1)
+             - F.col("__sel") % _WINNOW_POS_SPAN).cast("long").alias("pos")
+        ).distinct()
+    return sel.select(id_col, fp).distinct()
+
+
 @pytest.mark.parametrize("with_pos", [False, True])
 def test_winnow_fast_path_matches_expression_form(spark, with_pos):
-    from quad_processor_util_spark.functions.text import (
-        _winnow_selected,
-        _winnow_selected_expr,
-    )
+    from quad_processor_util_spark.functions.text import _winnow_selected
 
     df = spark.createDataFrame(_WINNOW_TEXTS, "doc_id long, text string")
     kw = dict(text_col="text", id_col="doc_id", k=7, window=4,
