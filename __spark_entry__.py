@@ -361,7 +361,8 @@ def _q_resume_bucketed(spark, sf_dir):
     resume_pipeline (compute-bucket-on-the-fly: B full scans), every
     per-bucket filter here hits the PARTITION column — the gate asserts
     in-query that the scan plan carries a PartitionFilters entry on
-    `bucket` (the pruned plan is also in PLANS.md 'resumed_bucket').
+    `bucket` (the pruned plan is also pinned by
+    tests/test_plan_contract.py::test_resumed_bucket_partition_prunes).
     Oracle: the uninterrupted full extraction — layout + crash + pruned
     resume must be invisible in the output."""
     import tempfile
@@ -1728,7 +1729,7 @@ def _q_group_quota(spark, sf_dir):
     """Per-source quota gate (round-5): keep the 5 longest documents per
     source (ties broken by doc_id), the "at most N pages per domain" cap.
     Plans as WindowGroupLimit on Spark >= 3.5 (map-side top-N per group
-    before the one shuffle — see PLANS.md); the oracle is the same
+    before the one shuffle — pinned by tests/test_plan_contract.py); the oracle is the same
     row_number window in DuckDB."""
     from quad_processor_util_spark.operators.sampling import group_quota
 

@@ -3,11 +3,11 @@
 Times individual declared queries with the same methodology as bench.py
 (.count(), interleaved trials, clearCache between trials) and optionally
 with the noop sink (guide §1.4 — computes every column, no sink cost), and
-dumps .explain("formatted") for each query to plans/r06/.
+optionally dumps .explain("formatted") for each query to a --plans directory.
 
 Usage:
   python bench_extra.py --queries jaccard_pairs,dup_spans --trials 3 \
-      --sf-dir /root/testdata/sf1.0 --plans plans/r06 --suffix before
+      --sf-dir path/to/sf1.0 --plans /tmp/plans --suffix before
   python bench_extra.py --noop ...   # noop-sink isolation instead of count
 """
 

@@ -200,26 +200,3 @@ def build_quad_lines() -> pd.DataFrame:
         "not a triple at all",
     ]
     return pd.DataFrame({"line": good + skipped})
-
-
-# ---------------------------------------------------------------------------
-# Parquet writers (test/bench substrate)
-# ---------------------------------------------------------------------------
-
-
-def write_fixture_parquet(out_dir: str, n_convs: int = 200, seed: int = 42) -> dict[str, str]:
-    """Write all fixture tables as single parquet files under out_dir."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = {}
-    for name, df in {
-        "transcripts": build_transcripts(n_convs, seed),
-        "entity_catalog": build_entity_catalog(),
-        "alias_edges": build_alias_edges(seed),
-        "quad_lines": build_quad_lines(),
-    }.items():
-        p = os.path.join(out_dir, f"{name}.parquet")
-        df.to_parquet(p, index=False)
-        paths[name] = p
-    return paths

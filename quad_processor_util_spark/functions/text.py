@@ -10,6 +10,8 @@ token counting, quality scoring, language-ID heuristics, fingerprinting.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -105,6 +107,34 @@ def fingerprint(col: Column) -> Column:
 # Schleimer et al. §3) — portable to any SQL engine
 _WINNOW_POS_SPAN = 1 << 20  # docs are chunked upstream; 1M-char guard
 
+# per-task k-gram hash memo budget, counted as each key object's size plus
+# a fixed per-entry cost (the int value and its dict slot at 2/3 load)
+_GRAM_MEMO_BYTES = 64 << 20
+_GRAM_ENTRY_OVERHEAD = 80
+
+
+class _GramMemo(dict):
+    """k-gram -> hash memo bounded in bytes. Past the cap the older half
+    (dict insertion order) is evicted, so a high-entropy task keeps a
+    fixed footprint and still hits on the grams it saw most recently."""
+
+    __slots__ = ("cap", "nbytes")
+
+    def __init__(self, cap: int):
+        super().__init__()
+        self.cap = cap
+        self.nbytes = 0
+
+    def add(self, gram, h: int) -> None:
+        self[gram] = h
+        self.nbytes += sys.getsizeof(gram) + _GRAM_ENTRY_OVERHEAD
+        if self.nbytes > self.cap:
+            kept = list(self.items())[len(self) // 2:]
+            self.clear()
+            self.update(kept)
+            self.nbytes = sum(sys.getsizeof(g) for g, _ in kept) \
+                + _GRAM_ENTRY_OVERHEAD * len(kept)
+
 
 def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,
                      with_pos: bool):
@@ -135,6 +165,7 @@ def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,
         fields.append(StructField("pos", LongType()))
     out_schema = StructType(fields)
     span = _WINNOW_POS_SPAN
+    memo_cap = _GRAM_MEMO_BYTES  # read on the driver; ships with _select
 
     def _select(batches):
         import hashlib
@@ -149,21 +180,16 @@ def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,
         # heavily (boilerplate, templates, shared vocabulary), and the md5
         # + digest-slice + from_bytes per gram is ~4x the cost of a dict
         # hit. md5 itself is pinned by the frozen DuckDB oracle, so the
-        # only lever is calling it once per DISTINCT gram. Bounded: cleared
-        # past ~2M entries so a high-entropy 100 TB task cannot grow it
-        # without limit.
-        memo: dict = {}
+        # only lever is calling it once per DISTINCT gram. Bounded in bytes
+        # on every insert (_GramMemo), so a high-entropy 100 TB task cannot
+        # grow it without limit, even inside one large document.
+        memo = _GramMemo(memo_cap)
         memo_get = memo.get
+        memo_add = memo.add
         for pdf in batches:
             ids_out: list = []
             keys_chunks: list = []
             for i, t in zip(pdf[id_col], pdf["__t"]):
-                # cap checked per DOCUMENT, not per batch: one batch of
-                # high-entropy 100KB+ docs could otherwise grow the memo
-                # by gigabytes before the next batch boundary (round-6
-                # review finding)
-                if len(memo) > (1 << 21):
-                    memo.clear()
                 if t is None:
                     # matches the expression form: a NULL text yields one
                     # (id, NULL[, NULL]) row (NULL hash all the way through)
@@ -185,7 +211,7 @@ def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,
                             h = (int.from_bytes(
                                 md5(g).digest()[:8], "big") >> 4) \
                                 % 2147483647
-                            memo[g] = h
+                            memo_add(g, h)
                         keys[p] = h * span + (base - (p + 1))
                 else:
                     for p in range(m):
@@ -195,7 +221,7 @@ def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,
                             h = (int.from_bytes(
                                 md5(g.encode()).digest()[:8],
                                 "big") >> 4) % 2147483647
-                            memo[g] = h
+                            memo_add(g, h)
                         keys[p] = h * span + (base - (p + 1))
                 if m >= window:
                     sel = sliding_window_view(keys, window).min(axis=1)

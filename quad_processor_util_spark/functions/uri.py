@@ -3,9 +3,8 @@
 Each wraps the corresponding pure-Python oracle function so Spark-side and
 test-side semantics are the same code (SURVEY.md Stage 2 parity stance).
 
-Reference: wikiEncode utils/WikiUtil.scala:56-102; IRI minting
-utils/UriUtils.scala:61-138; lenient decode uri/UriDecoder.java:41-102;
-escapes utils/TurtleUtils.scala:51-140.
+Reference: IRI minting (wikiEncode inside) utils/UriUtils.scala:61-138,
+utils/WikiUtil.scala:56-102; lenient decode uri/UriDecoder.java:41-102.
 """
 
 from __future__ import annotations
@@ -18,11 +17,8 @@ from pyspark.sql.types import StringType
 
 from ..oracle import (
     mint_dbpedia_iri,
-    nt_escape,
-    nt_unescape,
     percent_decode_lenient,
     uri_to_iri_decode,
-    wiki_encode,
 )
 
 
@@ -30,12 +26,6 @@ from ..oracle import (
 def mint_iri_udf(s: pd.Series) -> pd.Series:
     """Surface form -> canonical DBpedia-style IRI (UriUtils.scala:61-98)."""
     return s.map(lambda x: mint_dbpedia_iri(x) if isinstance(x, str) else None)
-
-
-@pandas_udf(StringType())
-def wiki_encode_udf(s: pd.Series) -> pd.Series:
-    """wikiEncode (WikiUtil.scala:56-102)."""
-    return s.map(lambda x: wiki_encode(x) if isinstance(x, str) else None)
 
 
 @pandas_udf(StringType())
@@ -50,18 +40,6 @@ def uri_to_iri_udf(s: pd.Series) -> pd.Series:
     with the reference's exact-case/validity quirks
     (UriToIriDecoder.java:47-127)."""
     return s.map(lambda x: uri_to_iri_decode(x) if isinstance(x, str) else None)
-
-
-@pandas_udf(StringType())
-def nt_escape_udf(s: pd.Series) -> pd.Series:
-    """N-Triples escape incl. \\uXXXX (TurtleUtils.scala:100-140)."""
-    return s.map(lambda x: nt_escape(x) if isinstance(x, str) else None)
-
-
-@pandas_udf(StringType())
-def nt_unescape_udf(s: pd.Series) -> pd.Series:
-    """N-Triples unescape (TurtleUtils.scala:51-90)."""
-    return s.map(lambda x: nt_unescape(x) if isinstance(x, str) else None)
 
 
 # ---------------------------------------------------------------------------
@@ -93,20 +71,6 @@ def full_uri(prefixed: str, namespaces: dict[str, str] | None = None) -> str:
         if pfx in ns:
             return ns[pfx] + local
     return prefixed
-
-
-def find_prefix(iri: str, namespaces: dict[str, str] | None = None) -> tuple[str, str] | None:
-    """IRI -> (prefix, localName), longest-namespace-wins; None when no
-    registered namespace matches (caller mints `unsN` names,
-    RdfNamespace.scala:45-56 auto-prefix fallback)."""
-    ns = namespaces or NAMESPACES
-    best = None
-    for pfx, base in ns.items():
-        if iri.startswith(base) and (best is None or len(base) > len(ns[best])):
-            best = pfx
-    if best is None:
-        return None
-    return best, iri[len(ns[best]):]
 
 
 def prefixed_name(col: Column, namespaces: dict[str, str] | None = None) -> Column:

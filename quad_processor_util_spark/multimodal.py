@@ -26,7 +26,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, FloatType, IntegerType, LongType,
     StringType, StructField, StructType,
@@ -42,50 +41,12 @@ MEDIA_SCHEMA = StructType([
     StructField("duration_ms", IntegerType()),
 ])
 
-FEATURES_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),
-    StructField("n_bytes", LongType()),
-    StructField("checksum", StringType()),
-    StructField("feat_dim", IntegerType()),
-    StructField("feature_hash", LongType()),
-])
-
-
 def _fake_decode(payload: bytes) -> tuple[str, int, int]:
     """Deterministic fake 'decode': checksum + pseudo feature vector stats."""
     h = hashlib.sha256(payload or b"").hexdigest()
     feat_dim = 16
     feature_hash = int(h[:15], 16)
     return h, feat_dim, feature_hash
-
-
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode/feature-extract over binary payloads via mapInPandas: one
-    Arrow batch of (media_id, kind, payload) in, features out. Real decoders
-    (PIL/librosa/ffmpeg) plug into `_decode` with the same signature."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "real media decode requires image/audio libs not present "
-                    "in this container; run with fake=True for the plumbing"
-                )
-            rows = []
-            for r in pdf.itertuples():
-                payload = bytes(r.payload) if r.payload is not None else b""
-                checksum, feat_dim, feature_hash = _fake_decode(payload)
-                rows.append((r.media_id, r.kind, len(payload), checksum,
-                             feat_dim, feature_hash))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "n_bytes", "checksum",
-                         "feat_dim", "feature_hash"],
-            )
-
-    cols = media.select("media_id", "kind", "payload")
-    return cols.mapInPandas(_decode, FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -123,12 +84,6 @@ def decode_ppm(payload: bytes) -> np.ndarray:
     off = i + 1  # exactly one whitespace byte after maxval
     img = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=off)
     return img.reshape(h, w, 3)
-
-
-def encode_ppm(img: np.ndarray) -> bytes:
-    """Inverse of decode_ppm (test/datagen helper)."""
-    h, w, _ = img.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
 
 
 def resize_nearest(img: np.ndarray, size: int = 8) -> np.ndarray:
@@ -359,26 +314,3 @@ def synth_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     return _ensure_parallelism(ids.select(id_col)).mapInPandas(
         _synth, MEDIA_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: expand each video row into frame
-    timestamps (pure expressions; the decode of each frame is the stubbed
-    step). Demonstrates the explode-then-process partitioning shape."""
-    # NULL / non-positive durations plan NO frames: Spark greatest() skips
-    # NULLs, so the old clamp turned an unknown-length video into a phantom
-    # ts=0 frame. Cast to long up front — duration_ms is a DOUBLE in
-    # MEDIA_SCHEMA/DECODED_SCHEMA and sequence() requires integral bounds,
-    # so the old expression failed outright on real decoded media (both
-    # round-5 review findings).
-    dur = F.col("duration_ms").cast("long")
-    return (
-        media.where((F.col("kind") == "video")
-                    & dur.isNotNull() & (dur > 0))
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), dur - 1, F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
-    )

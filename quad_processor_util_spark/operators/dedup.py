@@ -59,35 +59,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ---------------------------------------------------------------------------
 
 
-def _size_bytes(raw: str, default: int = 128 << 20) -> int:
-    """Parse a Spark size conf value ('134217728b', '128m', '1g', '2t').
-
-    Tolerant by design: Spark's own JavaUtils.byteStringAs accepts the full
-    k/m/g/t/p suffix family and some deployments set fractional values
-    ('0.5g'); an unparseable session conf must degrade to the CONF'S OWN
-    Spark default, never crash the dedup constructor (round-3 advice).
-    The default is per-call because the two confs this parses differ by
-    32× (maxPartitionBytes 128 MB vs openCostInBytes 4 MB — round-4
-    review finding). A negative conf ('-1m') clamps to 0: sizes are
-    magnitudes, and a negative open_cost would UNDERSTATE the partition
-    estimate and trigger a needless repartition (round-4 advice)."""
-    s = raw.strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("tb", 1 << 40), ("pb", 1 << 50),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("t", 1 << 40), ("p", 1 << 50),
-                      ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return max(0, int(float(s) * mult))
-    except ValueError:
-        return default
-
-
 def _estimated_scan_partitions(df: DataFrame) -> int:
     """Estimate the scan split count from file metadata only — no RDD is
     built (df.rdd on a hot constructor materializes the lineage driver-side
@@ -104,13 +75,12 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     files = df.inputFiles()
     if not files:
         return 0
-    conf = df.sparkSession.conf
-    mpb = max(1, _size_bytes(conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728b"),
-        default=128 << 20))
-    open_cost = _size_bytes(conf.get(
-        "spark.sql.files.openCostInBytes", "4194304b"),
-        default=4 << 20)
+    # Spark parses and type-checks both confs at set time; read the parsed
+    # byte values. A negative size ("-1m") is still accepted and reads back
+    # negative; sizes are magnitudes, so clamp.
+    sql_conf = df.sparkSession._jsparkSession.sessionState().conf()
+    mpb = max(1, sql_conf.filesMaxPartitionBytes())
+    open_cost = max(0, sql_conf.filesOpenCostInBytes())
     total_cost = 0
     for p in files:
         local = p[len("file:"):] if p.startswith("file:") else p

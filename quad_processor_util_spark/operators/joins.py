@@ -1,4 +1,4 @@
-"""Join strategies for head-entity skew and small dimensions.
+"""Join strategy for head-entity skew.
 
 The reference handles skew by splitting hot URI prefixes and coalescing tiny
 ones (sort/QuadSorter.scala:129-166, sort/PrefixMap.scala:68-84). On Spark
@@ -13,12 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Hash join with the dim side broadcast — the reference's in-memory
-    ConcurrentHashMap build side (solr/SolrLoader.scala:58-84)."""
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def salted_join(
@@ -62,10 +56,3 @@ def salted_join(
     )
     out = fact_s.join(dim_s, [key, salt_col], how)
     return out.drop(salt_col)
-
-
-def left_anti_membership(df: DataFrame, banned: DataFrame, key: str) -> DataFrame:
-    """Anti-membership filter — the reference's reverse redirect/disamb map
-    check (solr/SolrLoader.scala:124-127) as a proper anti-join. The banned
-    side is broadcast (it is the small dimension)."""
-    return df.join(F.broadcast(banned.select(key).distinct()), key, "left_anti")

@@ -131,8 +131,8 @@ def group_quota(
     task pre-trims to its local top-``quota`` per group BEFORE the
     exchange, so skewed groups (the failure mode of a naive window over a
     domain key) ship O(quota * n_partitions) rows instead of their full
-    population. Verified in PLANS.md ("group_quota": WindowGroupLimit
-    above the scan, below the exchange).
+    population. Pinned by the group_quota row of
+    tests/test_plan_contract.py.
     """
     if quota < 1:
         raise ValueError("group_quota: quota must be >= 1")

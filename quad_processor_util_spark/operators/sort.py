@@ -43,18 +43,6 @@ def prefix_histogram(df: DataFrame, col: str, prefix_len: int = 1) -> DataFrame:
     )
 
 
-def hot_keys(df: DataFrame, col: str, threshold_fraction: float = 0.05) -> DataFrame:
-    """Keys holding more than threshold_fraction of all rows — candidates
-    for salted joins (the prefix-split analog, QuadSorter.scala:158-165).
-
-    One scan of the input: the total comes from summing the (small) grouped
-    counts, not a second full count() pass over the table."""
-    counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
-    counts = counts.localCheckpoint(eager=False)
-    total = counts.agg(F.sum("n")).collect()[0][0] or 0
-    return counts.where(F.col("n") > total * threshold_fraction)
-
-
 def null_nan_key(v):
     """Total-order key matching Spark's ordering: nulls FIRST (bucket 0),
     real values (bucket 1), float NaN LAST (bucket 2 — Spark treats NaN as

@@ -29,7 +29,6 @@ from dataclasses import dataclass, field
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 DBR = "http://dbpedia.org/resource/"
 EX = "http://example.org/ontology/"
 

@@ -89,7 +89,7 @@ def write_bucketed_transcripts(
     whole table (B× read amplification — the docstring caveat below);
     with it, `WHERE bucket = b` is a PARTITION filter and each bucket
     job reads exactly its own files (PartitionFilters in the scan node,
-    see PLANS.md 'resumed bucket'). The Iceberg analog is a
+    pinned by tests/test_plan_contract.py). The Iceberg analog is a
     `bucket(n_buckets, conv_id)` partition-spec transform — this is the
     plain-parquet spelling of the same layout. One shuffle on the bucket
     id groups each partition's rows into one writer task so the layout

@@ -258,7 +258,6 @@ def link_unknown_mentions(
     catalog: DataFrame,
     min_jaccard: float = 0.4,
     cache_registry: list | None = None,
-    broadcast_links: bool = True,
 ) -> DataFrame:
     """Fuzzy entity linking for the unknown-mention placeholder quads emitted
     by extract_quads(emit_unknown=True): the ex:mentionSurface quads are
@@ -294,14 +293,11 @@ def link_unknown_mentions(
         placeholders.select(F.col("obj").alias("surface")),
         catalog, min_jaccard=min_jaccard,
     )
-    # links cardinality = DISTINCT unknown surfaces — data-dependent,
-    # unlike the fixed gazetteer dimension. Broadcast is right while that
-    # set fits the driver/executors; at web scale (10^8+ distinct unknown
-    # capitalized runs) pass broadcast_links=False for a shuffle hash join
-    # on surface (round-5 review finding).
-    link_side = F.broadcast(links) if broadcast_links else links
+    # links has one row per DISTINCT unknown surface — data-dependent,
+    # unlike the fixed gazetteer dimension; the broadcast assumes that set
+    # fits executor memory.
     linked = (
-        placeholders.join(link_side,
+        placeholders.join(F.broadcast(links),
                           placeholders.obj == links.surface)
         .select(
             F.col("subject"),

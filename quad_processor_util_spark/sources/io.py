@@ -250,14 +250,6 @@ def read_jsonl(spark: SparkSession, path: str, schema: str,
     return spark.read.schema(schema).option("mode", mode).json(path)
 
 
-def read_nt_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Line source for N-Triples/N-Quads text files (.gz/.bz2 transparent —
-    QuadReader.readQuads line scan, QuadReader.scala:163-197, minus the
-    hand-rolled chunking: Spark splits text files natively).
-    -> DataFrame(line STRING)."""
-    return spark.read.text(path).withColumnRenamed("value", "line")
-
-
 def write_nt_lines(lines: DataFrame, path: str, compression: str | None = None) -> None:
     """Text sink for formatted N-Triples output (WriterDestination.scala:20-45;
     multi-part output replaces the bash-cat concat, IOUtils.scala:96-134 —

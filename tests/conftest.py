@@ -24,9 +24,16 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def fixtures_dir(tmp_path_factory):
-    """Deterministic synthetic fixture tables written once per session."""
-    from quad_processor_util_spark.datagen import write_fixture_parquet
+    """Deterministic synthetic fixture tables written once per session,
+    one parquet file per table."""
+    from quad_processor_util_spark import datagen
 
     out = tmp_path_factory.mktemp("fixtures")
-    write_fixture_parquet(str(out), n_convs=120, seed=42)
+    for name, df in {
+        "transcripts": datagen.build_transcripts(n_convs=120, seed=42),
+        "entity_catalog": datagen.build_entity_catalog(),
+        "alias_edges": datagen.build_alias_edges(42),
+        "quad_lines": datagen.build_quad_lines(),
+    }.items():
+        df.to_parquet(out / f"{name}.parquet", index=False)
     return str(out)

@@ -185,6 +185,52 @@ try:
     def test_property_parity(forms, texts, policy, emit_unknown):
         g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})
         _check_parity(_frame(texts), g, policy, emit_unknown)
+
+    @st.composite
+    def _hostile_text(draw):
+        """Words, NUL bytes and arbitrary unicode; sometimes NULL, and
+        sometimes repeated past 10 kB."""
+        kind = draw(st.sampled_from(["words", "null", "long"]))
+        if kind == "null":
+            return None
+        parts = draw(st.lists(
+            st.one_of(st.sampled_from(_WORDS + ["\x00", "Ada\x00Lovelace"]),
+                      st.text(max_size=12)),
+            min_size=1, max_size=10))
+        text = " ".join(parts)
+        if kind == "long":
+            text = (text + " ") * (10_240 // (len(text) + 1) + 1)
+        return text
+
+    @st.composite
+    def _hostile_batch(draw):
+        texts = draw(st.lists(_hostile_text(), min_size=1, max_size=6))
+        if draw(st.booleans()):  # every text unique: no template reuse
+            texts = [f"{t or ''} Boston {i}" for i, t in enumerate(texts)]
+        n = len(texts)
+        tools = draw(st.lists(st.sampled_from([None, "", "sql_runner"]),
+                              min_size=n, max_size=n))
+        return pd.DataFrame({
+            "conv_id": [f"c{i % 2}" for i in range(n)],
+            "turn_idx": pd.Series(
+                draw(st.lists(st.one_of(st.none(), st.integers(0, 99)),
+                              min_size=n, max_size=n)), dtype=object),
+            "role": ["tool" if t is not None else "user" for t in tools],
+            "text": texts,
+            "tool": tools,
+        })
+
+    @given(forms=_GAZ_FORMS, pdf=_hostile_batch(),
+           policy=st.sampled_from(["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"]),
+           emit_unknown=st.booleans())
+    @settings(max_examples=60, deadline=None)
+    def test_adversarial_property_parity(forms, pdf, policy, emit_unknown):
+        """NUL bytes in text, NULL turn_idx and tool, >10 kB texts and
+        all-unique batches: the Arrow kernel still matches the per-row
+        oracle row for row."""
+        g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})
+        schema = TRANSCRIPT_SCHEMA.set(1, pa.field("turn_idx", pa.int64()))
+        _check_parity(pdf, g, policy, emit_unknown, schema=schema)
 except ImportError:  # pragma: no cover
     pass
 

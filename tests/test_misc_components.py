@@ -1,5 +1,5 @@
-"""Streaming ingest, checkpoint/resume, multimodal plumbing, entity linking,
-text analytics, URI UDFs."""
+"""Streaming ingest, checkpoint/resume, entity linking, text analytics,
+URI UDFs."""
 
 import os
 
@@ -9,10 +9,9 @@ from pyspark.sql import functions as F
 
 from quad_processor_util_spark.datagen import build_entity_catalog, build_gazetteer
 from quad_processor_util_spark.functions import text as T
-from quad_processor_util_spark.functions.uri import mint_iri_udf, wiki_encode_udf
-from quad_processor_util_spark.multimodal import extract_features, frame_sample_plan
+from quad_processor_util_spark.functions.uri import mint_iri_udf
 from quad_processor_util_spark.operators.linking import link_surface_forms
-from quad_processor_util_spark.oracle import mint_dbpedia_iri, wiki_encode
+from quad_processor_util_spark.oracle import mint_dbpedia_iri
 from quad_processor_util_spark.plans.checkpoint import Ledger, run_checkpointed
 from quad_processor_util_spark.plans.pipeline import extract_quads
 
@@ -23,12 +22,6 @@ class TestUriUdfs:
         df = spark.createDataFrame(pd.DataFrame({"s": names}))
         got = [r.iri for r in df.select(mint_iri_udf("s").alias("iri")).collect()]
         assert got == [mint_dbpedia_iri(n) for n in names]
-
-    def test_wiki_encode_matches_oracle(self, spark):
-        vals = ["a  b", "x_y", 'with "quotes"']
-        df = spark.createDataFrame(pd.DataFrame({"s": vals}))
-        got = [r.e for r in df.select(wiki_encode_udf("s").alias("e")).collect()]
-        assert got == [wiki_encode(v) for v in vals]
 
 
 class TestTextAnalytics:
@@ -92,36 +85,6 @@ class TestCheckpoint:
         # output is complete and readable
         quads = spark.read.parquet(out)
         assert quads.count() == sum(v["quads_out"] for v in led.values())
-
-
-class TestMultimodal:
-    def test_feature_extraction_plumbing(self, spark):
-        pdf = pd.DataFrame({
-            "media_id": [1, 2, 3],
-            "kind": ["image", "audio", "video"],
-            "mime": ["image/png", "audio/wav", "video/mp4"],
-            "payload": [b"\x89PNG fake", b"RIFF fake", b"\x00\x00ftyp fake"],
-            "width": [640, None, 1920],
-            "height": [480, None, 1080],
-            "duration_ms": [None, 2000, 3500],
-        })
-        df = spark.createDataFrame(pdf.astype({
-            "width": "Int32", "height": "Int32", "duration_ms": "Int32"}))
-        feats = extract_features(df, fake=True).collect()
-        assert len(feats) == 3
-        assert all(f.n_bytes > 0 and len(f.checksum) == 64 for f in feats)
-        # deterministic: same payload -> same checksum
-        feats2 = extract_features(df, fake=True).collect()
-        assert sorted(map(tuple, feats)) == sorted(map(tuple, feats2))
-
-    def test_frame_sampling(self, spark):
-        pdf = pd.DataFrame({
-            "media_id": [3], "kind": ["video"], "mime": ["video/mp4"],
-            "payload": [b"x"], "width": [1], "height": [1], "duration_ms": [3500],
-        })
-        df = spark.createDataFrame(pdf)
-        frames = frame_sample_plan(df, every_ms=1000).collect()
-        assert [f.frame_ts_ms for f in frames] == [0, 1000, 2000, 3000]
 
 
 class TestStreaming:

@@ -14,10 +14,15 @@ from quad_processor_util_spark.multimodal import (
     decode_media,
     decode_ppm,
     decode_wav_pcm16,
-    encode_ppm,
     image_features,
     resize_nearest,
 )
+
+
+def encode_ppm(img: np.ndarray) -> bytes:
+    """Inverse of decode_ppm: a binary P6 PPM with maxval 255."""
+    h, w, _ = img.shape
+    return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
 
 
 def _gradient_img(h=32, w=48, shift=0):

@@ -14,11 +14,7 @@ from quad_processor_util_spark.operators.grouping import (
     sorted_group_scan,
     star_view,
 )
-from quad_processor_util_spark.operators.joins import (
-    broadcast_join,
-    left_anti_membership,
-    salted_join,
-)
+from quad_processor_util_spark.operators.joins import salted_join
 from quad_processor_util_spark.oracle import resolve_canonical
 
 
@@ -37,21 +33,6 @@ class TestJoins:
             .groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
         )
         assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    def test_broadcast_plan_is_broadcast(self, spark, sf_dir):
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        j = broadcast_join(orders, customer, orders.o_custkey == customer.c_custkey)
-        assert "BroadcastHashJoin" in j._jdf.queryExecution().executedPlan().toString()
-
-    def test_left_anti(self, spark, sf_dir):
-        customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        banned = orders.select(F.col("o_custkey").alias("c_custkey"))
-        no_orders = left_anti_membership(customer, banned, "c_custkey")
-        total = customer.count()
-        with_orders = customer.join(banned.distinct(), "c_custkey", "left_semi").count()
-        assert no_orders.count() == total - with_orders
 
 
 class TestConnectedComponents:

@@ -1,23 +1,30 @@
-"""Dump physical plans for the headline queries and grep them for the
-scale-critical properties: PushedFilters on scans, BroadcastHashJoin for dim
-joins, WholeStageCodegen spans, no Cartesian products. Writes PLANS.md.
+"""Physical-plan contract for the declared queries at sf0.001.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Each CHECKS row lists regexes that must all appear in the query's formatted
+physical plan, and no plan may contain a FORBIDDEN operator. Plans are
+built with AQE off (the pre-execution plan then shows WholeStageCodegen
+spans; AQE hides them until the final adaptive plan) and with
+autoBroadcastJoinThreshold=-1, so a BroadcastHashJoin appears only where
+the code asks for one with an explicit hint: removing an `F.broadcast`
+fails its row instead of being papered over by size statistics.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import sys
+import shutil
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
+from pyspark.sql import functions as F
 
 CHECKS = {
     "tpch_q1": ["PushedFilters", "codegen id", "HashAggregate"],
     "star_join": ["BroadcastHashJoin", "codegen id"],
     "salted_join": ["HashAggregate"],
-    "anti_join": ["BroadcastHashJoin", "LeftSemi|LeftAnti"],
+    # no broadcast hint: the small side broadcasts only by size statistics
+    "anti_join": ["LeftSemi|LeftAnti"],
     "dedup_exact": ["HashAggregate", "LeftSemi"],
     "stable_turn_order": ["Window", "ReadSchema"],
     "extract_kg": ["MapInArrow", "hashpartitioning"],
@@ -34,11 +41,15 @@ CHECKS = {
     "cosine_topk": ["BroadcastNestedLoopJoin|BroadcastHashJoin", "Window"],
     "quad_parse": ["codegen id"],
     "predicate_split_counts": ["HashAggregate", "ReadSchema"],
+    # canonicalize's hinted broadcast of its alias dimension
     "pipeline_e2e": ["MapInArrow", "BroadcastHashJoin"],
     # pipeline_full's extraction materializes ONCE into the linking split's
     # persist() — the three branches read the columnar cache
     "pipeline_full": ["InMemoryTableScan", "BroadcastHashJoin", "HashAggregate"],
-    "jaccard_pairs": ["HashAggregate", "Window"],
+    # the shingle codes (and their vocabulary-wide Window) are built
+    # eagerly under a localCheckpoint; the visible plan is the coded-pair
+    # join and overlap aggregate over that checkpoint
+    "jaccard_pairs": ["Scan ExistingRDD", "SortMergeJoin", "HashAggregate"],
     # map-only per-row folds / row expansion: no Exchange anywhere
     "repetition_metrics": ["codegen id", "ReadSchema"],
     "chunk_docs": ["Generate", "ReadSchema"],
@@ -48,7 +59,9 @@ CHECKS = {
     "dedup_clusters": ["SortMergeJoin LeftOuter|BroadcastHashJoin", "Scan parquet"],
     "fuzzy_link": ["BroadcastHashJoin", "Window"],
     "camelcase_mint": ["HashAggregate", "ReadSchema"],
-    "winnow_fp": ["Window", "HashAggregate"],
+    # per-document winnow selection in ONE Arrow stage after the
+    # round-robin re-spread: no explode, no Window, no aggregate
+    "winnow_fp": ["MapInPandas", "RoundRobinPartitioning"],
     "text_clean": ["codegen id", "ReadSchema"],
     "trix_format": ["codegen id", "ReadSchema"],
     "snapshots_union": ["Union", "HashAggregate"],
@@ -59,19 +72,18 @@ CHECKS = {
     "lsh_topk": ["MapInPandas", "Window"],
     # shingle explode + the K min-aggs in ONE HashAggregate pass
     "minhash_dedup": ["Generate", "HashAggregate"],
-    # corpus winnow pass (posexplode + window MIN) + BROADCAST of the
-    # benchmark fingerprint set — the corpus must never shuffle for the join
-    "decontaminate": ["Generate", "Window", "BroadcastHashJoin"],
+    # corpus winnow in an Arrow stage + BROADCAST of the benchmark
+    # fingerprint set — the corpus must never shuffle for the join
+    "decontaminate": ["MapInPandas", "BroadcastHashJoin"],
     # like dedup_clusters, the pair pipeline + CC execute EAGERLY at build
     # time (driver fast path collects the tiny edge set); the visible plan
     # is the column-pruned corpus union ⟕ local component table
     "embedding_clusters": ["SortMergeJoin LeftOuter|BroadcastHashJoin",
                            "Union", "Scan parquet"],
-    # hyperplane bucketing via Arrow batches; one side broadcast; the pair
-    # dedup aggregates on array-typed keys → SortAggregate (arrays have no
-    # hash-agg support), which is the expected operator here
-    "embedding_neardup": ["MapInPandas", "BroadcastHashJoin",
-                          "SortAggregate|HashAggregate"],
+    # hyperplane bucketing via Arrow batches; the pair dedup aggregates on
+    # array-typed keys → SortAggregate (arrays have no hash-agg support),
+    # which is the expected operator here
+    "embedding_neardup": ["MapInPandas", "SortAggregate|HashAggregate"],
     # map-only hash filter: no Exchange, the whole sample fuses into the
     # scan's codegen stage
     "stratified_sample": ["codegen id", "ReadSchema"],
@@ -99,9 +111,10 @@ CHECKS = {
     # zero-shuffle corpus tokenization: ONE Arrow stage, md5 digest fused
     # into codegen; no Exchange anywhere
     "bpe_encode": ["MapInPandas", "codegen id"],
-    # winnow occurrences (posexplode + window MIN) -> shared-fp index
-    # (HashAggregate) -> per-doc gaps-and-islands interval merge (Window)
-    "dup_spans": ["Generate", "Window", "HashAggregate"],
+    # winnow occurrences (Arrow stage) -> shared-fp filter (two Windows
+    # over one fp exchange) -> per-doc gaps-and-islands interval merge
+    # (Window) -> span aggregate
+    "dup_spans": ["MapInPandas", "Window", "HashAggregate"],
     # the iterative rounds ran eagerly at build time (localCheckpoint per
     # round); the visible plan is the final checkpointed rank table
     "entity_pagerank": ["Scan ExistingRDD", "codegen id"],
@@ -118,87 +131,63 @@ CHECKS = {
 # CartesianProductExec is banned EVERYWHERE — cosine_topk's intentional
 # broadcast-nested-loop is a different operator (BroadcastNestedLoopJoin)
 # and needs no exemption; exempting it from this ban would let a planner
-# degradation to a real cartesian pass the audit silently.
+# degradation to a real cartesian pass the contract silently.
 FORBIDDEN = ["CartesianProduct"]
 
+_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
-def main(sf_dir: str) -> int:
+
+@pytest.fixture(scope="module")
+def planning(spark, sf_dir):
+    """(queries, sf0.001 dir) with the planning confs set on the shared
+    session for this module only."""
     import __spark_entry__ as em
-    from quad_processor_util_spark.session import get_spark
 
-    # AQE off for inspection only: the pre-execution formatted plan then shows
-    # WholeStageCodegen spans (AQE hides them until the final adaptive plan)
-    spark = get_spark("plans", parallelism=8, shuffle_partitions=8,
-                      extra_conf={"spark.sql.adaptive.enabled": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = em.queries()
-    out_lines = ["# PLANS — physical-plan inspection of headline queries\n",
-                 f"Generated by `python tools/dump_plans.py {sf_dir}`.",
-                 "Checks: filters pushed to parquet, dims broadcast (`[codegen id : n]` = whole-stage codegen span), wide",
-                 "codegen spans, no accidental cartesian products.\n"]
-    bad = 0
-    for name, want in CHECKS.items():
-        df = qs[name](spark, sf_dir)
-        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        marks = []
-        for pat in want:
-            ok = bool(re.search(pat, plan))
-            marks.append(f"{'✓' if ok else '✗ MISSING'} {pat}")
-            if not ok:
-                bad += 1
-        for pat in FORBIDDEN:
-            if re.search(pat, plan):
-                marks.append(f"✗ FORBIDDEN {pat}")
-                bad += 1
-        out_lines.append(f"## {name}\n")
-        out_lines.extend(f"- {m}" for m in marks)
-        # first 30 lines of the plan as evidence
-        head = "\n".join(plan.splitlines()[:30])
-        out_lines.append(f"\n```\n{head}\n```\n")
-        print(name, "|", " ".join(marks))
-    # resumed bucket over the bucket-partitioned-at-rest layout (round-4
-    # verdict item 7): the per-bucket filter must land as a PARTITION
-    # filter — the resumed job reads only the missing bucket's files
-    # instead of scanning the table B times
-    import shutil
-    import tempfile
+    saved = {k: spark.conf.get(k) for k in _CONFS}
+    for k, v in _CONFS.items():
+        spark.conf.set(k, v)
+    try:
+        yield em.queries(), os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
+
+def _plan(spark, df) -> str:
+    return spark.sparkContext._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
+@pytest.mark.parametrize("name", list(CHECKS))
+def test_plan_contract(spark, planning, name):
+    qs, sf = planning
+    plan = _plan(spark, qs[name](spark, sf))
+    missing = [p for p in CHECKS[name] if not re.search(p, plan)]
+    forbidden = [p for p in FORBIDDEN if re.search(p, plan)]
+    assert not missing and not forbidden, (
+        f"{name}: missing {missing}, forbidden {forbidden}\n{plan}")
+
+
+def test_resumed_bucket_partition_prunes(spark, planning):
+    """Over the bucket-partitioned-at-rest layout, the per-bucket resume
+    filter lands as a PARTITION filter: a resumed job reads only the
+    missing bucket's files instead of scanning the table once per bucket."""
     from __spark_entry__ import _events_as_transcripts
     from quad_processor_util_spark.plans.checkpoint import (
         write_bucketed_transcripts,
     )
-    from pyspark.sql import functions as F
 
+    _, sf = planning
     layout = tempfile.mkdtemp(prefix="plans_bucketed_")
     try:
         write_bucketed_transcripts(
-            _events_as_transcripts(spark, sf_dir), layout, n_buckets=8)
+            _events_as_transcripts(spark, sf), layout, n_buckets=8)
         one = spark.read.parquet(layout).where(F.col("bucket") == 3)
-        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
-            one._jdf.queryExecution(), "formatted")
-        marks = []
-        for pat in [r"PartitionFilters: \[[^\]]*bucket", r"Scan parquet"]:
-            ok = bool(re.search(pat, plan))
-            marks.append(f"{'✓' if ok else '✗ MISSING'} {pat}")
-            if not ok:
-                bad += 1
-        out_lines.append("## resumed_bucket (run_checkpointed on "
-                         "write_bucketed_transcripts layout)\n")
-        out_lines.extend(f"- {m}" for m in marks)
-        head = "\n".join(plan.splitlines()[:30])
-        out_lines.append(f"\n```\n{head}\n```\n")
-        print("resumed_bucket", "|", " ".join(marks))
+        plan = _plan(spark, one)
     finally:
         shutil.rmtree(layout, ignore_errors=True)
-
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out_lines))
-    spark.stop()
-    return 1 if bad else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"))
+    assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
+    assert re.search(r"Scan parquet", plan), plan

@@ -152,25 +152,43 @@ def test_dedup_clusters_transitive_closure(spark):
 
 
 def test_size_conf_parsing_and_split_estimate(spark, tmp_path):
+    import glob
+    import math
+    import os
+
     from quad_processor_util_spark.operators.dedup import (
-        _estimated_scan_partitions, _size_bytes,
+        _estimated_scan_partitions,
     )
 
-    assert _size_bytes("134217728b") == 134217728
-    assert _size_bytes("128m") == 128 << 20
-    assert _size_bytes("128MB") == 128 << 20
-    assert _size_bytes("1g") == 1 << 30
-    assert _size_bytes("4096") == 4096
     # many tiny files estimate as PACKED splits (openCostInBytes binning),
     # not one split per file — review finding: the naive per-file count
     # skipped the needed repartition exactly when inputs were tiny
     df = spark.range(0, 1000).selectExpr("id", "CAST(id AS STRING) AS text")
     p = str(tmp_path / "tiny")
     df.repartition(40).write.mode("overwrite").parquet(p)
-    est = _estimated_scan_partitions(spark.read.parquet(p))
+    tiny = spark.read.parquet(p)
+    est = _estimated_scan_partitions(tiny)
     assert 1 <= est <= 4  # 40 tiny files × 4MB open cost / 128MB ≈ 2
     # in-memory views have no files -> 0 (treated as too-coarse)
     assert _estimated_scan_partitions(df) == 0
+
+    # size strings are parsed by Spark itself: "2t" packs every file into
+    # one split; a negative open cost ("-1m") is clamped, so each file
+    # costs its own size against a 1 KiB split
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    total = sum(os.path.getsize(f)
+                for f in glob.glob(os.path.join(p, "*.parquet")))
+    try:
+        spark.conf.set(keys[0], "2t")
+        assert _estimated_scan_partitions(tiny) == 1
+        spark.conf.set(keys[0], "1k")
+        spark.conf.set(keys[1], "-1m")
+        assert _estimated_scan_partitions(tiny) == math.ceil(total / 1024)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 class TestReviewFixes:

@@ -85,20 +85,6 @@ class TestNaNSortedness:
         assert assert_sorted(df.coalesce(1), "k", "v") == 0
 
 
-class TestSizeConfParsing:
-    def test_extended_suffixes_and_floats(self):
-        from quad_processor_util_spark.operators.dedup import _size_bytes
-
-        assert _size_bytes("2t") == 2 << 40
-        assert _size_bytes("1tb") == 1 << 40
-        assert _size_bytes("1p") == 1 << 50
-        assert _size_bytes("0.5g") == 512 << 20
-        assert _size_bytes("1.5m") == int(1.5 * (1 << 20))
-        # unparseable values degrade to the 128 MB default, never raise
-        assert _size_bytes("weird") == 128 << 20
-        assert _size_bytes("") == 128 << 20
-
-
 class TestParallelismGuard:
     def test_explicit_repartition_not_reshuffled(self, spark, tmp_path):
         from quad_processor_util_spark.operators.dedup import (

@@ -122,15 +122,6 @@ def test_run_checkpointed_rejects_missing_bucket_col(spark, pipe_data,
 # ---------------------------------------------------------------------------
 
 
-def test_size_bytes_negative_conf_clamps_to_zero():
-    from quad_processor_util_spark.operators.dedup import _size_bytes
-
-    assert _size_bytes("-1m") == 0
-    assert _size_bytes("-0.5g") == 0
-    assert _size_bytes("128m") == 128 << 20
-    assert _size_bytes("garbage", default=42) == 42
-
-
 def test_repartition_guard_scoped_to_plan_root(spark, tmp_path):
     """A Repartition BELOW a width-collapsing aggregate no longer governs
     the frame's width, so the guard must NOT skip the re-spread for it;
@@ -1036,27 +1027,15 @@ def test_link_candidates_ambiguous_surface_form(spark):
         [("Paris", "http://e/1", 0.9)]
 
 
-def test_multimodal_review_guards(spark):
-    """frame_sample_plan plans no frames for NULL/zero durations; ahash
-    folds mod 2^64 at thumb > 8; maxval != 255 PPM and zero-sample-rate
-    WAV fail as decode errors (ValueError), not crashes."""
+def test_multimodal_review_guards():
+    """ahash folds mod 2^64 at thumb > 8; maxval != 255 PPM and
+    zero-sample-rate WAV fail as decode errors (ValueError), not crashes."""
     import numpy as np
-    import pandas as pd
+    from test_multimodal_real import encode_ppm
 
     from quad_processor_util_spark.multimodal import (
-        decode_ppm, decode_wav_pcm16, encode_ppm, frame_sample_plan,
-        image_features,
+        decode_ppm, decode_wav_pcm16, image_features,
     )
-
-    pdf = pd.DataFrame({
-        "media_id": [1, 2, 3], "kind": ["video"] * 3,
-        "mime": ["video/mp4"] * 3, "payload": [b"x"] * 3,
-        "width": [1] * 3, "height": [1] * 3,
-        "duration_ms": [2500.0, None, 0.0],
-    })
-    frames = frame_sample_plan(spark.createDataFrame(pdf)).collect()
-    assert sorted((f.media_id, f.frame_ts_ms) for f in frames) == \
-        [(1, 0), (1, 1000), (1, 2000)]
 
     img = np.arange(16 * 16 * 3, dtype=np.uint8).reshape(16, 16, 3)
     *_, ahash16 = image_features(img, thumb=16)

@@ -106,6 +106,72 @@ def test_winnow_fast_path_matches_expression_form(spark, with_pos):
     assert sorted(map(key, fast)) == sorted(map(key, ref))
 
 
+def test_gram_memo_bytes_stay_under_cap():
+    """High-entropy input (almost every 7-gram distinct): the winnow memo
+    never accounts more than its cap, the accounting matches the objects it
+    holds, the allocator agrees, and eviction drops the OLDER half."""
+    import random
+    import string
+    import sys
+    import tracemalloc
+
+    from quad_processor_util_spark.functions.text import (
+        _GRAM_ENTRY_OVERHEAD,
+        _GramMemo,
+    )
+
+    rng = random.Random(7)
+    text = "".join(rng.choices(string.ascii_letters + string.digits,
+                               k=100_000))
+    cap = 1 << 20
+    tracemalloc.start()
+    try:
+        base = tracemalloc.get_traced_memory()[0]
+        memo = _GramMemo(cap)
+        evictions = 0
+        for p in range(len(text) - 6):
+            g = text[p:p + 7].encode()
+            if g in memo:  # the winnow loop adds on a miss only
+                continue
+            before = memo.nbytes
+            memo.add(g, p)
+            assert memo.nbytes <= cap and g in memo
+            if memo.nbytes < before:  # evicted: the newer half stays
+                evictions += 1
+                assert memo.nbytes > cap // 3
+        used = tracemalloc.get_traced_memory()[0] - base
+    finally:
+        tracemalloc.stop()
+    assert memo.nbytes == sum(sys.getsizeof(g) for g in memo) \
+        + _GRAM_ENTRY_OVERHEAD * len(memo)
+    assert used <= cap
+    assert evictions > 10
+    assert text[:7].encode() not in memo
+
+
+def test_winnow_matches_expression_form_under_memo_eviction(spark,
+                                                            monkeypatch):
+    import random
+    import string
+
+    from quad_processor_util_spark.functions import text as T
+
+    # a 4 KiB budget holds ~30 grams: eviction runs inside every document
+    monkeypatch.setattr(T, "_GRAM_MEMO_BYTES", 4096)
+    rng = random.Random(11)
+    rows = [(i, "".join(rng.choices(string.ascii_letters + " ", k=2_000)))
+            for i in range(20)] + _WINNOW_TEXTS
+    rows = [(100 + i, t) for i, (_, t) in enumerate(rows)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    kw = dict(text_col="text", id_col="doc_id", k=7, window=4,
+              with_pos=True)
+    key = lambda r: (r.doc_id, r.fp if r.fp is not None else -1,  # noqa: E731
+                     r.pos if r.pos is not None else -1)
+    fast = T._winnow_selected(df, **kw).collect()
+    ref = _winnow_selected_expr(df, **kw).collect()
+    assert sorted(map(key, fast)) == sorted(map(key, ref))
+
+
 def test_word_shingle_rows_matches_expression_form(spark):
     from quad_processor_util_spark.operators.dedup import (
         word_shingle_rows,

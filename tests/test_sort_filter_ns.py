@@ -6,11 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from quad_processor_util_spark.functions.nt import format_rdf_json
-from quad_processor_util_spark.functions.uri import (
-    find_prefix,
-    full_uri,
-    prefixed_name,
-)
+from quad_processor_util_spark.functions.uri import full_uri, prefixed_name
 from quad_processor_util_spark.operators.mapping import quad_flat_map
 from quad_processor_util_spark.operators.quadfilter import (
     QuadFilterParams,
@@ -18,7 +14,6 @@ from quad_processor_util_spark.operators.quadfilter import (
     title_filter,
 )
 from quad_processor_util_spark.operators.sort import (
-    hot_keys,
     is_globally_sorted,
     prefix_histogram,
     sort_quads,
@@ -62,12 +57,10 @@ class TestSort:
         s = ev.repartitionByRange(4, "subject").sortWithinPartitions("subject")
         assert is_globally_sorted(s, "subject")
 
-    def test_prefix_histogram_and_hot_keys(self, spark):
+    def test_prefix_histogram(self, spark):
         df = _quads_df(spark, ["aa"] * 80 + ["ab"] * 10 + ["b"] * 10)
         h = {r.prefix: r.n for r in prefix_histogram(df, "subject").collect()}
         assert h == {"a": 90, "b": 10}
-        hk = [r.subject for r in hot_keys(df, "subject", 0.5).collect()]
-        assert hk == ["aa"]
 
 
 class TestQuadFilter:
@@ -102,11 +95,9 @@ class TestQuadFilter:
 
 
 class TestNamespaces:
-    def test_full_uri_and_find_prefix(self):
+    def test_full_uri(self):
         assert full_uri("foaf:name") == "http://xmlns.com/foaf/0.1/name"
         assert full_uri("http://x/y") == "http://x/y"
-        assert find_prefix("http://dbpedia.org/ontology/birthPlace") == ("dbo", "birthPlace")
-        assert find_prefix("http://unknown.example/x") is None
 
     def test_prefixed_name_expr(self, spark):
         df = _quads_df(spark, ["x"]).select(
