@@ -1,110 +1,163 @@
-"""Entity-link candidate generation + scoring.
+"""Entity linking: one surface scorer shared by every linking path.
 
 Reinterprets the reference's Solr candidate retrieval + payload-BM25 scoring
 (solr/SolrHandler.java:296-322, solr/PayloadBM25SimilarityFacory.java:38-41)
-as: character-n-gram MinHash-style blocking (an inverted-index join — no
-cross join) followed by an expression-only score combining n-gram Jaccard
-with the form-weight prior (the payload boost analog: score ∝ sim ×
-weight, SolrLoader.scala:153-154).
+as a per-mention index lookup: a character-3-gram inverted index over the
+catalog's distinct surface forms gives the candidate forms of a surface,
+scored by n-gram Jaccard times the form-weight prior (the payload boost
+analog: score ∝ sim × weight, SolrLoader.scala:153-154).
 
-The gazetteer side is small (dimension table) and broadcast; the mention
-side is the 10^12-row fact side. All pure Catalyst.
+:class:`SurfaceLinker` is Spark-free. The catalog is a broadcast-sized
+dimension, so each Python worker builds the index once (cached by content
+key, plans/pipeline._get_linker) and the fact side never joins against it:
+the extraction kernel resolves unknown surfaces in place
+(plans/pipeline.extract_quads(catalog=...)), and :func:`link_surface_forms`
+scores the distinct surfaces of a DataFrame in one mapInArrow.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from collections import Counter
+
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import _GramMemo
 
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the lowercased form."""
-    s = F.lower(F.trim(col))
-    k = F.length(s) - (n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(F.sequence(F.lit(1), k), lambda i: F.substring(s, i, n)),
-    ).otherwise(F.array(s))
-    return F.array_distinct(grams)
+CATALOG_COLUMNS = ("entity_iri", "surface_form", "form_weight")
+
+# per-worker surface -> pick memo budget (the linker, and so its memo,
+# lives for the Python worker's lifetime)
+_LINK_MEMO_BYTES = 16 << 20
 
 
-def link_candidates(
-    mentions: DataFrame,
-    catalog: DataFrame,
-    mention_col: str = "surface",
-    catalog_form_col: str = "surface_form",
-    ngram_n: int = 3,
-    min_jaccard: float = 0.4,
-) -> DataFrame:
-    """-> (surface, entity_iri, form_weight, jaccard): candidate links whose
-    char-n-gram Jaccard clears the blocking threshold. Inverted-index join on
-    the n-gram (catalog side broadcast after explode)."""
-    m = mentions.select(F.col(mention_col).alias("surface")).distinct()
-    m_sets = m.select("surface", char_ngrams(F.col("surface"), ngram_n).alias("__mg"))
-    # gram sets per DISTINCT candidate FORM: the Jaccard is a property of
-    # the (surface string, form string) pair, so catalog rows sharing a
-    # surface_form (ambiguous gazetteers — the case score_and_pick's
-    # tie-break exists for) must not multiply the intersection count; the
-    # old per-row explode inflated __inter N-fold and a 2-way exact match
-    # divided by zero and was silently DROPPED (round-5 review finding).
-    f_sets = (
-        catalog.select(F.col(catalog_form_col).alias("cand_form")).distinct()
-        .select("cand_form",
-                char_ngrams(F.col("cand_form"), ngram_n).alias("__cg"))
-    )
-    # sizes ride the exploded rows (constant per key) instead of a second
-    # scan+join against the fact-side gram build (round-5 review finding)
-    m_inv = m_sets.select(
-        "surface", F.size("__mg").alias("__msz"),
-        F.explode("__mg").alias("__g"))
-    f_inv = f_sets.select(
-        "cand_form", F.size("__cg").alias("__csz"),
-        F.explode("__cg").alias("__g"))
-    pairs = (
-        m_inv.join(F.broadcast(f_inv), "__g")
-        .groupBy("surface", "cand_form", "__msz", "__csz")
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    out = (
-        pairs.select(
-            "surface", "cand_form",
-            (F.col("__inter")
-             / (F.col("__msz") + F.col("__csz") - F.col("__inter"))
-             ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-        .join(
-            F.broadcast(catalog.select(
-                F.col(catalog_form_col).alias("cand_form"),
-                "entity_iri", "form_weight")),
-            "cand_form",
-        )
-        .select("surface", "entity_iri", "form_weight", "jaccard")
-    )
-    return out
+def _grams(s: str, n: int = 3) -> frozenset[str]:
+    """Distinct character n-grams of the space-stripped, lowercased string;
+    a string shorter than n is its own single gram."""
+    s = s.strip(" ").lower()
+    k = len(s) - (n - 1)
+    return frozenset(s[i:i + n] for i in range(k)) if k > 0 else frozenset((s,))
 
 
-def score_and_pick(candidates: DataFrame) -> DataFrame:
-    """score = jaccard × form_weight (the payload-boost shape,
-    PayloadBM25SimilarityFacory.java:38-41); keep the best candidate per
-    surface, deterministic tie-break by entity_iri."""
-    scored = candidates.withColumn("score", F.col("jaccard") * F.col("form_weight"))
-    w = Window.partitionBy("surface").orderBy(F.desc("score"), F.asc("entity_iri"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select("surface", "entity_iri", F.round("score", 6).alias("score"))
-    )
+def catalog_rows(catalog, caller: str) -> list[tuple[str, str, float]]:
+    """The (entity_iri, surface_form, form_weight) rows of a pandas or Spark
+    catalog, validated on the driver: ValueError when a column is missing
+    or a row has a NULL entity_iri or form_weight. A Spark catalog is
+    collected here. Rows with a NULL surface_form can never link and are
+    left out."""
+    missing = [c for c in CATALOG_COLUMNS if c not in catalog.columns]
+    if missing:
+        raise ValueError(
+            f"{caller}: catalog lacks column(s) {missing}; "
+            f"need {list(CATALOG_COLUMNS)}")
+    if isinstance(catalog, pd.DataFrame):
+        raw = catalog[list(CATALOG_COLUMNS)].itertuples(index=False, name=None)
+    else:
+        raw = catalog.select(*CATALOG_COLUMNS).collect()
+    rows = []
+    for iri, form, weight in raw:
+        if pd.isna(iri) or pd.isna(weight):
+            raise ValueError(
+                f"{caller}: catalog row ({iri!r}, {form!r}, {weight!r}) has "
+                f"a NULL entity_iri or form_weight")
+        if not pd.isna(form):
+            rows.append((str(iri), str(form), float(weight)))
+    return rows
+
+
+class SurfaceLinker:
+    """Best catalog entity per surface string.
+
+    Candidates are the distinct catalog forms sharing at least one char
+    3-gram with the surface; jaccard = inter / (|g| + |f| − inter) over the
+    two gram sets, counted once per distinct form however many catalog
+    rows share it. A candidate row scores jaccard × form_weight when
+    jaccard ≥ min_jaccard; the best score wins and ties go to the smallest
+    entity_iri."""
+
+    def __init__(self, rows, min_jaccard: float = 0.4):
+        self.min_jaccard = min_jaccard
+        by_form: dict[str, list[tuple[float, str]]] = {}
+        for iri, form, weight in rows:
+            by_form.setdefault(form, []).append((weight, iri))
+        self._cands = list(by_form.values())
+        self._size = []
+        self._index: dict[str, list[int]] = {}
+        for j, form in enumerate(by_form):
+            g = _grams(form)
+            self._size.append(len(g))
+            for gram in g:
+                self._index.setdefault(gram, []).append(j)
+        self._memo = _GramMemo(_LINK_MEMO_BYTES)
+
+    def best(self, surface: str | None) -> tuple[str, float] | None:
+        """(entity_iri, score) of the best candidate, or None."""
+        if surface is None:
+            return None
+        try:
+            return self._memo[surface]
+        except KeyError:
+            pass
+        g = _grams(surface)
+        inter = Counter(j for gram in g for j in self._index.get(gram, ()))
+        pick = None
+        for j, k in inter.items():
+            jac = k / (len(g) + self._size[j] - k)
+            if jac < self.min_jaccard:
+                continue
+            for weight, iri in self._cands[j]:
+                score = jac * weight
+                if pick is None or score > pick[1] or (
+                        score == pick[1] and iri < pick[0]):
+                    pick = (iri, score)
+        self._memo.add(surface, pick)
+        return pick
+
+    def link(self, surface: str | None) -> str | None:
+        """entity_iri of the best candidate, or None."""
+        pick = self.best(surface)
+        return None if pick is None else pick[0]
 
 
 def link_surface_forms(
     mentions: DataFrame,
     catalog: DataFrame,
     mention_col: str = "surface",
-    ngram_n: int = 3,
     min_jaccard: float = 0.4,
 ) -> DataFrame:
-    """Blocking + scoring end-to-end: one best entity_iri per surface form."""
-    cands = link_candidates(mentions, catalog, mention_col, ngram_n=ngram_n,
-                            min_jaccard=min_jaccard)
-    return score_and_pick(cands)
+    """-> (surface, entity_iri, score): one best entity per distinct
+    surface, scored by :class:`SurfaceLinker` in one mapInArrow over the
+    distinct surfaces. The catalog is collected once on the driver and
+    broadcast. score is rounded to 6 places in Catalyst (HALF_UP, which
+    Python's round is not)."""
+    from ..plans.pipeline import _get_linker, broadcast_catalog
+
+    bc = broadcast_catalog(mentions.sparkSession,
+                           catalog_rows(catalog, "link_surface_forms"),
+                           min_jaccard)
+
+    def _score(batches):
+        import pyarrow as pa
+
+        linker = _get_linker(bc)
+        for rb in batches:
+            surf, iri, score = [], [], []
+            for s in rb.column(0).to_pylist():
+                pick = linker.best(s)
+                if pick is not None:
+                    surf.append(s)
+                    iri.append(pick[0])
+                    score.append(pick[1])
+            if surf:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(surf, pa.string()), pa.array(iri, pa.string()),
+                     pa.array(score, pa.float64())],
+                    ["surface", "entity_iri", "score"])
+
+    return (
+        mentions.select(F.col(mention_col).cast("string").alias("surface"))
+        .distinct()
+        .mapInArrow(_score, "surface string, entity_iri string, score double")
+        .select("surface", "entity_iri", F.round("score", 6).alias("score"))
+    )

@@ -18,11 +18,14 @@ work:
 Semantics are EXACTLY oracle.Gazetteer.find_all + apply_overlap_policy +
 extract_triples_from_text + find_unknown_mentions per row, in the same
 per-row quad order (relations by adjacent pair, then per mention
-population/label, then unknown-mention placeholders, then the tool quad)
-— verified structurally by tests/test_extract_vec.py against the per-row
-oracle :func:`_extract_batch_rows`. Reference semantics:
-solr/SolrHandler.java:367-512 (tagger + policies); QuadMapper.scala:104-128
-(sorted-group map).
+population/label, then unknown-mention placeholders — or, given an
+operators.linking.SurfaceLinker, the linked ex:mentions quads in their
+place — then the tool quad) — verified structurally by
+tests/test_extract_vec.py against the per-row oracle
+:func:`_extract_batch_rows`. :func:`link_placeholder_batch` applies the
+same linker to a quad stream that already holds placeholders. Reference
+semantics: solr/SolrHandler.java:367-512 (tagger + policies);
+QuadMapper.scala:104-128 (sorted-group map).
 
 Pure pyarrow/numpy/pandas + oracle helpers — no Spark imports (runs inside
 executors' mapInArrow closures and inside pytest alike).
@@ -53,6 +56,7 @@ from ..oracle import QUAD_FIELDS  # the one definition (Spark-free module)
 
 _TOOL_PRED = EX + "toolUsed"
 _SURF_PRED = EX + "mentionSurface"
+_MENTIONS_PRED = EX + "mentions"
 _SEP = "\x00"
 
 
@@ -124,14 +128,16 @@ def _text_templates(
     texts: list[str],
     policy: str,
     emit_unknown: bool,
+    linker=None,
 ):
     """Per-text quad templates over a list of (distinct) texts.
 
     Returns (t_tid, S, P, O, D, L, is_turn): parallel arrays of template
     quads sorted by (tid, stage, seq) — i.e. each text's quads in the exact
-    per-row oracle emission order. `is_turn` marks unknown-mention
-    placeholder quads whose subject is the row's turn IRI (filled in per
-    row by extract_batch_arrow); their S slot holds None."""
+    per-row oracle emission order. `is_turn` marks unknown-mention quads
+    (placeholders, or with a linker the linked ex:mentions quads) whose
+    subject is the row's turn IRI (filled in per row by
+    extract_batch_arrow); their S slot holds None."""
     n = len(texts)
 
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n)
@@ -261,8 +267,8 @@ def _text_templates(
                 emit(r, 2, 2 * mi + 1, m_iri[mi], EX + "label",
                      nt_unescape(lm.group(1)), RDF_LANGSTRING, lm.group(2))
 
-    # ---- unknown-mention placeholders --------------------------------------
-    if emit_unknown:
+    # ---- unknown mentions: placeholders, or linked in place ----------------
+    if emit_unknown or linker is not None:
         # per-row running max of mention ends (O(1) interval-overlap tests)
         if nm:
             row_first = np.searchsorted(m_row, np.arange(n), side="left")
@@ -291,8 +297,15 @@ def _text_templates(
             seen.add((r, surface))
             # subject = the row's turn IRI — row-dependent, filled per row
             # by extract_batch_arrow (is_turn marks the slot)
-            emit(r, 3, seq, None, _SURF_PRED, surface, XSD_STRING, None,
-                 is_turn=True)
+            if linker is None:
+                emit(r, 3, seq, None, _SURF_PRED, surface, XSD_STRING, None,
+                     is_turn=True)
+            else:
+                iri = linker.link(surface)
+                if iri is None:
+                    continue
+                emit(r, 3, seq, None, _MENTIONS_PRED, iri, None, None,
+                     is_turn=True)
             seq += 1
 
     # ---- flatten in per-text oracle order -----------------------------------
@@ -313,8 +326,20 @@ def _text_templates(
             _gather(q_l), np.asarray(q_turn, dtype=bool)[order])
 
 
+def _as_string(rb):
+    """spark.sql.execution.arrow.useLargeVarTypes ships large_string; every
+    array built here is string, so normalize the input once."""
+    import pyarrow as pa
+
+    if any(pa.types.is_large_string(f.type) for f in rb.schema):
+        rb = rb.cast(pa.schema([
+            f.with_type(pa.string()) if pa.types.is_large_string(f.type)
+            else f for f in rb.schema]))
+    return rb
+
+
 def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGHT",
-                        emit_unknown: bool = False):
+                        emit_unknown: bool = False, linker=None):
     """One Arrow RecordBatch of transcripts -> Arrow RecordBatch of quads.
 
     The one vectorized extraction path. Extraction runs once per DISTINCT
@@ -326,6 +351,10 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     the per-row oracle :func:`_extract_batch_rows`
     (tests/test_extract_vec.py parity suite).
 
+    With a linker (operators.linking.SurfaceLinker) each unknown mention
+    that links becomes a (turn IRI, ex:mentions, entity IRI) quad in the
+    placeholder's place; unknown mentions that do not link are dropped.
+
     String contract: ``role``, ``text`` and ``tool`` arrive string-typed —
     plans/pipeline.extract_quads casts them at the Spark boundary."""
     import pyarrow as pa
@@ -334,12 +363,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     n = rb.num_rows
     if n == 0:
         return None
-    # spark.sql.execution.arrow.useLargeVarTypes ships large_string; every
-    # array built below is string, so normalize the input once here
-    if any(pa.types.is_large_string(f.type) for f in rb.schema):
-        rb = rb.cast(pa.schema([
-            f.with_type(pa.string()) if pa.types.is_large_string(f.type)
-            else f for f in rb.schema]))
+    rb = _as_string(rb)
     enc = pc.dictionary_encode(rb.column("text"))
     if isinstance(enc, pa.ChunkedArray):
         enc = enc.combine_chunks()
@@ -349,7 +373,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
         # integer_object_nulls: a NULL turn_idx must not turn the column
         # into floats ('3.0' instead of the vectorized path's '3')
         out = _extract_batch_rows(rb.to_pandas(integer_object_nulls=True),
-                                  gaz, policy, emit_unknown)
+                                  gaz, policy, emit_unknown, linker)
         if not len(out):
             return None
         return pa.RecordBatch.from_pandas(
@@ -369,7 +393,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
         tids = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     t_tid, S, P, O, D, L, is_turn = _text_templates(
         gaz, [t if t is not None else "" for t in utexts], policy,
-        emit_unknown)
+        emit_unknown, linker)
     m = len(utexts)
 
     # fill_null("None") = str() parity with the per-row oracle
@@ -456,10 +480,12 @@ def _extract_batch_rows(
     gaz: Gazetteer,
     policy: str,
     emit_unknown: bool,
+    linker=None,
 ) -> pd.DataFrame:
     """The per-row oracle: exact reference semantics, one row at a time.
     Also extract_batch_arrow's fallback for batches whose texts contain the
-    \\x00 separator."""
+    \\x00 separator. With a linker, unknown mentions are linked in place
+    (see extract_batch_arrow)."""
     cols: dict[str, list] = {f: [] for f in QUAD_FIELDS}
     app = [cols[f].append for f in QUAD_FIELDS]
     for conv_id, turn_idx, role, text, tool in zip(
@@ -481,13 +507,50 @@ def _extract_batch_rows(
             app[0](q.subject); app[1](q.predicate); app[2](q.obj)
             app[3](q.datatype); app[4](q.language); app[5](q.graph)
             app[6](None)
-        if emit_unknown:
+        if emit_unknown or linker is not None:
             turn_iri = f"{graph}/turn/{turn_idx}"
             for surface in find_unknown_mentions(text or "", ms):
-                app[0](turn_iri); app[1](_SURF_PRED); app[2](surface)
-                app[3](XSD_STRING); app[4](None); app[5](graph); app[6](None)
+                if linker is None:
+                    p, o, d = _SURF_PRED, surface, XSD_STRING
+                else:
+                    p, o, d = _MENTIONS_PRED, linker.link(surface), None
+                    if o is None:
+                        continue
+                app[0](turn_iri); app[1](p); app[2](o)
+                app[3](d); app[4](None); app[5](graph); app[6](None)
         if role == "tool" and isinstance(tool, str) and tool:
             app[0](f"{graph}/turn/{turn_idx}"); app[1](_TOOL_PRED)
             app[2](tool); app[3](XSD_STRING); app[4](None); app[5](graph)
             app[6](None)
     return pd.DataFrame(cols, columns=QUAD_FIELDS)
+
+
+def link_placeholder_batch(rb, linker):
+    """One Arrow RecordBatch of quads -> the same rows with every
+    ex:mentionSurface placeholder rewritten to (turn IRI, ex:mentions,
+    linker's entity IRI, NULL, NULL) or dropped when it does not link; all
+    other rows pass through in order. Each distinct surface is scored once
+    (``pc.dictionary_encode``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rb = _as_string(rb)
+    pred = rb.column("predicate")
+    mask = pc.fill_null(pc.equal(pred, pa.scalar(_SURF_PRED)), False)
+    if not pc.any(mask).as_py():
+        return rb
+    null = pa.scalar(None, pa.string())
+    enc = pc.dictionary_encode(pc.if_else(mask, rb.column("obj"), null))
+    iris = pa.array([linker.link(s) for s in enc.dictionary.to_pylist()],
+                    pa.string()).take(enc.indices)
+    cols = [
+        rb.column("subject"),
+        pc.if_else(mask, pa.scalar(_MENTIONS_PRED), pred),
+        pc.if_else(mask, iris, rb.column("obj")),
+        pc.if_else(mask, null, rb.column("datatype")),
+        pc.if_else(mask, null, rb.column("language")),
+        rb.column("graph"),
+        rb.column("dataset"),
+    ]
+    keep = pc.or_(pc.invert(mask), pc.is_valid(iris))
+    return pa.RecordBatch.from_arrays(cols, QUAD_FIELDS).filter(keep)

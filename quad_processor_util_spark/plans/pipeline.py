@@ -9,38 +9,45 @@ connected components + broadcast joins; the predicate splitter
 
 Hot-path rules: extraction is mapInArrow (Arrow batches, no per-row Python
 UDF calls, no extra shuffle beyond the one explicit conv_id repartition);
+linking runs inside that same mapInArrow (the entity catalog is a broadcast
+dimension, each unknown surface one index lookup — no persist, no join);
 canonicalization joins broadcast the mapping; dedup is one shuffle on the
 5-field identity.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from contextlib import contextmanager
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.nt import QUAD_FIELDS, QUAD_SCHEMA, dedup_quads_df
-from ..oracle import EX, Gazetteer
+from ..oracle import Gazetteer
+from ..operators.linking import SurfaceLinker, catalog_rows
 from ..sources.io import write_quads_partitioned_by_predicate
 
-# Per-worker gazetteer cache, keyed by a CONTENT hash shipped inside the
-# broadcast value. (Keying by id(bc) would never hit across tasks and —
-# worse — an address-reuse collision in a reused Python worker could serve
-# a stale gazetteer from a previous job.) Bounded: distinct gazetteers per
-# app are few; cleared defensively if it ever grows past the cap.
-_GAZ_CACHE: dict[str, Gazetteer] = {}
-_GAZ_CACHE_CAP = 16
+# Per-worker cache of the objects built from a broadcast (gazetteers and
+# surface linkers), keyed by a CONTENT key shipped inside the broadcast
+# value. (Keying by id(bc) would never hit across tasks and — worse — an
+# address-reuse collision in a reused Python worker could serve a stale
+# object from a previous job.) Bounded: distinct gazetteers and catalogs
+# per app are few; cleared defensively if it ever grows past the cap.
+_WORKER_CACHE: dict[str, object] = {}
+_WORKER_CACHE_CAP = 16
 
-# Driver-side broadcast cache: repeated extract calls with the same
-# gazetteer reuse ONE broadcast instead of pinning a new block per call
+# Driver-side broadcast cache: repeated calls with the same gazetteer or
+# catalog reuse ONE broadcast instead of pinning a new block per call
 # (broadcasts must outlive the lazy DataFrames, so they are never destroyed
 # here — reuse is the leak control).
 _BC_CACHE: dict[tuple[str, str], object] = {}
 
 
-def _gaz_content_key(surface_to_iri: dict[str, str]) -> str:
+def _content_key(frames) -> str:
+    """md5 over length-prefixed string parts: unambiguous for frames with a
+    fixed number of parts (plain sentinel concatenation hashed
+    ("a\\x00", "b") and ("a", "\\x00b") identically and the cache served the
+    WRONG gazetteer — round-5 review finding)."""
     import hashlib
 
     try:
@@ -49,15 +56,43 @@ def _gaz_content_key(surface_to_iri: dict[str, str]) -> str:
         h = hashlib.md5(usedforsecurity=False)
     except TypeError:  # interpreter predates the flag
         h = hashlib.md5()
-    for k in sorted(surface_to_iri):
-        kb, vb = k.encode(), surface_to_iri[k].encode()
-        # length-prefixed frames: plain sentinel concatenation is ambiguous
-        # (("a\x00", "b") vs ("a", "\x00b") hashed identical streams and
-        # the cache served the WRONG gazetteer — round-5 review finding)
-        h.update(b"%d:%d:" % (len(kb), len(vb)))
-        h.update(kb)
-        h.update(vb)
+    for frame in frames:
+        for part in frame:
+            b = part.encode()
+            h.update(b"%d:" % len(b))
+            h.update(b)
     return h.hexdigest()
+
+
+def _gaz_content_key(surface_to_iri: dict[str, str]) -> str:
+    return _content_key(sorted(surface_to_iri.items()))
+
+
+def _broadcast_once(spark: SparkSession, key: str, value):
+    """Broadcast (key, value) once per distinct key per app."""
+    app = spark.sparkContext.applicationId
+    bc = _BC_CACHE.get((app, key))
+    if bc is None:
+        # purge entries of OTHER apps: a long-lived driver cycling
+        # SparkSessions must not pin dead Broadcast handles forever
+        # (round-5 review finding)
+        for stale in [t for t in _BC_CACHE if t[0] != app]:
+            del _BC_CACHE[stale]
+        bc = spark.sparkContext.broadcast((key, value))
+        _BC_CACHE[(app, key)] = bc
+    return bc
+
+
+def _from_broadcast(bc, build):
+    """The worker's object for a broadcast (key, value), built once."""
+    key, value = bc.value
+    obj = _WORKER_CACHE.get(key)
+    if obj is None:
+        if len(_WORKER_CACHE) >= _WORKER_CACHE_CAP:
+            _WORKER_CACHE.clear()
+        obj = build(value)
+        _WORKER_CACHE[key] = obj
+    return obj
 
 
 def broadcast_gazetteer(spark: SparkSession, surface_to_iri: dict[str, str]):
@@ -72,29 +107,24 @@ def broadcast_gazetteer(spark: SparkSession, surface_to_iri: dict[str, str]):
         raise ValueError(
             f"gazetteer surface forms must not contain \\x00 (the batch "
             f"row separator): {bad[:3]}")
-    key = _gaz_content_key(surface_to_iri)
-    app = spark.sparkContext.applicationId
-    bc = _BC_CACHE.get((app, key))
-    if bc is None:
-        # purge entries of OTHER apps: a long-lived driver cycling
-        # SparkSessions must not pin dead Broadcast handles forever
-        # (round-5 review finding)
-        for stale in [t for t in _BC_CACHE if t[0] != app]:
-            del _BC_CACHE[stale]
-        bc = spark.sparkContext.broadcast((key, dict(surface_to_iri)))
-        _BC_CACHE[(app, key)] = bc
-    return bc
+    return _broadcast_once(spark, _gaz_content_key(surface_to_iri),
+                           dict(surface_to_iri))
+
+
+def broadcast_catalog(spark: SparkSession, rows, min_jaccard: float = 0.4):
+    """Broadcast validated catalog rows (operators.linking.catalog_rows)
+    once per distinct (catalog, threshold) per app."""
+    key = "link:%s:%r" % (
+        _content_key(sorted((i, f, repr(w)) for i, f, w in rows)), min_jaccard)
+    return _broadcast_once(spark, key, (rows, min_jaccard))
 
 
 def _get_gazetteer(bc) -> Gazetteer:
-    key, mapping = bc.value
-    g = _GAZ_CACHE.get(key)
-    if g is None:
-        if len(_GAZ_CACHE) >= _GAZ_CACHE_CAP:
-            _GAZ_CACHE.clear()
-        g = Gazetteer(mapping)
-        _GAZ_CACHE[key] = g
-    return g
+    return _from_broadcast(bc, Gazetteer)
+
+
+def _get_linker(bc) -> SurfaceLinker:
+    return _from_broadcast(bc, lambda v: SurfaceLinker(*v))
 
 
 def stable_order(transcripts: DataFrame) -> DataFrame:
@@ -126,6 +156,7 @@ def extract_quads(
     policy: str = "LONGEST_DOMINANT_RIGHT",
     emit_unknown: bool = False,
     assume_bucketed: bool = False,
+    catalog=None,
 ) -> DataFrame:
     """Mention detection + relation extraction per turn, as mapInArrow over
     conv-grouped, turn-ordered Arrow batches (extraction is per-turn, so
@@ -142,9 +173,18 @@ def extract_quads(
     100 TB fast path: never re-shuffle what the table layout already
     guarantees (SURVEY.md §4, explicit conv_id bucketing).
 
+    With catalog (a pandas entity catalog: entity_iri, surface_form,
+    form_weight) unknown mentions are linked inside the kernel: each
+    capitalized run not covered by a gazetteer mention becomes
+    (turn IRI, ex:mentions, best entity IRI) when operators.linking's
+    SurfaceLinker links it, and is dropped otherwise. The catalog ships
+    next to the gazetteer in the content-keyed broadcast cache.
+
     The input must have the columns conv_id, turn_idx, role, text and tool
     (ValueError on the driver otherwise). role, text and tool are cast to
     string here — the one place the extractor's string contract is set.
+    A catalog missing a column or holding a NULL entity_iri/form_weight,
+    or a catalog together with emit_unknown=True, is a ValueError too.
     """
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
     missing = [c for c in cols if c not in transcripts.columns]
@@ -152,8 +192,14 @@ def extract_quads(
         raise ValueError(
             f"extract_quads: transcripts lack column(s) {missing}; "
             f"need {cols}")
+    if catalog is not None and emit_unknown:
+        raise ValueError(
+            "extract_quads: emit_unknown=True and catalog= are exclusive "
+            "(the catalog replaces the placeholders it would emit)")
     spark = transcripts.sparkSession
     bc = broadcast_gazetteer(spark, surface_to_iri)
+    linker_bc = None if catalog is None else broadcast_catalog(
+        spark, catalog_rows(catalog, "extract_quads"))
     src = transcripts if assume_bucketed else stable_order(transcripts)
     # project to the 5 columns the closure reads BEFORE the opaque
     # mapInArrow: Spark cannot see which columns the Python function
@@ -166,17 +212,18 @@ def extract_quads(
                      *(F.col(c).cast("string").alias(c)
                        for c in ("role", "text", "tool")))
     return src.mapInArrow(
-        make_extract_fn(bc, policy, emit_unknown), QUAD_SCHEMA
+        make_extract_fn(bc, policy, emit_unknown, linker_bc), QUAD_SCHEMA
     )
 
 
 def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
-                    emit_unknown: bool = False):
+                    emit_unknown: bool = False, linker_bc=None):
     """Build the Arrow-batch extraction closure (shared by batch extract_quads
     and streaming.ingest.streaming_extract). With emit_unknown, capitalized
     runs not covered by gazetteer mentions are emitted as
-    (turn IRI, ex:mentionSurface, surface) placeholder quads for the fuzzy
-    linking stage (link_unknown_mentions).
+    (turn IRI, ex:mentionSurface, surface) placeholder quads for a later
+    link_unknown_mentions; with linker_bc (broadcast_catalog) they are
+    linked in place instead.
 
     The closure is BATCH-vectorized (plans/extract_vec.py): one gazetteer
     regex scan per DISTINCT text in the Arrow batch over a joined
@@ -197,8 +244,9 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
 
     def _extract(batches):
         gaz = _get_gazetteer(bc)
+        linker = None if linker_bc is None else _get_linker(linker_bc)
         for rb in batches:
-            out = extract_batch_arrow(rb, gaz, policy, emit_unknown)
+            out = extract_batch_arrow(rb, gaz, policy, emit_unknown, linker)
             if out is not None:
                 yield out
 
@@ -260,56 +308,47 @@ def link_unknown_mentions(
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Fuzzy entity linking for the unknown-mention placeholder quads emitted
-    by extract_quads(emit_unknown=True): the ex:mentionSurface quads are
-    replaced by (turn IRI, ex:mentions, <linked entity IRI>) object-property
-    quads via n-gram-blocked scored linking (operators.linking — the Solr
-    candidate retrieval + payload-BM25 analog, SolrHandler.java:296-322,
-    PayloadBM25SimilarityFacory.java:38-41). Unresolvable surfaces drop out.
-    Non-placeholder quads pass through unchanged."""
-    from ..operators.linking import link_surface_forms
+    by extract_quads(emit_unknown=True), as one mapInArrow over the quad
+    stream: each ex:mentionSurface quad becomes (turn IRI, ex:mentions,
+    <linked entity IRI>) via operators.linking.SurfaceLinker (the Solr
+    candidate retrieval + payload-BM25 analog, SolrHandler.java:296-322),
+    unresolvable ones drop out, every other quad passes through unchanged.
+    No persist and no join: the catalog is collected on the driver
+    (ValueError there for a missing column or a NULL entity_iri/form_weight)
+    and broadcast. run_pipeline links inside extraction instead
+    (extract_quads(catalog=...)); this is the same scorer for a quad stream
+    that already holds placeholders.
 
-    surf_pred = EX + "mentionSurface"
-    # The quad stream is consumed by THREE branches (placeholders, rest, and
-    # the linking candidate surfaces): persist so the upstream extraction
-    # materializes ONCE — the links-broadcast job populates the cache, the
-    # main job reads it (verified by the row-touch accumulator test,
-    # tests/test_round3.py). persist beats localCheckpoint here: lineage is
-    # retained (an executor loss at 100 TB recomputes the lost partitions
-    # instead of failing the job) and the columnar InMemoryRelation serves
-    # the three different branch filters with batch-level pruning.
-    # LIFECYCLE: CacheManager holds SQL cache entries until an explicit
-    # unpersist/clearCache (ContextCleaner does NOT reap them). Scoped
-    # release (round-3 advice): pass `cache_registry=[]` and, after the
-    # final action on the returned frame, call .unpersist() on each entry —
-    # this evicts ONLY this pipeline's cache, unlike the session-wide
-    # spark.catalog.clearCache() that bench.py / tools/check_correctness.py
-    # use between timed reruns (fine there, where nothing else is cached).
-    quads = quads.persist()
-    if cache_registry is not None:
-        cache_registry.append(quads)
-    placeholders = quads.where(F.col("predicate") == surf_pred)
-    rest = quads.where(F.col("predicate") != surf_pred)
-    links = link_surface_forms(
-        placeholders.select(F.col("obj").alias("surface")),
-        catalog, min_jaccard=min_jaccard,
-    )
-    # links has one row per DISTINCT unknown surface — data-dependent,
-    # unlike the fixed gazetteer dimension; the broadcast assumes that set
-    # fits executor memory.
-    linked = (
-        placeholders.join(F.broadcast(links),
-                          placeholders.obj == links.surface)
-        .select(
-            F.col("subject"),
-            F.lit(EX + "mentions").alias("predicate"),
-            F.col("entity_iri").alias("obj"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit(None).cast("string").alias("language"),
-            F.col("graph"),
-            F.col("dataset"),
-        )
-    )
-    return rest.unionByName(linked)
+    `cache_registry` is kept for callers that still pass it; nothing is
+    persisted, so it is always left empty."""
+    from .extract_vec import link_placeholder_batch
+
+    bc = broadcast_catalog(quads.sparkSession,
+                           catalog_rows(catalog, "link_unknown_mentions"),
+                           min_jaccard)
+
+    def _link(batches):
+        linker = _get_linker(bc)
+        for rb in batches:
+            out = link_placeholder_batch(rb, linker)
+            if out.num_rows:
+                yield out
+
+    return quads.select(*QUAD_FIELDS).mapInArrow(_link, QUAD_SCHEMA)
+
+
+@contextmanager
+def _job_step(spark: SparkSession, step: str):
+    """Name the Spark jobs triggered inside the block after the pipeline
+    step (the UI / status store job description); the caller's description
+    is restored on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"run_pipeline: {step}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def run_pipeline(
@@ -322,29 +361,27 @@ def run_pipeline(
     fuzzy_link: bool = False,
     cache_registry: list | None = None,
 ) -> DataFrame:
-    """End-to-end: extract (→ optional fuzzy mention linking) → canonicalize
-    (CC over alias edges) → dedup (→ optionally materialize partitioned by
-    predicate). Returns the final quad DataFrame. `catalog_pdf` is the pandas
-    entity catalog (gazetteer dimension — small by design, broadcast).
-    `cache_registry`: optional list that collects any DataFrames this
-    pipeline persist()s (the fuzzy-link split), so callers composing many
-    pipelines in one session can .unpersist() exactly this pipeline's cache
-    after their final action instead of a session-wide clearCache()."""
+    """End-to-end: extract (with fuzzy_link, unknown mentions are linked
+    inside the extraction kernel) → canonicalize (CC over alias edges) →
+    dedup (→ optionally materialize partitioned by predicate). Returns the
+    final quad DataFrame. `catalog_pdf` is the pandas entity catalog
+    (gazetteer dimension — small by design, broadcast). The jobs it runs
+    are described as "run_pipeline: canonical_mapping" and
+    "run_pipeline: write". `cache_registry` is kept for callers that still
+    pass it; the pipeline persists nothing, so it is always left empty."""
     from ..datagen import build_gazetteer
     from ..operators.cc import canonical_mapping
 
     gaz = build_gazetteer(catalog_pdf)
     quads = extract_quads(transcripts, gaz.surface_to_iri, policy,
-                          emit_unknown=fuzzy_link)
-    if fuzzy_link:
-        spark_catalog = spark.createDataFrame(catalog_pdf)
-        quads = link_unknown_mentions(quads, spark_catalog,
-                                      cache_registry=cache_registry)
-    mapping, excluded = canonical_mapping(alias_edges)
+                          catalog=catalog_pdf if fuzzy_link else None)
+    with _job_step(spark, "canonical_mapping"):
+        mapping, excluded = canonical_mapping(alias_edges)
     canon = canonicalize(quads, mapping, excluded)
     final = dedup_quads_df(canon)
     if out_path:
         # write the already-deduped frame, so the write plan does not build
         # the identity-dedup a second time
-        write_quads_partitioned_by_predicate(final, out_path)
+        with _job_step(spark, "write"):
+            write_quads_partitioned_by_predicate(final, out_path)
     return final

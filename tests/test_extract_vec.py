@@ -14,7 +14,11 @@ from quad_processor_util_spark.datagen import (
     build_gazetteer,
     build_transcripts,
 )
-from quad_processor_util_spark.oracle import QUAD_FIELDS, Gazetteer
+from quad_processor_util_spark.operators.linking import (
+    SurfaceLinker,
+    catalog_rows,
+)
+from quad_processor_util_spark.oracle import EX, QUAD_FIELDS, Gazetteer
 from quad_processor_util_spark.plans.extract_vec import (
     _extract_batch_rows,
     extract_batch_arrow,
@@ -67,6 +71,18 @@ def gaz():
     return build_gazetteer(build_entity_catalog())
 
 
+def _linker():
+    """The entity catalog plus forms close to the unknown capitalized runs
+    of the test texts (and one that several texts share)."""
+    rows = catalog_rows(build_entity_catalog(), "test")
+    rows += [("http://e/unknown", "Unknown Capitalised Run", 1.0),
+             ("http://e/another", "Another Unknown", 0.5),
+             ("http://e/now", "NOW", 1.0),
+             ("http://e/city", "City", 1.0),
+             ("http://e/cafe", "Café", 1.0)]
+    return SurfaceLinker(rows)
+
+
 def _to_batch(pdf, schema=TRANSCRIPT_SCHEMA, offset=0):
     """pandas frame -> Arrow RecordBatch with the Spark transcript schema.
     offset > 0 builds the batch as a slice of a longer one, so every
@@ -78,12 +94,12 @@ def _to_batch(pdf, schema=TRANSCRIPT_SCHEMA, offset=0):
 
 
 def _check_parity(pdf, gaz, policy="LONGEST_DOMINANT_RIGHT", emit_unknown=False,
-                  schema=TRANSCRIPT_SCHEMA, offset=0):
+                  schema=TRANSCRIPT_SCHEMA, offset=0, linker=None):
     """extract_batch_arrow vs the per-row oracle, column by column; returns
     the oracle's frame."""
-    exp = _extract_batch_rows(pdf, gaz, policy, emit_unknown)
+    exp = _extract_batch_rows(pdf, gaz, policy, emit_unknown, linker)
     got = extract_batch_arrow(_to_batch(pdf, schema, offset), gaz, policy,
-                              emit_unknown)
+                              emit_unknown, linker)
     if got is None:
         assert len(exp) == 0
         return exp
@@ -231,6 +247,17 @@ try:
         g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})
         schema = TRANSCRIPT_SCHEMA.set(1, pa.field("turn_idx", pa.int64()))
         _check_parity(pdf, g, policy, emit_unknown, schema=schema)
+
+    @given(forms=_GAZ_FORMS, pdf=_hostile_batch(),
+           policy=st.sampled_from(["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"]))
+    @settings(max_examples=60, deadline=None)
+    def test_linked_property_parity(forms, pdf, policy):
+        """The same hostile batches with unknown mentions linked in the
+        kernel (the \\x00 fallback included) against the per-row oracle
+        linking with the same SurfaceLinker."""
+        g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})
+        schema = TRANSCRIPT_SCHEMA.set(1, pa.field("turn_idx", pa.int64()))
+        _check_parity(pdf, g, policy, schema=schema, linker=_linker())
 except ImportError:  # pragma: no cover
     pass
 
@@ -309,3 +336,29 @@ def test_null_turn_idx_renders_none_on_all_paths(gaz):
                      role="tool", tool="calc")
     exp = _check_parity(nul, gaz, emit_unknown=True, schema=schema)
     assert exp["subject"].str.endswith("/turn/3").any()
+
+
+@pytest.mark.parametrize("policy", ["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"])
+def test_linked_parity(gaz, policy):
+    """Unknown mentions linked inside the kernel: each linked surface
+    becomes a turn-IRI ex:mentions quad in the placeholder's place, the
+    rest drop — same rows and order as the per-row oracle, on repeated
+    texts in a sliced batch and through the \\x00 per-row fallback."""
+    texts = ADVERSARIAL_TEXTS + ["I met Grace Hoper and Bostn.",
+                                 "Unknown Capitalized Run again, Zzyzx."]
+    texts = [texts[i % len(texts)] for i in range(3 * len(texts))]
+    roles = ["tool" if i % 5 == 0 else "user" for i in range(len(texts))]
+    tools = ["search" if i % 5 == 0 else None for i in range(len(texts))]
+    pdf = _frame(texts, roles, tools)
+    lk = _linker()
+    exp = _check_parity(pdf, gaz, policy, offset=3, linker=lk)
+    linked = exp[exp["predicate"] == EX + "mentions"]
+    assert set(linked["obj"]) >= {"http://e/unknown", "http://e/another",
+                                  "http://dbpedia.org/resource/Grace_Hopper"}
+    assert linked["subject"].str.contains("/turn/").all()
+    assert linked["datatype"].isna().all()
+    assert not (exp["predicate"] == EX + "mentionSurface").any()
+    nul = pdf.assign(text=[t if i % 4 else "Grace\x00Hoper met Grace Hoper"
+                           for i, t in enumerate(texts)])
+    exp = _check_parity(nul, gaz, policy, linker=lk)
+    assert (exp["predicate"] == EX + "mentions").any()

@@ -1,9 +1,12 @@
-"""Fuzzy linking stage: unknown-mention placeholders -> linked entity quads."""
+"""Fuzzy linking: the SurfaceLinker scorer against a brute-force
+reference, driver-side catalog validation, and unknown-mention placeholders
+-> linked entity quads."""
 
 import pandas as pd
-from pyspark.sql import functions as F
+import pytest
 
 from quad_processor_util_spark.datagen import build_entity_catalog, build_gazetteer
+from quad_processor_util_spark.operators.linking import link_surface_forms
 from quad_processor_util_spark.oracle import Gazetteer, find_unknown_mentions
 from quad_processor_util_spark.plans.pipeline import (
     extract_quads,
@@ -53,3 +56,167 @@ class TestPipelineFuzzyLink:
         assert m.datatype is None
         # no placeholder quads leak through
         assert not any(r.predicate.endswith("mentionSurface") for r in rows)
+
+
+def _brute_force_link(surface, rows, min_jaccard=0.4):
+    """Reference for SurfaceLinker: every catalog row scored on its own,
+    jaccard from the set union, best (score, then smallest IRI) wins."""
+    def grams(s):
+        s = s.strip(" ").lower()
+        return ({s[i:i + 3] for i in range(len(s) - 2)} if len(s) >= 3
+                else {s})
+
+    g = grams(surface)
+    scored = []
+    for iri, form, weight in rows:
+        f = grams(form)
+        jac = len(g & f) / len(g | f)
+        if g & f and jac >= min_jaccard:
+            scored.append((-(jac * weight), iri))
+    if not scored:
+        return None
+    score, iri = min(scored)
+    return iri, -score
+
+
+class TestSurfaceLinker:
+    def test_threshold_boundary_and_below(self):
+        from quad_processor_util_spark.operators.linking import SurfaceLinker
+
+        # bos/ost/stn vs bos/ost/sto/ton: 2 / (3 + 4 - 2) = 0.4 exactly
+        lk = SurfaceLinker([("http://e/boston", "Boston", 1.0)])
+        assert lk.best("Bostn") == ("http://e/boston", 0.4)
+        # bos/ost/sta/tan: 2 / (4 + 4 - 2) = 1/3, below the threshold
+        assert lk.best("Bostan") is None
+        assert SurfaceLinker([("http://e/boston", "Boston", 1.0)],
+                             min_jaccard=0.3).best("Bostan") == \
+            ("http://e/boston", 1 / 3)
+
+    def test_shared_form_ties_and_short_forms(self):
+        from quad_processor_util_spark.operators.linking import SurfaceLinker
+
+        rows = [("http://e/2", "Paris", 0.5), ("http://e/1", "Paris", 0.5),
+                ("http://e/3", "Paris", 0.2), ("http://e/4", "Al", 1.0)]
+        lk = SurfaceLinker(rows)
+        # a shared form is counted once: jaccard 1.0, not inflated
+        assert lk.best("paris ") == ("http://e/1", 0.5)
+        # forms shorter than 3 characters are one gram: exact match only
+        assert lk.best("AL") == ("http://e/4", 1.0)
+        assert lk.best("Alp") is None
+        assert lk.best(None) is None
+
+
+try:
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    # ASCII, accented, German sharp s, dotted capital I (lowercases to two
+    # code points), Greek sigma
+    _ALPHA = "abAB é ÉßİΣσ"
+    _FORM = st.text(alphabet=_ALPHA, max_size=7)
+    _ROWS = st.lists(
+        st.tuples(st.sampled_from([f"http://e/{i}" for i in range(4)]),
+                  _FORM,
+                  st.sampled_from([0.0, 0.25, 0.5, 1.0, 2.0])),
+        min_size=1, max_size=10)
+
+    @given(rows=_ROWS, surfaces=st.lists(_FORM, min_size=1, max_size=10),
+           min_jaccard=st.sampled_from([0.4, 0.2, 1.0]))
+    @settings(max_examples=300, deadline=None)
+    def test_surface_linker_matches_brute_force(rows, surfaces, min_jaccard):
+        """Shared and ambiguous forms (4 IRIs over random forms), forms
+        shorter than 3 characters, non-ASCII case folding, equal-score ties
+        (few distinct weights) and the exact-threshold boundary."""
+        from quad_processor_util_spark.operators.linking import SurfaceLinker
+
+        lk = SurfaceLinker(rows, min_jaccard)
+        # surfaces drawn both freshly and from the forms themselves; each
+        # asked twice, the second answer coming from the memo
+        for s in surfaces + [f for _, f, _ in rows]:
+            want = _brute_force_link(s, rows, min_jaccard)
+            assert lk.best(s) == want, s
+            assert lk.best(s) == want, s
+except ImportError:  # pragma: no cover
+    pass
+
+
+_CATALOG_CASES = {
+    "missing_column": pd.DataFrame({"entity_iri": ["http://e/1"],
+                                    "surface_form": ["Ada"]}),
+    "null_entity_iri": pd.DataFrame({"entity_iri": [None],
+                                     "surface_form": ["Ada"],
+                                     "form_weight": [1.0]}),
+    "null_form_weight": pd.DataFrame({"entity_iri": ["http://e/1"],
+                                      "surface_form": ["Ada"],
+                                      "form_weight": [None]}),
+}
+_CATALOG_ERRORS = {"missing_column": "lacks column",
+                   "null_entity_iri": "NULL", "null_form_weight": "NULL"}
+
+
+class TestDriverRejections:
+    """Bad catalogs fail with ValueError when the DataFrame is built, on
+    the driver — no Spark job has run."""
+
+    @staticmethod
+    def _no_job(spark, call):
+        sc = spark.sparkContext
+        sc.setJobGroup("linking-rejection", "bad linking arguments")
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert not sc.statusTracker().getJobIdsForGroup("linking-rejection")
+
+    @staticmethod
+    def _callers(spark, catalog):
+        tr = spark.createDataFrame(
+            [("c1", 0, "user", "I met Grace Hoper.", None)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string")
+        quads = extract_quads(tr, {"Ada": "http://e/1"}, emit_unknown=True)
+        spark_catalog = spark.createDataFrame(catalog.astype(object))
+        mentions = spark.createDataFrame([("Grace Hoper",)], "surface string")
+        return {
+            "extract_quads": lambda: extract_quads(
+                tr, {"Ada": "http://e/1"}, catalog=catalog),
+            "link_unknown_mentions": lambda: link_unknown_mentions(
+                quads, spark_catalog),
+            "link_surface_forms": lambda: link_surface_forms(
+                mentions, spark_catalog),
+        }
+
+    def _check(self, spark, case):
+        for name, call in self._callers(spark, _CATALOG_CASES[case]).items():
+            with pytest.raises(ValueError, match=_CATALOG_ERRORS[case]):
+                self._no_job(spark, call)
+
+    def test_missing_catalog_column(self, spark):
+        self._check(spark, "missing_column")
+
+    def test_null_entity_iri(self, spark):
+        self._check(spark, "null_entity_iri")
+
+    def test_null_form_weight(self, spark):
+        self._check(spark, "null_form_weight")
+
+    def test_emit_unknown_with_catalog(self, spark):
+        tr = spark.createDataFrame(
+            [("c1", 0, "user", "I met Grace Hoper.", None)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string")
+        with pytest.raises(ValueError, match="exclusive"):
+            self._no_job(spark, lambda: extract_quads(
+                tr, {"Ada": "http://e/1"}, emit_unknown=True,
+                catalog=build_entity_catalog()))
+
+    def test_null_surface_form_never_links(self, spark):
+        catalog = pd.DataFrame({
+            "entity_iri": ["http://e/1", "http://e/2"],
+            "surface_form": [None, "Grace Hopper"],
+            "form_weight": [5.0, 1.0]})
+        mentions = spark.createDataFrame([("Grace Hoper",)], "surface string")
+        got = link_surface_forms(mentions, spark.createDataFrame(catalog))
+        assert [(r.surface, r.entity_iri) for r in got.collect()] == \
+            [("Grace Hoper", "http://e/2")]

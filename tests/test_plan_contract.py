@@ -43,9 +43,10 @@ CHECKS = {
     "predicate_split_counts": ["HashAggregate", "ReadSchema"],
     # canonicalize's hinted broadcast of its alias dimension
     "pipeline_e2e": ["MapInArrow", "BroadcastHashJoin"],
-    # pipeline_full's extraction materializes ONCE into the linking split's
-    # persist() — the three branches read the columnar cache
-    "pipeline_full": ["InMemoryTableScan", "BroadcastHashJoin", "HashAggregate"],
+    # pipeline_full links the extracted placeholders in a second Arrow
+    # stage over the quad stream — no persist, no split, no links join;
+    # the only BroadcastHashJoins are canonicalize's
+    "pipeline_full": ["MapInArrow", "BroadcastHashJoin", "HashAggregate"],
     # the shingle codes (and their vocabulary-wide Window) are built
     # eagerly under a localCheckpoint; the visible plan is the coded-pair
     # join and overlap aggregate over that checkpoint
@@ -57,7 +58,8 @@ CHECKS = {
     # driver-threshold fast path collects the tiny edge set), so the
     # visible plan is docs ⟕ local component table — check that shape
     "dedup_clusters": ["SortMergeJoin LeftOuter|BroadcastHashJoin", "Scan parquet"],
-    "fuzzy_link": ["BroadcastHashJoin", "Window"],
+    # distinct surfaces scored by the SurfaceLinker in one Arrow stage
+    "fuzzy_link": ["HashAggregate", "MapInArrow"],
     "camelcase_mint": ["HashAggregate", "ReadSchema"],
     # per-document winnow selection in ONE Arrow stage after the
     # round-robin re-spread: no explode, no Window, no aggregate

@@ -2,10 +2,9 @@
 
 Two claims that previously rested on plan reading get accumulator proof:
 
-1. The composed linking pipeline (extract -> link_unknown_mentions ->
-   canonicalize -> distinct) materializes extraction EXACTLY ONCE per run —
-   the persist() in link_unknown_mentions serves all three consumer
-   branches (plans/pipeline.py).
+1. The composed linking pipelines (extract -> link_unknown_mentions ->
+   distinct, and run_pipeline(fuzzy_link=True), which links inside the
+   extraction kernel) extract every input row EXACTLY ONCE per run.
 2. run_checkpointed resume does NOT recompute completed buckets: the
    second (resumed) run's process function touches only the rows of the
    buckets missing from the ledger, and the final output is identical to
@@ -20,7 +19,11 @@ import glob
 import pytest  # noqa: F401
 from pyspark.sql import functions as F
 
-from quad_processor_util_spark.datagen import build_entity_catalog, build_gazetteer
+from quad_processor_util_spark.datagen import (
+    build_alias_edges,
+    build_entity_catalog,
+    build_gazetteer,
+)
 from quad_processor_util_spark.plans import pipeline as pl
 
 
@@ -45,9 +48,9 @@ def _counting_extract(spark, monkeypatch):
     acc = spark.sparkContext.accumulator(0)
     orig = ev.extract_batch_arrow
 
-    def counted(rb, gaz, policy, emit_unknown):
+    def counted(rb, *args):
         acc.add(rb.num_rows)
-        return orig(rb, gaz, policy, emit_unknown)
+        return orig(rb, *args)
 
     monkeypatch.setattr(ev, "extract_batch_arrow", counted)
     return acc
@@ -64,9 +67,17 @@ def test_linking_pipeline_materializes_extraction_once(spark, monkeypatch):
     out = linked.select("subject", "predicate", "obj", "graph").distinct()
     n = out.count()
     assert n > 0
-    # three consumer branches (placeholders, rest, link surfaces) + the
-    # final count: every input row extracted exactly once
+    # the placeholders are rewritten in a second Arrow stage over the same
+    # quad stream: every input row extracted exactly once
     assert acc.value == 400
+
+    final = pl.run_pipeline(spark, tr, cat, spark.createDataFrame(
+        build_alias_edges(42)), fuzzy_link=True)
+    rows = final.collect()
+    # 'Hoppr Labs' linked in the kernel (to Hopper_Labs, which the alias
+    # edges then canonicalize)
+    assert any(r.predicate.endswith("/mentions") for r in rows)
+    assert acc.value == 800
 
 
 def test_repetition_metrics_hand_cases(spark):

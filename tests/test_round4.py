@@ -107,8 +107,12 @@ class TestParallelismGuard:
 
 class TestScopedCacheRelease:
     def test_cache_registry_collects_and_unpersists(self, spark):
+        """link_unknown_mentions persists nothing: `cache_registry` stays
+        empty, the CacheManager stays empty throughout, and two runs give
+        equal results."""
+        from quad_processor_util_spark.oracle import EX
         from quad_processor_util_spark.plans.pipeline import (
-            EX, link_unknown_mentions,
+            link_unknown_mentions,
         )
 
         quads = spark.createDataFrame(
@@ -126,13 +130,21 @@ class TestScopedCacheRelease:
             [("acme corp", "http://e/acme", 1.0)],
             "surface_form string, entity_iri string, form_weight double",
         )
-        reg: list = []
-        out = link_unknown_mentions(quads, catalog, cache_registry=reg)
-        out.count()
-        assert len(reg) == 1 and reg[0].is_cached
-        for d in reg:
-            d.unpersist()
-        assert not reg[0].is_cached
+        spark.catalog.clearCache()  # other tests may have left entries
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        results = []
+        for _ in range(2):
+            reg: list = []
+            out = link_unknown_mentions(quads, catalog, cache_registry=reg)
+            assert cache.isEmpty()
+            results.append(sorted(map(tuple, out.collect())))
+            assert reg == [] and cache.isEmpty()
+        assert results[0] == results[1] == [
+            ("http://t/1", EX + "mentions", "http://e/acme", None, None,
+             "http://g", None),
+            ("http://t/1", EX + "role", "assistant",
+             "http://www.w3.org/2001/XMLSchema#string", None, "http://g",
+             None)]
 
 
 class _FakeGroupState:

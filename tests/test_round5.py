@@ -1,9 +1,13 @@
-"""Round-5 additions: composing two pipelines with scoped cache release,
-the bucket-partitioned-at-rest resume input (partition pruning instead of
-B× full scans), and regressions for the round-4 advice fixes."""
+"""Round-5 additions: composing two fuzzy-link pipelines in one session
+(equal results, nothing cached), the in-kernel linking pipeline against
+the extract → link → canonicalize → dedup composition, its plan shape and
+named jobs, the bucket-partitioned-at-rest resume input (partition pruning
+instead of B× full scans), and regressions for the round-4 advice fixes."""
 
 import os
+import re
 import warnings
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,12 +15,21 @@ from pyspark.sql import functions as F
 from quad_processor_util_spark.datagen import (
     build_alias_edges,
     build_entity_catalog,
+    build_gazetteer,
 )
+from quad_processor_util_spark.functions.nt import QUAD_FIELDS, dedup_quads_df
+from quad_processor_util_spark.operators.cc import canonical_mapping
+from quad_processor_util_spark.oracle import EX
 from quad_processor_util_spark.plans.checkpoint import (
     run_checkpointed,
     write_bucketed_transcripts,
 )
-from quad_processor_util_spark.plans.pipeline import run_pipeline
+from quad_processor_util_spark.plans.pipeline import (
+    canonicalize,
+    extract_quads,
+    link_unknown_mentions,
+    run_pipeline,
+)
 
 
 @pytest.fixture(scope="module")
@@ -33,11 +46,10 @@ def _cache_manager_empty(spark) -> bool:
 
 
 def test_compose_two_pipelines_scoped_cache_release(spark, pipe_data):
-    """Two fuzzy-link pipelines in one session, each releasing ONLY its own
-    cache via cache_registry (round-4 verdict item 6): after each run's
-    final action + registry unpersist, the CacheManager is empty again and
-    the second run's results equal the first's — scoped release neither
-    leaks entries nor poisons a later structurally-identical plan."""
+    """Two fuzzy-link pipelines in one session: linking runs inside the
+    extraction kernel, so nothing is persisted — `cache_registry` stays
+    empty, the CacheManager is empty before, during and after each run,
+    and the second run's results equal the first's."""
     transcripts, catalog, edges = pipe_data
     spark.catalog.clearCache()  # other module tests may have left entries
     assert _cache_manager_empty(spark)
@@ -46,19 +58,98 @@ def test_compose_two_pipelines_scoped_cache_release(spark, pipe_data):
         registry = []
         final = run_pipeline(spark, transcripts, catalog, edges,
                              fuzzy_link=True, cache_registry=registry)
+        assert _cache_manager_empty(spark)
         rows = frozenset(
             (r.subject, r.predicate, r.obj, r.datatype, r.language)
             for r in final.collect())
-        assert registry, "fuzzy_link=True must register its persisted split"
-        assert not _cache_manager_empty(spark), \
-            "the linking split should be cached during the run"
-        for df in registry:
-            df.unpersist()
-        assert _cache_manager_empty(spark), \
-            "registry unpersist must evict exactly this pipeline's cache"
+        assert registry == []
+        assert _cache_manager_empty(spark)
         results.append(rows)
     assert results[0] == results[1]
     assert len(results[0]) > 100
+
+
+def _quad_multiset(df):
+    return Counter(tuple(r) for r in df.select(*QUAD_FIELDS).collect())
+
+
+def test_fuzzy_pipeline_equals_linked_composition(spark, pipe_data):
+    """run_pipeline(fuzzy_link=True), which links inside the extraction
+    kernel, gives the same output multiset as the composition it replaced:
+    extract(emit_unknown=True) -> link_unknown_mentions -> canonicalize ->
+    dedup_quads_df. The fixture transcripts mention only catalog forms, so
+    a few turns with misspelled and unknown names are appended."""
+    transcripts, catalog, edges = pipe_data
+    typos = spark.createDataFrame(
+        [("typo", i, "user", t, None) for i, t in enumerate([
+            "I met Grace Hoper and Alan Turnig in Bostn.",
+            "Grace Hoper works at Hopper Labs. Zzyzx Qwerty said hi.",
+            "Ada Lovelase founded Hoppr Labs."])],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string")
+    transcripts = transcripts.unionByName(typos, allowMissingColumns=True)
+    got = _quad_multiset(run_pipeline(spark, transcripts, catalog, edges,
+                                      fuzzy_link=True))
+    gaz = build_gazetteer(catalog)
+    quads = extract_quads(transcripts, gaz.surface_to_iri, emit_unknown=True)
+    linked = link_unknown_mentions(quads, spark.createDataFrame(catalog))
+    mapping, excluded = canonical_mapping(edges)
+    want = _quad_multiset(dedup_quads_df(canonicalize(linked, mapping,
+                                                      excluded)))
+    assert got == want
+    assert any(k[1] == EX + "mentions" for k in got)
+
+
+def test_fuzzy_pipeline_plan_has_no_cache_or_link_join(spark, pipe_data):
+    """The executed plan of run_pipeline(fuzzy_link=True): no
+    InMemoryRelation/InMemoryTableScan, exactly one MapInArrow (extraction
+    with linking inside), and only canonicalize's two BroadcastHashJoins.
+    Planned with AQE and auto-broadcast off, as in test_plan_contract.py,
+    so only hinted broadcasts show."""
+    transcripts, catalog, edges = pipe_data
+    confs = {"spark.sql.adaptive.enabled": "false",
+             "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        final = run_pipeline(spark, transcripts, catalog, edges,
+                             fuzzy_link=True)
+        plan = final._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert "InMemoryRelation" not in plan
+    assert "InMemoryTableScan" not in plan
+    assert plan.count("MapInArrow") == 1, plan
+    joins = re.findall(r"BroadcastHashJoin \[(\w+)#", plan)
+    assert sorted(joins) == ["obj", "subject"], plan
+
+
+def test_run_pipeline_names_its_jobs(spark, pipe_data, tmp_path):
+    """run_pipeline describes the jobs of its canonical_mapping and write
+    steps after the step, and restores the caller's description."""
+    transcripts, catalog, edges = pipe_data
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def described(step):
+        jobs = store.jobsList(None)  # a Scala Seq of JobData
+        return sum(1 for i in range(jobs.size())
+                   if jobs.apply(i).description().isDefined()
+                   and jobs.apply(i).description().get()
+                   == f"run_pipeline: {step}")
+
+    before = {s: described(s) for s in ("canonical_mapping", "write")}
+    sc.setJobDescription("caller")
+    try:
+        run_pipeline(spark, transcripts, catalog, edges,
+                     out_path=str(tmp_path / "out"), fuzzy_link=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert described("canonical_mapping") > before["canonical_mapping"]
+    assert described("write") > before["write"]
 
 
 def test_resume_on_bucketed_layout_prunes_and_matches(spark, pipe_data,
@@ -1007,9 +1098,7 @@ def test_link_candidates_ambiguous_surface_form(spark):
     entity with jaccard exactly 1.0 — the old per-row inverted index
     inflated the intersection and divided by zero, silently dropping
     every exact match (round-5 review finding)."""
-    from quad_processor_util_spark.operators.linking import (
-        link_candidates, link_surface_forms,
-    )
+    from quad_processor_util_spark.operators.linking import link_surface_forms
 
     catalog = spark.createDataFrame(
         [("Paris", "http://e/1", 0.9),
@@ -1018,10 +1107,7 @@ def test_link_candidates_ambiguous_surface_form(spark):
          ("London", "http://e/4", 0.8)],
         "surface_form string, entity_iri string, form_weight double")
     mentions = spark.createDataFrame([("Paris",)], "surface string")
-    cands = {(r.entity_iri, round(r.jaccard, 9))
-             for r in link_candidates(mentions, catalog).collect()}
-    assert cands == {("http://e/1", 1.0), ("http://e/2", 1.0),
-                     ("http://e/3", 1.0)}
+    # score 0.9 = jaccard 1.0 x the best weight
     best = link_surface_forms(mentions, catalog).collect()
     assert [(r.surface, r.entity_iri, r.score) for r in best] == \
         [("Paris", "http://e/1", 0.9)]
