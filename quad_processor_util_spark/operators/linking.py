@@ -23,13 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import _GramMemo
-
 CATALOG_COLUMNS = ("entity_iri", "surface_form", "form_weight")
-
-# per-worker surface -> pick memo budget (the linker, and so its memo,
-# lives for the Python worker's lifetime)
-_LINK_MEMO_BYTES = 16 << 20
 
 
 def _grams(s: str, n: int = 3) -> frozenset[str]:
@@ -43,9 +37,12 @@ def _grams(s: str, n: int = 3) -> frozenset[str]:
 def catalog_rows(catalog, caller: str) -> list[tuple[str, str, float]]:
     """The (entity_iri, surface_form, form_weight) rows of a pandas or Spark
     catalog, validated on the driver: ValueError when a column is missing
-    or a row has a NULL entity_iri or form_weight. A Spark catalog is
-    collected here. Rows with a NULL surface_form can never link and are
-    left out."""
+    or a row has a NULL entity_iri or form_weight. A missing column is
+    caught from the schema, before any Spark job. A Spark catalog is
+    collected here (the linker needs its rows anyway), which is one job
+    unless it is a local relation; so a NULL row in a Spark catalog fails
+    after that one collect, never after a job over the data being linked.
+    Rows with a NULL surface_form can never link and are left out."""
     missing = [c for c in CATALOG_COLUMNS if c not in catalog.columns]
     if missing:
         raise ValueError(
@@ -89,16 +86,11 @@ class SurfaceLinker:
             self._size.append(len(g))
             for gram in g:
                 self._index.setdefault(gram, []).append(j)
-        self._memo = _GramMemo(_LINK_MEMO_BYTES)
 
     def best(self, surface: str | None) -> tuple[str, float] | None:
         """(entity_iri, score) of the best candidate, or None."""
         if surface is None:
             return None
-        try:
-            return self._memo[surface]
-        except KeyError:
-            pass
         g = _grams(surface)
         inter = Counter(j for gram in g for j in self._index.get(gram, ()))
         pick = None
@@ -111,13 +103,7 @@ class SurfaceLinker:
                 if pick is None or score > pick[1] or (
                         score == pick[1] and iri < pick[0]):
                     pick = (iri, score)
-        self._memo.add(surface, pick)
         return pick
-
-    def link(self, surface: str | None) -> str | None:
-        """entity_iri of the best candidate, or None."""
-        pick = self.best(surface)
-        return None if pick is None else pick[0]
 
 
 def link_surface_forms(

@@ -301,10 +301,10 @@ def _text_templates(
                 emit(r, 3, seq, None, _SURF_PRED, surface, XSD_STRING, None,
                      is_turn=True)
             else:
-                iri = linker.link(surface)
-                if iri is None:
+                pick = linker.best(surface)
+                if pick is None:
                     continue
-                emit(r, 3, seq, None, _MENTIONS_PRED, iri, None, None,
+                emit(r, 3, seq, None, _MENTIONS_PRED, pick[0], None, None,
                      is_turn=True)
             seq += 1
 
@@ -513,9 +513,10 @@ def _extract_batch_rows(
                 if linker is None:
                     p, o, d = _SURF_PRED, surface, XSD_STRING
                 else:
-                    p, o, d = _MENTIONS_PRED, linker.link(surface), None
-                    if o is None:
+                    pick = linker.best(surface)
+                    if pick is None:
                         continue
+                    p, o, d = _MENTIONS_PRED, pick[0], None
                 app[0](turn_iri); app[1](p); app[2](o)
                 app[3](d); app[4](None); app[5](graph); app[6](None)
         if role == "tool" and isinstance(tool, str) and tool:
@@ -541,7 +542,8 @@ def link_placeholder_batch(rb, linker):
         return rb
     null = pa.scalar(None, pa.string())
     enc = pc.dictionary_encode(pc.if_else(mask, rb.column("obj"), null))
-    iris = pa.array([linker.link(s) for s in enc.dictionary.to_pylist()],
+    picks = map(linker.best, enc.dictionary.to_pylist())
+    iris = pa.array([None if p is None else p[0] for p in picks],
                     pa.string()).take(enc.indices)
     cols = [
         rb.column("subject"),

@@ -313,11 +313,12 @@ def link_unknown_mentions(
     <linked entity IRI>) via operators.linking.SurfaceLinker (the Solr
     candidate retrieval + payload-BM25 analog, SolrHandler.java:296-322),
     unresolvable ones drop out, every other quad passes through unchanged.
-    No persist and no join: the catalog is collected on the driver
-    (ValueError there for a missing column or a NULL entity_iri/form_weight)
-    and broadcast. run_pipeline links inside extraction instead
-    (extract_quads(catalog=...)); this is the same scorer for a quad stream
-    that already holds placeholders.
+    No persist and no join: the catalog is collected on the driver and
+    broadcast (ValueError there for a missing column or a NULL
+    entity_iri/form_weight; operators.linking.catalog_rows says which of
+    the two can cost the collect job). run_pipeline links inside
+    extraction instead (extract_quads(catalog=...)); this is the same
+    scorer for a quad stream that already holds placeholders.
 
     `cache_registry` is kept for callers that still pass it; nothing is
     persisted, so it is always left empty."""

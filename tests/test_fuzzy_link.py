@@ -2,6 +2,8 @@
 reference, driver-side catalog validation, and unknown-mention placeholders
 -> linked entity quads."""
 
+import itertools
+
 import pandas as pd
 import pytest
 
@@ -130,12 +132,9 @@ try:
         from quad_processor_util_spark.operators.linking import SurfaceLinker
 
         lk = SurfaceLinker(rows, min_jaccard)
-        # surfaces drawn both freshly and from the forms themselves; each
-        # asked twice, the second answer coming from the memo
+        # surfaces drawn both freshly and from the forms themselves
         for s in surfaces + [f for _, f, _ in rows]:
-            want = _brute_force_link(s, rows, min_jaccard)
-            assert lk.best(s) == want, s
-            assert lk.best(s) == want, s
+            assert lk.best(s) == _brute_force_link(s, rows, min_jaccard), s
 except ImportError:  # pragma: no cover
     pass
 
@@ -150,24 +149,33 @@ _CATALOG_CASES = {
                                       "surface_form": ["Ada"],
                                       "form_weight": [None]}),
 }
+_GROUPS = itertools.count()
 _CATALOG_ERRORS = {"missing_column": "lacks column",
                    "null_entity_iri": "NULL", "null_form_weight": "NULL"}
 
 
 class TestDriverRejections:
     """Bad catalogs fail with ValueError when the DataFrame is built, on
-    the driver — no Spark job has run."""
+    the driver. A missing column, and anything wrong with a pandas or
+    local-relation catalog, costs no Spark job; a NULL row in a catalog
+    that must be read (parquet here) costs exactly the one job that
+    collects it."""
 
     @staticmethod
-    def _no_job(spark, call):
+    def _jobs(spark, call, match):
+        """Job ids run by call(), which must raise ValueError(match)."""
         sc = spark.sparkContext
-        sc.setJobGroup("linking-rejection", "bad linking arguments")
+        group = f"linking-rejection-{next(_GROUPS)}"
+        sc.setJobGroup(group, "bad linking arguments")
         try:
-            call()
+            with pytest.raises(ValueError, match=match):
+                call()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        assert not sc.statusTracker().getJobIdsForGroup("linking-rejection")
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
 
     @staticmethod
     def _callers(spark, catalog):
@@ -176,40 +184,49 @@ class TestDriverRejections:
             "conv_id string, turn_idx int, role string, text string, "
             "tool string")
         quads = extract_quads(tr, {"Ada": "http://e/1"}, emit_unknown=True)
-        spark_catalog = spark.createDataFrame(catalog.astype(object))
         mentions = spark.createDataFrame([("Grace Hoper",)], "surface string")
         return {
             "extract_quads": lambda: extract_quads(
                 tr, {"Ada": "http://e/1"}, catalog=catalog),
-            "link_unknown_mentions": lambda: link_unknown_mentions(
-                quads, spark_catalog),
-            "link_surface_forms": lambda: link_surface_forms(
-                mentions, spark_catalog),
+            "link_unknown_mentions": lambda c: link_unknown_mentions(quads, c),
+            "link_surface_forms": lambda c: link_surface_forms(mentions, c),
         }
 
-    def _check(self, spark, case):
-        for name, call in self._callers(spark, _CATALOG_CASES[case]).items():
-            with pytest.raises(ValueError, match=_CATALOG_ERRORS[case]):
-                self._no_job(spark, call)
+    def _check(self, spark, tmp_path, case, read_jobs):
+        catalog = _CATALOG_CASES[case]
+        match = _CATALOG_ERRORS[case]
+        types = {"entity_iri": "string", "surface_form": "string",
+                 "form_weight": "double"}
+        local = spark.createDataFrame(
+            catalog.astype(object),
+            ", ".join(f"{c} {types[c]}" for c in catalog.columns))
+        path = str(tmp_path / case)
+        local.write.parquet(path)
+        read = spark.read.parquet(path)
+        callers = self._callers(spark, catalog)
+        assert self._jobs(spark, callers.pop("extract_quads"), match) == []
+        for name, link in callers.items():
+            assert self._jobs(spark, lambda: link(local), match) == [], name
+            assert len(self._jobs(spark, lambda: link(read), match)) == \
+                read_jobs, name
 
-    def test_missing_catalog_column(self, spark):
-        self._check(spark, "missing_column")
+    def test_missing_catalog_column(self, spark, tmp_path):
+        self._check(spark, tmp_path, "missing_column", read_jobs=0)
 
-    def test_null_entity_iri(self, spark):
-        self._check(spark, "null_entity_iri")
+    def test_null_entity_iri(self, spark, tmp_path):
+        self._check(spark, tmp_path, "null_entity_iri", read_jobs=1)
 
-    def test_null_form_weight(self, spark):
-        self._check(spark, "null_form_weight")
+    def test_null_form_weight(self, spark, tmp_path):
+        self._check(spark, tmp_path, "null_form_weight", read_jobs=1)
 
     def test_emit_unknown_with_catalog(self, spark):
         tr = spark.createDataFrame(
             [("c1", 0, "user", "I met Grace Hoper.", None)],
             "conv_id string, turn_idx int, role string, text string, "
             "tool string")
-        with pytest.raises(ValueError, match="exclusive"):
-            self._no_job(spark, lambda: extract_quads(
-                tr, {"Ada": "http://e/1"}, emit_unknown=True,
-                catalog=build_entity_catalog()))
+        assert self._jobs(spark, lambda: extract_quads(
+            tr, {"Ada": "http://e/1"}, emit_unknown=True,
+            catalog=build_entity_catalog()), "exclusive") == []
 
     def test_null_surface_form_never_links(self, spark):
         catalog = pd.DataFrame({
