@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from quad_processor_util_spark.functions import text as T
-from quad_processor_util_spark.functions.nt import parse_nt_expr
+from quad_processor_util_spark.functions.nt import parse_nt_lines
 from quad_processor_util_spark.functions.uri import local_name
 from quad_processor_util_spark.operators.cc import connected_components
 from quad_processor_util_spark.operators.dedup import (
@@ -158,7 +158,7 @@ def _q_quad_parse(spark, sf_dir):
             F.lit('" <http://example.org/g/'), F.col("lang"), F.lit("> ."),
         ).alias("line")
     )
-    return parse_nt_expr(lines).select("subject", "predicate", "obj", "datatype", "graph")
+    return parse_nt_lines(lines).select("subject", "predicate", "obj", "datatype", "graph")
 
 
 def _q_star_group(spark, sf_dir):

@@ -1,15 +1,20 @@
 """N-Triples/N-Quads parse + format on Spark.
 
-Two paths for each direction:
+One parse path: `parse_nt_lines` runs Arrow batches through mapInPandas.
+Canonical single-space lines parse with one vectorized regex per batch;
+every other line (escapes, exotic whitespace, comments, malformed) goes
+through the pure-Python oracle `oracle.parse_nt_line`, so the output is
+byte-exact N-Triples semantics incl. \\uXXXX / \\UXXXXXXXX escapes.
 
-- **JVM path** (`parse_nt_expr`, `format_nt_expr`): built-in Catalyst
-  expressions (regexp / concat / when) — whole-stage-codegen'd, zero Python.
-  Formatting on this path is Turtle-mode (non-ASCII kept raw,
-  ref: TurtleUtils.scala:100-140 turtle branch).
-- **exact path** (`parse_nt_lines`, `format_nt_exact`): Arrow-batched
-  pandas execution of the *same pure-Python oracle functions* the tests
-  use (oracle.parse_nt_line / oracle.format_nt_line), for byte-exact
-  N-Triples-mode semantics incl. \\uXXXX escapes.
+Two format paths:
+
+- **JVM path** (`format_nt_expr`): built-in Catalyst expressions
+  (concat / when / regexp_replace), whole-stage-codegen'd, zero Python.
+  Turtle-mode escaping (non-ASCII kept raw, ref: TurtleUtils.scala:100-140
+  turtle branch).
+- **exact path** (`format_nt_exact`): Arrow-batched pandas over the same
+  oracle function the tests use (oracle.format_nt_line), for byte-exact
+  N-Triples-mode output incl. \\uXXXX escapes.
 
 Reference: parser Quad.scala:189-265; formatter TerseBuilder.scala:10-82.
 """
@@ -42,7 +47,7 @@ QUAD_IDENTITY = ["subject", "predicate", "obj", "datatype", "language"]
 
 
 # ---------------------------------------------------------------------------
-# exact parse: mapInPandas over a `line` column
+# parse: mapInPandas over a `line` column
 # ---------------------------------------------------------------------------
 
 
@@ -122,177 +127,37 @@ def _parse_canonical_batch(lines: pd.Series) -> tuple[pd.DataFrame, pd.Series]:
     return _quads_from_canonical_groups(groups), leftovers
 
 
+def _parse_batch(lines: pd.Series) -> pd.DataFrame:
+    """One Arrow batch of raw lines -> quad frame: canonical lines through
+    the vectorized route, the rest per-row through the oracle parser."""
+    fast, leftovers = _parse_canonical_batch(lines)
+    rows = []
+    for line in leftovers:
+        q = parse_nt_line(line)
+        if q is not None:
+            rows.append((q.subject, q.predicate, q.obj, q.datatype,
+                         q.language, q.graph, q.dataset))
+    slow = pd.DataFrame(rows, columns=QUAD_FIELDS)
+    return pd.concat([fast, slow], ignore_index=True) if len(slow) else fast
+
+
 def parse_nt_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
     """Parse a DataFrame of raw N-Triples/N-Quads lines into the quad table.
 
     Comments/blank/malformed lines are skipped (skip-with-warning semantics,
     QuadReader.scala:178-179 — counts observable as input minus output).
-    Runs as mapInPandas (Arrow batches, no shuffle); canonical single-space
-    lines — the overwhelming bulk of real NT dumps — parse with one
-    vectorized regex extract per batch, the rest per-row through the exact
-    oracle parser. Semantics are identical either way (tests cover both
-    routes)."""
+    Runs as mapInPandas (Arrow batches, no shuffle) and reads its source
+    once; canonical single-space lines — the overwhelming bulk of real NT
+    dumps — parse with one vectorized regex extract per batch, the rest
+    per-row through the exact oracle parser. Semantics are identical
+    either way (tests cover both routes). A surrogate or out-of-range
+    \\u/\\U escape fails the job: it decodes to no valid UTF-8 string."""
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            fast, leftovers = _parse_canonical_batch(pdf[line_col])
-            rows = []
-            for line in leftovers:
-                q = parse_nt_line(line)
-                if q is not None:
-                    rows.append((q.subject, q.predicate, q.obj, q.datatype,
-                                 q.language, q.graph, q.dataset))
-            slow = pd.DataFrame(rows, columns=QUAD_FIELDS)
-            yield pd.concat([fast, slow], ignore_index=True) if len(slow) else fast
+            yield _parse_batch(pdf[line_col])
 
     return lines_df.mapInPandas(_parse, QUAD_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# JVM parse: regexp-based fast path (benchmarkable, codegen'd)
-# ---------------------------------------------------------------------------
-
-_URI = r"<([^>]*)>"
-_LIT = r'"((?:[^"\\]|\\.)*)"'
-# separators are [ \t]* to match the oracle scanner EXACTLY: skip_ws skips
-# only space/tab (so '\f' separators are malformed on both paths) and
-# allows ZERO whitespace between terms ('<s><p><o>.' parses on both);
-# @lang / ^^dt attach tight to the closing quote, as the scanner requires
-_WS = r"[ \t]*"
-_TRIPLE_RE = (
-    r"^" + _WS + _URI + _WS + _URI + _WS +
-    r"(?:" + _URI + r"|" + _LIT + r"(?:@([a-z][a-z0-9-]*)|\^\^" + _URI + r")?)"
-    r"(?:" + _WS + _URI + r")?" + _WS + r"\." + _WS + r"$"
-)
-
-
-def _unescape_expr(col: Column) -> Column:
-    """Literal unescape for the JVM path, pure Catalyst (ref: Quad.scala:
-    216-220 unescapes the lexical form; TurtleUtils.scala:51-90). A NUL
-    sentinel makes the sequential replaces single-pass-correct: '\\\\' is
-    captured FIRST, so a backslash freed by a later replace can never be
-    re-interpreted as starting a new escape (raw NUL cannot occur in an NT
-    line — the grammar forbids control chars; the exact path escapes them).
-    Residual gap vs the exact path: \\uXXXX / \\UXXXXXXXX stay raw (no
-    codepoint constructor in Catalyst) — parse_nt_lines handles those;
-    unknown escapes like '\\q' pass through unchanged on both paths."""
-    c = F.regexp_replace(col, r"\\\\", "\x00")
-    for pat, rep in ((r"\\t", "\t"), (r"\\b", "\b"), (r"\\n", "\n"),
-                     (r"\\r", "\r"), (r"\\f", "\f"), (r"\\\"", "\""),
-                     (r"\\'", "'")):
-        c = F.regexp_replace(c, pat, rep)
-    return F.regexp_replace(c, "\x00", "\\\\")
-
-
-def parse_nt_expr(lines_df: DataFrame, line_col: str = "line",
-                  unescape: bool = True, hybrid: bool = True,
-                  consistent: bool = False) -> DataFrame:
-    """Catalyst parse (regexp_extract chain) with a hybrid escape route.
-
-    Literal lexical forms get the simple-escape unescape chain
-    (\\\\ \\t \\b \\n \\r \\f \\\" \\') in pure expressions. \\uXXXX /
-    \\UXXXXXXXX have no codepoint constructor in Catalyst, so with
-    hybrid=True (default) the rare lines containing a ``\\u``/``\\U``
-    sequence are routed through the exact Arrow parser (parse_nt_lines)
-    and unioned back — a cheap rlike split; the 99%+ clean lines keep the
-    JVM fast path, and the two routes now agree on unicode-escaped corpora
-    (closes the round-3 residual; ref TurtleUtils.scala:51-90).
-    hybrid=False restores the pure-expression plan (\\uXXXX stays raw).
-    unescape=False keeps lexical forms raw for scan-speed benches over
-    clean data (implies no hybrid split).
-
-    Plan-shape note: the hybrid union references the input in BOTH branches,
-    so the SOURCE subtree (file scan / generating expressions) is evaluated
-    twice — each with its rlike filter pushed toward the scan. Each line is
-    still PARSED exactly once, on exactly one branch; at scale the duplicate
-    scan is cheap relative to the regexp-extract work, and avoiding it would
-    take an eager pre-count or a persist, both worse. Callers who know their
-    corpus is escape-free can pass hybrid=False for the single-scan plan.
-
-    The double scan assumes the source is DETERMINISTIC: with a
-    non-deterministic upstream (rand()-generated lines, a directory whose
-    files change between the two scans) rows can be dropped or duplicated
-    across the rlike split. ``consistent=True`` localCheckpoints the input
-    first so both branches read one pinned computation (costs a
-    materialization; round-4 advice); without it, a source whose plan shows
-    a known non-deterministic generator gets a loud warning."""
-    if unescape and hybrid:
-        if consistent:
-            # eager: a LAZY checkpoint would materialize during the union
-            # job itself, where two executors can each independently compute
-            # a partition of a non-deterministic source (no cross-executor
-            # block dedup) — the branches would still diverge. Paying the
-            # materialization up front is the whole point of the flag
-            # (round-5 review finding).
-            lines_df = lines_df.localCheckpoint(eager=True)
-        else:
-            try:
-                plan = lines_df._jdf.queryExecution().analyzed().toString()
-            except Exception:
-                plan = ""
-            if re.search(r"\b(rand|randn|uuid|shuffle|random|"
-                         r"monotonically_increasing_id)\(", plan):
-                import warnings
-
-                warnings.warn(
-                    "parse_nt_expr(hybrid=True) scans its source twice; the "
-                    "input plan contains a non-deterministic generator, so "
-                    "rows may drop/duplicate across the split. Pass "
-                    "consistent=True to pin the input first.",
-                    RuntimeWarning, stacklevel=2)
-        has_u = F.col(line_col).rlike(r"\\[uU]")
-        fast = parse_nt_expr(lines_df.where(~has_u), line_col,
-                             unescape=True, hybrid=False)
-        slow = parse_nt_lines(lines_df.where(has_u), line_col)
-        return fast.unionByName(slow)
-    # edge trim matching the oracle's line.strip(): Python strips the FULL
-    # unicode whitespace set (\f \v \x1c-\x1f U+00A0 ...) before scanning,
-    # while _TRIPLE_RE's anchors admit only [ \t] — without this a
-    # '\f'-edged line parsed on the exact path but was silently dropped
-    # here (round-4 review finding). INTERIOR exotic whitespace stays
-    # malformed on both paths.
-    c = F.regexp_replace(
-        F.col(line_col),
-        "^[" + PY_WS_CLASS + "]+|[" + PY_WS_CLASS + "]+$", "")
-    g = lambda i: F.regexp_extract(c, _TRIPLE_RE, i)  # noqa: E731
-    matched = c.rlike(_TRIPLE_RE)
-    uri_obj = g(3)
-    lit = _unescape_expr(g(4)) if unescape else g(4)
-    lang = g(5)
-    dtype = g(6)
-    graph = g(7)
-    # Empty captures are ambiguous ("group empty" vs "group didn't
-    # participate" — both extract ''), so `<>` tokens need structural
-    # discriminators: after the two leading URIs, a '<' starts a URI object;
-    # '"..."^^<' marks a typed literal; a further '<' before the final dot
-    # marks a graph. These match the exact-path (oracle) classification for
-    # degenerate empty URIs.
-    _pfx = r"^[ \t]*<[^>]*>[ \t]*<[^>]*>[ \t]*"
-    _litp = _pfx + r'"(?:[^"\\]|\\.)*"'
-    is_uri_obj = c.rlike(_pfx + "<")
-    has_dtype = c.rlike(_litp + r"\^\^<")
-    has_graph = F.when(
-        is_uri_obj, c.rlike(_pfx + r"<[^>]*>[ \t]*<")
-    ).otherwise(
-        c.rlike(_litp + r"(?:@[a-z][a-z0-9-]*|\^\^<[^>]*>)?[ \t]*<")
-    )
-    out = (
-        lines_df.where(matched)
-        .select(
-            g(1).alias("subject"),
-            g(2).alias("predicate"),
-            F.when(is_uri_obj, uri_obj).otherwise(lit).alias("obj"),
-            F.when(is_uri_obj, F.lit(None).cast("string"))
-            .when(lang != "", F.lit("http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"))
-            .when(has_dtype, dtype)
-            .otherwise(F.lit(XSD_STRING))
-            .alias("datatype"),
-            F.when(lang != "", lang).cast("string").alias("language"),
-            F.when(has_graph, graph).cast("string").alias("graph"),
-            F.lit(None).cast("string").alias("dataset"),
-        )
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -323,6 +188,13 @@ def _escape_expr(col: Column) -> Column:
     return F.when(col.rlike(_CTRL_CLASS), ctrl).otherwise(c)
 
 
+def _uri_ok(c: Column) -> Column:
+    """Absolute-URI guard. [^\\s<>] matches oracle.is_absolute_uri
+    exactly: a URI containing '<'/'>' is BAD (would corrupt the line
+    syntax) and must comment out."""
+    return c.rlike("^[A-Za-z][A-Za-z0-9+.-]*://[^<>" + PY_WS_CLASS + "]+$")
+
+
 def format_nt_expr(quads: DataFrame, quads_mode: bool = False) -> DataFrame:
     """Quad table -> one `line` column, entirely in Catalyst expressions.
 
@@ -331,10 +203,6 @@ def format_nt_expr(quads: DataFrame, quads_mode: bool = False) -> DataFrame:
     (TerseBuilder.scala:44-48). Bad URIs comment the line out with `# `
     (TerseBuilder.scala:23). Graph appended only in quads mode (:51-60).
     """
-    # [^\s<>] matches oracle.is_absolute_uri exactly: a URI containing
-    # '<'/'>' is BAD (would corrupt the line syntax) and must comment out
-    uri_ok = lambda c: c.rlike(  # noqa: E731
-        "^[A-Za-z][A-Za-z0-9+.-]*://[^<>" + PY_WS_CLASS + "]+$")
     s, p, o, dt, lang, gr = (F.col(x) for x in
                              ["subject", "predicate", "obj", "datatype", "language", "graph"])
     obj_part = (
@@ -352,12 +220,12 @@ def format_nt_expr(quads: DataFrame, quads_mode: bool = False) -> DataFrame:
         line = F.when(has_graph, F.concat(line, F.lit(" <"), gr, F.lit(">"))).otherwise(line)
     line = F.concat(line, F.lit(" ."))
     bad = (
-        ~uri_ok(s) | ~uri_ok(p)
-        | (dt.isNull() & ~uri_ok(o))
-        | (dt.isNotNull() & lang.isNull() & (dt != XSD_STRING) & ~uri_ok(dt))
+        ~_uri_ok(s) | ~_uri_ok(p)
+        | (dt.isNull() & ~_uri_ok(o))
+        | (dt.isNotNull() & lang.isNull() & (dt != XSD_STRING) & ~_uri_ok(dt))
     )
     if quads_mode:
-        bad = bad | (has_graph & ~uri_ok(gr))
+        bad = bad | (has_graph & ~_uri_ok(gr))
     return quads.select(
         F.when(bad, F.concat(F.lit("# "), line)).otherwise(line).alias("line")
     )
@@ -509,15 +377,11 @@ def format_trix(quads: DataFrame, quads_mode: bool = False) -> DataFrame:
     TerseBuilder-specific). Simplification: URI validity uses the same
     absolute-URI guard as the N-Triples path instead of java.net.URI's
     parser (whose exact error strings are JVM-internal)."""
-    # [^\s<>] matches oracle.is_absolute_uri exactly: a URI containing
-    # '<'/'>' is BAD (would corrupt the line syntax) and must comment out
-    uri_ok = lambda c: c.rlike(  # noqa: E731
-        "^[A-Za-z][A-Za-z0-9+.-]*://[^<>" + PY_WS_CLASS + "]+$")
 
     def uri_el(col: Column, indent: str) -> Column:
         val = (
             F.when(col.isNull(), F.lit("BAD URI: null"))
-            .when(uri_ok(col), col)
+            .when(_uri_ok(col), col)
             .otherwise(F.concat(F.lit("BAD URI: not absolute: "), col))
         )
         return F.concat(F.lit(indent + "<uri>"), xml_escape_expr(val),
@@ -527,7 +391,7 @@ def format_trix(quads: DataFrame, quads_mode: bool = False) -> DataFrame:
                              ["subject", "predicate", "obj", "datatype",
                               "language", "graph"])
     dt_val = (
-        F.when(uri_ok(dt), dt)
+        F.when(_uri_ok(dt), dt)
         .otherwise(F.concat(F.lit("BAD URI: not absolute: "), dt))
     )
     obj_el = (

@@ -114,26 +114,32 @@ _GRAM_ENTRY_OVERHEAD = 80
 
 
 class _GramMemo(dict):
-    """k-gram -> hash memo bounded in bytes. Past the cap the older half
-    (dict insertion order) is evicted, so a high-entropy task keeps a
-    fixed footprint and still hits on the grams it saw most recently."""
+    """key -> value memo bounded in bytes: each entry counts its key's size,
+    a fixed per-entry cost, and ``value_bytes(value)`` when the value is
+    larger than a small int. Past the cap the older half (dict insertion
+    order) is evicted, so a high-entropy task keeps a fixed footprint and
+    still hits on the keys it saw most recently."""
 
-    __slots__ = ("cap", "nbytes")
+    __slots__ = ("cap", "nbytes", "value_bytes")
 
-    def __init__(self, cap: int):
+    def __init__(self, cap: int, value_bytes=None):
         super().__init__()
         self.cap = cap
         self.nbytes = 0
+        self.value_bytes = value_bytes
 
-    def add(self, gram, h: int) -> None:
-        self[gram] = h
-        self.nbytes += sys.getsizeof(gram) + _GRAM_ENTRY_OVERHEAD
+    def _entry_bytes(self, key, value) -> int:
+        n = sys.getsizeof(key) + _GRAM_ENTRY_OVERHEAD
+        return n if self.value_bytes is None else n + self.value_bytes(value)
+
+    def add(self, key, value) -> None:
+        self[key] = value
+        self.nbytes += self._entry_bytes(key, value)
         if self.nbytes > self.cap:
             kept = list(self.items())[len(self) // 2:]
             self.clear()
             self.update(kept)
-            self.nbytes = sum(sys.getsizeof(g) for g, _ in kept) \
-                + _GRAM_ENTRY_OVERHEAD * len(kept)
+            self.nbytes = sum(self._entry_bytes(k, v) for k, v in kept)
 
 
 def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,

@@ -47,14 +47,19 @@ No per-row Python anywhere — the merge application is a Catalyst
 """
 from __future__ import annotations
 
+import sys
 from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import _words
+from ..functions.text import _GramMemo, _words
 
 __all__ = ["bpe_pair_counts", "fit_bpe", "encode_bpe"]
+
+# per-task word -> tokens memo budget for encode_bpe, counted as each
+# word's size, its token list and token strings, and a fixed per-entry cost
+_BPE_MEMO_BYTES = 64 << 20
 
 
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
@@ -241,12 +246,32 @@ def _encode_word(w: str, merges) -> list:
     return syms
 
 
+def _tokens_bytes(syms: list) -> int:
+    return sys.getsizeof(syms) + sum(map(sys.getsizeof, syms))
+
+
+def _encode_docs(word_lists, merges, memo: _GramMemo) -> list:
+    """Per-document token streams (each word's tokens concatenated in word
+    order); a word is encoded once while ``memo`` still holds it."""
+    out = []
+    for ws in word_lists:
+        flat: list = []
+        if ws is not None:
+            for w in ws:
+                syms = memo.get(w)
+                if syms is None:
+                    syms = _encode_word(w, merges)
+                    memo.add(w, syms)
+                flat.extend(syms)
+        out.append(flat)
+    return out
+
+
 def encode_bpe(
     docs: DataFrame,
     merges,
     text_col: str = "text",
     id_col: str = "doc_id",
-    memo_cap: int = 1 << 20,
 ) -> DataFrame:
     """Apply a fitted BPE merge list to every document; ->
     ``(id_col, tokens array<string>, n_tokens bigint)`` where ``tokens``
@@ -264,8 +289,8 @@ def encode_bpe(
 
     Plan shape — ZERO shuffle: documents are encoded in place by one
     Arrow ``mapInPandas`` pass. Each partition keeps a word→tokens memo
-    (capped at ``memo_cap`` entries; Zipf token frequency makes the hit
-    rate high), and each merge is prefiltered with a substring test
+    (capped at ``_BPE_MEMO_BYTES`` bytes; Zipf token frequency makes the
+    hit rate high), and each merge is prefiltered with a substring test
     (symbols are contiguous character runs of the original word, so
     adjacency of ``l,r`` implies ``l+r`` occurs in the word — the test
     is sound). The alternative shape — encode the DISTINCT words table
@@ -301,31 +326,17 @@ def encode_bpe(
         StructField("n_tokens", LongType(), False),
     ])
 
+    memo_bytes = _BPE_MEMO_BYTES  # read on the driver; ships with the closure
+
     def _encode_partition(batches):
-        memo: dict = {}
-
-        def enc(w: str) -> list:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            syms = _encode_word(w, norm)
-            if len(memo) < memo_cap:
-                memo[w] = syms
-            return syms
-
+        memo = _GramMemo(memo_bytes, _tokens_bytes)
         for pdf in batches:
-            toks_out, n_out = [], []
-            for ws in pdf["_bpe_words"]:
-                flat: list = []
-                if ws is not None:
-                    for w in ws:
-                        flat.extend(enc(w))
-                toks_out.append(flat)
-                n_out.append(len(flat))
+            toks_out = _encode_docs(pdf["_bpe_words"], norm, memo)
             yield pd.DataFrame({
                 id_col: pdf[id_col].reset_index(drop=True),
                 "tokens": toks_out,
-                "n_tokens": pd.Series(n_out, dtype="int64"),
+                "n_tokens": pd.Series([len(t) for t in toks_out],
+                                      dtype="int64"),
             })
 
     return prep.mapInPandas(_encode_partition, schema=out_schema)

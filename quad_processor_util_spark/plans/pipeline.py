@@ -50,12 +50,9 @@ def _content_key(frames) -> str:
     WRONG gazetteer — round-5 review finding)."""
     import hashlib
 
-    try:
-        # non-cryptographic cache keying — the flag keeps FIPS-enforcing
-        # builds from refusing md5 (round-5 review finding)
-        h = hashlib.md5(usedforsecurity=False)
-    except TypeError:  # interpreter predates the flag
-        h = hashlib.md5()
+    # non-cryptographic cache keying — the flag keeps FIPS-enforcing
+    # builds from refusing md5 (round-5 review finding)
+    h = hashlib.md5(usedforsecurity=False)
     for frame in frames:
         for part in frame:
             b = part.encode()

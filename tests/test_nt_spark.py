@@ -7,7 +7,6 @@ from quad_processor_util_spark.functions.nt import (
     dedup_quads_df,
     format_nt_exact,
     format_nt_expr,
-    parse_nt_expr,
     parse_nt_lines,
 )
 from quad_processor_util_spark.oracle import parse_nt_line
@@ -34,11 +33,10 @@ def test_parse_exact_matches_oracle(spark):
     assert len(got) == 9  # all good lines, no skipped ones
 
 
-def test_parse_expr_unescapes_simple_escapes(spark):
-    """JVM path literal unescape parity (Quad.scala:216-220): every simple
-    escape, adjacent/ambiguous backslash runs, and unknown escapes must
-    match the exact oracle path. \\uXXXX is the documented residual and is
-    excluded here (covered as raw-passthrough on the exact path tests)."""
+def test_parse_expr_unescapes_simple_escapes(nt_parse_checked):
+    """Literal unescape (Quad.scala:216-220): every simple escape,
+    adjacent/ambiguous backslash runs, and unknown escapes parse exactly as
+    the per-row oracle does."""
     lines = [
         r'<http://s> <http://p> "tab\there" .',
         r'<http://s> <http://p> "nl\nnl" .',
@@ -53,19 +51,16 @@ def test_parse_expr_unescapes_simple_escapes(spark):
         r'<http://s> <http://p> "esc\tin lang"@en .',
         r'<http://s> <http://p> "esc\nin dt"^^<http://ex.org/dt> .',
     ]
-    df = spark.createDataFrame(pd.DataFrame({"line": lines}))
-    cols = ["subject", "predicate", "obj", "datatype", "language", "graph"]
-    fast = sorted(tuple(r) for r in parse_nt_expr(df).select(*cols).collect())
-    exact = sorted(tuple(r) for r in parse_nt_lines(df).select(*cols).collect())
-    assert fast == exact
-    objs = {r[2] for r in fast}
+    got = nt_parse_checked(lines)
+    assert len(got) == len(lines)
+    objs = {r[2] for r in got}
     # the ambiguous run: chars \ \ n x unescape to backslash + 'nx', NOT \n
     assert "bs-then-n\\nx" in objs
     assert "tab\there" in objs and "unknown\\qkeep" in objs
 
 
-def test_parse_expr_agrees_on_clean_lines(spark):
-    # escape-free lines: unescape chain must be a no-op
+def test_parse_expr_agrees_on_clean_lines(nt_parse_checked):
+    # escape-free lines: all canonical but the comment and the garbage
     lines = [
         "<http://ex.org/s1> <http://ex.org/p> <http://ex.org/o1> .",
         '<http://ex.org/s1> <http://ex.org/p> "plain lit" .',
@@ -75,11 +70,7 @@ def test_parse_expr_agrees_on_clean_lines(spark):
         "# comment",
         "garbage",
     ]
-    df = spark.createDataFrame(pd.DataFrame({"line": lines}))
-    cols = ["subject", "predicate", "obj", "datatype", "language", "graph"]
-    fast = sorted(tuple(r) for r in parse_nt_expr(df).select(*cols).collect())
-    exact = sorted(tuple(r) for r in parse_nt_lines(df).select(*cols).collect())
-    assert fast == exact
+    assert len(nt_parse_checked(lines)) == 5
 
 
 def test_format_roundtrip_exact(spark):

@@ -39,7 +39,9 @@ CHECKS = {
     # synth + decode are two chained Arrow stages over the binary column
     "media_features": ["MapInPandas", "ReadSchema"],
     "cosine_topk": ["BroadcastNestedLoopJoin|BroadcastHashJoin", "Window"],
-    "quad_parse": ["codegen id"],
+    # the Arrow parse stage sits at the plan root, under the column-pruning
+    # Project: one parse route, no Union of split branches
+    "quad_parse": [r"== Physical Plan ==\n\* Project \(\d+\)\n\+- MapInPandas"],
     "predicate_split_counts": ["HashAggregate", "ReadSchema"],
     # canonicalize's hinted broadcast of its alias dimension
     "pipeline_e2e": ["MapInArrow", "BroadcastHashJoin"],
@@ -171,6 +173,16 @@ def test_plan_contract(spark, planning, name):
     forbidden = [p for p in FORBIDDEN if re.search(p, plan)]
     assert not missing and not forbidden, (
         f"{name}: missing {missing}, forbidden {forbidden}\n{plan}")
+
+
+def test_quad_parse_reads_its_source_once(spark, planning):
+    """The N-Triples parser has one route per line, so its source is read
+    once: exactly one FileScan and no Union in the physical plan."""
+    qs, sf = planning
+    plan = qs["quad_parse"](spark, sf)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall("FileScan", plan)) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_resumed_bucket_partition_prunes(spark, planning):

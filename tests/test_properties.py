@@ -103,6 +103,95 @@ def test_bad_subject_comments_out_and_parser_skips(lit, p):
     assert parse_nt_line(line) is None
 
 
+# ---------------------------------------------------------------------------
+# parse_nt_lines' batch kernel ≡ oracle.parse_nt_line, with canonical and
+# non-canonical lines in ONE batch: canonical lines must take the
+# vectorized route (functions/nt._parse_canonical_batch), the rest the
+# per-row oracle, and the union must equal the oracle line for line.
+# ---------------------------------------------------------------------------
+
+# exactly what the canonical route accepts: URIs without <>"\ space tab
+# newline, literals without "\ newline (any other unicode allowed)
+_canon_uri = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs",),
+                           blacklist_characters='<>"\\ \t\n'),
+    max_size=12).map(lambda u: f"<{u}>")
+_canon_lit = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs",),
+                           blacklist_characters='"\\\n'),
+    max_size=20)
+
+_canon_obj = st.one_of(
+    _canon_uri,
+    _canon_lit.map(lambda v: f'"{v}"'),
+    st.tuples(_canon_lit, _lang).map(lambda t: f'"{t[0]}"@{t[1]}'),
+    st.tuples(_canon_lit, _canon_uri).map(lambda t: f'"{t[0]}"^^{t[1]}'),
+)
+_canon_line = st.builds(
+    lambda s, p, o, g: f"{s} {p} {o}" + (f" {g}" if g else "") + " .",
+    _canon_uri, _canon_uri, _canon_obj, st.one_of(st.none(), _canon_uri))
+
+# every escape family: simple, unknown, \uXXXX / \UXXXXXXXX (any valid
+# non-surrogate code point, either hex case) and a doubled backslash
+# before 'u' (raw text \\u0041 — NOT a unicode escape)
+_code_point = st.integers(0, 0x10FFFF).filter(
+    lambda c: not 0xD800 <= c <= 0xDFFF)
+_escape = st.one_of(
+    st.sampled_from(["\\t", "\\b", "\\n", "\\r", "\\f", '\\"', "\\'",
+                     "\\\\", "\\q", "\\\\u0041"]),
+    _code_point.map(lambda c: "\\u%04x" % c if c <= 0xFFFF
+                    else "\\U%08X" % c),
+    _code_point.filter(lambda c: c <= 0xFFFF).map(lambda c: "\\u%04X" % c),
+)
+_escaped_lit = st.lists(st.one_of(_escape, _canon_lit), min_size=1,
+                        max_size=6).map("".join).filter(lambda v: "\\" in v)
+_edge_ws = st.text(alphabet="\f\xa0\t \x0b\x1c\u2028", min_size=1,
+                   max_size=3)
+_other_line = st.one_of(
+    # escaped literal in every object position
+    st.builds(lambda s, v, suf: f'{s} <http://p> "{v}"{suf} .',
+              _canon_uri, _escaped_lit,
+              st.sampled_from(["", "@en", "^^<http://ex.org/dt>"])),
+    # a canonical line behind exotic edge whitespace (stripped by the
+    # oracle) or with tab / zero / doubled separators
+    st.builds(lambda a, ln, b: a + ln + b, _edge_ws, _canon_line, _edge_ws),
+    st.builds(lambda ln, sep: ln.replace("> <", ">" + sep + "<", 1),
+              _canon_line, st.sampled_from(["\t", "", "  ", "\f"])),
+    # comments, blank lines, truncated lines, arbitrary text
+    _text.map(lambda t: "#" + t),
+    st.text(alphabet=" \t\f\xa0", max_size=3),
+    _canon_line.map(lambda ln: ln[:-2]),
+    _text,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_canon_line, min_size=1, max_size=8),
+       st.lists(_other_line, min_size=1, max_size=8), st.randoms())
+def test_parse_batch_matches_oracle_on_mixed_batches(canon, other, rnd):
+    import pandas as pd
+
+    from quad_processor_util_spark.functions.nt import (
+        _parse_batch, _parse_canonical_batch,
+    )
+
+    lines = canon + other
+    rnd.shuffle(lines)
+    _, leftovers = _parse_canonical_batch(pd.Series(lines, dtype=object))
+    assert not set(canon) & set(leftovers)  # canonical -> vectorized route
+    cols = ["subject", "predicate", "obj", "datatype", "language", "graph"]
+    key = lambda t: tuple((v is not None, v or "") for v in t)  # noqa: E731
+    # the mixed batch, and the canonical lines alone (one findall per batch)
+    for batch in (lines, canon):
+        got = sorted((tuple(None if pd.isna(v) else v for v in r)
+                      for r in _parse_batch(pd.Series(batch, dtype=object))
+                      [cols].itertuples(index=False)), key=key)
+        want = sorted(((q.subject, q.predicate, q.obj, q.datatype,
+                        q.language, q.graph)
+                       for q in map(parse_nt_line, batch) if q), key=key)
+        assert got == want
+
+
 _RESERVED_CHARS = set("?#[]}")
 
 

@@ -217,25 +217,14 @@ class TestReviewFixes:
         assert assert_sorted(df.coalesce(1), "k", "v") > 0
         assert assert_sorted(sorted_group_scan(df, "k", "v"), "k", "v") == 0
 
-    def test_parse_paths_agree_on_whitespace_edges(self, spark):
-        import pandas as pd
-
-        from quad_processor_util_spark.functions.nt import (
-            parse_nt_expr, parse_nt_lines,
-        )
-
+    def test_parse_paths_agree_on_whitespace_edges(self, nt_parse_checked):
         lines = [
             "<http://s><http://p><http://o>.",          # zero whitespace
             "<http://s>\t<http://p> <http://o> .",       # tab separators
-            "<http://s>\f<http://p> <http://o> .",       # \f: malformed both
+            "<http://s>\f<http://p> <http://o> .",       # \f: malformed
             '<http://s> <http://p> "x"@en<http://g> .',  # no ws before graph
         ]
-        df = spark.createDataFrame(pd.DataFrame({"line": lines}))
-        cols = ["subject", "predicate", "obj", "datatype", "language", "graph"]
-        fast = sorted(tuple(r) for r in parse_nt_expr(df).select(*cols).collect())
-        exact = sorted(tuple(r) for r in parse_nt_lines(df).select(*cols).collect())
-        assert fast == exact
-        assert len(fast) == 3  # the \f line is dropped by BOTH paths
+        assert len(nt_parse_checked(lines)) == 3  # the \f line is dropped
 
     def test_format_expr_bad_uri_and_control_char_parity(self, spark):
         from quad_processor_util_spark.functions.nt import (

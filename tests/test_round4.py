@@ -1,4 +1,4 @@
-"""Round-4 regressions: hybrid \\uXXXX parse route, NaN-aware sortedness,
+"""Round-4 regressions: \\uXXXX parse route, NaN-aware sortedness,
 tolerant size-conf parsing, repartition-aware parallelism guard, scoped
 cache release for composed pipelines."""
 
@@ -9,52 +9,32 @@ import pytest
 
 
 class TestHybridUnicodeParse:
-    def test_unicode_escaped_lines_agree_across_paths(self, spark):
-        from quad_processor_util_spark.functions.nt import (
-            parse_nt_expr, parse_nt_lines,
-        )
-
+    def test_unicode_escaped_lines_agree_across_paths(self, nt_parse_checked):
         lines = [
-            # \uXXXX in every literal position, mixed with clean lines so the
-            # rlike split exercises both branches of the hybrid union
-            r'<http://s> <http://p> "café" .',
+            # raw non-ASCII and \uXXXX / \UXXXXXXXX in every literal
+            # position, mixed with clean lines so one batch takes both the
+            # canonical and the per-row route
+            '<http://s> <http://p> "caf\u00e9" .',
+            r'<http://s> <http://p> "caf\u00e9 esc" .',
             r'<http://s> <http://p> "astral \U0001F600 x" .',
             r'<http://s> <http://p> "mix\tAb" .',
-            r'<http://s> <http://p> "u-langü"@de .',
-            r'<http://s> <http://p> "u-dtß"^^<http://ex.org/dt> .',
+            r'<http://s> <http://p> "mix\t\u0041b esc" .',
+            '<http://s> <http://p> "u-lang\u00fc"@de .',
+            r'<http://s> <http://p> "u-lang\u00fc esc"@de .',
+            '<http://s> <http://p> "u-dt\u00df"^^<http://ex.org/dt> .',
+            r'<http://s> <http://p> "u-dt\u00df esc"^^<http://ex.org/dt> .',
             '<http://s> <http://p> "clean" .',
             "<http://s> <http://p> <http://o> <http://g> .",
             # backslash-escaped backslash before u: NOT a unicode escape —
-            # routed to the exact path by the cheap rlike, which must still
-            # return backslash + 'u0041' literally, not 'A'
+            # must come back as backslash + 'u0041' literally, not 'A'
             r'<http://s> <http://p> "not\\u0041esc" .',
         ]
-        df = spark.createDataFrame(pd.DataFrame({"line": lines}))
-        cols = ["subject", "predicate", "obj", "datatype", "language", "graph"]
-        fast = sorted(tuple(r) for r in
-                      parse_nt_expr(df).select(*cols).collect())
-        exact = sorted(tuple(r) for r in
-                       parse_nt_lines(df).select(*cols).collect())
-        assert fast == exact
-        objs = {r[2] for r in fast}
-        assert "café" in objs
+        objs = {r[2] for r in nt_parse_checked(lines)}
+        assert "café" in objs and "café esc" in objs
+        assert "u-langü esc" in objs and "mix\tAb esc" in objs
         assert "astral \U0001F600 x" in objs
         assert "mix\tAb" in objs
         assert "not\\u0041esc" in objs
-
-    def test_hybrid_false_keeps_raw_residual(self, spark):
-        from quad_processor_util_spark.functions.nt import parse_nt_expr
-
-        # a REAL \u escape (raw text 'café'): hybrid=False has no
-        # codepoint constructor and must pass the sequence through verbatim
-        # — the documented pure-JVM residual; hybrid=True must decode it
-        df = spark.createDataFrame(pd.DataFrame({
-            "line": ['<http://s> <http://p> "caf\\u00e9" .'],
-        }))
-        raw = parse_nt_expr(df, hybrid=False).collect()
-        assert raw[0].obj == "caf\\u00e9"
-        dec = parse_nt_expr(df, hybrid=True).collect()
-        assert dec[0].obj == "café"
 
 
 class TestNaNSortedness:
@@ -211,32 +191,18 @@ class TestReviewFixes:
         assert jvm == exact
         assert sum(1 for x in jvm if x.startswith("# ")) == 1
 
-    def test_parse_paths_agree_on_exotic_edge_whitespace(self, spark):
+    def test_parse_paths_agree_on_exotic_edge_whitespace(
+            self, nt_parse_checked):
         """\\f / U+00A0 at line EDGES are stripped by the oracle
-        (line.strip()) — the JVM path now trims the same set before its
-        [ \\t]-anchored regex; interior exotic whitespace stays malformed
-        on both paths (r4 review finding)."""
-        import pandas as pd
-
-        from quad_processor_util_spark.functions.nt import (
-            parse_nt_expr, parse_nt_lines,
-        )
-
+        (line.strip()); interior exotic whitespace stays malformed
+        (r4 review finding)."""
         lines = [
             "\f<http://s> <http://p> <http://o> .",
-            "<http://s> <http://p> <http://o2> . ",
-            " <http://s> <http://p> <http://o3> .\f",
-            "<http://s>\f<http://p> <http://o4> .",   # interior: bad on both
+            "<http://s> <http://p> <http://o2> .\xa0 ",
+            "\u2028<http://s> <http://p> <http://o3> .\f",
+            "<http://s>\f<http://p> <http://o4> .",   # interior: malformed
         ]
-        df = spark.createDataFrame(pd.DataFrame({"line": lines}))
-        cols = ["subject", "predicate", "obj", "datatype", "language",
-                "graph"]
-        fast = sorted(tuple(r) for r in
-                      parse_nt_expr(df).select(*cols).collect())
-        exact = sorted(tuple(r) for r in
-                       parse_nt_lines(df).select(*cols).collect())
-        assert fast == exact
-        assert len(fast) == 3
+        assert len(nt_parse_checked(lines)) == 3
 
     def test_fallback_row_path_handles_int_conv_id(self):
         """The \\x00-fallback extraction path must coerce conv_id to str

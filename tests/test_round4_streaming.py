@@ -1,12 +1,11 @@
 """Round-4 streaming hardening: exactly-once resume of the file-source
 stream across separate drains sharing one checkpoint, and a randomized
-escape-corpus parity check for the hybrid JVM/exact parse route."""
+escape-corpus check of the N-Triples parser against the per-row oracle."""
 
 from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pytest
 
 
@@ -67,16 +66,12 @@ class TestStreamRestartExactlyOnce:
 
 class TestHybridParseProperty:
     @pytest.mark.parametrize("seed", [0, 1])
-    def test_randomized_escape_corpus_parity(self, spark, seed):
+    def test_randomized_escape_corpus_parity(self, nt_parse_checked, seed):
         """Deterministic pseudo-random corpus mixing every escape family
         (simple, \\uXXXX, \\UXXXXXXXX, doubled backslashes, unknown
-        escapes, raw non-ASCII): the hybrid JVM route and the exact Arrow
-        route must parse identically line-for-line."""
+        escapes, raw non-ASCII): parse_nt_lines must parse it exactly as
+        the per-row oracle does, line for line."""
         import random
-
-        from quad_processor_util_spark.functions.nt import (
-            parse_nt_expr, parse_nt_lines,
-        )
 
         rnd = random.Random(seed)
         frags = ["plain", "t\\tab", "n\\nnl", "q\\\"quote", "b\\\\slash",
@@ -88,12 +83,4 @@ class TestHybridParseProperty:
             suffix = rnd.choice(["", "@en", "^^<http://ex.org/dt>"])
             lines.append(
                 f'<http://s/{i}> <http://p> "{body}"{suffix} .')
-        df = spark.createDataFrame(pd.DataFrame({"line": lines}))
-        cols = ["subject", "predicate", "obj", "datatype", "language",
-                "graph"]
-        fast = sorted(tuple(r) for r in
-                      parse_nt_expr(df).select(*cols).collect())
-        exact = sorted(tuple(r) for r in
-                       parse_nt_lines(df).select(*cols).collect())
-        assert fast == exact
-        assert len(fast) == 200
+        assert len(nt_parse_checked(lines)) == 200

@@ -257,30 +257,23 @@ def test_repartition_guard_scoped_to_plan_root(spark, tmp_path):
         assert _ensure_parallelism(distinct_buried) is not distinct_buried
 
 
-def test_parse_nt_expr_warns_on_nondeterministic_source(spark):
-    from quad_processor_util_spark.functions.nt import parse_nt_expr
+def test_parse_nt_lines_reads_nondeterministic_source_once(spark):
+    """One scan, one parse route per line: a rand()-generated source cannot
+    drop or duplicate rows across a split, and parsing warns about nothing."""
+    from quad_processor_util_spark.functions.nt import parse_nt_lines
 
     nondet = spark.range(10).select(
         F.concat(F.lit('<http://a> <http://b> "'),
                  F.round(F.rand(7), 6).cast("string"),
-                 F.lit('" .')).alias("line"))
-    with pytest.warns(RuntimeWarning, match="non-deterministic"):
-        parse_nt_expr(nondet)
-
-    # consistent=True pins the input: no warning, and the split is exact —
-    # every generated line lands on exactly one branch
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        parsed = parse_nt_expr(nondet, consistent=True)
-    assert parsed.count() == 10
-
-    # deterministic sources stay warning-free
-    det = spark.createDataFrame(
-        [('<http://a> <http://b> "x\\u00e9" .',)], "line string")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        out = parse_nt_expr(det).collect()
-    assert out[0].obj == "xé"
+                 F.lit('\\u00e9" .')).alias("line"))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = parse_nt_lines(nondet).collect()
+    # Py4J's socket cleanup may leave ResourceWarnings; nothing else
+    assert not [w for w in caught
+                if not issubclass(w.category, ResourceWarning)]
+    assert len(out) == 10
+    assert all(r.obj.endswith("é") for r in out)
 
 
 def test_cosine_nan_component_does_not_seize_rank1(spark):
@@ -834,6 +827,62 @@ def test_encode_bpe_validation(spark):
         encode_bpe(df, [("a", "")])
     with pytest.raises(ValueError, match="need columns"):
         encode_bpe(df, [("a", "b")], id_col="nope")
+
+
+def test_encode_bpe_memo_is_byte_capped(spark, monkeypatch):
+    """High-entropy words under a 4 KiB memo: the memo never accounts more
+    than its cap (each word, its token list and its tokens counted), the
+    accounting matches what it holds, and eviction changes no token — in
+    the kernel and through encode_bpe with the cap patched."""
+    import random
+    import string
+    import sys
+
+    from quad_processor_util_spark.functions.text import (
+        _GRAM_ENTRY_OVERHEAD, _GramMemo,
+    )
+    from quad_processor_util_spark.operators import bpe
+
+    rng = random.Random(11)
+    vocab = ["".join(rng.choices(string.ascii_lowercase,
+                                 k=rng.randint(3, 14)))
+             for _ in range(2000)]
+    docs = [rng.choices(vocab, k=40) for _ in range(100)]
+    merges = bpe._normalize_merges(
+        [("t", "h"), ("th", "e"), ("e", "r"), ("a", "n"), ("i", "n")])
+    cap = 4096
+    evictions = 0
+
+    class Checked(_GramMemo):
+        __slots__ = ()
+
+        def add(self, key, value):
+            nonlocal evictions
+            n = len(self)
+            super().add(key, value)
+            evictions += len(self) <= n
+            assert self.nbytes <= cap
+            assert self.nbytes == sum(
+                sys.getsizeof(k) + _GRAM_ENTRY_OVERHEAD
+                + bpe._tokens_bytes(v) for k, v in self.items())
+
+    capped = bpe._encode_docs(docs, merges, Checked(cap, bpe._tokens_bytes))
+    whole = _GramMemo(1 << 40, bpe._tokens_bytes)
+    assert capped == bpe._encode_docs(docs, merges, whole)
+    assert evictions > 10 and whole.nbytes > 10 * cap
+
+    df = spark.createDataFrame(
+        [(i, " ".join(d)) for i, d in enumerate(docs)],
+        "doc_id long, text string")
+    pairs = [(m[0], m[1]) for m in merges]
+
+    def run():
+        return sorted((r.doc_id, list(r.tokens), r.n_tokens)
+                      for r in bpe.encode_bpe(df, pairs).collect())
+
+    full = run()
+    monkeypatch.setattr(bpe, "_BPE_MEMO_BYTES", cap)
+    assert run() == full == [(i, t, len(t)) for i, t in enumerate(capped)]
 
 
 def test_streaming_dedup_drains_to_batch_distinct(spark, tmp_path):
