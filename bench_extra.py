@@ -75,8 +75,21 @@ def main() -> None:
                     args.plans, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(txt)
 
-    # warm the session once (JVM codegen, Python workers)
+    # warm the session once: JVM codegen, then one Python worker per task
+    # slot (a parquet count() starts none), each with pandas, pyarrow and
+    # the package imported. The pause keeps every slot's task alive at
+    # once, so no worker serves two of them; idle workers are reused in
+    # turn, so a worker left cold would slow a later trial.
     spark.read.parquet(os.path.join(args.sf_dir, "events.parquet")).count()
+    slots = spark.sparkContext.defaultParallelism
+
+    def _warm(batches):
+        import quad_processor_util_spark.plans.pipeline  # noqa: F401
+
+        time.sleep(0.5)
+        yield from batches
+
+    spark.range(slots, numPartitions=slots).mapInPandas(_warm, "id long").count()
 
     runs: dict[str, list[float]] = {n: [] for n in names}
     for t in range(args.trials):

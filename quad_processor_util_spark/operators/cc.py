@@ -21,13 +21,24 @@ If max_iter rounds pass without a fixpoint the function RAISES — silently
 returning partially-propagated labels would hand wrong canonicals
 downstream.
 
+canonical_mapping resolves a graph of at most DRIVER_EDGES alias edges on
+the driver from ONE bounded collect and returns Arrow-built local relations
+(DataFrame.isLocal()), which plans.pipeline.canonicalize turns into its
+broadcast dimension without a Spark job; larger graphs run the loop above.
+
 Canonical = lexicographic MIN IRI of each component (deterministic).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# canonical_mapping resolves alias graphs with at most this many edges on
+# the driver: the same bound as connected_components' driver_threshold
+# default.
+DRIVER_EDGES = 100_000
 
 
 def connected_components(
@@ -129,7 +140,37 @@ def canonical_mapping(
 ) -> tuple[DataFrame, DataFrame]:
     """Split alias edges into equivalences (redirect/sameAs -> CC) and
     disambiguation sources (-> excluded set, the anti-join side,
-    SolrLoader.scala:124-127). Returns (mapping(node, canonical), excluded(iri))."""
+    SolrLoader.scala:124-127). Returns (mapping(node, canonical), excluded(iri)).
+
+    One bounded collect reads at most DRIVER_EDGES + 1 edges. A graph at
+    or below DRIVER_EDGES edges is resolved by oracle.resolve_canonical on
+    the driver (the reference's in-memory redirect maps, SolrLoader.scala:
+    41-84) and both frames come back as Arrow-built local relations, so
+    they start no job and parallelize no RDD. A larger graph runs the
+    distributed connected_components loop, and `excluded` stays lazy."""
+    rows = (alias_edges.select(src, dst, kind)
+            .limit(DRIVER_EDGES + 1).collect())
+    if len(rows) <= DRIVER_EDGES:
+        from ..oracle import resolve_canonical
+
+        # NULL edge_kind counts as an equivalence; an equivalence with a
+        # NULL endpoint is never unioned (connected_components drops it);
+        # a disambiguation source is excluded even when it is NULL, as in
+        # the distributed path's distinct
+        mapping, excluded = resolve_canonical(
+            [(s, d, k) for s, d, k in rows
+             if k == "disambiguation" or (s is not None and d is not None)])
+        spark = alias_edges.sparkSession
+        nodes = sorted(mapping)
+        return (
+            spark.createDataFrame(pa.table({
+                "node": pa.array(nodes, pa.string()),
+                "canonical": pa.array([mapping[n] for n in nodes],
+                                      pa.string()),
+            })),
+            spark.createDataFrame(pa.table({
+                "iri": pa.array(list(excluded), pa.string())})),
+        )
     # NULL edge_kind counts as an equivalence (plain `!=` would silently
     # drop the edge: NULL != 'disambiguation' is NULL, not true)
     equiv = alias_edges.where(
@@ -140,5 +181,7 @@ def canonical_mapping(
         .select(F.col(src).alias("iri"))
         .distinct()
     )
-    mapping = connected_components(equiv, src, dst, max_iter)
+    # the collect above already showed the graph is over the threshold
+    mapping = connected_components(equiv, src, dst, max_iter,
+                                   driver_threshold=0)
     return mapping, excluded

@@ -263,19 +263,31 @@ def canonicalize(
     applies only to URI objects (datatype IS NULL). Both are pure functions
     of the original IRI, so the dimension dim(iri, canonical, __x) carries
     the rewrite target and the flag `iri ∈ EX ∨ mapping[iri] ∈ EX` (TRUE,
-    else NULL) together.
-    It is built from the two small inputs (mapping ⋈ EX, ∪ EX) and grouped
-    to one row per IRI, so the left joins never duplicate a quad. For
-    head-entity-skewed mapping tables swap the broadcast for
+    else NULL) together, one row per IRI, so the left joins never duplicate
+    a quad. It has two routes, chosen by DataFrame.isLocal():
+    - both inputs local relations (canonical_mapping's driver path): their
+      rows are collected without a Spark job, the dimension is built in
+      Python (_local_dimension) and broadcast as one Arrow local relation;
+    - otherwise Catalyst builds it inside the query from the two inputs
+      (mapping ⋈ EX, ∪ EX, grouped by IRI).
+    For head-entity-skewed mapping tables swap the broadcast for
     operators.joins.salted_join."""
-    exd = excluded.select("iri", F.lit(True).alias("__x"))
-    dim = F.broadcast(
-        mapping.join(exd, mapping["canonical"] == exd["iri"], "left")
-        .select(mapping["node"].alias("iri"), "canonical", "__x")
-        .union(exd.select("iri", F.lit(None).cast("string"), "__x"))
-        .groupBy("iri")
-        .agg(F.max("canonical").alias("canonical"), F.max("__x").alias("__x"))
-    )
+    if mapping.isLocal() and excluded.isLocal():
+        dim = _local_dimension(
+            quads.sparkSession,
+            mapping.select("node", "canonical").collect(),
+            excluded.select("iri").collect())
+    else:
+        exd = excluded.select("iri", F.lit(True).alias("__x"))
+        dim = (
+            mapping.join(exd, mapping["canonical"] == exd["iri"], "left")
+            .select(mapping["node"].alias("iri"), "canonical", "__x")
+            .union(exd.select("iri", F.lit(None).cast("string"), "__x"))
+            .groupBy("iri")
+            .agg(F.max("canonical").alias("canonical"),
+                 F.max("__x").alias("__x"))
+        )
+    dim = F.broadcast(dim)
     out = (
         quads.join(dim.select(F.col("iri").alias("subject"),
                               F.col("canonical").alias("__cs"),
@@ -296,6 +308,37 @@ def canonicalize(
         )
     )
     return out.select(*QUAD_FIELDS)
+
+
+def _local_dimension(spark: SparkSession, mapping_rows, excluded_rows
+                     ) -> DataFrame:
+    """canonicalize's Catalyst dimension rule over collected rows: one row
+    per non-NULL IRI, canonical = max of its non-NULL canonicals, __x TRUE
+    when the IRI or any of its canonicals is excluded (else NULL, not
+    False); excluded IRIs that are not mapping nodes get (iri, NULL, TRUE)."""
+    import pyarrow as pa
+
+    ex = {iri for (iri,) in excluded_rows if iri is not None}
+    canon: dict[str, str | None] = {}
+    flagged: set[str] = set()
+    for node, c in mapping_rows:
+        if node is None:
+            continue
+        prev = canon.get(node)
+        if prev is None or (c is not None and c > prev):
+            canon[node] = c
+        if c in ex:
+            flagged.add(node)
+    for iri in ex:
+        canon.setdefault(iri, None)
+    flagged |= ex
+    iris = list(canon)
+    return spark.createDataFrame(pa.table({
+        "iri": pa.array(iris, pa.string()),
+        "canonical": pa.array([canon[i] for i in iris], pa.string()),
+        "__x": pa.array([True if i in flagged else None for i in iris],
+                        pa.bool_()),
+    }))
 
 
 def link_unknown_mentions(

@@ -65,3 +65,62 @@ def nt_parse_checked(spark):
         return got
 
     return check
+
+
+@pytest.fixture(scope="session")
+def canon_frames(spark):
+    """frames(mapping_rows, excluded_iris) -> {"local": (m, x), "rdd": (m, x)}:
+    canonicalize's two inputs built twice, as Arrow local relations
+    (isLocal(), canonicalize's driver-built dimension) and as RDD-backed
+    frames (its Catalyst dimension)."""
+    import pyarrow as pa
+
+    def frames(mapping_rows, excluded_iris):
+        nodes, canons = zip(*mapping_rows) if mapping_rows else ((), ())
+        local = (
+            spark.createDataFrame(pa.table({
+                "node": pa.array(nodes, pa.string()),
+                "canonical": pa.array(canons, pa.string())})),
+            spark.createDataFrame(pa.table({
+                "iri": pa.array(list(excluded_iris), pa.string())})),
+        )
+        rdd = (
+            spark.createDataFrame(list(mapping_rows),
+                                  "node string, canonical string"),
+            spark.createDataFrame([(i,) for i in excluded_iris], "iri string"),
+        )
+        assert all(df.isLocal() for df in local)
+        assert not any(df.isLocal() for df in rdd)
+        return {"local": local, "rdd": rdd}
+
+    return frames
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """run(call) -> (call's result, ids of the Spark jobs it started,
+    [(description, formatted physical plan)] of the SQL executions those
+    jobs ran), read from the status store through a fresh job group."""
+    import itertools
+
+    groups = itertools.count()
+
+    def run(call):
+        sc = spark.sparkContext
+        group = f"spark-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        plans = [(e.description(), e.physicalPlanDescription())
+                 for e in map(execs.apply, range(execs.size()))
+                 if any(e.jobs().contains(j) for j in jobs)]
+        return result, jobs, plans
+
+    return run

@@ -49,6 +49,59 @@ class TestConnectedComponents:
             assert exp_map.get(node, node) == canon, node
         assert {r.iri for r in excluded.collect()} == exp_excl
 
+    @staticmethod
+    def _parquet_edges(spark, tmp_path):
+        """build_alias_edges(42) plus NULL-endpoint and NULL-kind rows, as
+        one parquet file."""
+        pdf = pd.concat([build_alias_edges(42), pd.DataFrame({
+            "src_iri": [None, "e:y", None, "e:n1", "e:n2"],
+            "dst_iri": ["e:x", None, "e:z", "e:n2", "e:n3"],
+            "edge_kind": ["redirect", None, "disambiguation", None, "sameAs"],
+        })], ignore_index=True)
+        path = str(tmp_path / "edges.parquet")
+        pdf.to_parquet(path, index=False)
+        return pdf, spark.read.parquet(path)
+
+    @staticmethod
+    def _oracle(pdf):
+        return resolve_canonical([
+            (s, d, k) for s, d, k in zip(pdf["src_iri"], pdf["dst_iri"],
+                                         pdf["edge_kind"])
+            if k == "disambiguation" or (s is not None and d is not None)])
+
+    def test_small_parquet_graph_is_one_job_and_local(self, spark, spark_jobs,
+                                                      tmp_path):
+        """A driver-sized graph read from parquet costs canonical_mapping one
+        job (the bounded edge collect) and comes back as local relations
+        holding the union-find oracle's mapping and excluded set (a NULL
+        disambiguation source included; NULL endpoints never unioned)."""
+        pdf, edges = self._parquet_edges(spark, tmp_path)
+        (mapping, excluded), jobs, _ = spark_jobs(
+            lambda: canonical_mapping(edges))
+        assert len(jobs) == 1
+        assert mapping.isLocal() and excluded.isLocal()
+        exp_map, exp_excl = self._oracle(pdf)
+        assert {r.node: r.canonical for r in mapping.collect()} == exp_map
+        assert {r.iri for r in excluded.collect()} == exp_excl
+        assert None in exp_excl and "e:y" not in exp_map
+
+    def test_distributed_path_probes_edges_once(self, spark, spark_jobs,
+                                                tmp_path, monkeypatch):
+        """Above the driver bound canonical_mapping runs the distributed CC
+        loop with the same result, and the bounded collect is its only
+        probe of the edges (connected_components does not probe again)."""
+        from quad_processor_util_spark.operators import cc
+
+        pdf, edges = self._parquet_edges(spark, tmp_path)
+        monkeypatch.setattr(cc, "DRIVER_EDGES", 50)
+        (mapping, excluded), _, plans = spark_jobs(
+            lambda: canonical_mapping(edges))
+        assert not mapping.isLocal() and not excluded.isLocal()
+        assert sum("CollectLimit" in p for _, p in plans) == 1, plans
+        exp_map, exp_excl = self._oracle(pdf)
+        assert {r.node: r.canonical for r in mapping.collect()} == exp_map
+        assert {r.iri for r in excluded.collect()} == exp_excl
+
     def test_cycle_converges(self, spark):
         pdf = pd.DataFrame({
             "src_iri": ["a", "b", "c"], "dst_iri": ["b", "c", "a"],

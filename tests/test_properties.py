@@ -272,7 +272,9 @@ def test_bpe_kernel_matches_oracle_replace_spec(w, merges):
 # canonicalize ≡ oracle.canonicalize_quads as MULTISETS: a random
 # functional mapping, excluded IRIs drawn from the same pool (so they hit
 # mapping nodes, canonicals and unmapped IRIs alike), URI and literal
-# objects, duplicate quads and duplicate excluded rows.
+# objects, duplicate quads and duplicate excluded rows. Every example runs
+# both dimension routes: local-relation inputs (driver-built dimension)
+# and RDD-backed inputs (Catalyst dimension).
 # ---------------------------------------------------------------------------
 
 _iri = st.sampled_from([f"e:{i}" for i in range(8)])
@@ -285,8 +287,8 @@ _canon_quad = st.tuples(_iri, _iri, st.sampled_from([None, XSD_STRING]))
     st.lists(_iri, max_size=5),
     st.lists(_canon_quad, min_size=1, max_size=12),
 )
-def test_canonicalize_matches_oracle_multiset(spark, mapping, excluded,
-                                              quads):
+def test_canonicalize_matches_oracle_multiset(spark, canon_frames, mapping,
+                                              excluded, quads):
     from collections import Counter
     from dataclasses import astuple
 
@@ -300,8 +302,7 @@ def test_canonicalize_matches_oracle_multiset(spark, mapping, excluded,
         [astuple(q) for q in pq],
         "subject string, predicate string, obj string, datatype string, "
         "language string, graph string, dataset string")
-    mdf = spark.createDataFrame(list(mapping.items()),
-                                "node string, canonical string")
-    xdf = spark.createDataFrame([(i,) for i in excluded], "iri string")
-    got = Counter(tuple(r) for r in canonicalize(qdf, mdf, xdf).collect())
-    assert got == exp
+    for route, (mdf, xdf) in canon_frames(list(mapping.items()),
+                                          excluded).items():
+        got = Counter(tuple(r) for r in canonicalize(qdf, mdf, xdf).collect())
+        assert got == exp, route

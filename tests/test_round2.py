@@ -95,7 +95,7 @@ class TestSaltedJoinGuard:
 
 
 class TestCanonicalizeParity:
-    def test_exclusion_semantics_match_oracle(self, spark):
+    def test_exclusion_semantics_match_oracle(self, spark, canon_frames):
         quads = [
             # subject rewritten via mapping
             PyQuad("e:alias1", "e:p", "e:obj1", None, None, "g"),
@@ -130,24 +130,47 @@ class TestCanonicalizeParity:
             "subject string, predicate string, obj string, datatype string, "
             "language string, graph string, dataset string",
         )
-        mdf = spark.createDataFrame(
-            list(mapping.items()), "node string, canonical string"
-        )
-        # duplicated excluded rows must not duplicate quads either
-        xdf = spark.createDataFrame([(i,) for i in sorted(excluded)] * 2,
-                                    "iri string")
-        got = Counter(
-            (r.subject, r.predicate, r.obj, r.datatype, r.language)
-            for r in canonicalize(qdf, mdf, xdf).collect()
-        )
-        assert got == exp
-        assert ("e:s2", "e:p", "e:badobj",
-                "http://www.w3.org/2001/XMLSchema#string", None) in got
+        # duplicated excluded rows must not duplicate quads either; both
+        # dimension routes (local-relation and RDD-backed inputs)
+        routes = canon_frames(list(mapping.items()), sorted(excluded) * 2)
+        for route, (mdf, xdf) in routes.items():
+            got = Counter(
+                (r.subject, r.predicate, r.obj, r.datatype, r.language)
+                for r in canonicalize(qdf, mdf, xdf).collect()
+            )
+            assert got == exp, route
+            assert ("e:s2", "e:p", "e:badobj",
+                    "http://www.w3.org/2001/XMLSchema#string", None) in got
 
-    def test_plan_probes_one_dimension_per_column(self, spark):
+    def test_dimension_routes_agree_on_irregular_inputs(self, spark,
+                                                        canon_frames):
+        """Inputs canonical_mapping never returns: a mapping node twice with
+        two canonicals (the larger wins), a NULL canonical, a NULL excluded
+        IRI. The driver-built and the Catalyst dimension give the same
+        rows."""
+        qdf = spark.createDataFrame(
+            [(s, "e:p", o, None, None, "g", None) for s, o in [
+                ("e:twice", "e:nullc"), ("e:nullc", "e:twice"),
+                ("e:s", "e:x"), ("e:s", "e:y"), ("e:y", "e:s")]],
+            "subject string, predicate string, obj string, datatype string, "
+            "language string, graph string, dataset string")
+        routes = canon_frames(
+            [("e:twice", "e:a"), ("e:twice", "e:b"), ("e:nullc", None),
+             ("e:y", "e:x"), ("e:y", None)],
+            ["e:x", None, "e:x"])
+        got = {route: Counter(tuple(r) for r in
+                              canonicalize(qdf, mdf, xdf).collect())
+               for route, (mdf, xdf) in routes.items()}
+        assert got["local"] == got["rdd"]
+        assert got["local"] == Counter([
+            ("e:b", "e:p", "e:nullc", None, None, "g", None),
+            ("e:nullc", "e:p", "e:b", None, None, "g", None)])
+
+    def test_plan_probes_one_dimension_per_column(self, spark, canon_frames):
         """The corpus is probed by exactly two broadcast hash joins (subject,
         obj) against ONE broadcast dimension: the obj probe reuses the
-        subject probe's broadcast exchange."""
+        subject probe's broadcast exchange. Holds for both dimension
+        routes; the driver-built one broadcasts a LocalTableScan."""
         import re
 
         qdf = spark.createDataFrame(
@@ -155,18 +178,20 @@ class TestCanonicalizeParity:
              ("e:s", "e:p", "lit", "xsd", None, "g", None)],
             "subject string, predicate string, obj string, datatype string, "
             "language string, graph string, dataset string")
-        mdf = spark.createDataFrame([("e:a", "e:c"), ("e:b", "e:x")],
-                                    "node string, canonical string")
-        xdf = spark.createDataFrame([("e:x",)], "iri string")
-        out = canonicalize(qdf, mdf, xdf)
-        out.collect()
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==", 1)[0]
-        probes = re.findall(r"BroadcastHashJoin \[(subject|obj)#\d+\]", plan)
-        assert sorted(probes) == ["obj", "subject"], plan
-        reused = re.findall(r"ReusedExchange \[[^\]]*\], BroadcastExchange",
-                            plan)
-        assert len(reused) == 1, plan
+        routes = canon_frames([("e:a", "e:c"), ("e:b", "e:x")], ["e:x"])
+        for route, (mdf, xdf) in routes.items():
+            out = canonicalize(qdf, mdf, xdf)
+            out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            plan = plan.split("== Initial Plan ==", 1)[0]
+            probes = re.findall(r"BroadcastHashJoin \[(subject|obj)#\d+\]",
+                                plan)
+            assert sorted(probes) == ["obj", "subject"], (route, plan)
+            reused = re.findall(
+                r"ReusedExchange \[[^\]]*\], BroadcastExchange", plan)
+            assert len(reused) == 1, (route, plan)
+            assert ("Aggregate" not in plan) == (route == "local"), (route,
+                                                                     plan)
 
 
 class TestCamelCase:

@@ -126,10 +126,15 @@ def test_fuzzy_pipeline_plan_has_no_cache_or_link_join(spark, pipe_data):
     assert sorted(joins) == ["obj", "subject"], plan
 
 
-def test_run_pipeline_names_its_jobs(spark, pipe_data, tmp_path):
+def test_run_pipeline_names_its_jobs(spark, pipe_data, fixtures_dir,
+                                    tmp_path):
     """run_pipeline describes the jobs of its canonical_mapping and write
-    steps after the step, and restores the caller's description."""
-    transcripts, catalog, edges = pipe_data
+    steps after the step, and restores the caller's description. The edges
+    are read from parquet: a local-relation edge frame costs
+    canonical_mapping no job at all."""
+    transcripts, catalog, _ = pipe_data
+    edges = spark.read.parquet(os.path.join(fixtures_dir,
+                                            "alias_edges.parquet"))
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
 
@@ -150,6 +155,49 @@ def test_run_pipeline_names_its_jobs(spark, pipe_data, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert described("canonical_mapping") > before["canonical_mapping"]
     assert described("write") > before["write"]
+
+
+def _subtrees(plan: str, node: str) -> list[list[str]]:
+    """The operator lines under each `node` in a formatted plan tree (a
+    child's `+-`/`:-` connector sits right of its parent's)."""
+    lines = plan.split("\n\n", 1)[0].splitlines()
+    at = [m.start(1) if (m := re.match(r"[ :]*?([+:]-) ", ln)) else -1
+          for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if re.search(rf"- {node} \(\d+\)", ln):
+            sub = []
+            for j in range(i + 1, len(lines)):
+                if at[j] <= at[i]:
+                    break
+                sub.append(lines[j])
+            out.append(sub)
+    return out
+
+
+def test_run_pipeline_write_waits_on_no_dimension_stages(
+        spark, spark_jobs, pipe_data, fixtures_dir, tmp_path):
+    """With a driver-sized alias graph read from parquet, the dimension
+    canonicalize broadcasts is built on the driver: the executed write
+    plan never scans the edges, and nothing but a LocalTableScan sits
+    under its BroadcastExchange (no SortAggregate, no shuffle Exchange).
+    A whole run_pipeline(out_path=...) is 5 Spark jobs: the one bounded
+    edge collect and the write query's four."""
+    transcripts, catalog, _ = pipe_data
+    edges = spark.read.parquet(os.path.join(fixtures_dir,
+                                            "alias_edges.parquet"))
+    _, jobs, plans = spark_jobs(lambda: run_pipeline(
+        spark, transcripts, catalog, edges, out_path=str(tmp_path / "out"),
+        fuzzy_link=True))
+    write = [p for d, p in plans if d == "run_pipeline: write"]
+    assert len(write) == 1, plans
+    assert "alias_edges.parquet" not in write[0]
+    dims = _subtrees(write[0], "BroadcastExchange")
+    assert dims, write[0]
+    for sub in dims:
+        ops = [re.sub(r"^[ :+*-]*", "", ln).split(" (")[0] for ln in sub]
+        assert ops == ["LocalTableScan"], write[0]
+    assert len(jobs) == 5, plans
 
 
 def test_resume_on_bucketed_layout_prunes_and_matches(spark, pipe_data,
