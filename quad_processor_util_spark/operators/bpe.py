@@ -39,9 +39,10 @@ repetition/unigram gate replays in DuckDB.
 
 100 TB stance: the corpus is touched ONCE (word-count groupBy with
 map-side combine); all iteration state is the vocabulary table, which is
-``localCheckpoint``-ed (lazily — round 6) each round so the plan does not
+``localCheckpoint``-ed with eager=False each round so the plan does not
 grow with the merge count, and whose size only shrinks (merges never add
-rows).
+rows). Under AQE such a checkpoint still runs the shuffle stages below it
+when it is called; eager=False only defers its final stage to first use.
 No per-row Python anywhere — the merge application is a Catalyst
 ``aggregate`` fold over each word's symbol array.
 """
@@ -161,11 +162,12 @@ def fit_bpe(
     vocab = _word_counts(docs, text_col).select(
         "word", "freq",
         F.expr("filter(split(word, ''), x -> x != '')").alias("syms"))
-    # lazy checkpoint (round 6): the loop below re-reads `vocab` each
-    # round; the checkpoint cuts lineage so no iteration replays the whole
-    # corpus scan + prior merges, and eager=False folds the materialization
-    # into the round's own argmax job instead of a separate blocking job
-    # per round (the per-round collect() is the only driver action)
+    # checkpoint (round 6): the loop below re-reads `vocab` each round;
+    # the checkpoint cuts lineage so no iteration replays the whole corpus
+    # scan + prior merges. Under AQE it runs the word-count shuffle when
+    # called; eager=False folds only the final stage's materialization
+    # into the round's own argmax job instead of a separate job per round
+    # (the per-round collect() is the only driver action)
     vocab = vocab.localCheckpoint(eager=False)
 
     merges: List[tuple] = []

@@ -1,12 +1,20 @@
 """Deduplication family for the training-data pipeline — exact, MinHash-LSH,
-SimHash, n-gram Jaccard, embedding-cosine. All hot paths are pure Catalyst
-expressions (explode/groupBy/joins); no Python per row anywhere.
+SimHash, n-gram Jaccard, embedding-cosine. Joins, aggregates and set
+arithmetic are Catalyst; the one Python boundary is word shingling
+(``word_shingle_rows``, a mapInPandas over Arrow batches — one
+``" ".join`` per gram, never a per-row UDF).
 
 Scale notes (100 TB stance):
 - exact: one shuffle on the 128-bit fingerprint; map-side partial agg.
-- minhash: shingle explode -> ONE groupBy computing all K signatures
+- minhash: shingle rows -> ONE groupBy computing all K signatures
   (K aggs, map-side combine), band explode (B small) -> groupBy band bucket.
   Candidate verification is an equi-join on doc ids, never a cross join.
+- dedup_clusters: one fused pass. Each document is scanned and shingled
+  once; the signature groupBy also collects its shingle set, and exact
+  Jaccard verification reads those sets. The trade: the shingle rows move
+  through one shuffle, and the corpus is not re-read and re-tokenized for
+  verification. Driver-sized pair sets resolve to clusters from one
+  bounded collect.
 - simhash: token explode -> one groupBy with 64 bit-sum aggs -> band join.
 - jaccard: shingle-inverted-index self-join (prefix-filtered) — the only
   quadratic risk is within a shingle bucket; hot shingles are dropped by a
@@ -15,10 +23,14 @@ Scale notes (100 TB stance):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import WS_RE, fingerprint
+from ..oracle import resolve_canonical
+from ..session import job_description
+from . import cc
 
 # Mersenne prime 2^31-1: keeps h*a + b < 2^62, inside int64 under ANSI mode
 _MERSENNE = (1 << 31) - 1
@@ -234,6 +246,31 @@ def _perm_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
             for _ in range(num_hashes)]
 
 
+def _signatures_and_sets(rows: DataFrame, id_col: str, num_hashes: int,
+                         seed: int, hash_kind: str) -> DataFrame:
+    """(id_col, __sh) rows of :func:`word_shingle_rows` -> (id_col,
+    mh_0..mh_{K-1}, __set): the K MinHash signatures and the document's
+    shingle set from ONE groupBy. The rows are distinct per document, so
+    ``collect_list`` is exactly the set :func:`word_shingles` gives
+    (element order aside). A consumer that drops ``__set`` gets a plain
+    min-aggregate back: column pruning removes the ``collect_list``."""
+    coeffs = _perm_coeffs(num_hashes, seed)
+    # materialize the base hash ONCE per shingle row — the K permutations
+    # are affine transforms of it (inlining h into each agg would make
+    # codegen evaluate the base hash K times per row)
+    sh = rows.select(
+        id_col, "__sh",
+        F.pmod(_base_hash(F.col("__sh"), hash_kind), F.lit(_MERSENNE)).alias("__h"),
+    )
+    # expr strings for the same reason as simhash_signatures: K Column
+    # chains cost ~6 py4j roundtrips each at construction
+    aggs = [
+        F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE}L))").alias(f"mh_{i}")
+        for i, (a, b) in enumerate(coeffs)
+    ]
+    return sh.groupBy(id_col).agg(*aggs, F.collect_list("__sh").alias("__set"))
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -245,22 +282,11 @@ def minhash_signatures(
 ) -> DataFrame:
     """-> (id_col, mh_0..mh_{K-1}): one explode + ONE groupBy with K min-aggs
     (map-side combine makes this a single shuffle of K longs per doc)."""
-    coeffs = _perm_coeffs(num_hashes, seed)
-    # materialize the base hash ONCE per shingle row — the K permutations
-    # are affine transforms of it (inlining h into each agg would make
-    # codegen evaluate the base hash K times per row). Shingle rows come
-    # from the mapInPandas fast path (word_shingle_rows, round 6).
-    sh = word_shingle_rows(df, text_col, id_col, shingle_n).select(
-        id_col,
-        F.pmod(_base_hash(F.col("__sh"), hash_kind), F.lit(_MERSENNE)).alias("__h"),
-    )
-    # expr strings for the same reason as simhash_signatures: K Column
-    # chains cost ~6 py4j roundtrips each at construction
-    aggs = [
-        F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE}L))").alias(f"mh_{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    # shingle rows come from the mapInPandas fast path (word_shingle_rows,
+    # round 6)
+    rows = word_shingle_rows(df, text_col, id_col, shingle_n)
+    return _signatures_and_sets(rows, id_col, num_hashes, seed,
+                                hash_kind).drop("__set")
 
 
 def minhash_lsh_candidates(
@@ -341,7 +367,9 @@ def minhash_dedup(
     mh_cols = [c for c in sigs.columns if c.startswith("mh_")]
     # reps is consumed twice (candidate generation + survivor collapse);
     # localCheckpoint cuts the lineage so the whole shingle->signature
-    # subtree runs ONCE instead of once per consumer
+    # subtree runs ONCE instead of once per consumer. Under AQE it runs
+    # the signature and group shuffles when called; eager=False defers
+    # only the final aggregate to first use
     reps = (
         sigs.groupBy(*mh_cols).agg(F.min(id_col).alias(id_col))
         .localCheckpoint(eager=False)
@@ -385,8 +413,11 @@ def ngram_jaccard_pairs(
     join as the reference)."""
     # The shingle relation feeds several consumers (hot-cap, sizes,
     # frequency ranking, both prefix sides, the verify sets). Round 6: cut
-    # the lineage with a LAZY localCheckpoint so the shingle subtree
-    # materializes ONCE — the explain at sf1.0 showed the whole subtree
+    # the lineage with a localCheckpoint so the shingle subtree
+    # materializes ONCE. Like every checkpoint below it takes
+    # eager=False, which is not lazy: under AQE it runs the shuffle stages
+    # beneath it when called and defers only its final stage to first
+    # use. The explain at sf1.0 showed the whole subtree
     # (scan -> explode -> distinct -> anti-join) planned 8× with no
     # exchange reuse (each consumer's partial-agg shapes differ), which is
     # why the query scaled 14× for 10× data (111 s driver-measured). A
@@ -581,7 +612,9 @@ def ngram_jaccard_pairs_from_candidates(
     step after LSH blocking. Shingle sets joined in as arrays, intersection
     via array ops (no explode; candidate count is small by construction).
     Only docs appearing in some candidate pair get their shingle set
-    computed (semi-join pushfilter), and only once."""
+    computed (semi-join pushfilter), and only once: the sets relation is
+    under a localCheckpoint, which under AQE runs its shuffle stages when
+    it is called."""
     cand_ids = (
         candidates.select(F.col("id_a").alias(id_col))
         .union(candidates.select(F.col("id_b").alias(id_col)))
@@ -592,9 +625,19 @@ def ngram_jaccard_pairs_from_candidates(
         .select(F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("__set"))
         .localCheckpoint(eager=False)
     )
-    out = (
-        candidates.join(sets_df.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")), "id_a")
-        .join(sets_df.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")), "id_b")
+    return _verify_pairs(candidates, sets_df, id_col, threshold)
+
+
+def _verify_pairs(candidates: DataFrame, sets_df: DataFrame, id_col: str,
+                  threshold: float) -> DataFrame:
+    """Candidate (id_a, id_b) pairs -> (id_a, id_b, jaccard) with jaccard
+    >= threshold, from each document's shingle set in (id_col, __set)."""
+    def side(s):
+        return sets_df.select(F.col(id_col).alias(f"id_{s}"),
+                              F.col("__set").alias(f"__s{s}"))
+
+    return (
+        candidates.join(side("a"), "id_a").join(side("b"), "id_b")
         .select(
             "id_a", "id_b",
             (
@@ -604,7 +647,6 @@ def ngram_jaccard_pairs_from_candidates(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    return out
 
 
 def collapse_duplicate_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -726,18 +768,30 @@ def dedup_clusters(
     Transitive-closure semantics — a chain a~b~c clusters {a,b,c} even when
     (a,c) was never a verified pair — the form large dedup pipelines keep
     (one representative per cluster, or cluster-weighted sampling), stronger
-    than minhash_dedup's pair-loser drop. Pairs come from LSH banding
-    verified by exact jaccard; components via connected_components over
-    zero-padded id strings (fixed width ⇒ lexicographic min == numeric min;
-    ids must be non-negative). Documents in no pair are their own cluster.
-    At 100 TB, run the signature-group collapse (see minhash_dedup) before
-    banding and expand cluster ids back through the groups; the gate
-    variant skips the collapse so the SQL oracle replays 1:1."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
-                              seed, hash_kind)
-    cands = minhash_lsh_candidates(sigs, id_col, bands, bucket_kind)
-    pairs = ngram_jaccard_pairs_from_candidates(df, cands, text_col, id_col,
-                                                shingle_n, threshold)
+    than minhash_dedup's pair-loser drop. Documents in no pair are their
+    own cluster; ids are unique, non-negative keys.
+
+    One pass over the corpus: each document is scanned and tokenized once,
+    and the signature groupBy that builds the K MinHashes also collects its
+    shingle set, which exact-Jaccard verification of the LSH candidates
+    reads. The trade: the shingle rows themselves move through one shuffle,
+    hash-partitioned on the id (minhash_signatures alone shuffles only
+    map-side-combined signatures), and in return the corpus is not
+    re-read, semi-joined and re-tokenized for verification. Components
+    come from _clusters_from_pairs. At 100 TB, run the signature-group
+    collapse (see minhash_dedup) before banding and expand cluster ids
+    back through the groups; the gate variant skips the collapse so the
+    SQL oracle replays 1:1."""
+    # banding reads the signatures and verification the sets, so column
+    # pruning splits the one groupBy into two aggregates; hash-partitioning
+    # the shingle rows on the id lets both run over ONE reused exchange,
+    # so the corpus is scanned and tokenized once
+    rows = word_shingle_rows(df, text_col, id_col, shingle_n).repartition(id_col)
+    sigs = _signatures_and_sets(rows, id_col, num_hashes, seed, hash_kind)
+    cands = minhash_lsh_candidates(sigs.drop("__set"), id_col, bands,
+                                   bucket_kind)
+    pairs = _verify_pairs(cands, sigs.select(id_col, "__set"), id_col,
+                          threshold)
     return _clusters_from_pairs(df, pairs, id_col)
 
 
@@ -746,32 +800,47 @@ def _clusters_from_pairs(df: DataFrame, pairs: DataFrame,
     """(id_a, id_b) verified near-dup pairs -> (id_col, cluster_id) for
     EVERY row of df (transitive closure; cluster_id = component-min id;
     pairless docs are their own cluster). Shared by the text
-    (dedup_clusters) and embedding (embedding_dedup_clusters) paths so the
-    zero-padding width invariant and the lineage cut live in one place."""
-    from .cc import connected_components
+    (dedup_clusters) and embedding (embedding_dedup_clusters) paths; its
+    jobs are described as "dedup_clusters: pairs" and
+    "dedup_clusters: components".
 
-    # connected_components consumes its edges MORE than once (size probe +
-    # driver collect on the fast path; per-round joins on the distributed
-    # path) — cut the expensive candidate/verify lineage so it executes
-    # exactly once. localCheckpoint (not persist): the per-call RDD is
-    # reaped by ContextCleaner, no CacheManager entry outlives the call.
-    pairs = pairs.localCheckpoint(eager=False)
-    # width 19 covers every non-negative int64, so lexicographic min over
-    # the fixed-width strings == numeric min; negative ids would break the
-    # width invariant silently — fail loudly per row instead
-    fmt = "d%019d"
-    guarded = lambda c: F.when(  # noqa: E731
-        c >= 0, F.format_string(fmt, c)
-    ).otherwise(F.raise_error(F.lit(
-        "clusters_from_pairs: negative doc ids are unsupported")))
-    edges = pairs.select(
-        guarded(F.col("id_a")).alias("src_iri"),
-        guarded(F.col("id_b")).alias("dst_iri"),
-    )
-    comp = connected_components(edges).select(
-        F.substring("node", 2, 19).cast("long").alias(id_col),
-        F.substring("canonical", 2, 19).cast("long").alias("cluster_id"),
-    )
+    The pairs are materialized once (an eager localCheckpoint), then ONE
+    bounded collect reads at most cc.DRIVER_EDGES + 1 of them. A pair set
+    within the bound is resolved by oracle.resolve_canonical on the driver
+    over the integer ids and joins back as a broadcast Arrow local
+    relation; a larger one runs the distributed connected_components over
+    zero-padded id strings."""
+    spark = df.sparkSession
+    neg = "clusters_from_pairs: negative doc ids are unsupported"
+    # localCheckpoint, not persist: the per-call RDD is reaped by
+    # ContextCleaner and no CacheManager entry outlives the call
+    with job_description(spark, "dedup_clusters: pairs"):
+        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
+    with job_description(spark, "dedup_clusters: components"):
+        rows = pairs.limit(cc.DRIVER_EDGES + 1).collect()
+        if len(rows) <= cc.DRIVER_EDGES:
+            if any(a < 0 or b < 0 for a, b in rows):
+                raise ValueError(neg)
+            mapping, _ = resolve_canonical([(a, b, "sameAs")
+                                            for a, b in rows])
+            comp = F.broadcast(spark.createDataFrame(pa.table({
+                id_col: pa.array(list(mapping), pa.int64()),
+                "cluster_id": pa.array(list(mapping.values()), pa.int64()),
+            })))
+        else:
+            # width 19 covers every non-negative int64, so lexicographic
+            # min over the fixed-width strings == numeric min; negative ids
+            # would break the width invariant silently — fail loudly per
+            # row instead
+            guarded = lambda c: F.when(  # noqa: E731
+                c >= 0, F.format_string("d%019d", c)
+            ).otherwise(F.raise_error(F.lit(neg)))
+            edges = pairs.select(guarded(F.col("id_a")).alias("src_iri"),
+                                 guarded(F.col("id_b")).alias("dst_iri"))
+            comp = cc.connected_components(edges, driver_threshold=0).select(
+                F.substring("node", 2, 19).cast("long").alias(id_col),
+                F.substring("canonical", 2, 19).cast("long").alias("cluster_id"),
+            )
     return (
         df.select(id_col).join(comp, id_col, "left")
         .select(id_col,

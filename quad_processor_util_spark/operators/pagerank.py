@@ -23,9 +23,11 @@ list on src (shuffle on the node id, the same key every round — on a real
 cluster bucket both sides by node to make every round's join co-located)
 plus one groupBy(dst) with map-side partial sums. The dangling mass is a
 1-row aggregate broadcast back via crossJoin — ZERO driver-side collects
-in the loop. LAZY ``localCheckpoint`` truncates lineage each round (same
-discipline as cc.py/bpe.py) so the plan never grows with the iteration
-count, without paying one blocking job per round (round 6).
+in the loop. ``localCheckpoint(eager=False)`` truncates lineage each round
+(same discipline as cc.py/bpe.py) so the plan never grows with the
+iteration count (round 6). Under AQE each checkpoint still runs the
+shuffle stages below it when it is called; eager=False only saves the
+extra job that would materialize its final stage.
 
 Fixed-iteration runs are exactly SQL-replayable by unrolling the rounds
 as CTEs — the ``entity_pagerank`` gate does precisely that (3 rounds,
@@ -56,12 +58,14 @@ def pagerank(
         raise ValueError("pagerank: iterations must be >= 0")
     if not (0.0 <= damping <= 1.0):
         raise ValueError("pagerank: damping must be in [0, 1]")
-    # LAZY localCheckpoints throughout (round 6): eager=True ran one
-    # blocking job per checkpoint — 3 fixed-latency jobs per iteration on
-    # graphs whose per-round compute is milliseconds. eager=False cuts the
-    # plan identically (each consumer references the checkpointed RDD, not
-    # the upstream query plan) and materializes each relation exactly once,
-    # on first use; the `nodes.count()` below is the only driver action
+    # localCheckpoint(eager=False) throughout (round 6): eager=True ran one
+    # more job per checkpoint to materialize its final stage — 3
+    # fixed-latency jobs per iteration on graphs whose per-round compute is
+    # milliseconds. eager=False cuts the plan identically (each consumer
+    # references the checkpointed RDD, not the upstream query plan) and
+    # materializes the final stage once, on first use. It is not lazy:
+    # under AQE the shuffle stages below each checkpoint run when it is
+    # called. The `nodes.count()` below is the only other driver action
     # before the caller's own.
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))

@@ -17,14 +17,13 @@ canonicalization joins broadcast the mapping; dedup is one shuffle on the
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.nt import QUAD_FIELDS, QUAD_SCHEMA, dedup_quads_df
 from ..oracle import Gazetteer
 from ..operators.linking import SurfaceLinker, catalog_rows
+from ..session import job_description
 from ..sources.io import write_quads_partitioned_by_predicate
 
 # Per-worker cache of the objects built from a broadcast (gazetteers and
@@ -378,20 +377,6 @@ def link_unknown_mentions(
     return quads.select(*QUAD_FIELDS).mapInArrow(_link, QUAD_SCHEMA)
 
 
-@contextmanager
-def _job_step(spark: SparkSession, step: str):
-    """Name the Spark jobs triggered inside the block after the pipeline
-    step (the UI / status store job description); the caller's description
-    is restored on exit."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"run_pipeline: {step}")
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
-
-
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -416,13 +401,13 @@ def run_pipeline(
     gaz = build_gazetteer(catalog_pdf)
     quads = extract_quads(transcripts, gaz.surface_to_iri, policy,
                           catalog=catalog_pdf if fuzzy_link else None)
-    with _job_step(spark, "canonical_mapping"):
+    with job_description(spark, "run_pipeline: canonical_mapping"):
         mapping, excluded = canonical_mapping(alias_edges)
     canon = canonicalize(quads, mapping, excluded)
     final = dedup_quads_df(canon)
     if out_path:
         # write the already-deduped frame, so the write plan does not build
         # the identity-dedup a second time
-        with _job_step(spark, "write"):
+        with job_description(spark, "run_pipeline: write"):
             write_quads_partitioned_by_predicate(final, out_path)
     return final

@@ -10,6 +10,7 @@ comparable across engines (the DuckDB oracle is UTC-naive).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -72,3 +73,17 @@ def get_spark(
                   f"has {actual} (pre-existing session reused)",
                   file=_sys.stderr)
     return spark
+
+
+@contextmanager
+def job_description(spark: SparkSession, description: str):
+    """Describe the Spark jobs triggered inside the block as `description`
+    (the UI / status store job description); the caller's description is
+    restored on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
