@@ -146,18 +146,23 @@ def parse_nt_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
 
     Comments/blank/malformed lines are skipped (skip-with-warning semantics,
     QuadReader.scala:178-179 — counts observable as input minus output).
-    Runs as mapInPandas (Arrow batches, no shuffle) and reads its source
-    once; canonical single-space lines — the overwhelming bulk of real NT
+    Runs as mapInPandas (Arrow batches) and reads its source once; a
+    too-coarse source (a single-file dump scans as one split) is first
+    re-spread across the shuffle width by _ensure_parallelism, as the
+    shingle and BPE kernels are, so it does not parse on one core.
+    Canonical single-space lines — the overwhelming bulk of real NT
     dumps — parse with one vectorized regex extract per batch, the rest
     per-row through the exact oracle parser. Semantics are identical
     either way (tests cover both routes). A surrogate or out-of-range
     \\u/\\U escape fails the job: it decodes to no valid UTF-8 string."""
+    from ..operators.dedup import _ensure_parallelism
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _parse_batch(pdf[line_col])
 
-    return lines_df.mapInPandas(_parse, QUAD_SCHEMA)
+    return _ensure_parallelism(lines_df.select(line_col)).mapInPandas(
+        _parse, QUAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -21,12 +21,14 @@ If max_iter rounds pass without a fixpoint the function RAISES — silently
 returning partially-propagated labels would hand wrong canonicals
 downstream.
 
-canonical_mapping resolves a graph of at most DRIVER_EDGES alias edges on
-the driver from ONE bounded collect and returns Arrow-built local relations
-(DataFrame.isLocal()), which plans.pipeline.canonicalize turns into its
-broadcast dimension without a Spark job; larger graphs run the loop above.
+connected_components resolves a graph of at most DRIVER_EDGES edges on
+the driver from ONE bounded collect and returns an Arrow-built local
+relation (DataFrame.isLocal()) of the edges' own key type; larger graphs
+run the loop above. canonical_mapping makes the same split from its own
+collect.
 
-Canonical = lexicographic MIN IRI of each component (deterministic).
+Canonical = MIN node of each component in the key type's order
+(deterministic).
 """
 
 from __future__ import annotations
@@ -34,10 +36,11 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType
 
-# canonical_mapping resolves alias graphs with at most this many edges on
-# the driver: the same bound as connected_components' driver_threshold
-# default.
+# graphs with at most this many edges are resolved on the driver; read at
+# call time, so tests can patch it to drive the distributed loop
 DRIVER_EDGES = 100_000
 
 
@@ -46,39 +49,48 @@ def connected_components(
     src: str = "src_iri",
     dst: str = "dst_iri",
     max_iter: int = 20,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
-    """-> DataFrame(node STRING, canonical STRING): one row per node that
-    appears in any edge; canonical is the component's min IRI (which may be
-    the node itself).
+    """-> DataFrame(node, canonical) of the edge columns' type (src and dst
+    share one): one row per node of an edge with no NULL endpoint;
+    canonical is the component's min node (which may be the node itself).
 
-    Graphs at or below `driver_threshold` edges take a driver-side
-    union-find fast path (the reference's in-memory redirect maps,
-    SolrLoader.scala:41-84 — correct engineering for a broadcast-sized
-    dimension: each iterative-join round costs ~seconds of fixed job
-    overhead that dwarfs a tiny graph). Larger graphs run the distributed
-    pointer-jumping loop; pass driver_threshold=0 to force it.
-    """
-    spark = edges.sparkSession
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    )
-    # size probe touches at most threshold+1 rows (a full e.count() would
-    # scan + shuffle the entire edge set once just to pick a strategy);
-    # the probe rows ARE the fast path's input — collecting limit(N+1)
-    # once instead of count-then-collect halves the driver-path jobs
-    # (round-5 review finding)
-    if driver_threshold:
-        probe = e.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            from ..oracle import resolve_canonical
+    One bounded collect reads at most DRIVER_EDGES + 1 edges (duplicates
+    count). Within the bound, union-find on the driver (SolrLoader.scala:
+    41-84 — one iterative-join round costs more than resolving a
+    broadcast-sized graph) returns a local relation; above it the
+    distributed pointer-jumping loop runs."""
+    e = _edge_pairs(edges, src, dst)
+    rows = e.limit(DRIVER_EDGES + 1).collect()
+    if len(rows) <= DRIVER_EDGES:
+        from ..oracle import resolve_canonical
 
-            pairs = [(r.a, r.b, "sameAs") for r in probe]
-            mapping, _ = resolve_canonical(pairs)
-            rows = sorted(mapping.items())
-            return spark.createDataFrame(rows, "node string, canonical string")
+        mapping, _ = resolve_canonical([(a, b, "sameAs") for a, b in rows])
+        return _local_components(edges.sparkSession, mapping,
+                                 e.schema["a"].dataType)
+    return _pointer_jumping(e, max_iter)
+
+
+def _edge_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) edges with no NULL endpoint."""
+    return (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .where(F.col("a").isNotNull() & F.col("b").isNotNull()))
+
+
+def _local_components(spark, mapping: dict, key_type: DataType) -> DataFrame:
+    """A driver-resolved {node: canonical} as an Arrow-built local relation
+    (node, canonical) of key_type, sorted by node: it starts no job and
+    parallelizes no RDD."""
+    at = to_arrow_type(key_type)
+    nodes = sorted(mapping)
+    return spark.createDataFrame(pa.table({
+        "node": pa.array(nodes, at),
+        "canonical": pa.array([mapping[n] for n in nodes], at),
+    }))
+
+
+def _pointer_jumping(e: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed loop over (a, b) edges with no NULL endpoint."""
+    e = e.distinct()
     # undirected closure: both directions, so min propagates either way.
     # sym is loop-invariant and consumed by every pointer-jumping round:
     # without the checkpoint each round would re-scan + re-distinct
@@ -147,27 +159,23 @@ def canonical_mapping(
     the driver (the reference's in-memory redirect maps, SolrLoader.scala:
     41-84) and both frames come back as Arrow-built local relations, so
     they start no job and parallelize no RDD. A larger graph runs the
-    distributed connected_components loop, and `excluded` stays lazy."""
+    distributed pointer-jumping loop, and `excluded` stays lazy."""
     rows = (alias_edges.select(src, dst, kind)
             .limit(DRIVER_EDGES + 1).collect())
     if len(rows) <= DRIVER_EDGES:
         from ..oracle import resolve_canonical
 
         # NULL edge_kind counts as an equivalence; an equivalence with a
-        # NULL endpoint is never unioned (connected_components drops it);
+        # NULL endpoint is never unioned (_edge_pairs drops it);
         # a disambiguation source is excluded even when it is NULL, as in
         # the distributed path's distinct
         mapping, excluded = resolve_canonical(
             [(s, d, k) for s, d, k in rows
              if k == "disambiguation" or (s is not None and d is not None)])
         spark = alias_edges.sparkSession
-        nodes = sorted(mapping)
         return (
-            spark.createDataFrame(pa.table({
-                "node": pa.array(nodes, pa.string()),
-                "canonical": pa.array([mapping[n] for n in nodes],
-                                      pa.string()),
-            })),
+            _local_components(spark, mapping,
+                              alias_edges.schema[src].dataType),
             spark.createDataFrame(pa.table({
                 "iri": pa.array(list(excluded), pa.string())})),
         )
@@ -181,7 +189,6 @@ def canonical_mapping(
         .select(F.col(src).alias("iri"))
         .distinct()
     )
-    # the collect above already showed the graph is over the threshold
-    mapping = connected_components(equiv, src, dst, max_iter,
-                                   driver_threshold=0)
+    # the collect above already showed the graph is over the bound
+    mapping = _pointer_jumping(_edge_pairs(equiv, src, dst), max_iter)
     return mapping, excluded

@@ -23,12 +23,10 @@ Scale notes (100 TB stance):
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import WS_RE, fingerprint
-from ..oracle import resolve_canonical
 from ..session import job_description
 from . import cc
 
@@ -769,7 +767,7 @@ def dedup_clusters(
     (a,c) was never a verified pair — the form large dedup pipelines keep
     (one representative per cluster, or cluster-weighted sampling), stronger
     than minhash_dedup's pair-loser drop. Documents in no pair are their
-    own cluster; ids are unique, non-negative keys.
+    own cluster; ids are unique integer keys.
 
     One pass over the corpus: each document is scanned and tokenized once,
     and the signature groupBy that builds the K MinHashes also collects its
@@ -804,45 +802,24 @@ def _clusters_from_pairs(df: DataFrame, pairs: DataFrame,
     jobs are described as "dedup_clusters: pairs" and
     "dedup_clusters: components".
 
-    The pairs are materialized once (an eager localCheckpoint), then ONE
-    bounded collect reads at most cc.DRIVER_EDGES + 1 of them. A pair set
-    within the bound is resolved by oracle.resolve_canonical on the driver
-    over the integer ids and joins back as a broadcast Arrow local
-    relation; a larger one runs the distributed connected_components over
-    zero-padded id strings."""
+    The pairs are materialized once (an eager localCheckpoint), then
+    cc.connected_components resolves them over the ids' own type: a pair
+    set within cc.DRIVER_EDGES comes back as a local relation, which the
+    final join broadcasts; a larger one runs the distributed loop."""
     spark = df.sparkSession
-    neg = "clusters_from_pairs: negative doc ids are unsupported"
     # localCheckpoint, not persist: the per-call RDD is reaped by
     # ContextCleaner and no CacheManager entry outlives the call
     with job_description(spark, "dedup_clusters: pairs"):
         pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     with job_description(spark, "dedup_clusters: components"):
-        rows = pairs.limit(cc.DRIVER_EDGES + 1).collect()
-        if len(rows) <= cc.DRIVER_EDGES:
-            if any(a < 0 or b < 0 for a, b in rows):
-                raise ValueError(neg)
-            mapping, _ = resolve_canonical([(a, b, "sameAs")
-                                            for a, b in rows])
-            comp = F.broadcast(spark.createDataFrame(pa.table({
-                id_col: pa.array(list(mapping), pa.int64()),
-                "cluster_id": pa.array(list(mapping.values()), pa.int64()),
-            })))
-        else:
-            # width 19 covers every non-negative int64, so lexicographic
-            # min over the fixed-width strings == numeric min; negative ids
-            # would break the width invariant silently — fail loudly per
-            # row instead
-            guarded = lambda c: F.when(  # noqa: E731
-                c >= 0, F.format_string("d%019d", c)
-            ).otherwise(F.raise_error(F.lit(neg)))
-            edges = pairs.select(guarded(F.col("id_a")).alias("src_iri"),
-                                 guarded(F.col("id_b")).alias("dst_iri"))
-            comp = cc.connected_components(edges, driver_threshold=0).select(
-                F.substring("node", 2, 19).cast("long").alias(id_col),
-                F.substring("canonical", 2, 19).cast("long").alias("cluster_id"),
-            )
+        comp = cc.connected_components(pairs, "id_a", "id_b")
+    if comp.isLocal():
+        comp = F.broadcast(comp)
     return (
-        df.select(id_col).join(comp, id_col, "left")
+        df.select(id_col)
+        .join(comp.select(F.col("node").alias(id_col),
+                          F.col("canonical").cast("long").alias("cluster_id")),
+              id_col, "left")
         .select(id_col,
                 F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
     )
@@ -860,8 +837,8 @@ def embedding_dedup_clusters(
 ) -> DataFrame:
     """-> (id_col, cluster_id): every vector labeled with its embedding
     near-dup CLUSTER — the semantic-dedup counterpart of the textual
-    dedup_clusters (pairs from hyperplane-bucketed cosine, components over
-    the same zero-padded-id CC scaffold). Completes the dedup matrix:
+    dedup_clusters (pairs from hyperplane-bucketed cosine, components from
+    the same _clusters_from_pairs). Completes the dedup matrix:
     {text, embedding} × {pair drop, transitive cluster}. Cost profile =
     embedding_cosine_dedup_pairs (bucketed self-join, never all-pairs) +
     one CC over the verified pairs (tiny vs the corpus)."""

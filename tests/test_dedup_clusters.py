@@ -66,8 +66,9 @@ def _text(draw):
 
 @st.composite
 def _corpus(draw):
-    """Documents with unique non-negative ids; a third of them repeat or
-    extend an earlier text, so near-duplicates and identical texts occur."""
+    """Documents with unique ids, negatives included; a third of them repeat
+    or extend an earlier text, so near-duplicates and identical texts
+    occur."""
     texts = []
     for _ in range(draw(st.integers(1, 30))):
         if texts and draw(st.integers(0, 2)) == 0:
@@ -76,8 +77,8 @@ def _corpus(draw):
             texts.append(base + tail if base is not None else None)
         else:
             texts.append(draw(_text()))
-    ids = draw(st.lists(st.integers(0, 1 << 40), min_size=len(texts),
-                        max_size=len(texts), unique=True))
+    ids = draw(st.lists(st.integers(-(1 << 40), 1 << 40),
+                        min_size=len(texts), max_size=len(texts), unique=True))
     return list(zip(ids, texts))
 
 
@@ -181,15 +182,20 @@ def test_embedding_dedup_clusters_routes_agree(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("bound", [cc.DRIVER_EDGES, 0])
-def test_cluster_routes_reject_negative_ids(spark, monkeypatch, bound):
+def test_cluster_routes_take_the_numeric_min_of_negative_ids(
+        spark, monkeypatch, bound):
+    """Negative ids cluster like any others: on both routes a component's
+    cluster_id is its numeric minimum id."""
     monkeypatch.setattr(cc, "DRIVER_EDGES", bound)
-    docs = _chain_docs(spark, [11, 12, 13, 21, 22, 23, 4, -30])
-    with pytest.raises(Exception, match="negative doc ids are unsupported"):
-        dedup_clusters(docs, **_CHAIN_KW)
-    vecs = _chain_vectors(spark, [0, 1, 2, 10, 11, -12, 7])
-    with pytest.raises(Exception, match="negative doc ids are unsupported"):
-        embedding_dedup_clusters(vecs, dim=6, threshold=0.95, planes=2,
-                                 tables=8)
+    docs = _chain_docs(spark, [11, -12, 13, 21, 22, -23, 4, -30])
+    assert _labels(dedup_clusters(docs, **_CHAIN_KW)) == {
+        11: -30, -12: -30, 13: -30, -30: -30, 21: -23, 22: -23, -23: -23,
+        4: 4}
+    vecs = _chain_vectors(spark, [5, -1, 2, 10, -11, 12, -7])
+    got = embedding_dedup_clusters(vecs, dim=6, threshold=0.95, planes=2,
+                                   tables=8)
+    assert _labels(got, "vec_id") == {5: -1, -1: -1, 2: -1, 10: -11,
+                                      -11: -11, 12: -11, -7: -7}
 
 
 # ---------------------------------------------------------------------------

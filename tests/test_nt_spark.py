@@ -116,3 +116,23 @@ def test_dedup_five_field_identity(spark):
     })
     df = spark.createDataFrame(pdf)
     assert dedup_quads_df(df).count() == 2
+
+
+def test_single_file_source_parses_in_parallel(spark, spark_jobs, tmp_path):
+    """A one-file parquet source scans as one split, yet the parse runs as
+    more than one task (read from the status store), with the oracle's
+    output."""
+    lines = [f'<http://e.org/s{i}> <http://e.org/p> "v{i}" .'
+             for i in range(2000)]
+    path = str(tmp_path / "lines.parquet")
+    pd.DataFrame({"line": lines}).to_parquet(path, index=False)
+    src = spark.read.parquet(path)
+    assert src.rdd.getNumPartitions() == 1
+    cols = ["subject", "predicate", "obj", "datatype", "language", "graph"]
+    rows, jobs, _ = spark_jobs(
+        lambda: parse_nt_lines(src).select(*cols).collect())
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in jobs
+              for s in tracker.getJobInfo(j).stageIds]
+    assert max(s.numTasks for s in stages if s) > 1, stages
+    assert sorted(tuple(r) for r in rows) == _oracle_parse(lines)

@@ -1,11 +1,16 @@
 """Operator tests: joins (salted == plain), connected components vs
 union-find oracle, grouping/star-view, sortedness assertion."""
 
+from unittest import mock
+
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from quad_processor_util_spark.datagen import build_alias_edges
+from quad_processor_util_spark.operators import cc
 from quad_processor_util_spark.operators.cc import canonical_mapping, connected_components
 from quad_processor_util_spark.operators.grouping import (
     assert_sorted,
@@ -89,9 +94,7 @@ class TestConnectedComponents:
                                                 tmp_path, monkeypatch):
         """Above the driver bound canonical_mapping runs the distributed CC
         loop with the same result, and the bounded collect is its only
-        probe of the edges (connected_components does not probe again)."""
-        from quad_processor_util_spark.operators import cc
-
+        probe of the edges (the distributed loop does not probe again)."""
         pdf, edges = self._parquet_edges(spark, tmp_path)
         monkeypatch.setattr(cc, "DRIVER_EDGES", 50)
         (mapping, excluded), _, plans = spark_jobs(
@@ -106,9 +109,59 @@ class TestConnectedComponents:
         pdf = pd.DataFrame({
             "src_iri": ["a", "b", "c"], "dst_iri": ["b", "c", "a"],
         })
-        cc = connected_components(spark.createDataFrame(pdf))
-        labels = {r.node: r.canonical for r in cc.collect()}
+        out = connected_components(spark.createDataFrame(pdf))
+        labels = {r.node: r.canonical for r in out.collect()}
         assert set(labels.values()) == {"a"}
+
+    def test_small_parquet_graph_is_one_collect_and_local(self, spark,
+                                                          spark_jobs,
+                                                          tmp_path):
+        """A driver-sized graph read from parquet costs connected_components
+        one job, a bounded collect with no shuffle or aggregate, and comes
+        back as a local relation holding the union-find oracle's mapping
+        (edges with a NULL endpoint dropped, edge_kind ignored)."""
+        pdf, edges = self._parquet_edges(spark, tmp_path)
+        out, jobs, plans = spark_jobs(lambda: connected_components(edges))
+        assert out.isLocal()
+        assert len(jobs) == 1 and len(plans) == 1, plans
+        assert "Exchange" not in plans[0][1], plans
+        assert "HashAggregate" not in plans[0][1], plans
+        exp, _ = resolve_canonical([
+            (s, d, "sameAs") for s, d in zip(pdf["src_iri"], pdf["dst_iri"])
+            if s is not None and d is not None])
+        assert {r.node: r.canonical for r in out.collect()} == exp
+
+
+_KEYS = {
+    "string": st.text(alphabet="abzAZé_ ß", max_size=3),
+    "bigint": st.integers(-(1 << 63), (1 << 63) - 1),
+}
+
+
+@pytest.mark.parametrize("key_type", sorted(_KEYS))
+@settings(max_examples=5, deadline=None)
+@given(data=st.data())
+def test_connected_components_matches_union_find(spark, key_type, data):
+    """On random graphs (duplicate edges, self loops, NULL endpoints,
+    negative ids) both routes give the union-find oracle's components, in
+    the edge columns' own type."""
+    pool = data.draw(st.lists(_KEYS[key_type], min_size=1, max_size=12,
+                              unique=True))
+    node = st.one_of(st.sampled_from(pool), st.none())
+    rows = data.draw(st.lists(st.tuples(node, node), max_size=25))
+    edges = spark.createDataFrame(
+        rows, f"src_iri {key_type}, dst_iri {key_type}")
+    pairs = [(a, b, "sameAs") for a, b in rows
+             if a is not None and b is not None]
+    exp, _ = resolve_canonical(pairs)
+    for bound in (cc.DRIVER_EDGES, 0):
+        with mock.patch.object(cc, "DRIVER_EDGES", bound):
+            out = connected_components(edges)
+        assert out.isLocal() == (len(pairs) <= bound)
+        assert [(f.name, f.dataType) for f in out.schema] \
+            == [("node", edges.schema[0].dataType),
+                ("canonical", edges.schema[0].dataType)]
+        assert {r.node: r.canonical for r in out.collect()} == exp, bound
 
 
 class TestGrouping:

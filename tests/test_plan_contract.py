@@ -57,7 +57,7 @@ CHECKS = {
     "repetition_metrics": ["codegen id", "ReadSchema"],
     "chunk_docs": ["Generate", "ReadSchema"],
     # the pair pipeline executes EAGERLY during query build (the CC
-    # driver-threshold fast path collects the tiny edge set), so the
+    # driver route collects the tiny edge set), so the
     # visible plan is docs ⟕ local component table — check that shape
     "dedup_clusters": ["SortMergeJoin LeftOuter|BroadcastHashJoin", "Scan parquet"],
     # distinct surfaces scored by the SurfaceLinker in one Arrow stage

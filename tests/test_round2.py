@@ -8,6 +8,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from quad_processor_util_spark.operators import cc
 from quad_processor_util_spark.operators.cc import connected_components
 from quad_processor_util_spark.operators.dedup import ngram_jaccard_pairs
 from quad_processor_util_spark.operators.joins import salted_join
@@ -25,37 +26,36 @@ def _chain_edges(spark, n):
 
 
 class TestConnectedComponents:
-    def test_deep_chain_converges_in_log_rounds(self, spark):
+    def test_deep_chain_converges_in_log_rounds(self, spark, monkeypatch):
         """A 100-hop redirect chain must resolve with the default max_iter
         on the DISTRIBUTED path (pointer jumping: ~log2(100) ≈ 7 rounds,
         not 100)."""
-        out = connected_components(
-            _chain_edges(spark, 100), driver_threshold=0
-        ).collect()
+        monkeypatch.setattr(cc, "DRIVER_EDGES", 0)
+        out = connected_components(_chain_edges(spark, 100)).collect()
         assert len(out) == 101
         assert all(r.canonical == "n0000" for r in out)
 
-    def test_raises_instead_of_wrong_labels(self, spark):
+    def test_raises_instead_of_wrong_labels(self, spark, monkeypatch):
         """Exhausting max_iter must raise, never return partial labels."""
+        monkeypatch.setattr(cc, "DRIVER_EDGES", 0)
         with pytest.raises(RuntimeError, match="no fixpoint"):
-            connected_components(
-                _chain_edges(spark, 12), max_iter=1, driver_threshold=0
-            )
+            connected_components(_chain_edges(spark, 12), max_iter=1)
 
-    def test_cycle_and_tie_break(self, spark):
+    def test_cycle_and_tie_break(self, spark, monkeypatch):
         edges = spark.createDataFrame(
             [("b", "c"), ("c", "a"), ("a", "b"), ("x", "y")],
             "src_iri string, dst_iri string",
         )
         exp = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-        for thr in (0, 100_000):  # distributed and driver fast path agree
+        for bound in (0, 100_000):  # distributed and driver route agree
+            monkeypatch.setattr(cc, "DRIVER_EDGES", bound)
             got = {
                 r.node: r.canonical
-                for r in connected_components(edges, driver_threshold=thr).collect()
+                for r in connected_components(edges).collect()
             }
-            assert got == exp, f"driver_threshold={thr}"
+            assert got == exp, f"DRIVER_EDGES={bound}"
 
-    def test_driver_and_distributed_paths_agree(self, spark):
+    def test_driver_and_distributed_paths_agree(self, spark, monkeypatch):
         import random
 
         rnd = random.Random(11)
@@ -68,9 +68,10 @@ class TestConnectedComponents:
             r.node: r.canonical
             for r in connected_components(edges).collect()
         }
+        monkeypatch.setattr(cc, "DRIVER_EDGES", 0)
         dist = {
             r.node: r.canonical
-            for r in connected_components(edges, driver_threshold=0).collect()
+            for r in connected_components(edges).collect()
         }
         assert fast == dist
 
