@@ -1138,16 +1138,17 @@ def _q_pipeline_e2e(spark, sf_dir):
 
 def _q_pipeline_full(spark, sf_dir):
     """The complete 4-stage composition the reference's solr-loader runs
-    (SolrLoader.scala:96-244): extract (with unknown-mention placeholders)
-    -> fuzzy entity linking -> CC canonicalize + exclusion -> distinct.
-    The transcripts carry a deterministic unknown surface ('Hoppr Labs', a
-    typo of a catalog org) in every turn; linking resolves it by char-3-gram
-    Jaccard x weight scoring over the catalog — and the oracle REPLAYS that
-    scoring in SQL to derive the linked entity rather than stating it."""
+    (SolrLoader.scala:96-244): extract with fuzzy entity linking (the
+    production route, extract_quads(catalog=...): one mapInArrow) -> CC
+    canonicalize + exclusion -> distinct. The transcripts carry a
+    deterministic unknown surface ('Hoppr Labs', a typo of a catalog org)
+    in every turn; linking resolves it by char-3-gram Jaccard x weight
+    scoring over the catalog — and the oracle REPLAYS that scoring in SQL
+    to derive the linked entity rather than stating it."""
+    import pandas as pd
+
     from quad_processor_util_spark.operators.cc import canonical_mapping
-    from quad_processor_util_spark.plans.pipeline import (
-        canonicalize, link_unknown_mentions,
-    )
+    from quad_processor_util_spark.plans.pipeline import canonicalize
 
     ev = _t(spark, sf_dir, "events")
     people = F.array(*[F.lit(p) for p in _PEOPLE])
@@ -1164,14 +1165,13 @@ def _q_pipeline_full(spark, sf_dir):
         F.lit(None).cast("string").alias("tool"),
         F.col("ts"),
     )
-    quads = extract_quads(tr, _GAZ, emit_unknown=True, assume_bucketed=True)
-    catalog = spark.createDataFrame(
+    catalog = pd.DataFrame(
         [(n, _GAZ[n], 1.0) for n in _PEOPLE + _ORGS],
-        "surface_form string, entity_iri string, form_weight double",
+        columns=["surface_form", "entity_iri", "form_weight"],
     )
-    linked = link_unknown_mentions(quads, catalog)
+    quads = extract_quads(tr, _GAZ, assume_bucketed=True, catalog=catalog)
     mapping, excluded = canonical_mapping(_e2e_alias_edges(spark))
-    canon = canonicalize(linked, mapping, excluded)
+    canon = canonicalize(quads, mapping, excluded)
     return canon.select("subject", "predicate", "obj", "graph").distinct()
 
 

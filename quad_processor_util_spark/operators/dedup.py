@@ -451,10 +451,9 @@ def ngram_jaccard_pairs(
     # identical; (2) candidates are pruned with the exact PPJoin
     # size + positional bounds (provably no false negatives — see
     # inline notes; verified output-identical by the oracle gate and
-    # tests); (3) jaccard = inter / (|A| + |B| - inter) with the
-    # intersection computed on int arrays, so no array_union and no
-    # string arrays anywhere. The vocab-wide rank window is a single
-    # sequential pass over the DISTINCT-shingle relation (Heaps-law
+    # tests); (3) _verify_pairs computes the jaccard on the int-code
+    # sets, so no string arrays anywhere. The vocab-wide rank window is
+    # a single sequential pass over the DISTINCT-shingle relation (Heaps-law
     # sublinear; the production max_shingle_df cap bounds it further) —
     # at a truly enormous vocab assign codes with a range-partitioned
     # two-pass rank (operators/packing.py pattern) instead.
@@ -574,28 +573,11 @@ def ngram_jaccard_pairs(
                          F.col("__szb") - F.col("__lpb"))
                >= minov_g)
         )
-        .select("id_a", "id_b", "__sza", "__szb")
+        .select("id_a", "id_b")
     )
     sets_df = shc.groupBy(id_col).agg(
         F.collect_list("__code").alias("__set"))
-    out = (
-        cands.join(
-            sets_df.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")),
-            "id_a")
-        .join(
-            sets_df.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")),
-            "id_b")
-        .select(
-            "id_a", "id_b",
-            (
-                F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                / (F.col("__sza") + F.col("__szb")
-                   - F.size(F.array_intersect("__sa", "__sb")))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out
+    return _verify_pairs(cands, sets_df, id_col, threshold)
 
 
 def ngram_jaccard_pairs_from_candidates(
@@ -629,19 +611,22 @@ def ngram_jaccard_pairs_from_candidates(
 def _verify_pairs(candidates: DataFrame, sets_df: DataFrame, id_col: str,
                   threshold: float) -> DataFrame:
     """Candidate (id_a, id_b) pairs -> (id_a, id_b, jaccard) with jaccard
-    >= threshold, from each document's shingle set in (id_col, __set)."""
+    >= threshold, from each document's shingle set in (id_col, __set).
+    The sets hold distinct elements, so |A∪B| = |A| + |B| − |A∩B| and one
+    array_intersect gives the jaccard."""
     def side(s):
         return sets_df.select(F.col(id_col).alias(f"id_{s}"),
                               F.col("__set").alias(f"__s{s}"))
 
     return (
         candidates.join(side("a"), "id_a").join(side("b"), "id_b")
+        .select("id_a", "id_b", F.size("__sa").alias("__na"),
+                F.size("__sb").alias("__nb"),
+                F.size(F.array_intersect("__sa", "__sb")).alias("__i"))
         .select(
             "id_a", "id_b",
-            (
-                F.size(F.array_intersect("__sa", "__sb"))
-                / F.size(F.array_union("__sa", "__sb"))
-            ).alias("jaccard"),
+            (F.col("__i") / (F.col("__na") + F.col("__nb") - F.col("__i")))
+            .alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )

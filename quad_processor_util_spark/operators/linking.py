@@ -9,10 +9,13 @@ analog: score ∝ sim × weight, SolrLoader.scala:153-154).
 
 :class:`SurfaceLinker` is Spark-free. The catalog is a broadcast-sized
 dimension, so each Python worker builds the index once (cached by content
-key, plans/pipeline._get_linker) and the fact side never joins against it:
-the extraction kernel resolves unknown surfaces in place
-(plans/pipeline.extract_quads(catalog=...)), and :func:`link_surface_forms`
-scores the distinct surfaces of a DataFrame in one mapInArrow.
+key, plans/pipeline._get_linker) and the fact side never joins against it.
+Extracted quads are linked by plans/extract_vec.link_placeholder_batch,
+which rewrites each batch's unknown-mention placeholders inside the
+extraction mapInArrow (plans/pipeline.extract_quads(catalog=...)) or over a
+placeholder quad stream (plans/pipeline.link_unknown_mentions);
+:func:`link_surface_forms` scores the distinct surfaces of a DataFrame in
+one mapInArrow.
 """
 
 from __future__ import annotations

@@ -18,14 +18,18 @@ work:
 Semantics are EXACTLY oracle.Gazetteer.find_all + apply_overlap_policy +
 extract_triples_from_text + find_unknown_mentions per row, in the same
 per-row quad order (relations by adjacent pair, then per mention
-population/label, then unknown-mention placeholders — or, given an
-operators.linking.SurfaceLinker, the linked ex:mentions quads in their
-place — then the tool quad) — verified structurally by
-tests/test_extract_vec.py against the per-row oracle
-:func:`_extract_batch_rows`. :func:`link_placeholder_batch` applies the
-same linker to a quad stream that already holds placeholders. Reference
-semantics: solr/SolrHandler.java:367-512 (tagger + policies);
-QuadMapper.scala:104-128 (sorted-group map).
+population/label, then unknown-mention placeholders, then the tool quad) —
+verified structurally by tests/test_extract_vec.py against the per-row
+oracle :func:`_extract_batch_rows`.
+
+:func:`link_placeholder_batch` is the one place an
+operators.linking.SurfaceLinker links extracted quads: it rewrites the
+placeholders of a quad batch to ex:mentions quads in their place, or drops
+them.
+The extraction closure composes the two in one mapInArrow
+(plans/pipeline.make_extract_fn). Reference semantics:
+solr/SolrHandler.java:367-512 (tagger + policies); QuadMapper.scala:104-128
+(sorted-group map); SolrLoader.scala:96-244 (linking).
 
 Pure pyarrow/numpy/pandas + oracle helpers — no Spark imports (runs inside
 executors' mapInArrow closures and inside pytest alike).
@@ -128,15 +132,13 @@ def _text_templates(
     texts: list[str],
     policy: str,
     emit_unknown: bool,
-    linker=None,
 ):
     """Per-text quad templates over a list of (distinct) texts.
 
     Returns (t_tid, S, P, O, D, L, is_turn): parallel arrays of template
     quads sorted by (tid, stage, seq) — i.e. each text's quads in the exact
-    per-row oracle emission order. `is_turn` marks unknown-mention quads
-    (placeholders, or with a linker the linked ex:mentions quads) whose
-    subject is the row's turn IRI (filled in per row by
+    per-row oracle emission order. `is_turn` marks the unknown-mention
+    placeholders, whose subject is the row's turn IRI (filled in per row by
     extract_batch_arrow); their S slot holds None."""
     n = len(texts)
 
@@ -267,8 +269,8 @@ def _text_templates(
                 emit(r, 2, 2 * mi + 1, m_iri[mi], EX + "label",
                      nt_unescape(lm.group(1)), RDF_LANGSTRING, lm.group(2))
 
-    # ---- unknown mentions: placeholders, or linked in place ----------------
-    if emit_unknown or linker is not None:
+    # ---- unknown mentions: placeholders -----------------------------------
+    if emit_unknown:
         # per-row running max of mention ends (O(1) interval-overlap tests)
         if nm:
             row_first = np.searchsorted(m_row, np.arange(n), side="left")
@@ -297,15 +299,8 @@ def _text_templates(
             seen.add((r, surface))
             # subject = the row's turn IRI — row-dependent, filled per row
             # by extract_batch_arrow (is_turn marks the slot)
-            if linker is None:
-                emit(r, 3, seq, None, _SURF_PRED, surface, XSD_STRING, None,
-                     is_turn=True)
-            else:
-                pick = linker.best(surface)
-                if pick is None:
-                    continue
-                emit(r, 3, seq, None, _MENTIONS_PRED, pick[0], None, None,
-                     is_turn=True)
+            emit(r, 3, seq, None, _SURF_PRED, surface, XSD_STRING, None,
+                 is_turn=True)
             seq += 1
 
     # ---- flatten in per-text oracle order -----------------------------------
@@ -339,7 +334,7 @@ def _as_string(rb):
 
 
 def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGHT",
-                        emit_unknown: bool = False, linker=None):
+                        emit_unknown: bool = False):
     """One Arrow RecordBatch of transcripts -> Arrow RecordBatch of quads.
 
     The one vectorized extraction path. Extraction runs once per DISTINCT
@@ -351,9 +346,10 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     the per-row oracle :func:`_extract_batch_rows`
     (tests/test_extract_vec.py parity suite).
 
-    With a linker (operators.linking.SurfaceLinker) each unknown mention
-    that links becomes a (turn IRI, ex:mentions, entity IRI) quad in the
-    placeholder's place; unknown mentions that do not link are dropped.
+    With emit_unknown, each capitalized run not covered by a kept mention
+    becomes a (turn IRI, ex:mentionSurface, surface) placeholder quad;
+    :func:`link_placeholder_batch` links or drops them. Returns None for a
+    batch that yields no quads.
 
     String contract: ``role``, ``text`` and ``tool`` arrive string-typed —
     plans/pipeline.extract_quads casts them at the Spark boundary."""
@@ -373,7 +369,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
         # integer_object_nulls: a NULL turn_idx must not turn the column
         # into floats ('3.0' instead of the vectorized path's '3')
         out = _extract_batch_rows(rb.to_pandas(integer_object_nulls=True),
-                                  gaz, policy, emit_unknown, linker)
+                                  gaz, policy, emit_unknown)
         if not len(out):
             return None
         return pa.RecordBatch.from_pandas(
@@ -393,7 +389,7 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
         tids = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     t_tid, S, P, O, D, L, is_turn = _text_templates(
         gaz, [t if t is not None else "" for t in utexts], policy,
-        emit_unknown, linker)
+        emit_unknown)
     m = len(utexts)
 
     # fill_null("None") = str() parity with the per-row oracle
@@ -480,12 +476,10 @@ def _extract_batch_rows(
     gaz: Gazetteer,
     policy: str,
     emit_unknown: bool,
-    linker=None,
 ) -> pd.DataFrame:
     """The per-row oracle: exact reference semantics, one row at a time.
     Also extract_batch_arrow's fallback for batches whose texts contain the
-    \\x00 separator. With a linker, unknown mentions are linked in place
-    (see extract_batch_arrow)."""
+    \\x00 separator."""
     cols: dict[str, list] = {f: [] for f in QUAD_FIELDS}
     app = [cols[f].append for f in QUAD_FIELDS]
     for conv_id, turn_idx, role, text, tool in zip(
@@ -507,18 +501,11 @@ def _extract_batch_rows(
             app[0](q.subject); app[1](q.predicate); app[2](q.obj)
             app[3](q.datatype); app[4](q.language); app[5](q.graph)
             app[6](None)
-        if emit_unknown or linker is not None:
+        if emit_unknown:
             turn_iri = f"{graph}/turn/{turn_idx}"
             for surface in find_unknown_mentions(text or "", ms):
-                if linker is None:
-                    p, o, d = _SURF_PRED, surface, XSD_STRING
-                else:
-                    pick = linker.best(surface)
-                    if pick is None:
-                        continue
-                    p, o, d = _MENTIONS_PRED, pick[0], None
-                app[0](turn_iri); app[1](p); app[2](o)
-                app[3](d); app[4](None); app[5](graph); app[6](None)
+                app[0](turn_iri); app[1](_SURF_PRED); app[2](surface)
+                app[3](XSD_STRING); app[4](None); app[5](graph); app[6](None)
         if role == "tool" and isinstance(tool, str) and tool:
             app[0](f"{graph}/turn/{turn_idx}"); app[1](_TOOL_PRED)
             app[2](tool); app[3](XSD_STRING); app[4](None); app[5](graph)
@@ -530,7 +517,8 @@ def link_placeholder_batch(rb, linker):
     """One Arrow RecordBatch of quads -> the same rows with every
     ex:mentionSurface placeholder rewritten to (turn IRI, ex:mentions,
     linker's entity IRI, NULL, NULL) or dropped when it does not link; all
-    other rows pass through in order. Each distinct surface is scored once
+    other rows pass through in order; a batch without placeholders comes
+    back as it came. Each distinct surface is scored once per batch
     (``pc.dictionary_encode``)."""
     import pyarrow as pa
     import pyarrow.compute as pc

@@ -10,7 +10,8 @@ connected components + broadcast joins; the predicate splitter
 Hot-path rules: extraction is mapInArrow (Arrow batches, no per-row Python
 UDF calls, no extra shuffle beyond the one explicit conv_id repartition);
 linking runs inside that same mapInArrow (the entity catalog is a broadcast
-dimension, each unknown surface one index lookup — no persist, no join);
+dimension, each distinct unknown surface of a batch one index lookup — no
+persist, no join);
 canonicalization joins broadcast the mapping; dedup is one shuffle on the
 5-field identity.
 """
@@ -170,11 +171,12 @@ def extract_quads(
     guarantees (SURVEY.md §4, explicit conv_id bucketing).
 
     With catalog (a pandas entity catalog: entity_iri, surface_form,
-    form_weight) unknown mentions are linked inside the kernel: each
-    capitalized run not covered by a gazetteer mention becomes
-    (turn IRI, ex:mentions, best entity IRI) when operators.linking's
-    SurfaceLinker links it, and is dropped otherwise. The catalog ships
-    next to the gazetteer in the content-keyed broadcast cache.
+    form_weight) unknown mentions are linked inside the same mapInArrow:
+    the kernel emits each capitalized run not covered by a gazetteer
+    mention as a placeholder, and extract_vec.link_placeholder_batch
+    rewrites it to (turn IRI, ex:mentions, best entity IRI) when
+    operators.linking's SurfaceLinker links it, or drops it. The catalog
+    ships next to the gazetteer in the content-keyed broadcast cache.
 
     The input must have the columns conv_id, turn_idx, role, text and tool
     (ValueError on the driver otherwise). role, text and tool are cast to
@@ -218,8 +220,9 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
     and streaming.ingest.streaming_extract). With emit_unknown, capitalized
     runs not covered by gazetteer mentions are emitted as
     (turn IRI, ex:mentionSurface, surface) placeholder quads for a later
-    link_unknown_mentions; with linker_bc (broadcast_catalog) they are
-    linked in place instead.
+    link_unknown_mentions. With linker_bc (broadcast_catalog) each batch's
+    placeholders are linked by extract_vec.link_placeholder_batch before
+    it is yielded; empty batches are not yielded.
 
     The closure is BATCH-vectorized (plans/extract_vec.py): one gazetteer
     regex scan per DISTINCT text in the Arrow batch over a joined
@@ -229,7 +232,7 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
     become Python objects; per-row expansion is C-speed Arrow takes —
     semantics verified identical to the per-row oracle in
     tests/test_extract_vec.py."""
-    from .extract_vec import extract_batch_arrow
+    from .extract_vec import extract_batch_arrow, link_placeholder_batch
 
     # fail FAST on the driver: a typo'd policy must not surface as a task
     # failure hours into a run whose early batches had no mentions — and
@@ -238,12 +241,16 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
     if policy not in ("ALL", "NO_SUB", "LONGEST_DOMINANT_RIGHT"):
         raise ValueError(f"unknown overlap policy: {policy!r}")
 
+    emit = emit_unknown or linker_bc is not None
+
     def _extract(batches):
         gaz = _get_gazetteer(bc)
         linker = None if linker_bc is None else _get_linker(linker_bc)
         for rb in batches:
-            out = extract_batch_arrow(rb, gaz, policy, emit_unknown, linker)
-            if out is not None:
+            out = extract_batch_arrow(rb, gaz, policy, emit)
+            if out is not None and linker is not None:
+                out = link_placeholder_batch(out, linker)
+            if out is not None and out.num_rows:
                 yield out
 
     return _extract
@@ -356,8 +363,8 @@ def link_unknown_mentions(
     broadcast (ValueError there for a missing column or a NULL
     entity_iri/form_weight; operators.linking.catalog_rows says which of
     the two can cost the collect job). run_pipeline links inside
-    extraction instead (extract_quads(catalog=...)); this is the same
-    scorer for a quad stream that already holds placeholders.
+    extraction instead (extract_quads(catalog=...)), through the same
+    extract_vec.link_placeholder_batch.
 
     `cache_registry` is kept for callers that still pass it; nothing is
     persisted, so it is always left empty."""

@@ -33,11 +33,10 @@ def streaming_extract(
     stream: DataFrame,
     surface_to_iri: dict[str, str],
     policy: str = "LONGEST_DOMINANT_RIGHT",
-    emit_unknown: bool = False,
 ) -> DataFrame:
     """Extraction over the stream — same Arrow-batch closure as batch
-    (mapInArrow since round 6), with the same policy/emit_unknown options
-    forwarded (batch↔stream parity is the contract). Stable
+    (mapInArrow since round 6), with the same overlap policy forwarded
+    (batch↔stream parity is the contract). Stable
     intra-conversation ordering is not meaningful on an unbounded stream
     and extraction is per-turn, so the batch path's stable_order
     repartition+sort (forbidden on streams anyway) is skipped without
@@ -47,7 +46,7 @@ def streaming_extract(
 
     bc = broadcast_gazetteer(stream.sparkSession, surface_to_iri)
     return stream.mapInArrow(
-        make_extract_fn(bc, policy, emit_unknown), QUAD_SCHEMA
+        make_extract_fn(bc, policy), QUAD_SCHEMA
     )
 
 

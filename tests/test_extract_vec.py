@@ -2,7 +2,9 @@
 of the extraction mapInArrow closure) must be byte-identical — rows,
 values, and per-row order — to the per-row oracle path
 (_extract_batch_rows), across policies, overlap shapes, and the fixture
-transcripts."""
+transcripts. Linked extraction is the kernel's placeholders rewritten by
+link_placeholder_batch, checked against the oracle's placeholders mapped
+through SurfaceLinker.best here."""
 
 import numpy as np
 import pandas as pd
@@ -18,10 +20,16 @@ from quad_processor_util_spark.operators.linking import (
     SurfaceLinker,
     catalog_rows,
 )
-from quad_processor_util_spark.oracle import EX, QUAD_FIELDS, Gazetteer
+from quad_processor_util_spark.oracle import (
+    EX,
+    QUAD_FIELDS,
+    XSD_STRING,
+    Gazetteer,
+)
 from quad_processor_util_spark.plans.extract_vec import (
     _extract_batch_rows,
     extract_batch_arrow,
+    link_placeholder_batch,
 )
 
 # The columns extract_quads hands the closure, typed as Spark sends them
@@ -93,13 +101,35 @@ def _to_batch(pdf, schema=TRANSCRIPT_SCHEMA, offset=0):
     return rb.slice(offset)
 
 
+def _link_rows(pdf, linker):
+    """The per-row reference for linking: each placeholder row mapped
+    through linker.best in place, or dropped when it does not link."""
+    rows = []
+    for r in pdf.to_dict("records"):
+        if r["predicate"] == EX + "mentionSurface":
+            pick = linker.best(r["obj"])
+            if pick is None:
+                continue
+            r.update(predicate=EX + "mentions", obj=pick[0], datatype=None,
+                     language=None)
+        rows.append(r)
+    return pd.DataFrame(rows, columns=QUAD_FIELDS)
+
+
 def _check_parity(pdf, gaz, policy="LONGEST_DOMINANT_RIGHT", emit_unknown=False,
                   schema=TRANSCRIPT_SCHEMA, offset=0, linker=None):
     """extract_batch_arrow vs the per-row oracle, column by column; returns
-    the oracle's frame."""
-    exp = _extract_batch_rows(pdf, gaz, policy, emit_unknown, linker)
-    got = extract_batch_arrow(_to_batch(pdf, schema, offset), gaz, policy,
-                              emit_unknown, linker)
+    the oracle's frame. With a linker, the route extract_quads(catalog=)
+    runs: placeholders from the kernel, then link_placeholder_batch."""
+    rb = _to_batch(pdf, schema, offset)
+    if linker is None:
+        exp = _extract_batch_rows(pdf, gaz, policy, emit_unknown)
+        got = extract_batch_arrow(rb, gaz, policy, emit_unknown)
+    else:
+        exp = _link_rows(_extract_batch_rows(pdf, gaz, policy, True), linker)
+        got = extract_batch_arrow(rb, gaz, policy, True)
+        if got is not None:
+            got = link_placeholder_batch(got, linker)
     if got is None:
         assert len(exp) == 0
         return exp
@@ -252,9 +282,10 @@ try:
            policy=st.sampled_from(["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"]))
     @settings(max_examples=60, deadline=None)
     def test_linked_property_parity(forms, pdf, policy):
-        """The same hostile batches with unknown mentions linked in the
-        kernel (the \\x00 fallback included) against the per-row oracle
-        linking with the same SurfaceLinker."""
+        """The same hostile batches with the kernel's placeholders linked
+        by link_placeholder_batch (the \\x00 fallback included) against
+        the per-row oracle's placeholders mapped through the same
+        SurfaceLinker."""
         g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})
         schema = TRANSCRIPT_SCHEMA.set(1, pa.field("turn_idx", pa.int64()))
         _check_parity(pdf, g, policy, schema=schema, linker=_linker())
@@ -340,10 +371,11 @@ def test_null_turn_idx_renders_none_on_all_paths(gaz):
 
 @pytest.mark.parametrize("policy", ["LONGEST_DOMINANT_RIGHT", "ALL", "NO_SUB"])
 def test_linked_parity(gaz, policy):
-    """Unknown mentions linked inside the kernel: each linked surface
+    """Placeholders linked by link_placeholder_batch: each linked surface
     becomes a turn-IRI ex:mentions quad in the placeholder's place, the
-    rest drop — same rows and order as the per-row oracle, on repeated
-    texts in a sliced batch and through the \\x00 per-row fallback."""
+    rest drop — same rows and order as the per-row oracle's placeholders
+    mapped through the linker, on repeated texts in a sliced batch and
+    through the \\x00 per-row fallback."""
     texts = ADVERSARIAL_TEXTS + ["I met Grace Hoper and Bostn.",
                                  "Unknown Capitalized Run again, Zzyzx."]
     texts = [texts[i % len(texts)] for i in range(3 * len(texts))]
@@ -362,3 +394,60 @@ def test_linked_parity(gaz, policy):
                            for i, t in enumerate(texts)])
     exp = _check_parity(nul, gaz, policy, linker=lk)
     assert (exp["predicate"] == EX + "mentions").any()
+
+
+def _quads(rows):
+    """A quad RecordBatch from (subject, predicate, obj, datatype) rows;
+    language NULL, graph and dataset fixed."""
+    cols = list(zip(*rows)) if rows else [(), (), (), ()]
+    n = len(rows)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(c), pa.string()) for c in cols]
+        + [pa.nulls(n, pa.string()), pa.array(["g"] * n, pa.string()),
+           pa.nulls(n, pa.string())], QUAD_FIELDS)
+
+
+_SURF = EX + "mentionSurface"
+
+
+def test_link_placeholder_batch_rewrites_in_order():
+    """Placeholders become (turn IRI, ex:mentions, IRI, NULL, NULL) in
+    their place, surfaces that do not link drop, and every other row
+    passes through unchanged and in order."""
+    lk = _linker()
+    rb = _quads([
+        ("t/0", EX + "worksAt", "http://e/x", None),
+        ("t/0", _SURF, "Unknown Capitalized Run", XSD_STRING),
+        ("t/1", _SURF, "Zzyzx", XSD_STRING),
+        ("t/1", EX + "toolUsed", "calc", XSD_STRING),
+        ("t/2", _SURF, "Unknown Capitalized Run", XSD_STRING),
+        ("t/2", _SURF, "Another Unknown", XSD_STRING),
+    ])
+    assert lk.best("Zzyzx") is None
+    got = link_placeholder_batch(rb, lk).to_pylist()
+    passed = rb.to_pylist()
+    assert got == [
+        passed[0],
+        {**passed[1], "predicate": EX + "mentions",
+         "obj": "http://e/unknown", "datatype": None},
+        passed[3],
+        {**passed[4], "predicate": EX + "mentions",
+         "obj": "http://e/unknown", "datatype": None},
+        {**passed[5], "predicate": EX + "mentions",
+         "obj": "http://e/another", "datatype": None},
+    ]
+    assert all(r["language"] is None for r in got)
+
+
+def test_link_placeholder_batch_without_placeholders_is_unchanged():
+    rb = _quads([("t/0", EX + "worksAt", "http://e/x", None),
+                 ("t/0", EX + "toolUsed", "calc", XSD_STRING)])
+    assert link_placeholder_batch(rb, _linker()) is rb
+
+
+def test_link_placeholder_batch_all_dropped_is_empty():
+    rb = _quads([("t/0", _SURF, "Zzyzx", XSD_STRING),
+                 ("t/1", _SURF, "Qwvxj", XSD_STRING)])
+    out = link_placeholder_batch(rb, _linker())
+    assert out.num_rows == 0
+    assert out.schema.names == list(QUAD_FIELDS)

@@ -45,9 +45,9 @@ CHECKS = {
     "predicate_split_counts": ["HashAggregate", "ReadSchema"],
     # canonicalize's hinted broadcast of its alias dimension
     "pipeline_e2e": ["MapInArrow", "BroadcastHashJoin"],
-    # pipeline_full links the extracted placeholders in a second Arrow
-    # stage over the quad stream — no persist, no split, no links join;
-    # the only BroadcastHashJoins are canonicalize's
+    # pipeline_full links unknown mentions inside the extraction
+    # mapInArrow (one Arrow stage, pinned below) — no persist, no split,
+    # no links join; the only BroadcastHashJoins are canonicalize's
     "pipeline_full": ["MapInArrow", "BroadcastHashJoin", "HashAggregate"],
     # the shingle codes (and their vocabulary-wide Window) are built
     # eagerly under a localCheckpoint; the visible plan is the coded-pair
@@ -183,6 +183,15 @@ def test_quad_parse_reads_its_source_once(spark, planning):
         .executedPlan().toString()
     assert len(re.findall("FileScan", plan)) == 1, plan
     assert "Union" not in plan, plan
+
+
+def test_pipeline_full_links_in_the_extraction_stage(spark, planning):
+    """pipeline_full extracts and links in the same mapInArrow: exactly one
+    MapInArrow in the physical plan, not a second one over the quads."""
+    qs, sf = planning
+    plan = qs["pipeline_full"](spark, sf)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall("MapInArrow", plan)) == 1, plan
 
 
 def test_resumed_bucket_partition_prunes(spark, planning):

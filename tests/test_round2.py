@@ -518,33 +518,46 @@ class TestRound2Hardening:
         assert b3 is not b1
 
     def test_streaming_extract_forwards_policy(self, spark, tmp_path):
-        """Stream with emit_unknown=True must emit placeholder quads like
-        the batch path does."""
+        """A stream over an overlapping gazetteer under policy="ALL" must
+        emit the quads batch extract_quads emits under "ALL", which differ
+        from the default policy's."""
         import pandas as pd
 
+        from quad_processor_util_spark.plans.pipeline import extract_quads
         from quad_processor_util_spark.streaming.ingest import (
             read_transcript_stream, streaming_extract,
         )
 
+        gaz = {"New York": "http://e/ny", "York City": "http://e/yc",
+               "New York City": "http://e/nyc"}
         pdf = pd.DataFrame({
-            "conv_id": ["c1"],
-            "turn_idx": pd.array([0], dtype="int32"),
-            "role": ["user"],
-            "text": ["Unknown Entity visited."],
-            "tool": pd.array([None], dtype="string"),
-            "ts": pd.Series([pd.Timestamp("2026-01-01")]).astype("datetime64[us]"),
+            "conv_id": ["c1", "c1"],
+            "turn_idx": pd.array([0, 1], dtype="int32"),
+            "role": ["user", "user"],
+            "text": ["New York City has population 8000000.",
+                     "New York City is known as \"The Big Apple\"@en."],
+            "tool": pd.array([None, None], dtype="string"),
+            "ts": pd.Series([pd.Timestamp("2026-01-01")] * 2)
+            .astype("datetime64[us]"),
         })
         src = tmp_path / "src"
         src.mkdir()
         pdf.to_parquet(str(src / "p.parquet"), index=False)
         stream = read_transcript_stream(spark, str(src))
-        out = streaming_extract(stream, {}, emit_unknown=True)
+        out = streaming_extract(stream, gaz, policy="ALL")
         q = (out.writeStream.outputMode("append").format("memory")
              .queryName("se_out").trigger(availableNow=True).start())
         q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM se_out").collect()
-        assert any(r.predicate.endswith("mentionSurface")
-                   and r.obj == "Unknown Entity" for r in rows)
+        got = sorted(map(tuple, spark.sql("SELECT * FROM se_out").collect()))
+
+        batch = spark.read.parquet(str(src))
+
+        def extracted(policy):
+            return sorted(map(tuple, extract_quads(batch, gaz, policy)
+                              .collect()))
+
+        assert got == extracted("ALL")
+        assert got != extracted("LONGEST_DOMINANT_RIGHT")
 
 
 class TestWinnowing:
