@@ -32,6 +32,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..oracle import (
     QUAD_FIELDS, XSD_STRING, PyQuad, format_nt_line, parse_nt_line,
 )
+from ..session import worker_kernel
 
 # Python's \s / str.isspace() set spelled out for JAVA regex character
 # classes. Java's \s is ASCII-only ([ \t\n\x0B\f\r]) and even (?U)\s
@@ -162,7 +163,7 @@ def parse_nt_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
             yield _parse_batch(pdf[line_col])
 
     return _ensure_parallelism(lines_df.select(line_col)).mapInPandas(
-        _parse, QUAD_SCHEMA)
+        worker_kernel(_parse), QUAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -318,7 +319,8 @@ def format_nt_exact(quads: DataFrame, quads_mode: bool = False) -> DataFrame:
                 ]
             yield pd.DataFrame({"line": res})
 
-    return quads.mapInPandas(_fmt, StructType([StructField("line", StringType())]))
+    return quads.mapInPandas(worker_kernel(_fmt),
+                             StructType([StructField("line", StringType())]))
 
 
 def format_rdf_json(quads: DataFrame) -> DataFrame:

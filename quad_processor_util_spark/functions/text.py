@@ -15,6 +15,8 @@ import sys
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import worker_kernel
+
 # Whitespace class shared by EVERY tokenizer/normalizer in the engine,
 # written out explicitly because the three regex dialects in play disagree
 # on \s: Java (Spark JVM expressions) adds \x0B, Python adds the full
@@ -267,7 +269,7 @@ def _winnow_selected(df, text_col: str, id_col: str, k: int, window: int,
                     "fp": pd.array(fp_col, dtype="Int64"),
                 })
 
-    return src.mapInPandas(_select, out_schema)
+    return src.mapInPandas(worker_kernel(_select), out_schema)
 
 
 def winnow_fingerprints(df, text_col: str = "text", id_col: str = "doc_id",

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from .session import worker_kernel
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("kind", StringType()),        # image | audio | video
@@ -234,7 +236,7 @@ def decode_media(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
             yield out
 
     cols = media.select("media_id", "kind", "mime", "payload")
-    return cols.mapInPandas(_decode, DECODED_SCHEMA)
+    return cols.mapInPandas(worker_kernel(_decode), DECODED_SCHEMA)
 
 
 # far above any plausible doc_id (2^40): at 1e6 the synth audio id of doc
@@ -313,4 +315,4 @@ def synth_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     from .operators.dedup import _ensure_parallelism
 
     return _ensure_parallelism(ids.select(id_col)).mapInPandas(
-        _synth, MEDIA_SCHEMA)
+        worker_kernel(_synth), MEDIA_SCHEMA)

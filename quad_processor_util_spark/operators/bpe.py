@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import _GramMemo, _words
+from ..session import worker_kernel
 
 __all__ = ["bpe_pair_counts", "fit_bpe", "encode_bpe"]
 
@@ -341,4 +342,5 @@ def encode_bpe(
                                       dtype="int64"),
             })
 
-    return prep.mapInPandas(_encode_partition, schema=out_schema)
+    return prep.mapInPandas(worker_kernel(_encode_partition),
+                            schema=out_schema)

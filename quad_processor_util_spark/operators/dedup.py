@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import WS_RE, fingerprint
-from ..session import job_description
+from ..session import job_description, worker_kernel
 from . import cc
 
 # Mersenne prime 2^31-1: keeps h*a + b < 2^62, inside int64 under ANSI mode
@@ -70,35 +70,68 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Estimate the scan split count from file metadata only — no RDD is
-    built (df.rdd on a hot constructor materializes the lineage driver-side
-    per call). Mirrors Spark's FilePartition packing: each file costs
-    max(size, openCostInBytes) and files are bin-packed into
-    maxPartitionBytes splits — so 150 tiny files estimate as a handful of
-    packed partitions (as Spark actually scans them), not 150.
+    """Estimate the scan's partition count from file metadata only — no RDD
+    is built (df.rdd on a hot constructor materializes the lineage
+    driver-side per call).
+
+    Mirrors Spark's FilePartition. The split size is
+    ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    Σ(size + openCostInBytes) / (filesMinPartitionNum or
+    leafNodeDefaultParallelism)))``; files are cut into chunks of that
+    size, sorted largest first and packed, each chunk costing its length
+    plus openCostInBytes, into partitions of at most maxSplitBytes. So 150
+    tiny files estimate as the handful of packed partitions Spark scans,
+    not 150, and a few small files at a wide session estimate as one
+    partition each. One deliberate difference: a file smaller than
+    maxPartitionBytes counts as ONE chunk. Spark does cut it at
+    maxSplitBytes, but a small parquet file is one row group and only the
+    split holding its midpoint reads rows, so a single small file
+    estimates as 1 and gets re-spread. A split size that is not positive
+    (a negative openCostInBytes) makes Spark scan no split, and gives 0.
     Non-file sources (in-memory views, remote FS) return a floor of their
     file count (0 for views → treated as too-coarse; the repartition they
     then pay moves only the two projected columns)."""
-    import math
     import os
 
     files = df.inputFiles()
     if not files:
         return 0
-    # Spark parses and type-checks both confs at set time; read the parsed
-    # byte values. A negative size ("-1m") is still accepted and reads back
-    # negative; sizes are magnitudes, so clamp.
-    sql_conf = df.sparkSession._jsparkSession.sessionState().conf()
-    mpb = max(1, sql_conf.filesMaxPartitionBytes())
-    open_cost = max(0, sql_conf.filesOpenCostInBytes())
-    total_cost = 0
+    # Spark parses and type-checks the size confs at set time; read the
+    # parsed byte values
+    session = df.sparkSession._jsparkSession
+    sql_conf = session.sessionState().conf()
+    mpb = sql_conf.filesMaxPartitionBytes()
+    open_cost = sql_conf.filesOpenCostInBytes()
+    min_parts = sql_conf.filesMinPartitionNum()
+    min_parts = (min_parts.get() if min_parts.isDefined()
+                 else session.leafNodeDefaultParallelism())
+    sizes = []
     for p in files:
         local = p[len("file:"):] if p.startswith("file:") else p
         try:
-            total_cost += max(os.path.getsize(local), open_cost)
+            sizes.append(os.path.getsize(local))
         except OSError:
             return len(files)
-    return max(1, math.ceil(total_cost / mpb))
+    total = sum(sizes) + open_cost * len(sizes)
+    # Scala's Long division truncates toward zero
+    per_core = abs(total) // min_parts * (1 if total >= 0 else -1)
+    split = min(mpb, max(open_cost, per_core))
+    if split <= 0:
+        return 0
+    chunks = []
+    for size in sizes:
+        if size >= mpb:
+            full, rest = divmod(size, split)
+            chunks.extend([split] * full + ([rest] if rest else []))
+        elif size:
+            chunks.append(size)
+    parts, current, filled = 0, 0, False
+    for chunk in sorted(chunks, reverse=True):
+        if filled and current + chunk > split:
+            parts, current, filled = parts + 1, 0, False
+        current += chunk + open_cost
+        filled = True
+    return parts + filled
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -226,7 +259,7 @@ def word_shingle_rows(df: DataFrame, text_col: str = "text",
                 "__sh": grams_out,
             })
 
-    return src.mapInPandas(_shingle, out_schema)
+    return src.mapInPandas(worker_kernel(_shingle), out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -260,13 +293,14 @@ def _signatures_and_sets(rows: DataFrame, id_col: str, num_hashes: int,
         id_col, "__sh",
         F.pmod(_base_hash(F.col("__sh"), hash_kind), F.lit(_MERSENNE)).alias("__h"),
     )
-    # expr strings for the same reason as simhash_signatures: K Column
-    # chains cost ~6 py4j roundtrips each at construction
+    # one aliased SQL string per aggregate, as in simhash_signatures: a
+    # Column builder (F.min, .alias) is a py4j round trip per call, and
+    # there are K + 1 aggregates per construction
     aggs = [
-        F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE}L))").alias(f"mh_{i}")
+        F.expr(f"min(pmod(__h * {a}L + {b}L, {_MERSENNE}L)) AS mh_{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
-    return sh.groupBy(id_col).agg(*aggs, F.collect_list("__sh").alias("__set"))
+    return sh.groupBy(id_col).agg(*aggs, F.expr("collect_list(__sh) AS __set"))
 
 
 def minhash_signatures(
@@ -307,35 +341,31 @@ def minhash_lsh_candidates(
             f"bands={bands} — trailing hashes would be silently ignored, "
             f"changing the LSH S-curve"
         )
+    if bucket_kind not in ("xxhash64", "concat"):
+        raise ValueError(f"unknown bucket_kind: {bucket_kind}")
     rows_per_band = len(mh_cols) // bands
 
-    def _bucket(b: int):
-        cols = [F.col(mh_cols[b * rows_per_band + r]) for r in range(rows_per_band)]
+    def _bucket(b: int) -> str:
+        cols = mh_cols[b * rows_per_band:(b + 1) * rows_per_band]
         if bucket_kind == "xxhash64":
-            return F.xxhash64(*cols)
-        if bucket_kind == "concat":
-            return F.concat_ws("_", *[c.cast("string") for c in cols])
-        raise ValueError(f"unknown bucket_kind: {bucket_kind}")
+            return f"xxhash64({', '.join(cols)})"
+        return "concat_ws('_', {})".format(
+            ", ".join(f"cast({c} as string)" for c in cols))
 
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            _bucket(b).alias("bucket"),
-        )
-        for b in range(bands)
-    ])
-    banded = sigs.select(F.col(id_col), F.explode(band_structs).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+    # the B (band, bucket) rows as ONE SQL string: built from Column
+    # builders, every F.col/F.lit/.alias/.cast is its own py4j round trip
+    bands_sql = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {_bucket(b)})"
+        for b in range(bands))
+    banded = sigs.selectExpr(id_col, f"inline(array({bands_sql}))")
     a = banded.alias("a")
     b = banded.alias("b")
-    pairs = (
+    return (
         a.join(b, ["band", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .where(f"a.{id_col} < b.{id_col}")
+        .selectExpr(f"a.{id_col} AS id_a", f"b.{id_col} AS id_b")
         .distinct()
     )
-    return pairs
 
 
 def minhash_dedup(
@@ -615,19 +645,13 @@ def _verify_pairs(candidates: DataFrame, sets_df: DataFrame, id_col: str,
     The sets hold distinct elements, so |A∪B| = |A| + |B| − |A∩B| and one
     array_intersect gives the jaccard."""
     def side(s):
-        return sets_df.select(F.col(id_col).alias(f"id_{s}"),
-                              F.col("__set").alias(f"__s{s}"))
+        return sets_df.selectExpr(f"{id_col} AS id_{s}", f"__set AS __s{s}")
 
     return (
         candidates.join(side("a"), "id_a").join(side("b"), "id_b")
-        .select("id_a", "id_b", F.size("__sa").alias("__na"),
-                F.size("__sb").alias("__nb"),
-                F.size(F.array_intersect("__sa", "__sb")).alias("__i"))
-        .select(
-            "id_a", "id_b",
-            (F.col("__i") / (F.col("__na") + F.col("__nb") - F.col("__i")))
-            .alias("jaccard"),
-        )
+        .selectExpr("id_a", "id_b", "size(__sa) AS __na", "size(__sb) AS __nb",
+                    "size(array_intersect(__sa, __sb)) AS __i")
+        .selectExpr("id_a", "id_b", "__i / (__na + __nb - __i) AS jaccard")
         .where(F.col("jaccard") >= threshold)
     )
 

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import worker_kernel
+
 
 def sorted_group_scan(
     df: DataFrame,
@@ -89,7 +91,8 @@ def run_boundary_groups(
             if out is not None and len(out):
                 yield out
 
-    return sorted_group_scan(df, key, order).mapInPandas(_runs, schema)
+    return sorted_group_scan(df, key, order).mapInPandas(
+        worker_kernel(_runs), schema)
 
 
 def star_view(quads: DataFrame) -> DataFrame:
@@ -148,5 +151,6 @@ def assert_sorted(df: DataFrame, key: str, order: str) -> int:
                 prev = cur
         yield pd.DataFrame({"n": [n]})
 
-    res = df.select(key, order).mapInPandas(_viol, "n long").collect()
+    res = df.select(key, order).mapInPandas(
+        worker_kernel(_viol), "n long").collect()
     return sum(r.n for r in res)

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import worker_kernel
+
 CATALOG_COLUMNS = ("entity_iri", "surface_form", "form_weight")
 
 
@@ -147,6 +149,7 @@ def link_surface_forms(
     return (
         mentions.select(F.col(mention_col).cast("string").alias("surface"))
         .distinct()
-        .mapInArrow(_score, "surface string, entity_iri string, score double")
+        .mapInArrow(worker_kernel(_score),
+                    "surface string, entity_iri string, score double")
         .select("surface", "entity_iri", F.round("score", 6).alias("score"))
     )

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.nt import QUAD_FIELDS, QUAD_SCHEMA
 from ..oracle import PyQuad
+from ..session import worker_kernel
 
 
 def quad_flat_map(
@@ -42,4 +43,5 @@ def quad_flat_map(
                                  out.language, out.graph, out.dataset))
             yield pd.DataFrame(rows, columns=QUAD_FIELDS)
 
-    return quads.select(*QUAD_FIELDS).mapInPandas(_map, QUAD_SCHEMA)
+    return quads.select(*QUAD_FIELDS).mapInPandas(worker_kernel(_map),
+                                                  QUAD_SCHEMA)

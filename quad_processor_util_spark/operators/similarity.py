@@ -20,6 +20,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import worker_kernel
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -175,7 +177,8 @@ def lsh_buckets(
     from .dedup import _ensure_parallelism
 
     return _ensure_parallelism(
-        df.select(id_col, vec_col)).mapInPandas(_hash, out_schema)
+        df.select(id_col, vec_col)).mapInPandas(worker_kernel(_hash),
+                                                out_schema)
 
 
 def lsh_topk(
@@ -319,7 +322,8 @@ def ivf_assign(
     from .dedup import _ensure_parallelism
 
     return _ensure_parallelism(
-        df.select(id_col, vec_col)).mapInPandas(_assign, out_schema)
+        df.select(id_col, vec_col)).mapInPandas(worker_kernel(_assign),
+                                                out_schema)
 
 
 def ivf_topk(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import worker_kernel
+
 
 def sort_quads(
     quads: DataFrame,
@@ -105,7 +107,8 @@ def is_globally_sorted(df: DataFrame, col: str) -> bool:
     # lexicographically ('9' > '10')
     dtype = df.schema[col].dataType.simpleString()
     res = df.select(col).mapInPandas(
-        _minmax, f"pid int, seen boolean, lo {dtype}, hi {dtype}, ok boolean"
+        worker_kernel(_minmax),
+        f"pid int, seen boolean, lo {dtype}, hi {dtype}, ok boolean"
     ).collect()
     res = sorted((r for r in res if r.seen), key=lambda r: r.pid)
     if not all(r.ok for r in res):

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..functions.nt import QUAD_FIELDS, QUAD_SCHEMA, dedup_quads_df
 from ..oracle import Gazetteer
 from ..operators.linking import SurfaceLinker, catalog_rows
-from ..session import job_description
+from ..session import job_description, worker_kernel
 from ..sources.io import write_quads_partitioned_by_predicate
 
 # Per-worker cache of the objects built from a broadcast (gazetteers and
@@ -210,8 +210,8 @@ def extract_quads(
                      *(F.col(c).cast("string").alias(c)
                        for c in ("role", "text", "tool")))
     return src.mapInArrow(
-        make_extract_fn(bc, policy, emit_unknown, linker_bc), QUAD_SCHEMA
-    )
+        worker_kernel(make_extract_fn(bc, policy, emit_unknown, linker_bc)),
+        QUAD_SCHEMA)
 
 
 def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
@@ -381,7 +381,8 @@ def link_unknown_mentions(
             if out.num_rows:
                 yield out
 
-    return quads.select(*QUAD_FIELDS).mapInArrow(_link, QUAD_SCHEMA)
+    return quads.select(*QUAD_FIELDS).mapInArrow(worker_kernel(_link),
+                                                 QUAD_SCHEMA)
 
 
 def run_pipeline(

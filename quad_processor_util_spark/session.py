@@ -9,6 +9,7 @@ comparable across engines (the DuckDB oracle is UTC-naive).
 
 from __future__ import annotations
 
+import functools
 import os
 from contextlib import contextmanager
 
@@ -87,3 +88,37 @@ def job_description(spark: SparkSession, description: str):
         yield
     finally:
         sc.setLocalProperty("spark.job.description", prev)
+
+
+def drop_zip_finders() -> None:
+    """Delete every ``zipimport.zipimporter`` from ``sys.path_importer_cache``.
+
+    ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every Python task. On
+    CPython 3.11 each cached zipimporter then re-reads its archive's whole
+    central directory: pyspark.zip is cached under one key per imported
+    package directory and the spark-core jar (~5 000 entries) under two,
+    which costs ~0.2 s per task before any row is read. Modules already
+    imported keep their own loaders, and a later import from an archive
+    re-creates the finder it needs from zipimport's directory cache without
+    re-reading the file. The cache belongs to the worker process, so the
+    trim also speeds up every later task that worker runs."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for key in [k for k, v in cache.items()
+                if isinstance(v, zipimport.zipimporter)]:
+        del cache[key]
+
+
+def worker_kernel(fn):
+    """Wrap an iterator kernel for ``mapInArrow``/``mapInPandas`` so each
+    task first runs :func:`drop_zip_finders`. Not for ``applyInPandas``:
+    Spark reads that function's arity, which a wrapper would change."""
+    @functools.wraps(fn)
+    def _run(batches):
+        drop_zip_finders()
+        return fn(batches)
+
+    return _run

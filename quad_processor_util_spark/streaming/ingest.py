@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import worker_kernel
 from ..sources.io import TRANSCRIPTS_SCHEMA
 
 
@@ -46,7 +47,7 @@ def streaming_extract(
 
     bc = broadcast_gazetteer(stream.sparkSession, surface_to_iri)
     return stream.mapInArrow(
-        make_extract_fn(bc, policy), QUAD_SCHEMA
+        worker_kernel(make_extract_fn(bc, policy)), QUAD_SCHEMA
     )
 
 

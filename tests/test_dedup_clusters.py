@@ -229,13 +229,20 @@ def test_dedup_clusters_jobs_and_plans(spark, spark_jobs, parquet_docs):
     dedup_clusters step, the caller's description comes back, its
     executions scan and shingle (one MapInPandas) the documents once and
     never build the Catalyst word_shingles expression, and it starts at
-    most 6 jobs (the pair
-    checkpoint's stages and one bounded collect). Executing the result
+    most 5 jobs (the pair checkpoint's stages and one bounded collect).
+    The 2-file fixture scans as 2 partitions, half of a 4-wide shuffle, so
+    it is not re-spread: no RoundRobinPartitioning. Executing the result
     broadcasts the driver-built components as a LocalTableScan."""
     sc = spark.sparkContext
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
 
     def call():
-        out = dedup_clusters(parquet_docs, **_CHAIN_KW)
+        spark.conf.set(key, "4")
+        try:
+            out = dedup_clusters(parquet_docs, **_CHAIN_KW)
+        finally:
+            spark.conf.set(key, width)
         return out, sc.getLocalProperty("spark.job.description")
 
     (out, restored), jobs, plans = spark_jobs(call)
@@ -247,7 +254,8 @@ def test_dedup_clusters_jobs_and_plans(spark, spark_jobs, parquet_docs):
                               "dedup_clusters: components")
                         for n in names), names
     assert "dedup_clusters: components" in names
-    assert len(jobs) <= 6, names
+    assert len(jobs) <= 5, names
+    assert not any("RoundRobinPartitioning" in p for _, p in plans), plans
     trees = [_final_tree(p) for _, p in plans]
     assert sum(len(re.findall(r"- Scan parquet ", t)) for t in trees) == 1, \
         plans

@@ -162,44 +162,69 @@ def test_dedup_clusters_transitive_closure(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4}
 
 
-def test_size_conf_parsing_and_split_estimate(spark, tmp_path):
-    import glob
-    import math
-    import os
+def _restore_confs(spark, saved):
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
 
+
+def test_size_conf_parsing_and_split_estimate(spark, tmp_path):
     from quad_processor_util_spark.operators.dedup import (
         _estimated_scan_partitions,
     )
 
-    # many tiny files estimate as PACKED splits (openCostInBytes binning),
-    # not one split per file — review finding: the naive per-file count
-    # skipped the needed repartition exactly when inputs were tiny
+    # the estimate mirrors Spark's own split packing (maxSplitBytes from
+    # maxPartitionBytes, openCostInBytes and the leaf parallelism), so on
+    # multi-file layouts it reads what the scan really has — many tiny
+    # files estimate as packed splits, not one split per file
     df = spark.range(0, 1000).selectExpr("id", "CAST(id AS STRING) AS text")
-    p = str(tmp_path / "tiny")
-    df.repartition(40).write.mode("overwrite").parquet(p)
-    tiny = spark.read.parquet(p)
-    est = _estimated_scan_partitions(tiny)
-    assert 1 <= est <= 4  # 40 tiny files × 4MB open cost / 128MB ≈ 2
+    tiny = str(tmp_path / "tiny")
+    df.repartition(40).write.mode("overwrite").parquet(tiny)
+    few = str(tmp_path / "few")
+    df.repartition(3).write.mode("overwrite").parquet(few)
     # in-memory views have no files -> 0 (treated as too-coarse)
     assert _estimated_scan_partitions(df) == 0
 
-    # size strings are parsed by Spark itself: "2t" packs every file into
-    # one split; a negative open cost ("-1m") is clamped, so each file
-    # costs its own size against a 1 KiB split
-    keys = ("spark.sql.files.maxPartitionBytes",
-            "spark.sql.files.openCostInBytes")
-    saved = {k: spark.conf.get(k) for k in keys}
-    total = sum(os.path.getsize(f)
-                for f in glob.glob(os.path.join(p, "*.parquet")))
+    # size strings are parsed by Spark itself: "2t" still splits by the
+    # per-core share, "-1m" is accepted and makes Spark scan no split
+    confs = [
+        {},
+        {"spark.sql.files.maxPartitionBytes": "2t"},
+        {"spark.sql.files.maxPartitionBytes": "1k",
+         "spark.sql.files.openCostInBytes": "-1m"},
+        {"spark.sql.files.minPartitionNum": "3"},
+        {"spark.sql.files.minPartitionNum": "20"},
+    ]
+    saved = {k: spark.conf.get(k, None) for c in confs for k in c}
     try:
-        spark.conf.set(keys[0], "2t")
-        assert _estimated_scan_partitions(tiny) == 1
-        spark.conf.set(keys[0], "1k")
-        spark.conf.set(keys[1], "-1m")
-        assert _estimated_scan_partitions(tiny) == math.ceil(total / 1024)
+        for conf in confs:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            for path in (tiny, few):
+                src = spark.read.parquet(path)
+                assert _estimated_scan_partitions(src) == \
+                    src.rdd.getNumPartitions(), (conf, path)
+            _restore_confs(spark, {k: saved[k] for k in conf})
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        _restore_confs(spark, saved)
+
+    # a single small file is one row group: Spark cuts it into byte ranges
+    # (with no open cost, one per core) but only one of them reads rows,
+    # so it estimates as 1 and gets re-spread
+    one = str(tmp_path / "one")
+    df.coalesce(1).write.mode("overwrite").parquet(one)
+    assert _estimated_scan_partitions(spark.read.parquet(one)) == 1
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "0")
+        single = spark.read.parquet(one)
+        assert single.rdd.getNumPartitions() > 1
+        assert _estimated_scan_partitions(single) == 1
+    finally:
+        spark.conf.set(key, prev)
 
 
 class TestReviewFixes:

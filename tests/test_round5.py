@@ -268,7 +268,8 @@ def test_repartition_guard_scoped_to_plan_root(spark, tmp_path):
     from quad_processor_util_spark.operators.dedup import _ensure_parallelism
 
     p = str(tmp_path / "tiny")
-    spark.range(100).withColumn("k", F.col("id") % 10).write.parquet(p)
+    spark.range(100).withColumn("k", F.col("id") % 10).coalesce(1) \
+        .write.parquet(p)
     tiny = spark.read.parquet(p)  # single tiny file -> too-coarse estimate
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
