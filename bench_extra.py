@@ -4,6 +4,8 @@ Times individual declared queries with the same methodology as bench.py
 (.count(), interleaved trials, clearCache between trials) and optionally
 with the noop sink (guide §1.4 — computes every column, no sink cost), and
 optionally dumps .explain("formatted") for each query to a --plans directory.
+Each query runs once before the timed trials; that time is reported as
+``first`` and median/min/max cover the --trials settled runs only.
 
 Usage:
   python bench_extra.py --queries jaccard_pairs,dup_spans --trials 3 \
@@ -91,8 +93,10 @@ def main() -> None:
 
     spark.range(slots, numPartitions=slots).mapInPandas(_warm, "id long").count()
 
+    # trial 0 is each query's first run: it pays first-of-kind start-up
+    # (1.3-4.7x the settled time at sf0.1), so it is reported apart
     runs: dict[str, list[float]] = {n: [] for n in names}
-    for t in range(args.trials):
+    for t in range(args.trials + 1):
         for name in names:
             spark.sparkContext.setJobDescription(f"{name} trial {t}")
             # construction INSIDE the clock — bench.py times fn(...).count()
@@ -108,8 +112,9 @@ def main() -> None:
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
 
-    res = {n: {"median": round(median(v), 3), "min": min(v), "max": max(v),
-               "runs": v} for n, v in runs.items()}
+    res = {n: {"first": v[0], "median": round(median(v[1:]), 3),
+               "min": min(v[1:]), "max": max(v[1:]), "runs": v[1:]}
+           for n, v in runs.items()}
     line = json.dumps({"sf_dir": args.sf_dir, "noop": args.noop,
                        "timings": res})
     print(line)

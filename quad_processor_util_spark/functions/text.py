@@ -347,7 +347,7 @@ def _words(col: Column) -> Column:
 
 def _word_ngrams_all(col: Column, n: int) -> Column:
     """Word n-grams WITH duplicates (repetition metrics need multiplicity;
-    contrast operators.dedup.word_shingles, which dedups)."""
+    contrast operators.dedup.word_shingle_rows, which dedups)."""
     toks = _words(col)
     k = F.size(toks) - (n - 1)
     return F.when(

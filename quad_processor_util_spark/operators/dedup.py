@@ -9,12 +9,12 @@ Scale notes (100 TB stance):
 - minhash: shingle rows -> ONE groupBy computing all K signatures
   (K aggs, map-side combine), band explode (B small) -> groupBy band bucket.
   Candidate verification is an equi-join on doc ids, never a cross join.
-- dedup_clusters: one fused pass. Each document is scanned and shingled
-  once; the signature groupBy also collects its shingle set, and exact
-  Jaccard verification reads those sets. The trade: the shingle rows move
-  through one shuffle, and the corpus is not re-read and re-tokenized for
-  verification. Driver-sized pair sets resolve to clusters from one
-  bounded collect.
+- minhash_dedup, dedup_clusters: one fused pass. Each document is scanned
+  and shingled once; the signature groupBy also collects its shingle set,
+  and exact Jaccard verification reads those sets. The trade: the shingle
+  rows move through one shuffle, and the corpus is not re-read and
+  re-tokenized for verification. Driver-sized pair sets resolve to
+  clusters from one bounded collect.
 - simhash: token explode -> one groupBy with 64 bit-sum aggs -> band join.
 - jaccard: shingle-inverted-index self-join (prefix-filtered) — the only
   quadratic risk is within a shingle bucket; hot shingles are dropped by a
@@ -193,24 +193,11 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Array of word n-gram shingles (distinct), pure expressions."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(col)), WS_RE, " "), " ")
-    k = F.size(toks) - (n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    return F.array_distinct(grams)
-
-
 def word_shingle_rows(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Exploded (id_col, __sh) rows of :func:`word_shingles`, distinct per
-    document — the shape every shingle consumer actually wants.
+    """(id_col, __sh) rows: each document's distinct word n-grams of its
+    lower-cased, whitespace-normalized tokens (all its tokens as one
+    shingle when it has fewer than n; NULL text gives "").
 
     Round 6: the expression form builds each shingle with an interpreted
     ``transform(concat_ws(slice(...)))`` — measured ~2.5 s of the minhash
@@ -218,12 +205,13 @@ def word_shingle_rows(df: DataFrame, text_col: str = "text",
     (lower/trim/split — the locale-sensitive part) stays a Catalyst
     expression, and only the locale-FREE slice-join (one C-speed
     ``" ".join`` per gram) plus the per-doc dedup run in mapInPandas.
-    Output rows are exactly ``explode(word_shingles(col, n))`` per doc —
-    pinned by tests/test_round6.py — already distinct per (id, shingle),
-    so callers can drop their global ``.distinct()`` when the id is part
-    of the key."""
+    tests/test_round6.py keeps the expression form as the reference. Rows
+    are already distinct per (id, shingle), so callers can drop their
+    global ``.distinct()`` when the id is part of the key."""
     from pyspark.sql.types import StringType, StructField, StructType
 
+    if n < 1:
+        raise ValueError(f"shingle n must be >= 1 (got {n})")
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), WS_RE, " ")
     src = _ensure_parallelism(df.select(id_col, text_col)).select(
         F.col(id_col), F.split(norm, " ").alias("__toks"))
@@ -282,9 +270,11 @@ def _signatures_and_sets(rows: DataFrame, id_col: str, num_hashes: int,
     """(id_col, __sh) rows of :func:`word_shingle_rows` -> (id_col,
     mh_0..mh_{K-1}, __set): the K MinHash signatures and the document's
     shingle set from ONE groupBy. The rows are distinct per document, so
-    ``collect_list`` is exactly the set :func:`word_shingles` gives
-    (element order aside). A consumer that drops ``__set`` gets a plain
-    min-aggregate back: column pruning removes the ``collect_list``."""
+    ``collect_list`` is the document's shingle set. A consumer that drops
+    ``__set`` gets a plain min-aggregate back: column pruning removes the
+    ``collect_list``."""
+    if num_hashes < 1:
+        raise ValueError(f"num_hashes must be >= 1 (got {num_hashes})")
     coeffs = _perm_coeffs(num_hashes, seed)
     # materialize the base hash ONCE per shingle row — the K permutations
     # are affine transforms of it (inlining h into each agg would make
@@ -321,6 +311,16 @@ def minhash_signatures(
                                 hash_kind).drop("__set")
 
 
+def _check_bands(what: str, width: int, bands: int) -> None:
+    """Raise unless `bands` >= 1 splits the `width` hashes (or bits) evenly:
+    a remainder would be silently ignored, changing the LSH S-curve."""
+    if bands < 1:
+        raise ValueError(f"{what}: bands must be >= 1 (got {bands})")
+    if width % bands:
+        raise ValueError(f"{what}: {width} not divisible by bands={bands}; "
+                         f"the last {width % bands} would be ignored")
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -335,12 +335,7 @@ def minhash_lsh_candidates(
     identical grouping semantics, replayable in portable SQL (the gate
     oracle)."""
     mh_cols = [c for c in sigs.columns if c.startswith("mh_")]
-    if len(mh_cols) % bands:
-        raise ValueError(
-            f"minhash_lsh_candidates: {len(mh_cols)} hashes not divisible by "
-            f"bands={bands} — trailing hashes would be silently ignored, "
-            f"changing the LSH S-curve"
-        )
+    _check_bands("minhash_lsh_candidates", len(mh_cols), bands)
     if bucket_kind not in ("xxhash64", "concat"):
         raise ValueError(f"unknown bucket_kind: {bucket_kind}")
     rows_per_band = len(mh_cols) // bands
@@ -382,35 +377,40 @@ def minhash_dedup(
 ) -> DataFrame:
     """Full near-dup pipeline: signatures -> signature-group collapse ->
     banded candidates among representatives -> exact Jaccard verification on
-    candidates only -> drop pair losers. Returns the deduplicated df.
+    candidates only -> drop pair losers. Returns the deduplicated df; ids
+    are unique keys.
 
     The signature-group collapse (docs with ALL K minhashes equal -> min-id
     representative) is the skew guard: duplicate-heavy corpora otherwise put
     whole dup-clusters into single LSH buckets, making the candidate
     self-join quadratic in cluster size. K identical minhashes ⇒ Jaccard ≈ 1
     whp, so collapsing first preserves the semantics and bounds every bucket
-    by the number of DISTINCT near-dup classes."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
-                              seed, hash_kind)
+    by the number of DISTINCT near-dup classes. The collapse keeps each
+    representative's shingle set from the signature groupBy, which
+    verification reads. The trade, as in dedup_clusters: the shingle rows
+    shuffle once on the id (not as map-side-combined signatures) and the
+    representatives' checkpoint holds their sets; in return the corpus is
+    not re-read, semi-joined and re-tokenized for verification."""
+    # checked before the representatives' checkpoint runs any job
+    _check_bands("minhash_dedup", num_hashes, bands)
+    rows = word_shingle_rows(df, text_col, id_col, shingle_n).repartition(id_col)
+    sigs = _signatures_and_sets(rows, id_col, num_hashes, seed, hash_kind)
     mh_cols = [c for c in sigs.columns if c.startswith("mh_")]
-    # reps is consumed twice (candidate generation + survivor collapse);
-    # localCheckpoint cuts the lineage so the whole shingle->signature
-    # subtree runs ONCE instead of once per consumer. Under AQE it runs
-    # the signature and group shuffles when called; eager=False defers
-    # only the final aggregate to first use
+    # reps is consumed three times (banding, verification, survivor
+    # collapse); localCheckpoint cuts the lineage so the whole
+    # shingle->signature subtree runs ONCE instead of once per consumer.
+    # Under AQE it runs the signature and group shuffles when called;
+    # eager=False defers only the final aggregate to first use
     reps = (
-        sigs.groupBy(*mh_cols).agg(F.min(id_col).alias(id_col))
+        sigs.groupBy(*mh_cols)
+        .agg(F.min(id_col).alias(id_col),
+             F.min_by("__set", id_col).alias("__set"))
         .localCheckpoint(eager=False)
     )
-    rep_sigs = reps.select(id_col, *mh_cols)
-    cands = minhash_lsh_candidates(rep_sigs, id_col, bands, bucket_kind)
-    verified = ngram_jaccard_pairs_from_candidates(
-        df, cands, text_col, id_col, shingle_n, threshold
-    )
-    rep_survivors = collapse_duplicate_pairs(
-        reps.select(id_col), verified, id_col
-    )
-    return df.join(rep_survivors, id_col, "left_semi")
+    cands = minhash_lsh_candidates(reps.drop("__set"), id_col, bands, bucket_kind)
+    verified = _verify_pairs(cands, reps.select(id_col, "__set"), id_col, threshold)
+    survivors = collapse_duplicate_pairs(reps.select(id_col), verified, id_col)
+    return df.join(survivors, id_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -619,10 +619,9 @@ def ngram_jaccard_pairs_from_candidates(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Exact Jaccard restricted to candidate (id_a, id_b) pairs — the verify
-    step after LSH blocking. Shingle sets joined in as arrays, intersection
-    via array ops (no explode; candidate count is small by construction).
-    Only docs appearing in some candidate pair get their shingle set
-    computed (semi-join pushfilter), and only once: the sets relation is
+    step after LSH blocking for a caller without shingle sets (minhash_dedup
+    and dedup_clusters read theirs from the signature pass). Only docs in
+    some candidate pair are shingled, and only once: the sets relation is
     under a localCheckpoint, which under AQE runs its shuffle stages when
     it is called."""
     cand_ids = (
@@ -631,8 +630,9 @@ def ngram_jaccard_pairs_from_candidates(
         .distinct()
     )
     sets_df = (
-        df.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("__set"))
+        word_shingle_rows(df.join(cand_ids, id_col, "left_semi"), text_col,
+                          id_col, shingle_n)
+        .groupBy(id_col).agg(F.expr("collect_list(__sh) AS __set"))
         .localCheckpoint(eager=False)
     )
     return _verify_pairs(candidates, sets_df, id_col, threshold)
@@ -725,11 +725,7 @@ def simhash_candidates(
     """Near-dup candidates: split the 64-bit signature into `bands` chunks;
     pairs agreeing on any chunk are candidates (catches hamming <= bands-1
     guaranteed), then filter exact hamming via bit_count(xor)."""
-    if 64 % bands:
-        raise ValueError(
-            f"simhash_candidates: 64 bits not divisible by bands={bands} — "
-            f"the top 64 % bands bits would be silently dropped"
-        )
+    _check_bands("simhash_candidates", 64, bands)
     width = 64 // bands
     mask = (1 << width) - 1
     chunks = F.array(*[

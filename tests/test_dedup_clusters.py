@@ -1,20 +1,23 @@
-"""dedup_clusters in one pass: parity with the layered public path
-(minhash_signatures -> minhash_lsh_candidates ->
-ngram_jaccard_pairs_from_candidates -> union-find) on hostile documents,
-agreement of the driver and distributed cluster routes, and the shape of
-its jobs and plans read from the status store."""
+"""dedup_clusters and minhash_dedup in one pass: parity with the layered
+public path (minhash_signatures -> [signature-group collapse ->]
+minhash_lsh_candidates -> exact Jaccard -> union-find or pair-loser drop)
+on hostile documents, agreement of the driver and distributed cluster
+routes, and the shape of their jobs and plans read from the status
+store."""
 
 import re
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from quad_processor_util_spark.operators import cc
 from quad_processor_util_spark.operators.dedup import (
     _signatures_and_sets,
     dedup_clusters,
     embedding_dedup_clusters,
+    minhash_dedup,
     minhash_lsh_candidates,
     minhash_signatures,
     ngram_jaccard_pairs_from_candidates,
@@ -22,6 +25,7 @@ from quad_processor_util_spark.operators.dedup import (
 )
 from quad_processor_util_spark.oracle import resolve_canonical
 from test_round5 import _subtrees
+from test_round6 import word_shingles
 
 VARIANTS = [("xxhash64", "xxhash64"), ("md5", "concat")]
 
@@ -95,6 +99,44 @@ def test_dedup_clusters_matches_layered_reference(spark, hash_kind,
               bucket_kind=bucket_kind)
     got = _labels(dedup_clusters(docs, **kw))
     assert got == _reference(docs, [i for i, _ in rows], **kw)
+
+
+def _minhash_reference(docs, num_hashes, bands, shingle_n, threshold,
+                       hash_kind, bucket_kind):
+    """Surviving ids from the layered composition: signatures -> min-id
+    representative per signature group -> LSH candidates among the
+    representatives -> exact Jaccard over the Catalyst word_shingles sets
+    -> drop every pair's higher id."""
+    sigs = minhash_signatures(docs, num_hashes=num_hashes,
+                              shingle_n=shingle_n, hash_kind=hash_kind)
+    mh = [c for c in sigs.columns if c.startswith("mh_")]
+    reps = sigs.groupBy(*mh).agg(F.min("doc_id").alias("doc_id"))
+    cands = minhash_lsh_candidates(reps, bands=bands, bucket_kind=bucket_kind)
+    sets = {r.doc_id: set(r.s) for r in docs.select(
+        "doc_id", word_shingles(F.col("text"), shingle_n).alias("s")).collect()}
+    losers = set()
+    for r in cands.collect():
+        a, b = sets[r.id_a], sets[r.id_b]
+        inter = len(a & b)
+        if inter / (len(a) + len(b) - inter) >= threshold:
+            losers.add(r.id_b)
+    return {r.doc_id for r in reps.collect()} - losers
+
+
+@pytest.mark.parametrize("hash_kind,bucket_kind", VARIANTS)
+@settings(max_examples=4, deadline=None)
+@given(rows=_corpus(), shingle_n=st.integers(1, 3),
+       threshold=st.sampled_from([0.3, 0.7, 1.0]))
+def test_minhash_dedup_matches_layered_reference(spark, hash_kind,
+                                                 bucket_kind, rows,
+                                                 shingle_n, threshold):
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kw = dict(num_hashes=12, bands=6, shingle_n=shingle_n,
+              threshold=threshold, hash_kind=hash_kind,
+              bucket_kind=bucket_kind)
+    got = [r.doc_id for r in minhash_dedup(docs, **kw).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _minhash_reference(docs, **kw)
 
 
 def test_signature_aggregate_carries_the_word_shingles_set(spark):
@@ -272,3 +314,30 @@ def test_dedup_clusters_jobs_and_plans(spark, spark_jobs, parquet_docs):
     for sub in dims:
         ops = [re.sub(r"^[ :+*-]*", "", ln).split(" (")[0] for ln in sub]
         assert ops == ["LocalTableScan"], final[0][1]
+
+
+def test_minhash_dedup_jobs_and_plans(spark, spark_jobs, parquet_docs):
+    """One minhash_dedup call and the collect of its result: the executions
+    shingle the documents once (one MapInPandas), never build the Catalyst
+    word_shingles expression, and start at most 10 jobs. The 2-file
+    fixture at a 4-wide shuffle is not re-spread."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+
+    def call():
+        spark.conf.set(key, "4")
+        try:
+            out = minhash_dedup(parquet_docs, **_CHAIN_KW)
+            return sorted(r.doc_id for r in out.select("doc_id").collect())
+        finally:
+            spark.conf.set(key, width)
+
+    got, jobs, plans = spark_jobs(call)
+    # 30 repeats 13 (one signature group); 13 and 23 lose to a hub
+    assert got == [4, 11, 12, 21, 22] + list(range(100, 140))
+    assert len(jobs) <= 10, len(jobs)
+    trees = [_final_tree(p) for _, p in plans]
+    assert sum(len(re.findall(r"- MapInPandas ", t)) for t in trees) == 1, \
+        plans
+    for _, p in plans:
+        assert "array_distinct" not in p and "transform(" not in p, p

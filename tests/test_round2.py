@@ -356,18 +356,48 @@ class TestReviewRegressions:
         assert got == {"e:a": "e:a", "e:b": "e:a", "e:c": "e:a"}
         assert excluded.count() == 0
 
-    def test_band_divisibility_raises(self, spark):
+    def test_band_divisibility_raises(self, spark, spark_jobs):
+        """Bands that do not divide the hashes, and shingle/hash/band counts
+        below 1, raise ValueError on the driver before any job runs."""
         from quad_processor_util_spark.operators.dedup import (
-            minhash_signatures, minhash_lsh_candidates, simhash_candidates,
+            dedup_clusters, minhash_dedup, minhash_signatures,
+            minhash_lsh_candidates, ngram_jaccard_pairs, simhash_candidates,
+            word_shingle_rows,
         )
 
         docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
         sigs = minhash_signatures(docs, num_hashes=32)
-        with pytest.raises(ValueError, match="not divisible"):
-            minhash_lsh_candidates(sigs, bands=5)
         sh = spark.createDataFrame([(1, 7)], "doc_id long, simhash long")
-        with pytest.raises(ValueError, match="not divisible"):
-            simhash_candidates(sh, bands=5)
+        cases = [
+            (lambda: minhash_lsh_candidates(sigs, bands=5), "not divisible"),
+            (lambda: simhash_candidates(sh, bands=5), "not divisible"),
+            (lambda: word_shingle_rows(docs, n=0), "n must be >= 1"),
+            (lambda: minhash_dedup(docs, shingle_n=0), "n must be >= 1"),
+            (lambda: dedup_clusters(docs, shingle_n=-1), "n must be >= 1"),
+            (lambda: ngram_jaccard_pairs(docs, shingle_n=0),
+             "n must be >= 1"),
+            (lambda: minhash_signatures(docs, num_hashes=0),
+             "num_hashes must be >= 1"),
+            (lambda: minhash_dedup(docs, num_hashes=0, bands=1),
+             "num_hashes must be >= 1"),
+            (lambda: minhash_lsh_candidates(sigs, bands=0),
+             "bands must be >= 1"),
+            (lambda: minhash_lsh_candidates(sigs, bands=-4),
+             "bands must be >= 1"),
+            (lambda: dedup_clusters(docs, bands=0), "bands must be >= 1"),
+            (lambda: minhash_dedup(docs, bands=0), "bands must be >= 1"),
+            (lambda: minhash_dedup(docs, bands=5), "not divisible"),
+            (lambda: simhash_candidates(sh, bands=0), "bands must be >= 1"),
+            (lambda: simhash_candidates(sh, bands=-4), "bands must be >= 1"),
+        ]
+
+        def run():
+            for call, match in cases:
+                with pytest.raises(ValueError, match=match):
+                    call()
+
+        _, jobs, _ = spark_jobs(run)
+        assert not jobs
 
     def test_parse_expr_empty_uri_tokens_match_exact_path(
             self, nt_parse_checked):

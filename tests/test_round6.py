@@ -172,11 +172,27 @@ def test_winnow_matches_expression_form_under_memo_eviction(spark,
     assert sorted(map(key, fast)) == sorted(map(key, ref))
 
 
+def word_shingles(col, n: int = 3):
+    """The original pure-expression shingler: an array of distinct word
+    n-gram shingles. The equivalence reference for
+    operators.dedup.word_shingle_rows, whose mapInPandas form emits the same
+    (id, shingle) rows without the interpreted transform."""
+    from quad_processor_util_spark.functions.text import WS_RE
+
+    toks = F.split(F.regexp_replace(F.lower(F.trim(col)), WS_RE, " "), " ")
+    k = F.size(toks) - (n - 1)
+    grams = F.when(
+        k > 0,
+        F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    return F.array_distinct(grams)
+
+
 def test_word_shingle_rows_matches_expression_form(spark):
-    from quad_processor_util_spark.operators.dedup import (
-        word_shingle_rows,
-        word_shingles,
-    )
+    from quad_processor_util_spark.operators.dedup import word_shingle_rows
 
     rows = [
         (1, None), (2, ""), (3, "   "), (4, "one"), (5, "two words"),
