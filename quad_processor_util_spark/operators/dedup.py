@@ -19,6 +19,9 @@ Scale notes (100 TB stance):
 - jaccard: shingle-inverted-index self-join (prefix-filtered) — the only
   quadratic risk is within a shingle bucket; hot shingles are dropped by a
   document-frequency cap (stopword shingles contribute nothing to identity).
+  One per-shingle frequency aggregate applies the cap and gives each
+  shingle its rarest-first order and integer code; no stage runs as a
+  single partition.
 """
 
 from __future__ import annotations
@@ -321,6 +324,20 @@ def _check_bands(what: str, width: int, bands: int) -> None:
                          f"the last {width % bands} would be ignored")
 
 
+def _check_jaccard(what: str, threshold: float,
+                   max_shingle_df: int = 1) -> None:
+    """Raise unless 0 < threshold <= 1 and max_shingle_df >= 1: a threshold
+    of 0 or below pairs every candidate, one above 1 none, and a cap below 1
+    drops every shingle — each a mistake that would otherwise surface only
+    after the jobs have run."""
+    if not 0 < threshold <= 1:
+        raise ValueError(f"{what}: threshold must be in (0, 1] "
+                         f"(got {threshold})")
+    if max_shingle_df < 1:
+        raise ValueError(f"{what}: max_shingle_df must be >= 1 "
+                         f"(got {max_shingle_df})")
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -393,6 +410,7 @@ def minhash_dedup(
     not re-read, semi-joined and re-tokenized for verification."""
     # checked before the representatives' checkpoint runs any job
     _check_bands("minhash_dedup", num_hashes, bands)
+    _check_jaccard("minhash_dedup", threshold)
     rows = word_shingle_rows(df, text_col, id_col, shingle_n).repartition(id_col)
     sigs = _signatures_and_sets(rows, id_col, num_hashes, seed, hash_kind)
     mh_cols = [c for c in sigs.columns if c.startswith("mh_")]
@@ -439,65 +457,36 @@ def ngram_jaccard_pairs(
     (capped) shingle sets. Identical output to the naive quadratic join —
     only the candidate space shrinks (tests/test_round2.py keeps the naive
     join as the reference)."""
-    # The shingle relation feeds several consumers (hot-cap, sizes,
-    # frequency ranking, both prefix sides, the verify sets). Round 6: cut
-    # the lineage with a localCheckpoint so the shingle subtree
-    # materializes ONCE. Like every checkpoint below it takes
-    # eager=False, which is not lazy: under AQE it runs the shuffle stages
-    # beneath it when called and defers only its final stage to first
-    # use. The explain at sf1.0 showed the whole subtree
-    # (scan -> explode -> distinct -> anti-join) planned 8× with no
-    # exchange reuse (each consumer's partial-agg shapes differ), which is
-    # why the query scaled 14× for 10× data (111 s driver-measured). A
-    # round-4 A/B had measured persist() of this relation slower at sf0.1;
-    # re-measured round 6 at sf1.0 the recompute loses by ~4× and the
-    # checkpoint also wins at sf0.1 (OPTIMIZATION_r06.md) — the earlier
-    # verdict was an artifact of the smaller scale. At 100 TB this is the
-    # guide-§8 "decide with small rows" table: ids + shingle hashes, a few
-    # % of corpus bytes, materialized once per run. word_shingle_rows
-    # already emits per-doc-distinct rows, so no global .distinct() shuffle
-    # is needed (the id is part of the key).
+    _check_jaccard("ngram_jaccard_pairs", threshold, max_shingle_df)
+    # The shingle relation feeds two consumers (the vocabulary aggregate
+    # and the coded join), so a localCheckpoint materializes it ONCE: at
+    # sf1.0 the subtree was otherwise planned 8× with no exchange reuse
+    # and the recompute lost by ~4× (OPTIMIZATION_r06.md). Like every
+    # checkpoint below it takes eager=False, which is not lazy: under AQE
+    # it runs the shuffle stages beneath it when called and defers only
+    # its final stage to first use. word_shingle_rows already emits
+    # per-doc-distinct rows, so no global .distinct() is needed.
     sh = word_shingle_rows(df, text_col, id_col, shingle_n) \
         .localCheckpoint(eager=False)
-    # an effectively-unbounded cap (the gate variant passes 1<<31) drops
-    # nothing: skip the hot-shingle aggregate pass + anti-join outright
-    # instead of running them to subtract an empty set (guide §1.2 — don't
-    # compute what the result provably ignores; round 6)
-    if max_shingle_df < (1 << 31):
-        hot = sh.groupBy("__sh").agg(
-            F.count(F.lit(1)).alias("__df")).where(
-            F.col("__df") > max_shingle_df
-        )
-        sh = sh.join(F.broadcast(hot.select("__sh")), "__sh", "left_anti")
-        sh = sh.localCheckpoint(eager=False)
-
-    # Round-6 shape (guide §2.3 "shuffle keys, not payloads" + §8):
-    # the old verify joined ~KB string-shingle ARRAYS onto every
-    # candidate row and shuffled them twice — at sf1.0 (52M candidates
-    # from 50k template-heavy docs) that one stage was 95 of 111 s.
-    # Now: (1) shingles get dense INT codes in global rarest-first
-    # (__freq, __sh) order — the code order IS the old prefix ranking
-    # order, codes are injective so every downstream set size is
-    # identical; (2) candidates are pruned with the exact PPJoin
-    # size + positional bounds (provably no false negatives — see
-    # inline notes; verified output-identical by the oracle gate and
-    # tests); (3) _verify_pairs computes the jaccard on the int-code
-    # sets, so no string arrays anywhere. The vocab-wide rank window is
-    # a single sequential pass over the DISTINCT-shingle relation (Heaps-law
-    # sublinear; the production max_shingle_df cap bounds it further) —
-    # at a truly enormous vocab assign codes with a range-partitioned
-    # two-pass rank (operators/packing.py pattern) instead.
+    # ONE vocabulary aggregate carries the df-cap, the rarest-first order
+    # and an integer key. (__freq, __code) is a total order shared by every
+    # document and still rarest-first, which is all the PPJoin bounds below
+    # need; monotonically_increasing_id is unique across partitions, so the
+    # code is injective and verification runs on integer sets, never on
+    # shingle strings. No rank over the whole vocabulary (a single-partition
+    # Window) is needed. Both join sides are hash-partitioned on __sh, so a
+    # shingle's code and every row that carries it come from one task, and
+    # the inner join drops the hot shingles in the same step (dropping them
+    # leaves the other shingles' frequencies as they are). Codes differ
+    # between runs; the pairs and their Jaccard values do not.
     codes = (
         sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__freq"))
-        .withColumn(
-            "__code",
-            F.row_number().over(Window.orderBy("__freq", "__sh")),
-        )
-        .select("__sh", "__code")
+        .where(F.col("__freq") <= max_shingle_df)
+        .withColumn("__code", F.monotonically_increasing_id())
     )
     shc = (
         sh.join(codes, "__sh")
-        .select(id_col, "__code")
+        .select(id_col, "__code", "__freq")
         .localCheckpoint(eager=False)
     )
     # __pos and __sz from ONE window pass (count over the same
@@ -507,7 +496,7 @@ def ngram_jaccard_pairs(
     wdoc = Window.partitionBy(id_col)
     ranked = shc.select(
         id_col, "__code",
-        F.row_number().over(wdoc.orderBy("__code")).alias("__pos"),
+        F.row_number().over(wdoc.orderBy("__freq", "__code")).alias("__pos"),
         F.count(F.lit(1)).over(wdoc).alias("__sz"),
     )
     # epsilon guards the ceil against upward float error at integer
@@ -516,7 +505,8 @@ def ngram_jaccard_pairs(
     # indexed position per doc (+~4% join rows) buys the right to
     # demand TWO shared prefix codes downstream: for any pair with
     # J >= t (so |A∩B| = α >= ceil(t·|A|) under the size-ratio
-    # filter), the two SMALLEST shared codes e1 < e2 each have >= α-j
+    # filter), the two FIRST shared codes e1 < e2 (in the global
+    # (__freq, __code) order) each have >= α-j
     # intersection elements after them, hence pos(e_j) <= |X| - α + j
     # <= |X| - ceil(t·|X|) + 2 in both docs — both land in both
     # extended prefixes. Requiring cnt >= 2 then kills the dominant
@@ -532,7 +522,7 @@ def ngram_jaccard_pairs(
     # - size bound: J(A,B) <= min/max, so J >= t forces
     #   min(|A|,|B|) >= t*max(|A|,|B|);
     # - positional bound: if |A∩B| >= minov, the FIRST shared element
-    #   (in code order) sits at pos_X <= |X| - |A∩B| + 1 in both docs,
+    #   (in the global order) sits at pos_X <= |X| - |A∩B| + 1 in both docs,
     #   and it IS a prefix element of both, so that occurrence passes
     #   1 + min(|A|-posA, |B|-posB) >= |A∩B| >= minov.
     # epsilons relax the float comparisons downward only (a relaxed
@@ -546,7 +536,7 @@ def ngram_jaccard_pairs(
     # exchange, map-side combined) accumulating the PPJoin LAST-match
     # bound: cnt shared prefix codes + positions of the LAST shared
     # one. Soundness (no false negatives): with per-doc positions
-    # monotone in the global code order, every intersection element
+    # monotone in the global order, every intersection element
     # <= the last shared prefix code l is itself in BOTH prefixes
     # (pos <= pos(l) <= prefix length) and hence counted in cnt;
     # elements > l occupy distinct positions after pos(l) in both
@@ -595,7 +585,7 @@ def ngram_jaccard_pairs(
              >= F.least(F.lit(2), F.ceil(minov_g)))
             # (2) last-position bound: every shared code <= the last
             #     counted one IS counted (positions are monotone in
-            #     code order, so it sits inside both prefixes and its
+            #     the global order, so it sits inside both prefixes and its
             #     row passes the relaxed row filter); codes beyond it
             #     fit in the shorter remaining suffix
             & (F.col("__cnt")
@@ -624,6 +614,7 @@ def ngram_jaccard_pairs_from_candidates(
     some candidate pair are shingled, and only once: the sets relation is
     under a localCheckpoint, which under AQE runs its shuffle stages when
     it is called."""
+    _check_jaccard("ngram_jaccard_pairs_from_candidates", threshold)
     cand_ids = (
         candidates.select(F.col("id_a").alias(id_col))
         .union(candidates.select(F.col("id_b").alias(id_col)))
@@ -785,6 +776,7 @@ def dedup_clusters(
     collapse (see minhash_dedup) before banding and expand cluster ids
     back through the groups; the gate variant skips the collapse so the
     SQL oracle replays 1:1."""
+    _check_jaccard("dedup_clusters", threshold)
     # banding reads the signatures and verification the sets, so column
     # pruning splits the one groupBy into two aggregates; hash-partitioning
     # the shingle rows on the id lets both run over ONE reused exchange,

@@ -20,11 +20,8 @@ two aggregations that implies).
 combine; vocabulary is Heaps-law sublinear and ``min_count`` pruning caps
 it hard), the totals are a 1-row aggregate crossed in via a broadcast
 nested-loop (a scalar, never a driver collect), and the score pass is
-explode -> join on token -> one groupBy on the doc id. With
-``broadcast_vocab=True`` (default — right whenever the pruned vocabulary
-fits an executor, i.e. virtually always) the corpus never shuffles for the
-join; set it False for adversarially huge vocabularies and let
-Catalyst/AQE pick the join side instead.
+explode -> join on token against the broadcast pruned vocabulary (the
+corpus never shuffles for it) -> one groupBy on the doc id.
 """
 from __future__ import annotations
 
@@ -51,7 +48,6 @@ def unigram_logprob_score(
     id_col: str = "doc_id",
     min_count: int = 1,
     fit_on: Optional[DataFrame] = None,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """-> (id_col, n_tokens BIGINT, avg_logprob DOUBLE): per-document mean
     natural-log unigram probability under an LM fit on ``fit_on`` (default:
@@ -95,9 +91,8 @@ def unigram_logprob_score(
     # the vocab join and is excluded from both count(tok) and avg(lp)
     doc_toks = docs.select(
         id_col, F.explode_outer(_tokens(F.col(text_col))).alias("tok"))
-    v = F.broadcast(vocab) if broadcast_vocab else vocab
     return (
-        doc_toks.join(v, "tok", "left")
+        doc_toks.join(F.broadcast(vocab), "tok", "left")
         .join(F.broadcast(totals))       # 1 row: BroadcastNestedLoopJoin
         .select(
             id_col,

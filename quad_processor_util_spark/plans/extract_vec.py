@@ -6,10 +6,13 @@ the flagship hot path). It replaces a per-row Python loop with batch-level
 work:
 
 - ONE gazetteer regex scan per Arrow batch over a ``\\x00``-joined
-  mega-string (the regex engine runs in C; row boundaries are ``\\x00``,
-  which no gazetteer form, relation connector, or pattern can match
-  across, and which satisfies the word-boundary lookarounds exactly like
-  start/end-of-string does per row);
+  mega-string (the regex engine runs in C). Rows are found from their
+  start offsets, never by splitting on ``\\x00``; every anchored match
+  stops at its row's end; no gazetteer form may contain ``\\x00``
+  (pipeline.broadcast_gazetteer rejects one); and ``\\x00`` is a non-word
+  character, so it satisfies the word-boundary lookarounds exactly like
+  start/end-of-string does per row. Texts that contain ``\\x00`` take the
+  same route;
 - numpy offset arithmetic maps absolute match positions back to rows;
 - overlap-policy, relation, population/label and unknown-mention logic
   run on flat arrays, with per-row Python only for the rare rows whose
@@ -364,17 +367,6 @@ def extract_batch_arrow(rb, gaz: Gazetteer, policy: str = "LONGEST_DOMINANT_RIGH
     if isinstance(enc, pa.ChunkedArray):
         enc = enc.combine_chunks()
     utexts = enc.dictionary.to_pylist()
-    if any(t is not None and _SEP in t for t in utexts):
-        # exact fallback through the per-row oracle path
-        # integer_object_nulls: a NULL turn_idx must not turn the column
-        # into floats ('3.0' instead of the vectorized path's '3')
-        out = _extract_batch_rows(rb.to_pandas(integer_object_nulls=True),
-                                  gaz, policy, emit_unknown)
-        if not len(out):
-            return None
-        return pa.RecordBatch.from_pandas(
-            out, schema=pa.schema([(f, pa.string()) for f in QUAD_FIELDS]),
-            preserve_index=False)
     # NULL text rows -> the "" template (the per-row oracle's `text or ""`)
     null_tid = None
     if enc.indices.null_count:
@@ -477,9 +469,8 @@ def _extract_batch_rows(
     policy: str,
     emit_unknown: bool,
 ) -> pd.DataFrame:
-    """The per-row oracle: exact reference semantics, one row at a time.
-    Also extract_batch_arrow's fallback for batches whose texts contain the
-    \\x00 separator."""
+    """The per-row oracle: exact reference semantics, one row at a time
+    (tests/test_extract_vec.py checks extract_batch_arrow against it)."""
     cols: dict[str, list] = {f: [] for f in QUAD_FIELDS}
     app = [cols[f].append for f in QUAD_FIELDS]
     for conv_id, turn_idx, role, text, tool in zip(
@@ -487,8 +478,8 @@ def _extract_batch_rows(
         pdf["role"].to_numpy(), pdf["text"].to_numpy(), pdf["tool"].to_numpy(),
     ):
         # str() matches extract_batch_arrow's string cast: a non-string
-        # conv_id (int64 convs) must not crash only on the \x00-fallback
-        # route (round-4 review finding). NULL turn_idx renders 'None' on
+        # conv_id (int64 convs) must not crash the oracle (round-4 review
+        # finding). NULL turn_idx renders 'None' on
         # every path (NaN floats would otherwise print 'nan' here but
         # 'None' on the arrow path — round-6 review finding)
         graph = "http://example.org/conv/" + str(conv_id)

@@ -235,9 +235,8 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
     from .extract_vec import extract_batch_arrow, link_placeholder_batch
 
     # fail FAST on the driver: a typo'd policy must not surface as a task
-    # failure hours into a run whose early batches had no mentions — and
-    # the \x00 per-row fallback route only raised for rows whose mentions
-    # actually overlap, so it could even complete silently (round-5 review)
+    # failure hours into a run whose early batches had no mentions (the
+    # kernel checks it only in batches with mentions; round-5 review)
     if policy not in ("ALL", "NO_SUB", "LONGEST_DOMINANT_RIGHT"):
         raise ValueError(f"unknown overlap policy: {policy!r}")
 

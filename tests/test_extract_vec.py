@@ -166,7 +166,8 @@ def test_empty_batch(gaz):
 
 
 def test_nul_separator_fallback(gaz):
-    """Texts containing \\x00 take the exact per-row fallback."""
+    """Texts containing \\x00 (the mega-string's row separator) take the
+    one vectorized route and still match the per-row oracle."""
     pdf = _frame(["Ada Lovelace works at Hopper Labs.", "weird\x00byte Ada Lovelace"])
     _check_parity(pdf, gaz)
 
@@ -240,7 +241,9 @@ try:
         if kind == "null":
             return None
         parts = draw(st.lists(
-            st.one_of(st.sampled_from(_WORDS + ["\x00", "Ada\x00Lovelace"]),
+            st.one_of(st.sampled_from(_WORDS + [
+                "\x00", "Ada\x00Lovelace", "\x00Ada", "Lovelace\x00",
+                "works at\x00"]),
                       st.text(max_size=12)),
             min_size=1, max_size=10))
         text = " ".join(parts)
@@ -283,7 +286,7 @@ try:
     @settings(max_examples=60, deadline=None)
     def test_linked_property_parity(forms, pdf, policy):
         """The same hostile batches with the kernel's placeholders linked
-        by link_placeholder_batch (the \\x00 fallback included) against
+        by link_placeholder_batch (texts with \\x00 included) against
         the per-row oracle's placeholders mapped through the same
         SurfaceLinker."""
         g = Gazetteer({f: f"http://e/{i}" for i, f in enumerate(sorted(forms))})

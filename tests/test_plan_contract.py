@@ -49,9 +49,9 @@ CHECKS = {
     # mapInArrow (one Arrow stage, pinned below) — no persist, no split,
     # no links join; the only BroadcastHashJoins are canonicalize's
     "pipeline_full": ["MapInArrow", "BroadcastHashJoin", "HashAggregate"],
-    # the shingle codes (and their vocabulary-wide Window) are built
-    # eagerly under a localCheckpoint; the visible plan is the coded-pair
-    # join and overlap aggregate over that checkpoint
+    # the shingle codes (one vocabulary aggregate joined back onto the
+    # shingle rows) are built eagerly under a localCheckpoint; the visible
+    # plan is the coded-pair join and overlap aggregate over that checkpoint
     "jaccard_pairs": ["Scan ExistingRDD", "SortMergeJoin", "HashAggregate"],
     # map-only per-row folds / row expansion: no Exchange anywhere
     "repetition_metrics": ["codegen id", "ReadSchema"],

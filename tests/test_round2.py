@@ -278,22 +278,50 @@ class TestJaccardPrefixFilter:
     @pytest.mark.parametrize("threshold", [0.3, 0.5, 0.7, 0.9])
     def test_prefix_filtered_equals_naive(self, spark, sf_dir, threshold):
         """Prefix filtering is a lossless candidate reduction: output must be
-        identical to the naive quadratic join at every threshold."""
+        identical to the naive quadratic join at every threshold, under the
+        default df-cap (which drops nothing from 200 documents) and under
+        a cap of 2 (which drops every shingle shared by 3 or more)."""
         import os as _os
 
         docs = spark.read.parquet(
             _os.path.join(sf_dir, "documents.parquet")
         ).limit(200)
-        fast = {
-            (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(
-                docs, shingle_n=3, threshold=threshold).collect()
-        }
-        naive = {
-            (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in _naive_jaccard_pairs(docs, threshold).collect()
-        }
-        assert fast == naive
+        for cap in (1000, 2):
+            fast = {
+                (r.id_a, r.id_b): round(r.jaccard, 9)
+                for r in ngram_jaccard_pairs(
+                    docs, shingle_n=3, threshold=threshold,
+                    max_shingle_df=cap).collect()
+            }
+            naive = {
+                (r.id_a, r.id_b): round(r.jaccard, 9)
+                for r in _naive_jaccard_pairs(
+                    docs, threshold, max_shingle_df=cap).collect()
+            }
+            assert fast == naive, cap
+
+    def test_no_single_partition_stage_or_anti_join(self, spark, spark_jobs,
+                                                    sf_dir):
+        """Every execution of one call and of its collect, read from the
+        status store (the checkpointed ones included), uncapped and capped:
+        no SinglePartition exchange (shingle codes come from the vocabulary
+        aggregate, not from a rank over the whole vocabulary) and no
+        LeftAnti join (the cap filters that same aggregate)."""
+        import os as _os
+
+        rows = spark.read.parquet(
+            _os.path.join(sf_dir, "documents.parquet")
+        ).select("doc_id", "text").limit(200).collect()
+        # a local relation: a limit over the scan would plan its own
+        # SinglePartition exchange
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        for cap in (1 << 31, 2):
+            _, jobs, plans = spark_jobs(lambda: ngram_jaccard_pairs(
+                docs, threshold=0.5, max_shingle_df=cap).collect())
+            assert jobs and plans, cap
+            for _, plan in plans:
+                assert "SinglePartition" not in plan, plan
+                assert "LeftAnti" not in plan, plan
 
 
 class TestReviewRegressions:
@@ -357,15 +385,18 @@ class TestReviewRegressions:
         assert excluded.count() == 0
 
     def test_band_divisibility_raises(self, spark, spark_jobs):
-        """Bands that do not divide the hashes, and shingle/hash/band counts
-        below 1, raise ValueError on the driver before any job runs."""
+        """Bands that do not divide the hashes, shingle/hash/band counts
+        below 1, a Jaccard threshold outside (0, 1] and a df-cap below 1
+        raise ValueError on the driver before any job runs."""
         from quad_processor_util_spark.operators.dedup import (
             dedup_clusters, minhash_dedup, minhash_signatures,
-            minhash_lsh_candidates, ngram_jaccard_pairs, simhash_candidates,
+            minhash_lsh_candidates, ngram_jaccard_pairs,
+            ngram_jaccard_pairs_from_candidates, simhash_candidates,
             word_shingle_rows,
         )
 
         docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+        cands = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
         sigs = minhash_signatures(docs, num_hashes=32)
         sh = spark.createDataFrame([(1, 7)], "doc_id long, simhash long")
         cases = [
@@ -389,6 +420,18 @@ class TestReviewRegressions:
             (lambda: minhash_dedup(docs, bands=5), "not divisible"),
             (lambda: simhash_candidates(sh, bands=0), "bands must be >= 1"),
             (lambda: simhash_candidates(sh, bands=-4), "bands must be >= 1"),
+            (lambda: ngram_jaccard_pairs(docs, threshold=0), "threshold"),
+            (lambda: ngram_jaccard_pairs(docs, threshold=1.5), "threshold"),
+            (lambda: ngram_jaccard_pairs(docs, threshold=float("nan")),
+             "threshold"),
+            (lambda: ngram_jaccard_pairs(docs, max_shingle_df=0),
+             "max_shingle_df must be >= 1"),
+            (lambda: ngram_jaccard_pairs_from_candidates(
+                docs, cands, threshold=-0.1), "threshold"),
+            (lambda: minhash_dedup(docs, threshold=0), "threshold"),
+            (lambda: minhash_dedup(docs, threshold=2), "threshold"),
+            (lambda: dedup_clusters(docs, threshold=0), "threshold"),
+            (lambda: dedup_clusters(docs, threshold=1.01), "threshold"),
         ]
 
         def run():

@@ -205,8 +205,8 @@ class TestReviewFixes:
         assert len(nt_parse_checked(lines)) == 3
 
     def test_fallback_row_path_handles_int_conv_id(self):
-        """The \\x00-fallback extraction path must coerce conv_id to str
-        like the vectorized path's astype(str) (r4 review finding)."""
+        """The per-row oracle must coerce conv_id to str like the
+        vectorized path's string cast (r4 review finding)."""
         import numpy as np
         import pandas as pd
 
