@@ -1138,17 +1138,19 @@ def _q_pipeline_e2e(spark, sf_dir):
 
 def _q_pipeline_full(spark, sf_dir):
     """The complete 4-stage composition the reference's solr-loader runs
-    (SolrLoader.scala:96-244): extract with fuzzy entity linking (the
-    production route, extract_quads(catalog=...): one mapInArrow) -> CC
-    canonicalize + exclusion -> distinct. The transcripts carry a
-    deterministic unknown surface ('Hoppr Labs', a typo of a catalog org)
-    in every turn; linking resolves it by char-3-gram Jaccard x weight
-    scoring over the catalog — and the oracle REPLAYS that scoring in SQL
-    to derive the linked entity rather than stating it."""
+    (SolrLoader.scala:96-244): extract with fuzzy entity linking -> CC
+    canonicalize + exclusion -> distinct, on run_pipeline's production
+    route for a driver-sized alias graph: extract_quads(catalog=...,
+    canonical=...) links and canonicalizes in the one mapInArrow
+    (pipeline_e2e keeps canonical_mapping + canonicalize's broadcast
+    joins). The transcripts carry a deterministic unknown surface ('Hoppr
+    Labs', a typo of a catalog org) in every turn; linking resolves it by
+    char-3-gram Jaccard x weight scoring over the catalog — and the oracle
+    REPLAYS that scoring in SQL to derive the linked entity rather than
+    stating it."""
     import pandas as pd
 
-    from quad_processor_util_spark.operators.cc import canonical_mapping
-    from quad_processor_util_spark.plans.pipeline import canonicalize
+    from quad_processor_util_spark.operators.cc import driver_canonical
 
     ev = _t(spark, sf_dir, "events")
     people = F.array(*[F.lit(p) for p in _PEOPLE])
@@ -1169,9 +1171,8 @@ def _q_pipeline_full(spark, sf_dir):
         [(n, _GAZ[n], 1.0) for n in _PEOPLE + _ORGS],
         columns=["surface_form", "entity_iri", "form_weight"],
     )
-    quads = extract_quads(tr, _GAZ, assume_bucketed=True, catalog=catalog)
-    mapping, excluded = canonical_mapping(_e2e_alias_edges(spark))
-    canon = canonicalize(quads, mapping, excluded)
+    canon = extract_quads(tr, _GAZ, assume_bucketed=True, catalog=catalog,
+                          canonical=driver_canonical(_e2e_alias_edges(spark)))
     return canon.select("subject", "predicate", "obj", "graph").distinct()
 
 

@@ -25,7 +25,8 @@ connected_components resolves a graph of at most DRIVER_EDGES edges on
 the driver from ONE bounded collect and returns an Arrow-built local
 relation (DataFrame.isLocal()) of the edges' own key type; larger graphs
 run the loop above. canonical_mapping makes the same split from its own
-collect.
+collect (driver_canonical), which run_pipeline calls directly so a
+driver-sized graph's resolution can ride inside the extraction kernel.
 
 Canonical = MIN node of each component in the key type's order
 (deterministic).
@@ -154,31 +155,59 @@ def canonical_mapping(
     disambiguation sources (-> excluded set, the anti-join side,
     SolrLoader.scala:124-127). Returns (mapping(node, canonical), excluded(iri)).
 
-    One bounded collect reads at most DRIVER_EDGES + 1 edges. A graph at
-    or below DRIVER_EDGES edges is resolved by oracle.resolve_canonical on
-    the driver (the reference's in-memory redirect maps, SolrLoader.scala:
-    41-84) and both frames come back as Arrow-built local relations, so
-    they start no job and parallelize no RDD. A larger graph runs the
-    distributed pointer-jumping loop, and `excluded` stays lazy."""
+    A graph that driver_canonical resolves comes back as two Arrow-built
+    local relations, so they start no job and parallelize no RDD; a larger
+    graph runs distributed_canonical, and `excluded` stays lazy."""
+    resolved = driver_canonical(alias_edges, src, dst, kind)
+    if resolved is None:
+        return distributed_canonical(alias_edges, src, dst, kind, max_iter)
+    mapping, excluded = resolved
+    spark = alias_edges.sparkSession
+    return (
+        _local_components(spark, mapping, alias_edges.schema[src].dataType),
+        spark.createDataFrame(pa.table({
+            "iri": pa.array(list(excluded), pa.string())})),
+    )
+
+
+def driver_canonical(
+    alias_edges: DataFrame,
+    src: str = "src_iri",
+    dst: str = "dst_iri",
+    kind: str = "edge_kind",
+) -> tuple[dict, set] | None:
+    """canonical_mapping's driver half: ONE bounded collect of at most
+    DRIVER_EDGES + 1 edges. A graph at or below DRIVER_EDGES edges is
+    resolved by oracle.resolve_canonical (the reference's in-memory
+    redirect maps, SolrLoader.scala:41-84) into ({node: canonical},
+    excluded IRIs); a larger graph returns None, and the caller runs
+    distributed_canonical without a second probe.
+
+    NULL edge_kind counts as an equivalence; an equivalence with a NULL
+    endpoint is never unioned (as in the distributed path's _edge_pairs);
+    a disambiguation source is excluded even when it is NULL, as in the
+    distributed path's distinct."""
     rows = (alias_edges.select(src, dst, kind)
             .limit(DRIVER_EDGES + 1).collect())
-    if len(rows) <= DRIVER_EDGES:
-        from ..oracle import resolve_canonical
+    if len(rows) > DRIVER_EDGES:
+        return None
+    from ..oracle import resolve_canonical
 
-        # NULL edge_kind counts as an equivalence; an equivalence with a
-        # NULL endpoint is never unioned (_edge_pairs drops it);
-        # a disambiguation source is excluded even when it is NULL, as in
-        # the distributed path's distinct
-        mapping, excluded = resolve_canonical(
-            [(s, d, k) for s, d, k in rows
-             if k == "disambiguation" or (s is not None and d is not None)])
-        spark = alias_edges.sparkSession
-        return (
-            _local_components(spark, mapping,
-                              alias_edges.schema[src].dataType),
-            spark.createDataFrame(pa.table({
-                "iri": pa.array(list(excluded), pa.string())})),
-        )
+    return resolve_canonical(
+        [(s, d, k) for s, d, k in rows
+         if k == "disambiguation" or (s is not None and d is not None)])
+
+
+def distributed_canonical(
+    alias_edges: DataFrame,
+    src: str = "src_iri",
+    dst: str = "dst_iri",
+    kind: str = "edge_kind",
+    max_iter: int = 20,
+) -> tuple[DataFrame, DataFrame]:
+    """canonical_mapping's distributed half: (mapping(node, canonical) by
+    the pointer-jumping loop, lazy excluded(iri)), for graphs that
+    driver_canonical showed to be over the bound."""
     # NULL edge_kind counts as an equivalence (plain `!=` would silently
     # drop the edge: NULL != 'disambiguation' is NULL, not true)
     equiv = alias_edges.where(
@@ -189,6 +218,5 @@ def canonical_mapping(
         .select(F.col(src).alias("iri"))
         .distinct()
     )
-    # the collect above already showed the graph is over the bound
     mapping = _pointer_jumping(_edge_pairs(equiv, src, dst), max_iter)
     return mapping, excluded

@@ -28,11 +28,13 @@ oracle :func:`_extract_batch_rows`.
 :func:`link_placeholder_batch` is the one place an
 operators.linking.SurfaceLinker links extracted quads: it rewrites the
 placeholders of a quad batch to ex:mentions quads in their place, or drops
-them.
-The extraction closure composes the two in one mapInArrow
+them. :func:`canonicalize_batch` rewrites a quad batch to canonical IRIs
+over a :func:`canonical_dimension` built from a driver-resolved alias
+graph, and drops the quads that touch excluded IRIs.
+The extraction closure composes the three in one mapInArrow
 (plans/pipeline.make_extract_fn). Reference semantics:
 solr/SolrHandler.java:367-512 (tagger + policies); QuadMapper.scala:104-128
-(sorted-group map); SolrLoader.scala:96-244 (linking).
+(sorted-group map); SolrLoader.scala:96-244 (linking, canonicalization).
 
 Pure pyarrow/numpy/pandas + oracle helpers — no Spark imports (runs inside
 executors' mapInArrow closures and inside pytest alike).
@@ -534,4 +536,63 @@ def link_placeholder_batch(rb, linker):
         rb.column("dataset"),
     ]
     keep = pc.or_(pc.invert(mask), pc.is_valid(iris))
+    return pa.RecordBatch.from_arrays(cols, QUAD_FIELDS).filter(keep)
+
+
+def canonical_dimension(mapping_rows, excluded_iris):
+    """The canonicalization dimension as an Arrow RecordBatch (iri,
+    canonical, __x): one row per non-NULL IRI, canonical = the max of its
+    non-NULL canonicals, __x TRUE when the IRI or any of its canonicals is
+    excluded (else NULL); excluded IRIs that are not mapping nodes get
+    (iri, NULL, TRUE). Rows that would change nothing (not flagged, and a
+    NULL canonical or the IRI itself) are left out. This is the rule of
+    plans/pipeline.canonicalize's Catalyst dimension, over (node,
+    canonical) pairs and excluded IRIs."""
+    import pyarrow as pa
+
+    ex = {iri for iri in excluded_iris if iri is not None}
+    canon: dict[str, str | None] = {}
+    flagged: set[str] = set()
+    for node, c in mapping_rows:
+        if node is None:
+            continue
+        prev = canon.get(node)
+        if prev is None or (c is not None and c > prev):
+            canon[node] = c
+        if c in ex:
+            flagged.add(node)
+    for iri in ex:
+        canon.setdefault(iri, None)
+    flagged |= ex
+    iris = [i for i, c in canon.items()
+            if i in flagged or (c is not None and c != i)]
+    return pa.RecordBatch.from_arrays([
+        pa.array(iris, pa.string()),
+        pa.array([canon[i] for i in iris], pa.string()),
+        pa.array([True if i in flagged else None for i in iris], pa.bool_()),
+    ], ["iri", "canonical", "__x"])
+
+
+def canonicalize_batch(rb, dim):
+    """One Arrow RecordBatch of quads -> the same rows with subject and URI
+    objects (datatype NULL) rewritten to their canonical IRIs, without the
+    rows whose subject or URI object is flagged in `dim`
+    (canonical_dimension). Equal to oracle.canonicalize_quads per row; row
+    order is kept. Each column is one ``pc.index_in`` probe of the
+    dimension plus ``take``/``coalesce``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rb = _as_string(rb)
+    iris, canon, flag = dim.columns
+    subj, obj = rb.column("subject"), rb.column("obj")
+    si = pc.index_in(subj, value_set=iris)
+    oi = pc.if_else(pc.is_null(rb.column("datatype")),
+                    pc.index_in(obj, value_set=iris),
+                    pa.scalar(None, pa.int32()))
+    keep = pc.invert(pc.or_(pc.fill_null(flag.take(si), False),
+                            pc.fill_null(flag.take(oi), False)))
+    cols = [pc.coalesce(canon.take(si), subj) if f == "subject"
+            else pc.coalesce(canon.take(oi), obj) if f == "obj"
+            else rb.column(f) for f in QUAD_FIELDS]
     return pa.RecordBatch.from_arrays(cols, QUAD_FIELDS).filter(keep)

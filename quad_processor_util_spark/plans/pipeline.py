@@ -1,19 +1,23 @@
 """The KG-construction pipeline: extract → link → canonicalize → materialize.
 
 Spark-first restatement of the reference's three launchers (SURVEY.md §3):
-sorted-group traversal (QuadReader.scala:44-90) becomes an explicit
-repartition-by-conv_id + in-partition secondary sort feeding Arrow batches;
-the solr-loader's hash-map canonicalization (SolrLoader.scala:41-84) becomes
-connected components + broadcast joins; the predicate splitter
-(DumpSplitter.scala:46-60) becomes write.partitionBy.
+sorted-group traversal (QuadReader.scala:44-90) becomes Arrow batches of
+turns (extraction is per turn, so no grouping is needed for correctness;
+stable_order's repartition-by-conv_id + in-partition sort remains for
+callers that want a per-conversation output order); the solr-loader's
+hash-map canonicalization (SolrLoader.scala:41-84) becomes connected
+components plus a dimension applied per batch or broadcast-joined; the
+predicate splitter (DumpSplitter.scala:46-60) becomes write.partitionBy.
 
 Hot-path rules: extraction is mapInArrow (Arrow batches, no per-row Python
-UDF calls, no extra shuffle beyond the one explicit conv_id repartition);
-linking runs inside that same mapInArrow (the entity catalog is a broadcast
-dimension, each distinct unknown surface of a batch one index lookup — no
-persist, no join);
-canonicalization joins broadcast the mapping; dedup is one shuffle on the
-5-field identity.
+UDF calls); linking runs inside that same mapInArrow (the entity catalog is
+a broadcast dimension, each distinct unknown surface of a batch one index
+lookup — no persist, no join); for a driver-sized alias graph
+canonicalization runs there too (extract_vec.canonicalize_batch over a
+broadcast dimension), so run_pipeline is one Python pass over the scan
+splits and one dedup shuffle on the 5-field identity. A larger graph is
+canonicalized by broadcast joins against canonicalize's Catalyst
+dimension.
 """
 
 from __future__ import annotations
@@ -27,14 +31,16 @@ from ..operators.linking import SurfaceLinker, catalog_rows
 from ..session import job_description, worker_kernel
 from ..sources.io import write_quads_partitioned_by_predicate
 
-# Per-worker cache of the objects built from a broadcast (gazetteers and
-# surface linkers), keyed by a CONTENT key shipped inside the broadcast
-# value. (Keying by id(bc) would never hit across tasks and — worse — an
-# address-reuse collision in a reused Python worker could serve a stale
-# object from a previous job.) Bounded: distinct gazetteers and catalogs
-# per app are few; cleared defensively if it ever grows past the cap.
-_WORKER_CACHE: dict[str, object] = {}
-_WORKER_CACHE_CAP = 16
+# Per-worker cache of the objects built from a broadcast (gazetteers,
+# surface linkers, canonicalization dimensions), keyed by a CONTENT key
+# shipped inside the broadcast value. (Keying by id(bc) would never hit
+# across tasks and — worse — an address-reuse collision in a reused Python
+# worker could serve a stale object from a previous job.) Capped in bytes:
+# each entry is charged the pickled size of its broadcast value, measured
+# once on the driver; the oldest entries are evicted to make room, and a
+# value over the cap is built per task and never cached.
+_WORKER_CACHE: dict[str, tuple[int, object]] = {}
+_WORKER_CACHE_BYTES = 64 << 20
 
 # Driver-side broadcast cache: repeated calls with the same gazetteer or
 # catalog reuse ONE broadcast instead of pinning a new block per call
@@ -66,29 +72,37 @@ def _gaz_content_key(surface_to_iri: dict[str, str]) -> str:
 
 
 def _broadcast_once(spark: SparkSession, key: str, value):
-    """Broadcast (key, value) once per distinct key per app."""
+    """Broadcast (key, pickled size of value, value) once per distinct key
+    per app."""
     app = spark.sparkContext.applicationId
     bc = _BC_CACHE.get((app, key))
     if bc is None:
+        import pickle
+
         # purge entries of OTHER apps: a long-lived driver cycling
         # SparkSessions must not pin dead Broadcast handles forever
         # (round-5 review finding)
         for stale in [t for t in _BC_CACHE if t[0] != app]:
             del _BC_CACHE[stale]
-        bc = spark.sparkContext.broadcast((key, value))
+        nbytes = len(pickle.dumps(value, pickle.HIGHEST_PROTOCOL))
+        bc = spark.sparkContext.broadcast((key, nbytes, value))
         _BC_CACHE[(app, key)] = bc
     return bc
 
 
 def _from_broadcast(bc, build):
-    """The worker's object for a broadcast (key, value), built once."""
-    key, value = bc.value
-    obj = _WORKER_CACHE.get(key)
-    if obj is None:
-        if len(_WORKER_CACHE) >= _WORKER_CACHE_CAP:
-            _WORKER_CACHE.clear()
-        obj = build(value)
-        _WORKER_CACHE[key] = obj
+    """The worker's object for a broadcast (key, nbytes, value), built once
+    per key while it stays in the byte-capped _WORKER_CACHE."""
+    key, nbytes, value = bc.value
+    hit = _WORKER_CACHE.get(key)
+    if hit is not None:
+        return hit[1]
+    obj = build(value)
+    if nbytes <= _WORKER_CACHE_BYTES:
+        used = sum(n for n, _ in _WORKER_CACHE.values())
+        while used + nbytes > _WORKER_CACHE_BYTES:
+            used -= _WORKER_CACHE.pop(next(iter(_WORKER_CACHE)))[0]
+        _WORKER_CACHE[key] = (nbytes, obj)
     return obj
 
 
@@ -116,12 +130,38 @@ def broadcast_catalog(spark: SparkSession, rows, min_jaccard: float = 0.4):
     return _broadcast_once(spark, key, (rows, min_jaccard))
 
 
+def broadcast_canonical(spark: SparkSession, mapping: dict, excluded):
+    """Broadcast a driver-resolved alias graph ({node: canonical},
+    excluded IRIs — cc.driver_canonical's result) once per distinct graph
+    per app; workers build its extract_vec.canonical_dimension. Nodes,
+    canonicals and excluded IRIs must be strings (ValueError here
+    otherwise; a NULL excluded IRI is ignored, as a join on it never
+    matches)."""
+    ex = [i for i in excluded if i is not None]
+    bad = [repr(v) for kv in mapping.items() for v in kv
+           if not isinstance(v, str)]
+    bad += [repr(i) for i in ex if not isinstance(i, str)]
+    if bad:
+        raise ValueError(
+            f"canonical: alias IRIs must be strings, got {bad[:3]}")
+    items, ex = sorted(mapping.items()), sorted(ex)
+    key = "canon:%s:%s" % (_content_key(items),
+                           _content_key((i,) for i in ex))
+    return _broadcast_once(spark, key, (items, ex))
+
+
 def _get_gazetteer(bc) -> Gazetteer:
     return _from_broadcast(bc, Gazetteer)
 
 
 def _get_linker(bc) -> SurfaceLinker:
     return _from_broadcast(bc, lambda v: SurfaceLinker(*v))
+
+
+def _get_dimension(bc):
+    from .extract_vec import canonical_dimension
+
+    return _from_broadcast(bc, lambda v: canonical_dimension(*v))
 
 
 def stable_order(transcripts: DataFrame) -> DataFrame:
@@ -154,21 +194,23 @@ def extract_quads(
     emit_unknown: bool = False,
     assume_bucketed: bool = False,
     catalog=None,
+    canonical=None,
 ) -> DataFrame:
-    """Mention detection + relation extraction per turn, as mapInArrow over
-    conv-grouped, turn-ordered Arrow batches (extraction is per-turn, so
-    batch boundaries cannot split semantics; ordering gives deterministic
-    within-conversation quad order). Emits the 7-field quad table with
+    """Mention detection + relation extraction per turn, as one mapInArrow
+    over Arrow batches of turns. Emits the 7-field quad table with
     graph = http://example.org/conv/<conv_id> provenance (context column,
     Quad.scala:37) and per-turn toolUsed quads for tool turns.
 
-    With assume_bucketed=True the input is trusted to already be clustered
-    by conv_id and sorted by (conv_id, turn_idx) at rest (the engine's own
-    write path produces this; on Iceberg it is a bucket(conv_id) spec +
-    sorted write) and the repartition+sort is skipped — extraction runs
-    directly on scan partitions, zero shuffles before the dedup. This is the
-    100 TB fast path: never re-shuffle what the table layout already
-    guarantees (SURVEY.md §4, explicit conv_id bucketing).
+    Extraction is per turn (oracle.extract_conversation keeps no state
+    across turns), so any split of the input gives the same quads;
+    assume_bucketed only decides their order. With assume_bucketed=False
+    the turns are first put through stable_order (one conv_id shuffle and
+    an in-partition (conv_id, turn_idx) sort), so each conversation's
+    quads come out together and in turn order. With assume_bucketed=True
+    extraction runs on the input's partitions as they are: no shuffle,
+    and the order is the input's (conversation-grouped when the table is
+    clustered by conv_id at rest, as the engine's bucketed write or an
+    Iceberg bucket(conv_id) spec lays it out).
 
     With catalog (a pandas entity catalog: entity_iri, surface_form,
     form_weight) unknown mentions are linked inside the same mapInArrow:
@@ -178,18 +220,20 @@ def extract_quads(
     operators.linking's SurfaceLinker links it, or drops it. The catalog
     ships next to the gazetteer in the content-keyed broadcast cache.
 
+    With canonical (a driver-resolved alias graph: ({node: canonical},
+    excluded IRIs), as operators.cc.driver_canonical returns it) each
+    batch is then canonicalized in the same mapInArrow by
+    extract_vec.canonicalize_batch, with canonicalize's semantics; the
+    graph ships once through the same cache (broadcast_canonical).
+
     The input must have the columns conv_id, turn_idx, role, text and tool
     (ValueError on the driver otherwise). role, text and tool are cast to
     string here — the one place the extractor's string contract is set.
     A catalog missing a column or holding a NULL entity_iri/form_weight,
-    or a catalog together with emit_unknown=True, is a ValueError too.
+    a catalog together with emit_unknown=True, or a canonical graph with
+    a non-string IRI is a ValueError too.
     """
-    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
-    missing = [c for c in cols if c not in transcripts.columns]
-    if missing:
-        raise ValueError(
-            f"extract_quads: transcripts lack column(s) {missing}; "
-            f"need {cols}")
+    src = _extract_input(transcripts)
     if catalog is not None and emit_unknown:
         raise ValueError(
             "extract_quads: emit_unknown=True and catalog= are exclusive "
@@ -198,31 +242,49 @@ def extract_quads(
     bc = broadcast_gazetteer(spark, surface_to_iri)
     linker_bc = None if catalog is None else broadcast_catalog(
         spark, catalog_rows(catalog, "extract_quads"))
-    src = transcripts if assume_bucketed else stable_order(transcripts)
-    # project to the 5 columns the closure reads BEFORE the opaque
-    # mapInArrow: Spark cannot see which columns the Python function
-    # touches and would otherwise ship (and Arrow-convert) everything —
-    # notably `ts`, whose timestamp→pandas conversion is the costliest
-    # per-column transfer and which extraction never reads (guide §4.1).
-    # A narrow projection preserves the stable_order partitioning. The
-    # string casts vanish from the plan for string columns (SimplifyCasts).
-    src = src.select("conv_id", "turn_idx",
-                     *(F.col(c).cast("string").alias(c)
-                       for c in ("role", "text", "tool")))
+    canon_bc = None if canonical is None else broadcast_canonical(
+        spark, *canonical)
+    if not assume_bucketed:
+        src = stable_order(src)
     return src.mapInArrow(
-        worker_kernel(make_extract_fn(bc, policy, emit_unknown, linker_bc)),
+        worker_kernel(make_extract_fn(bc, policy, emit_unknown, linker_bc,
+                                      canon_bc)),
         QUAD_SCHEMA)
 
 
+_EXTRACT_COLS = ("conv_id", "turn_idx", "role", "text", "tool")
+
+
+def _extract_input(transcripts: DataFrame) -> DataFrame:
+    """The five columns the extraction closure reads, projected in one
+    selectExpr BEFORE the opaque mapInArrow: Spark cannot see which columns
+    the Python function touches and would otherwise ship (and
+    Arrow-convert) everything — notably `ts`, whose timestamp→pandas
+    conversion is the costliest per-column transfer and which extraction
+    never reads (guide §4.1). The string casts vanish from the plan for
+    string columns (SimplifyCasts). ValueError for a missing column."""
+    missing = [c for c in _EXTRACT_COLS if c not in transcripts.columns]
+    if missing:
+        raise ValueError(
+            f"extract_quads: transcripts lack column(s) {missing}; "
+            f"need {list(_EXTRACT_COLS)}")
+    return transcripts.selectExpr(
+        "conv_id", "turn_idx",
+        *(f"CAST({c} AS STRING) AS {c}" for c in ("role", "text", "tool")))
+
+
 def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
-                    emit_unknown: bool = False, linker_bc=None):
+                    emit_unknown: bool = False, linker_bc=None,
+                    canon_bc=None):
     """Build the Arrow-batch extraction closure (shared by batch extract_quads
     and streaming.ingest.streaming_extract). With emit_unknown, capitalized
     runs not covered by gazetteer mentions are emitted as
     (turn IRI, ex:mentionSurface, surface) placeholder quads for a later
     link_unknown_mentions. With linker_bc (broadcast_catalog) each batch's
-    placeholders are linked by extract_vec.link_placeholder_batch before
-    it is yielded; empty batches are not yielded.
+    placeholders are linked by extract_vec.link_placeholder_batch, and
+    with canon_bc (broadcast_canonical) the batch is then canonicalized by
+    extract_vec.canonicalize_batch, before it is yielded; empty batches
+    are not yielded.
 
     The closure is BATCH-vectorized (plans/extract_vec.py): one gazetteer
     regex scan per DISTINCT text in the Arrow batch over a joined
@@ -232,7 +294,11 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
     become Python objects; per-row expansion is C-speed Arrow takes —
     semantics verified identical to the per-row oracle in
     tests/test_extract_vec.py."""
-    from .extract_vec import extract_batch_arrow, link_placeholder_batch
+    from .extract_vec import (
+        canonicalize_batch,
+        extract_batch_arrow,
+        link_placeholder_batch,
+    )
 
     # fail FAST on the driver: a typo'd policy must not surface as a task
     # failure hours into a run whose early batches had no mentions (the
@@ -245,10 +311,13 @@ def make_extract_fn(bc, policy: str = "LONGEST_DOMINANT_RIGHT",
     def _extract(batches):
         gaz = _get_gazetteer(bc)
         linker = None if linker_bc is None else _get_linker(linker_bc)
+        dim = None if canon_bc is None else _get_dimension(canon_bc)
         for rb in batches:
             out = extract_batch_arrow(rb, gaz, policy, emit)
             if out is not None and linker is not None:
                 out = link_placeholder_batch(out, linker)
+            if out is not None and dim is not None:
+                out = canonicalize_batch(out, dim)
             if out is not None and out.num_rows:
                 yield out
 
@@ -269,30 +338,22 @@ def canonicalize(
     of the original IRI, so the dimension dim(iri, canonical, __x) carries
     the rewrite target and the flag `iri ∈ EX ∨ mapping[iri] ∈ EX` (TRUE,
     else NULL) together, one row per IRI, so the left joins never duplicate
-    a quad. It has two routes, chosen by DataFrame.isLocal():
-    - both inputs local relations (canonical_mapping's driver path): their
-      rows are collected without a Spark job, the dimension is built in
-      Python (_local_dimension) and broadcast as one Arrow local relation;
-    - otherwise Catalyst builds it inside the query from the two inputs
-      (mapping ⋈ EX, ∪ EX, grouped by IRI).
+    a quad. Catalyst builds it inside the query from the two inputs
+    (mapping ⋈ EX, ∪ EX, grouped by IRI), whatever they are.
+    extract_vec.canonical_dimension applies the same rule on the driver's
+    resolution of a small graph, and run_pipeline canonicalizes with it
+    inside the extraction kernel instead of calling this.
     For head-entity-skewed mapping tables swap the broadcast for
     operators.joins.salted_join."""
-    if mapping.isLocal() and excluded.isLocal():
-        dim = _local_dimension(
-            quads.sparkSession,
-            mapping.select("node", "canonical").collect(),
-            excluded.select("iri").collect())
-    else:
-        exd = excluded.select("iri", F.lit(True).alias("__x"))
-        dim = (
-            mapping.join(exd, mapping["canonical"] == exd["iri"], "left")
-            .select(mapping["node"].alias("iri"), "canonical", "__x")
-            .union(exd.select("iri", F.lit(None).cast("string"), "__x"))
-            .groupBy("iri")
-            .agg(F.max("canonical").alias("canonical"),
-                 F.max("__x").alias("__x"))
-        )
-    dim = F.broadcast(dim)
+    exd = excluded.select("iri", F.lit(True).alias("__x"))
+    dim = F.broadcast(
+        mapping.join(exd, mapping["canonical"] == exd["iri"], "left")
+        .select(mapping["node"].alias("iri"), "canonical", "__x")
+        .union(exd.select("iri", F.lit(None).cast("string"), "__x"))
+        .groupBy("iri")
+        .agg(F.max("canonical").alias("canonical"),
+             F.max("__x").alias("__x"))
+    )
     out = (
         quads.join(dim.select(F.col("iri").alias("subject"),
                               F.col("canonical").alias("__cs"),
@@ -313,37 +374,6 @@ def canonicalize(
         )
     )
     return out.select(*QUAD_FIELDS)
-
-
-def _local_dimension(spark: SparkSession, mapping_rows, excluded_rows
-                     ) -> DataFrame:
-    """canonicalize's Catalyst dimension rule over collected rows: one row
-    per non-NULL IRI, canonical = max of its non-NULL canonicals, __x TRUE
-    when the IRI or any of its canonicals is excluded (else NULL, not
-    False); excluded IRIs that are not mapping nodes get (iri, NULL, TRUE)."""
-    import pyarrow as pa
-
-    ex = {iri for (iri,) in excluded_rows if iri is not None}
-    canon: dict[str, str | None] = {}
-    flagged: set[str] = set()
-    for node, c in mapping_rows:
-        if node is None:
-            continue
-        prev = canon.get(node)
-        if prev is None or (c is not None and c > prev):
-            canon[node] = c
-        if c in ex:
-            flagged.add(node)
-    for iri in ex:
-        canon.setdefault(iri, None)
-    flagged |= ex
-    iris = list(canon)
-    return spark.createDataFrame(pa.table({
-        "iri": pa.array(iris, pa.string()),
-        "canonical": pa.array([canon[i] for i in iris], pa.string()),
-        "__x": pa.array([True if i in flagged else None for i in iris],
-                        pa.bool_()),
-    }))
 
 
 def link_unknown_mentions(
@@ -398,20 +428,36 @@ def run_pipeline(
     inside the extraction kernel) → canonicalize (CC over alias edges) →
     dedup (→ optionally materialize partitioned by predicate). Returns the
     final quad DataFrame. `catalog_pdf` is the pandas entity catalog
-    (gazetteer dimension — small by design, broadcast). The jobs it runs
-    are described as "run_pipeline: canonical_mapping" and
-    "run_pipeline: write". `cache_registry` is kept for callers that still
-    pass it; the pipeline persists nothing, so it is always left empty."""
+    (gazetteer dimension — small by design, broadcast).
+
+    Extraction runs on the scan splits (operators.dedup._ensure_parallelism
+    re-spreads a too-coarse input, such as a single file): the dedup
+    shuffle discards row order, so there is no conv_id shuffle before it.
+    When cc.driver_canonical's bounded collect resolves the alias graph,
+    canonicalization runs inside the extraction kernel too, and the write
+    is one Python pass over the scan plus the dedup; a larger graph is
+    canonicalized by canonicalize's broadcast joins over
+    cc.distributed_canonical. The jobs it runs are described as
+    "run_pipeline: canonical_mapping" and "run_pipeline: write".
+    `cache_registry` is kept for callers that still pass it; the pipeline
+    persists nothing, so it is always left empty."""
     from ..datagen import build_gazetteer
-    from ..operators.cc import canonical_mapping
+    from ..operators.cc import distributed_canonical, driver_canonical
+    from ..operators.dedup import _ensure_parallelism
 
     gaz = build_gazetteer(catalog_pdf)
-    quads = extract_quads(transcripts, gaz.surface_to_iri, policy,
-                          catalog=catalog_pdf if fuzzy_link else None)
+    # the column check runs before the edge collect, so a bad input fails
+    # before any job
+    src = _ensure_parallelism(_extract_input(transcripts))
     with job_description(spark, "run_pipeline: canonical_mapping"):
-        mapping, excluded = canonical_mapping(alias_edges)
-    canon = canonicalize(quads, mapping, excluded)
-    final = dedup_quads_df(canon)
+        resolved = driver_canonical(alias_edges)
+    quads = extract_quads(src, gaz.surface_to_iri, policy,
+                          assume_bucketed=True,
+                          catalog=catalog_pdf if fuzzy_link else None,
+                          canonical=resolved)
+    if resolved is None:
+        quads = canonicalize(quads, *distributed_canonical(alias_edges))
+    final = dedup_quads_df(quads)
     if out_path:
         # write the already-deduped frame, so the write plan does not build
         # the identity-dedup a second time

@@ -71,8 +71,8 @@ def nt_parse_checked(spark):
 def canon_frames(spark):
     """frames(mapping_rows, excluded_iris) -> {"local": (m, x), "rdd": (m, x)}:
     canonicalize's two inputs built twice, as Arrow local relations
-    (isLocal(), canonicalize's driver-built dimension) and as RDD-backed
-    frames (its Catalyst dimension)."""
+    (isLocal(), what canonical_mapping returns for a driver-sized graph)
+    and as RDD-backed frames (like its distributed output)."""
     import pyarrow as pa
 
     def frames(mapping_rows, excluded_iris):

@@ -3,6 +3,8 @@
 per-turn invariant and the partitioned materialization."""
 
 import os
+import pickle
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +15,8 @@ from quad_processor_util_spark.datagen import (
     build_gazetteer,
     build_transcripts,
 )
+from quad_processor_util_spark.functions.nt import QUAD_FIELDS
+from quad_processor_util_spark.operators import cc
 from quad_processor_util_spark.oracle import (
     Gazetteer,
     canonicalize_quads,
@@ -20,6 +24,7 @@ from quad_processor_util_spark.oracle import (
     extract_conversation,
     resolve_canonical,
 )
+from quad_processor_util_spark.plans import pipeline
 from quad_processor_util_spark.plans.pipeline import (
     extract_quads,
     run_pipeline,
@@ -79,6 +84,89 @@ def test_pipeline_precision_recall(spark, data):
     assert recall >= 0.95, f"recall {recall}"
     # with shared semantics it should in fact be exact:
     assert got == expected
+
+
+def test_pipeline_canonicalization_routes_agree(spark, data, monkeypatch):
+    """run_pipeline canonicalizes a driver-sized alias graph inside the
+    extraction kernel; with cc.DRIVER_EDGES patched to 0 the same graph
+    takes distributed connected components and canonicalize's broadcast
+    joins. Both give the same 5-field identity multiset."""
+    transcripts, catalog, _, edges = data
+
+    def run():
+        final = run_pipeline(spark, transcripts, catalog, edges,
+                             fuzzy_link=True)
+        plan = final._jdf.queryExecution().executedPlan().toString()
+        ids = Counter(tuple(r)[:5]
+                      for r in final.select(*QUAD_FIELDS).collect())
+        return ids, "BroadcastHashJoin" in plan
+
+    kernel, kernel_joins = run()
+    monkeypatch.setattr(cc, "DRIVER_EDGES", 0)
+    joined, joins = run()
+    assert not kernel_joins and joins
+    assert joined == kernel
+    assert len(kernel) > 100
+
+
+class _FakeBroadcast:
+    """What a worker sees of a broadcast: its value."""
+
+    def __init__(self, value):
+        self.value = value
+
+
+class _FakeContext:
+    applicationId = "app-fake"
+
+    def broadcast(self, value):
+        return _FakeBroadcast(value)
+
+
+def test_worker_cache_is_byte_capped(monkeypatch):
+    """_broadcast_once ships each value's pickled size next to its key;
+    _from_broadcast charges cache entries that size, evicts the oldest to
+    stay under _WORKER_CACHE_BYTES, and builds a value over the cap on
+    every call without caching it. No Spark: the broadcast and its context
+    are stand-ins."""
+    monkeypatch.setattr(pipeline, "_BC_CACHE", {})
+    monkeypatch.setattr(pipeline, "_WORKER_CACHE", {})
+    spark = type("FakeSpark", (), {"sparkContext": _FakeContext()})()
+    bc = pipeline._broadcast_once(spark, "k", {"a": "b"})
+    assert bc.value == ("k", len(pickle.dumps({"a": "b"},
+                                              pickle.HIGHEST_PROTOCOL)),
+                        {"a": "b"})
+    assert pipeline._broadcast_once(spark, "k", {"a": "b"}) is bc
+
+    monkeypatch.setattr(pipeline, "_WORKER_CACHE_BYTES", 100)
+    builds = []
+
+    def get(key, nbytes, value):
+        return pipeline._from_broadcast(
+            _FakeBroadcast((key, nbytes, value)),
+            lambda v: builds.append(v) or [v])
+
+    a = get("a", 40, 1)
+    assert get("a", 40, 1) is a
+    get("b", 50, 2)
+    assert list(pipeline._WORKER_CACHE) == ["a", "b"]
+    get("c", 30, 3)  # 40 + 50 + 30 > 100: the oldest entry goes
+    assert list(pipeline._WORKER_CACHE) == ["b", "c"]
+    assert get("big", 101, 4) == [4]
+    assert get("big", 101, 4) == [4]
+    assert list(pipeline._WORKER_CACHE) == ["b", "c"]
+    assert get("full", 100, 5) == [5]  # exactly the cap: evicts the rest
+    assert list(pipeline._WORKER_CACHE) == ["full"]
+    assert builds == [1, 2, 3, 4, 4, 5]
+
+
+def test_broadcast_canonical_rejects_non_string_iris(spark):
+    """A driver-resolved graph with non-string IRIs (an alias table keyed
+    by integers) fails on the driver, not in a task."""
+    with pytest.raises(ValueError, match="strings"):
+        pipeline.broadcast_canonical(spark, {1: 0}, set())
+    with pytest.raises(ValueError, match="strings"):
+        pipeline.broadcast_canonical(spark, {}, {7})
 
 
 def test_stable_turn_ordering_invariant(spark, data):

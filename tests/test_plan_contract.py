@@ -45,10 +45,10 @@ CHECKS = {
     "predicate_split_counts": ["HashAggregate", "ReadSchema"],
     # canonicalize's hinted broadcast of its alias dimension
     "pipeline_e2e": ["MapInArrow", "BroadcastHashJoin"],
-    # pipeline_full links unknown mentions inside the extraction
-    # mapInArrow (one Arrow stage, pinned below) — no persist, no split,
-    # no links join; the only BroadcastHashJoins are canonicalize's
-    "pipeline_full": ["MapInArrow", "BroadcastHashJoin", "HashAggregate"],
+    # pipeline_full links and canonicalizes inside the extraction
+    # mapInArrow (one Arrow stage and no broadcast, pinned below) — no
+    # persist, no split, no links join, no dimension join
+    "pipeline_full": ["MapInArrow", "HashAggregate"],
     # the shingle codes (one vocabulary aggregate joined back onto the
     # shingle rows) are built eagerly under a localCheckpoint; the visible
     # plan is the coded-pair join and overlap aggregate over that checkpoint
@@ -186,12 +186,14 @@ def test_quad_parse_reads_its_source_once(spark, planning):
 
 
 def test_pipeline_full_links_in_the_extraction_stage(spark, planning):
-    """pipeline_full extracts and links in the same mapInArrow: exactly one
-    MapInArrow in the physical plan, not a second one over the quads."""
+    """pipeline_full extracts, links and canonicalizes in the same
+    mapInArrow: exactly one MapInArrow in the physical plan, not a second
+    one over the quads, and no broadcast (join) of a dimension."""
     qs, sf = planning
     plan = qs["pipeline_full"](spark, sf)._jdf.queryExecution() \
         .executedPlan().toString()
     assert len(re.findall("MapInArrow", plan)) == 1, plan
+    assert "Broadcast" not in plan, plan
 
 
 def test_resumed_bucket_partition_prunes(spark, planning):

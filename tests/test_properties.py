@@ -273,8 +273,8 @@ def test_bpe_kernel_matches_oracle_replace_spec(w, merges):
 # functional mapping, excluded IRIs drawn from the same pool (so they hit
 # mapping nodes, canonicals and unmapped IRIs alike), URI and literal
 # objects, duplicate quads and duplicate excluded rows. Every example runs
-# both dimension routes: local-relation inputs (driver-built dimension)
-# and RDD-backed inputs (Catalyst dimension).
+# canonicalize's Catalyst dimension over both input kinds: local relations
+# (canonical_mapping's driver route) and RDD-backed frames.
 # ---------------------------------------------------------------------------
 
 _iri = st.sampled_from([f"e:{i}" for i in range(8)])
@@ -306,3 +306,42 @@ def test_canonicalize_matches_oracle_multiset(spark, canon_frames, mapping,
                                           excluded).items():
         got = Counter(tuple(r) for r in canonicalize(qdf, mdf, xdf).collect())
         assert got == exp, route
+
+
+# ---------------------------------------------------------------------------
+# extract_vec.canonicalize_batch (the extraction kernel's canonicalization)
+# ≡ oracle.canonicalize_quads row for row, without Spark: NULL subjects,
+# objects and datatypes, literal objects equal to mapped or excluded IRIs,
+# and excluded canonicals (mapping values drawn from the excluded pool).
+# ---------------------------------------------------------------------------
+
+_nullable_iri = st.one_of(st.none(), _iri)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.dictionaries(_iri, _iri, max_size=6),
+    st.lists(_iri, max_size=5),
+    st.lists(st.tuples(_nullable_iri, _nullable_iri,
+                       st.sampled_from([None, XSD_STRING])),
+             min_size=1, max_size=12),
+)
+def test_canonicalize_batch_matches_oracle(mapping, excluded, quads):
+    from dataclasses import astuple
+
+    import pyarrow as pa
+
+    from quad_processor_util_spark.oracle import QUAD_FIELDS, canonicalize_quads
+    from quad_processor_util_spark.plans.extract_vec import (
+        canonical_dimension,
+        canonicalize_batch,
+    )
+
+    pq = [PyQuad(s, "e:p", o, dt, None, "g") for s, o, dt in quads]
+    want = [astuple(q) for q in canonicalize_quads(pq, mapping, set(excluded))]
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(list(c), pa.string()) for c in zip(*map(astuple, pq))],
+        QUAD_FIELDS)
+    got = canonicalize_batch(rb, canonical_dimension(mapping.items(),
+                                                     excluded))
+    assert [tuple(r.values()) for r in got.to_pylist()] == want

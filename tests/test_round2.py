@@ -95,6 +95,23 @@ class TestSaltedJoinGuard:
         assert got == exp
 
 
+def _kernel_canonicalize(rows, mapping_rows, excluded) -> Counter:
+    """extract_vec.canonicalize_batch over 7-field quad rows, with the
+    dimension canonical_dimension builds from the same inputs."""
+    import pyarrow as pa
+
+    from quad_processor_util_spark.oracle import QUAD_FIELDS
+    from quad_processor_util_spark.plans.extract_vec import (
+        canonical_dimension,
+        canonicalize_batch,
+    )
+
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(list(c), pa.string()) for c in zip(*rows)], QUAD_FIELDS)
+    out = canonicalize_batch(rb, canonical_dimension(mapping_rows, excluded))
+    return Counter(tuple(r.values()) for r in out.to_pylist())
+
+
 class TestCanonicalizeParity:
     def test_exclusion_semantics_match_oracle(self, spark, canon_frames):
         quads = [
@@ -142,27 +159,36 @@ class TestCanonicalizeParity:
             assert got == exp, route
             assert ("e:s2", "e:p", "e:badobj",
                     "http://www.w3.org/2001/XMLSchema#string", None) in got
+        # the extraction kernel's canonicalization, on the same inputs
+        kernel = _kernel_canonicalize(
+            [(q.subject, q.predicate, q.obj, q.datatype, q.language, q.graph,
+              q.dataset) for q in quads],
+            list(mapping.items()), sorted(excluded) * 2)
+        assert Counter(k[:5] for k in kernel.elements()) == exp
 
     def test_dimension_routes_agree_on_irregular_inputs(self, spark,
                                                         canon_frames):
         """Inputs canonical_mapping never returns: a mapping node twice with
         two canonicals (the larger wins), a NULL canonical, a NULL excluded
-        IRI. The driver-built and the Catalyst dimension give the same
-        rows."""
+        IRI. canonicalize's Catalyst dimension (over local-relation and
+        RDD-backed inputs) and the extraction kernel's
+        extract_vec.canonical_dimension give the same rows."""
+        rows = [(s, "e:p", o, None, None, "g", None) for s, o in [
+            ("e:twice", "e:nullc"), ("e:nullc", "e:twice"),
+            ("e:s", "e:x"), ("e:s", "e:y"), ("e:y", "e:s")]]
         qdf = spark.createDataFrame(
-            [(s, "e:p", o, None, None, "g", None) for s, o in [
-                ("e:twice", "e:nullc"), ("e:nullc", "e:twice"),
-                ("e:s", "e:x"), ("e:s", "e:y"), ("e:y", "e:s")]],
+            rows,
             "subject string, predicate string, obj string, datatype string, "
             "language string, graph string, dataset string")
-        routes = canon_frames(
-            [("e:twice", "e:a"), ("e:twice", "e:b"), ("e:nullc", None),
-             ("e:y", "e:x"), ("e:y", None)],
-            ["e:x", None, "e:x"])
+        mapping_rows = [("e:twice", "e:a"), ("e:twice", "e:b"),
+                        ("e:nullc", None), ("e:y", "e:x"), ("e:y", None)]
+        excluded = ["e:x", None, "e:x"]
+        routes = canon_frames(mapping_rows, excluded)
         got = {route: Counter(tuple(r) for r in
                               canonicalize(qdf, mdf, xdf).collect())
                for route, (mdf, xdf) in routes.items()}
-        assert got["local"] == got["rdd"]
+        got["kernel"] = _kernel_canonicalize(rows, mapping_rows, excluded)
+        assert got["local"] == got["rdd"] == got["kernel"]
         assert got["local"] == Counter([
             ("e:b", "e:p", "e:nullc", None, None, "g", None),
             ("e:nullc", "e:p", "e:b", None, None, "g", None)])
@@ -170,8 +196,9 @@ class TestCanonicalizeParity:
     def test_plan_probes_one_dimension_per_column(self, spark, canon_frames):
         """The corpus is probed by exactly two broadcast hash joins (subject,
         obj) against ONE broadcast dimension: the obj probe reuses the
-        subject probe's broadcast exchange. Holds for both dimension
-        routes; the driver-built one broadcasts a LocalTableScan."""
+        subject probe's broadcast exchange. Holds for local-relation and
+        RDD-backed inputs alike: both build the dimension in Catalyst (its
+        aggregate is in the plan)."""
         import re
 
         qdf = spark.createDataFrame(
@@ -191,8 +218,7 @@ class TestCanonicalizeParity:
             reused = re.findall(
                 r"ReusedExchange \[[^\]]*\], BroadcastExchange", plan)
             assert len(reused) == 1, (route, plan)
-            assert ("Aggregate" not in plan) == (route == "local"), (route,
-                                                                     plan)
+            assert "Aggregate" in plan, (route, plan)
 
 
 class TestCamelCase:

@@ -69,16 +69,20 @@ def test_compose_two_pipelines_scoped_cache_release(spark, pipe_data):
     assert len(results[0]) > 100
 
 
-def _quad_multiset(df):
-    return Counter(tuple(r) for r in df.select(*QUAD_FIELDS).collect())
+def _identity(row) -> tuple:
+    return tuple(row[:5])
 
 
 def test_fuzzy_pipeline_equals_linked_composition(spark, pipe_data):
-    """run_pipeline(fuzzy_link=True), which links inside the extraction
-    kernel, gives the same output multiset as the composition it replaced:
-    extract(emit_unknown=True) -> link_unknown_mentions -> canonicalize ->
-    dedup_quads_df. The fixture transcripts mention only catalog forms, so
-    a few turns with misspelled and unknown names are appended."""
+    """run_pipeline(fuzzy_link=True), which links and canonicalizes inside
+    the extraction kernel, gives the same 5-field identity multiset as the
+    composition it replaced: extract(emit_unknown=True) ->
+    link_unknown_mentions -> canonicalize -> dedup_quads_df. Dedup keeps
+    an arbitrary graph per identity and which one depends on row order, so
+    each output row's graph must only be one that the composition's
+    canonicalized rows carry for that identity (perfbench's verify_kg
+    rule). The fixture transcripts mention only catalog forms, so a few
+    turns with misspelled and unknown names are appended."""
     transcripts, catalog, edges = pipe_data
     typos = spark.createDataFrame(
         [("typo", i, "user", t, None) for i, t in enumerate([
@@ -88,24 +92,28 @@ def test_fuzzy_pipeline_equals_linked_composition(spark, pipe_data):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string")
     transcripts = transcripts.unionByName(typos, allowMissingColumns=True)
-    got = _quad_multiset(run_pipeline(spark, transcripts, catalog, edges,
-                                      fuzzy_link=True))
+    got = run_pipeline(spark, transcripts, catalog, edges,
+                       fuzzy_link=True).select(*QUAD_FIELDS).collect()
     gaz = build_gazetteer(catalog)
     quads = extract_quads(transcripts, gaz.surface_to_iri, emit_unknown=True)
     linked = link_unknown_mentions(quads, spark.createDataFrame(catalog))
     mapping, excluded = canonical_mapping(edges)
-    want = _quad_multiset(dedup_quads_df(canonicalize(linked, mapping,
-                                                      excluded)))
-    assert got == want
-    assert any(k[1] == EX + "mentions" for k in got)
+    canon = canonicalize(linked, mapping, excluded).collect()
+    graphs: dict[tuple, set] = {}
+    for r in canon:
+        graphs.setdefault(_identity(r), set()).add((r.graph, r.dataset))
+    assert Counter(map(_identity, got)) == Counter(list(graphs))
+    assert all((r.graph, r.dataset) in graphs[_identity(r)] for r in got)
+    assert any(len(g) > 1 for g in graphs.values())
+    assert any(k[1] == EX + "mentions" for k in graphs)
 
 
 def test_fuzzy_pipeline_plan_has_no_cache_or_link_join(spark, pipe_data):
-    """The executed plan of run_pipeline(fuzzy_link=True): no
-    InMemoryRelation/InMemoryTableScan, exactly one MapInArrow (extraction
-    with linking inside), and only canonicalize's two BroadcastHashJoins.
-    Planned with AQE and auto-broadcast off, as in test_plan_contract.py,
-    so only hinted broadcasts show."""
+    """The executed plan of run_pipeline(fuzzy_link=True) over a
+    driver-sized alias graph: no InMemoryRelation/InMemoryTableScan,
+    exactly one MapInArrow (extraction with linking and canonicalization
+    inside), no join and no broadcast. Planned with AQE and auto-broadcast
+    off, as in test_plan_contract.py, so only hinted broadcasts show."""
     transcripts, catalog, edges = pipe_data
     confs = {"spark.sql.adaptive.enabled": "false",
              "spark.sql.autoBroadcastJoinThreshold": "-1"}
@@ -122,8 +130,8 @@ def test_fuzzy_pipeline_plan_has_no_cache_or_link_join(spark, pipe_data):
     assert "InMemoryRelation" not in plan
     assert "InMemoryTableScan" not in plan
     assert plan.count("MapInArrow") == 1, plan
-    joins = re.findall(r"BroadcastHashJoin \[(\w+)#", plan)
-    assert sorted(joins) == ["obj", "subject"], plan
+    assert "Join" not in plan, plan
+    assert "Broadcast" not in plan, plan
 
 
 def test_run_pipeline_names_its_jobs(spark, pipe_data, fixtures_dir,
@@ -177,27 +185,62 @@ def _subtrees(plan: str, node: str) -> list[list[str]]:
 
 def test_run_pipeline_write_waits_on_no_dimension_stages(
         spark, spark_jobs, pipe_data, fixtures_dir, tmp_path):
-    """With a driver-sized alias graph read from parquet, the dimension
-    canonicalize broadcasts is built on the driver: the executed write
-    plan never scans the edges, and nothing but a LocalTableScan sits
-    under its BroadcastExchange (no SortAggregate, no shuffle Exchange).
-    A whole run_pipeline(out_path=...) is 5 Spark jobs: the one bounded
-    edge collect and the write query's four."""
+    """With a driver-sized alias graph read from parquet and transcripts
+    split into more files than half the shuffle width, the write is one
+    Python pass over the scan splits: its executed plan never scans the
+    edges, has exactly one MapInArrow with no Exchange under it (no conv_id
+    shuffle, no REPARTITION_BY_NUM re-spread) and no BroadcastExchange. A
+    whole run_pipeline(out_path=...) is 3 Spark jobs: the one bounded edge
+    collect, the scan → MapInArrow → partial-aggregate stage and the
+    final stage."""
     transcripts, catalog, _ = pipe_data
     edges = spark.read.parquet(os.path.join(fixtures_dir,
                                             "alias_edges.parquet"))
+    split = str(tmp_path / "transcripts")
+    transcripts.repartition(8).write.parquet(split)
+    transcripts = spark.read.parquet(split)
     _, jobs, plans = spark_jobs(lambda: run_pipeline(
         spark, transcripts, catalog, edges, out_path=str(tmp_path / "out"),
         fuzzy_link=True))
     write = [p for d, p in plans if d == "run_pipeline: write"]
     assert len(write) == 1, plans
-    assert "alias_edges.parquet" not in write[0]
-    dims = _subtrees(write[0], "BroadcastExchange")
-    assert dims, write[0]
-    for sub in dims:
+    final = write[0].split("== Initial Plan ==", 1)[0]
+    assert "alias_edges.parquet" not in final
+    assert "BroadcastExchange" not in final, final
+    assert final.count("MapInArrow (") == 1, final
+    for sub in _subtrees(final, "MapInArrow"):
         ops = [re.sub(r"^[ :+*-]*", "", ln).split(" (")[0] for ln in sub]
-        assert ops == ["LocalTableScan"], write[0]
-    assert len(jobs) == 5, plans
+        assert not any("Exchange" in op for op in ops), final
+    assert "REPARTITION_BY_NUM" not in write[0], write[0]
+    assert len(jobs) == 3, plans
+
+
+def test_run_pipeline_respreads_a_single_file(spark, spark_jobs, pipe_data,
+                                              tmp_path):
+    """A single-file transcripts input scans as one split; run_pipeline
+    still extracts it in more than one task: dedup._ensure_parallelism's
+    round-robin re-spread to the shuffle width (8 here, which AQE does not
+    coalesce) sits right under the MapInArrow, and a stage of the write
+    runs 8 tasks."""
+    transcripts, catalog, edges = pipe_data
+    assert transcripts.rdd.getNumPartitions() == 1
+    _, jobs, plans = spark_jobs(lambda: run_pipeline(
+        spark, transcripts, catalog, edges, out_path=str(tmp_path / "out"),
+        fuzzy_link=True))
+    write = [p for d, p in plans if d == "run_pipeline: write"]
+    assert len(write) == 1, plans
+    final = write[0].split("== Initial Plan ==", 1)[0]
+    [sub] = _subtrees(final, "MapInArrow")
+    exchanges = [ln for ln in sub if re.search(r"- (Exchange|"
+                                                r"ShuffleQueryStage) ", ln)]
+    assert exchanges, final
+    assert "RoundRobinPartitioning(8), REPARTITION_BY_NUM" in write[0], \
+        write[0]
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [tracker.getStageInfo(s).numTasks for j in jobs
+             for s in tracker.getJobInfo(j).stageIds
+             if tracker.getStageInfo(s) is not None]
+    assert max(tasks) == 8, tasks
 
 
 def test_resume_on_bucketed_layout_prunes_and_matches(spark, pipe_data,
