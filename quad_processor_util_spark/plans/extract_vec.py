@@ -540,14 +540,20 @@ def link_placeholder_batch(rb, linker):
 
 
 def canonical_dimension(mapping_rows, excluded_iris):
-    """The canonicalization dimension as an Arrow RecordBatch (iri,
-    canonical, __x): one row per non-NULL IRI, canonical = the max of its
-    non-NULL canonicals, __x TRUE when the IRI or any of its canonicals is
+    """The canonicalization dimension (iris, canonical, flag): iris a
+    unique pandas Index of IRIs, canonical and flag Arrow arrays aligned
+    with it. One entry per non-NULL IRI, canonical = the max of its
+    non-NULL canonicals, flag TRUE when the IRI or any of its canonicals is
     excluded (else NULL); excluded IRIs that are not mapping nodes get
-    (iri, NULL, TRUE). Rows that would change nothing (not flagged, and a
-    NULL canonical or the IRI itself) are left out. This is the rule of
+    (iri, NULL, TRUE). Entries that would change nothing (not flagged, and
+    a NULL canonical or the IRI itself) are left out. This is the rule of
     plans/pipeline.canonicalize's Catalyst dimension, over (node,
-    canonical) pairs and excluded IRIs."""
+    canonical) pairs and excluded IRIs.
+
+    The Index builds its hash table on the first probe and keeps it, so a
+    worker that caches the dimension (plans/pipeline._get_dimension)
+    hashes the IRIs once, and a batch's probe costs the same whatever the
+    dimension's size."""
     import pyarrow as pa
 
     ex = {iri for iri in excluded_iris if iri is not None}
@@ -566,11 +572,10 @@ def canonical_dimension(mapping_rows, excluded_iris):
     flagged |= ex
     iris = [i for i, c in canon.items()
             if i in flagged or (c is not None and c != i)]
-    return pa.RecordBatch.from_arrays([
-        pa.array(iris, pa.string()),
-        pa.array([canon[i] for i in iris], pa.string()),
-        pa.array([True if i in flagged else None for i in iris], pa.bool_()),
-    ], ["iri", "canonical", "__x"])
+    return (pd.Index(iris, dtype=object),
+            pa.array([canon[i] for i in iris], pa.string()),
+            pa.array([True if i in flagged else None for i in iris],
+                     pa.bool_()))
 
 
 def canonicalize_batch(rb, dim):
@@ -578,18 +583,22 @@ def canonicalize_batch(rb, dim):
     objects (datatype NULL) rewritten to their canonical IRIs, without the
     rows whose subject or URI object is flagged in `dim`
     (canonical_dimension). Equal to oracle.canonicalize_quads per row; row
-    order is kept. Each column is one ``pc.index_in`` probe of the
-    dimension plus ``take``/``coalesce``."""
+    order is kept. Each column is one probe of the dimension's Index
+    (``get_indexer``) plus ``take``/``coalesce``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     rb = _as_string(rb)
-    iris, canon, flag = dim.columns
+    iris, canon, flag = dim
+
+    def rows(col):
+        pos = iris.get_indexer(col.to_numpy(zero_copy_only=False))
+        return pa.array(pos, pa.int64(), mask=pos < 0)
+
     subj, obj = rb.column("subject"), rb.column("obj")
-    si = pc.index_in(subj, value_set=iris)
-    oi = pc.if_else(pc.is_null(rb.column("datatype")),
-                    pc.index_in(obj, value_set=iris),
-                    pa.scalar(None, pa.int32()))
+    si = rows(subj)
+    oi = rows(pc.if_else(pc.is_null(rb.column("datatype")), obj,
+                         pa.scalar(None, pa.string())))
     keep = pc.invert(pc.or_(pc.fill_null(flag.take(si), False),
                             pc.fill_null(flag.take(oi), False)))
     cols = [pc.coalesce(canon.take(si), subj) if f == "subject"

@@ -38,7 +38,11 @@ from ..sources.io import write_quads_partitioned_by_predicate
 # worker could serve a stale object from a previous job.) Capped in bytes:
 # each entry is charged the pickled size of its broadcast value, measured
 # once on the driver; the oldest entries are evicted to make room, and a
-# value over the cap is built per task and never cached.
+# value over the cap is built per task and never cached. The pickle is a
+# proxy, not the built size: a canonicalization dimension for a graph at
+# cc.DRIVER_EDGES pickles to ~7 MiB and adds ~14 MiB of RSS when built,
+# so the cap holds several of them; a gazetteer's compiled regex and
+# prefix tables are larger than its pickle too.
 _WORKER_CACHE: dict[str, tuple[int, object]] = {}
 _WORKER_CACHE_BYTES = 64 << 20
 
@@ -230,22 +234,33 @@ def extract_quads(
     (ValueError on the driver otherwise). role, text and tool are cast to
     string here — the one place the extractor's string contract is set.
     A catalog missing a column or holding a NULL entity_iri/form_weight,
-    a catalog together with emit_unknown=True, or a canonical graph with
-    a non-string IRI is a ValueError too.
+    a catalog or a canonical graph together with emit_unknown=True, or a
+    canonical graph with a non-string IRI is a ValueError too.
     """
     src = _extract_input(transcripts)
-    if catalog is not None and emit_unknown:
+    if not assume_bucketed:
+        src = stable_order(src)
+    return _extract_projected(src, surface_to_iri, policy, emit_unknown,
+                              catalog, canonical)
+
+
+def _extract_projected(src: DataFrame, surface_to_iri, policy, emit_unknown,
+                       catalog, canonical) -> DataFrame:
+    """extract_quads over an input that _extract_input already projected
+    (run_pipeline projects and checks its input before the edge collect,
+    and extracts on it as it is)."""
+    if emit_unknown and (catalog is not None or canonical is not None):
         raise ValueError(
-            "extract_quads: emit_unknown=True and catalog= are exclusive "
-            "(the catalog replaces the placeholders it would emit)")
-    spark = transcripts.sparkSession
+            "extract_quads: emit_unknown=True is exclusive with catalog= "
+            "and canonical= (the catalog replaces the placeholders it would "
+            "emit, and placeholders linked after extraction would never be "
+            "canonicalized)")
+    spark = src.sparkSession
     bc = broadcast_gazetteer(spark, surface_to_iri)
     linker_bc = None if catalog is None else broadcast_catalog(
         spark, catalog_rows(catalog, "extract_quads"))
     canon_bc = None if canonical is None else broadcast_canonical(
         spark, *canonical)
-    if not assume_bucketed:
-        src = stable_order(src)
     return src.mapInArrow(
         worker_kernel(make_extract_fn(bc, policy, emit_unknown, linker_bc,
                                       canon_bc)),
@@ -451,10 +466,8 @@ def run_pipeline(
     src = _ensure_parallelism(_extract_input(transcripts))
     with job_description(spark, "run_pipeline: canonical_mapping"):
         resolved = driver_canonical(alias_edges)
-    quads = extract_quads(src, gaz.surface_to_iri, policy,
-                          assume_bucketed=True,
-                          catalog=catalog_pdf if fuzzy_link else None,
-                          canonical=resolved)
+    quads = _extract_projected(src, gaz.surface_to_iri, policy, False,
+                               catalog_pdf if fuzzy_link else None, resolved)
     if resolved is None:
         quads = canonicalize(quads, *distributed_canonical(alias_edges))
     final = dedup_quads_df(quads)

@@ -228,6 +228,18 @@ class TestDriverRejections:
             tr, {"Ada": "http://e/1"}, emit_unknown=True,
             catalog=build_entity_catalog()), "exclusive") == []
 
+    def test_emit_unknown_with_canonical(self, spark):
+        """Placeholders linked after extraction would bypass the kernel's
+        canonicalization, so the combination fails on the driver."""
+        tr = spark.createDataFrame(
+            [("c1", 0, "user", "I met Grace Hoper.", None)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string")
+        assert self._jobs(spark, lambda: extract_quads(
+            tr, {"Ada": "http://e/1"}, emit_unknown=True,
+            canonical=({"http://e/2": "http://e/1"}, set())),
+            "exclusive") == []
+
     def test_null_surface_form_never_links(self, spark):
         catalog = pd.DataFrame({
             "entity_iri": ["http://e/1", "http://e/2"],
